@@ -119,7 +119,7 @@ def main(argv=None) -> int:
     # duplicate); default to the AQE-decided join, opt into the forced
     # broadcast only when the caller vouches for the key
     for uk in schema.unique_keys:
-        uk.broadcast = True if args.unique_broadcast == "force" else "auto"
+        uk.broadcast = args.unique_broadcast == "force"
     dims = {}
     if args.dim_source:
         dims["dim_source"] = spark.read.parquet(args.dim_source)

@@ -25,10 +25,7 @@ def is_valid(df: DataFrame, schema: TableSchema, row_id: Optional[Column] = None
     rid = row_id if row_id is not None else F.monotonically_increasing_id().cast("string")
     if schema.unique_keys or schema.foreign_keys:
         res = validate(df, schema, rid, dims=dims)
-        try:  # release the auto-mode dup-key probe cache (leak on sessions)
-            return len(res.violations.limit(1).take(1)) == 0
-        finally:
-            res.unpersist()
+        return len(res.violations.limit(1).take(1)) == 0
     _, viols, _ = validate_rows(df, schema, rid)
     return len(viols.limit(1).take(1)) == 0
 
@@ -39,11 +36,7 @@ def safe_validate(df: DataFrame, schema: TableSchema, row_id: Column,
     (clean_df, True) when everything passes, else (violations_df, False).
     Never raises on validation errors."""
     res: ValidationResult = validate(df, schema, row_id, dims=dims)
-    try:  # release the auto-mode dup-key probe cache before returning
-        has_viols = len(res.violations.limit(1).take(1)) > 0
-    finally:
-        res.unpersist()
-    if has_viols:
+    if res.violations.limit(1).take(1):
         return res.violations, False
     return res.clean, True
 

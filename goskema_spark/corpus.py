@@ -70,12 +70,8 @@ def corpus_schema(max_len: int = MAX_LEN, max_ntok: int = MAX_NTOK,
     # near-unique, so the duplicate-KEY set is tiny (duplicates are the
     # anomaly being detected, not boilerplate), and the forced hint
     # keeps the whole check one job with zero corpus-side shuffle.
-    # r6: this replaces the r5 broadcast="auto" HLL probe, which cost a
-    # full column scan + sketch collect serialized BEFORE the main job
-    # on every validate() call (0.35s/run at 12.8M rows; 1.3s at 41M
-    # rows on local[8] — the largest fixed tail in the scaling gate).
     # A corpus whose key may be pathologically duplicated (10^8+ dup
-    # keys would stress the driver) should declare broadcast="auto":
+    # keys would stress the driver) should declare broadcast=False:
     # no hint, AQE promotes to broadcast only when the runtime size
     # fits (measured +1.4s on the 12.8M-row bench — the corpus-side
     # exchange AQE plans for is not free, which is why the contract-

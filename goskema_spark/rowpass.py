@@ -1164,7 +1164,7 @@ def _compiled_triple(schema: TableSchema, df: DataFrame):
         cache = {}
         schema._compiled_cache = cache
     triple = cache.get(key)
-    if triple is None or len(triple) != 3:
+    if triple is None:
         checks = compile_checks(schema, df)
         triple = (checks.any_violation(), checks.body(), checks.gate_is_exact())
         cache[key] = triple
@@ -1244,14 +1244,6 @@ def _dirty_with_violations(df: DataFrame, schema: TableSchema,
         # some array check has no cheap gate: every row builds anyway
         return df.withColumn(violations_col, body)
     return df.filter(gate).withColumn(violations_col, body)
-
-
-def dirty_annotated(df: DataFrame, schema: TableSchema,
-                    violations_col: str = "_violations") -> DataFrame:
-    """Public filter-first violations feed for callers holding the RAW
-    input (runner): applies defaults, then the gate filter + body."""
-    return _dirty_with_violations(apply_defaults(df, schema), schema,
-                                  violations_col)
 
 
 def explode_violations(df: DataFrame, row_id: Column,

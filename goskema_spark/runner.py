@@ -1,12 +1,13 @@
 """Validator orchestration: full validation run -> violations, per-partition
 verdicts, stats, drift, ledger rows.
 
-Lifecycle (SURVEY §3.4): scan -> [explicit repartition by
-(source, hash(doc_id))] -> ONE fused report job whose branch stages run
-concurrently — vectorized row pass, uniqueness aggregate, referential
-anti-join, and a column-pruned per-partition row count — tagged by `_rec`
-and unioned into a single report relation. Fail-fast vs collect follows
-reference api.go:147-156.
+Lifecycle (SURVEY §3.4): scan -> [the caller's explicit repartition by
+(source, hash(doc_id)), e.g. the CLI's --repartition] -> ONE fused
+report job whose branch stages run concurrently — vectorized row pass,
+uniqueness aggregate, referential anti-join, and a column-pruned
+per-partition row count — tagged by `_rec` and unioned into a single
+report relation. Fail-fast vs collect follows reference
+api.go:147-156.
 
 Materialization strategy (the 100 TB design): pass `report_path` to write
 the report ONCE as parquet in a single job; the violations table and the
@@ -51,18 +52,6 @@ class ValidationResult:
     verdicts: DataFrame           # partition_col, rows, violations, verdict
     report: dict = dc_field(default_factory=dict)
     report_path: Optional[str] = None  # parquet materialization of the report
-    _persisted: list = dc_field(default_factory=list)  # probe relations to release
-
-    def unpersist(self):
-        """Release any relations persisted for this run. Since r6 the
-        broadcast='auto' path runs no probe at all (AQE picks the join
-        from runtime stats, uniqueness.py) so nothing is persisted by
-        default — kept as the stable lifecycle hook callers already
-        wrap in try/finally."""
-        for df in self._persisted:
-            df.unpersist(blocking=False)
-        self._persisted = []
-        return self
 
 
 def validate(
@@ -71,7 +60,6 @@ def validate(
     row_id: Column,
     dims: Optional[dict] = None,
     partition_col: str = "source",
-    repartition: int = 0,
     report_path: Optional[str] = None,
     report_partitions: int = 0,
     uniqueness_scope: Optional[DataFrame] = None,
@@ -89,9 +77,6 @@ def validate(
     filtered to df's partitions.
     """
     dims = dims or {}
-    if repartition:
-        # north rule: explicit repartition by (source, hash(doc_id))
-        df = df.repartition(repartition, F.col(partition_col), F.xxhash64(row_id))
 
     # carry the logical partition through aggregate checks for verdicts
     carry = [partition_col] if partition_col in df.columns else []
@@ -100,12 +85,11 @@ def validate(
     # aggregate checks read the PLAIN input, not the annotated plan — they
     # never touch _violations, and keeping the giant check expression out
     # of their subtrees cuts driver-side analysis cost ~3x per run
-    persisted: list = []
     for uk in schema.unique_keys:
         ordinal = uk.ordinal or uk.column
         scope = uniqueness_scope if uniqueness_scope is not None else df
         uv = uniqueness_violations(scope, uk.column, ordinal, row_id, carry=carry,
-                                   broadcast=getattr(uk, "broadcast", True))
+                                   broadcast=uk.broadcast)
         if uniqueness_scope is not None and carry:
             parts = df.select(F.col(partition_col).alias("_part")).distinct()
             uv = uv.join(F.broadcast(parts),
@@ -200,7 +184,6 @@ def validate(
         clean=clean,
         verdicts=verdicts,
         report_path=report_path,
-        _persisted=persisted,
     )
 
 
@@ -219,13 +202,3 @@ def _verdicts_from_report(report: DataFrame, carry, partition_col: str) -> DataF
         "verdict", F.when(F.col("violations") > 0, "fail").otherwise("pass")
     )
 
-
-def explode_with_carry(ann: DataFrame, row_id: Column, carry) -> DataFrame:
-    v = ann.withColumn("_row_id", row_id).select(
-        F.col("_row_id").alias("row_id"),
-        F.explode(F.col("_violations")).alias("v"),
-        *[F.col(c) for c in carry],
-    )
-    return v.select(
-        "row_id", "v.path", "v.code", "v.message", "v.rule", "v.params", *carry
-    )

@@ -208,12 +208,12 @@ class OrRefinement:
 class UniqueKey:
     """Cross-row uniqueness of a key column (reference rules/rules.go:104-137
     UniqueBy semantics: code `uniqueness`, params first/dup/key).
-    broadcast: True | False | "auto" — dup-key join strategy, see
-    uniqueness.uniqueness_violations."""
+    broadcast: True forces the dup-key broadcast hint, False leaves the
+    join to AQE — see uniqueness.uniqueness_violations."""
 
     column: str
     ordinal: Optional[str] = None  # stable ordering column for first/dup params
-    broadcast: Any = True
+    broadcast: bool = True
 
 
 @dataclass
@@ -290,10 +290,10 @@ class TableSchema:
         self._version += 1
         return self
 
-    def unique(self, column, ordinal=None, broadcast=True):
+    def unique(self, column, ordinal=None, broadcast: bool = True):
         """broadcast: True (default) hint-forces the dup-key broadcast
         join — right when the key is near-unique by contract (the dup
-        set is the anomaly being detected). False/"auto": no hint, AQE
+        set is the anomaly being detected). False: no hint, AQE
         promotes from runtime size — the safe choice when the duplicate
         rate may be pathological (see uniqueness.py)."""
         self.unique_keys.append(

@@ -48,29 +48,21 @@ def validate_stream(
 
     def process(batch_df: DataFrame, batch_id: int):
         res = validate(batch_df, schema, row_id, dims=dims)
-        # try/finally: since r6 validate() persists nothing by default
-        # (the broadcast="auto" probe is gone — AQE decides the dup-key
-        # join from runtime stats), but unpersist() stays the lifecycle
-        # contract so any future persisted relation is released per
-        # batch instead of growing executor caches for a stream's life
-        try:
-            viols = res.violations.withColumn("batch_id", F.lit(batch_id)) \
-                .withColumn("params", F.to_json("params"))
-            if violations_sink:
-                # exactly-once under micro-batch REPLAY: foreachBatch is
-                # at-least-once, so a retried batch re-runs process() with
-                # the same batch_id — dynamic overwrite of the batch_id
-                # partition REPLACES that batch's rows instead of appending
-                # duplicates (same protocol as the batch ledger,
-                # ledger.run_with_ledger's violations write)
-                (viols.write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("batch_id")
-                 .parquet(violations_sink))
-            if on_batch is not None:
-                on_batch(res, batch_id)
-        finally:
-            res.unpersist()
+        viols = res.violations.withColumn("batch_id", F.lit(batch_id)) \
+            .withColumn("params", F.to_json("params"))
+        if violations_sink:
+            # exactly-once under micro-batch REPLAY: foreachBatch is
+            # at-least-once, so a retried batch re-runs process() with
+            # the same batch_id — dynamic overwrite of the batch_id
+            # partition REPLACES that batch's rows instead of appending
+            # duplicates (same protocol as the batch ledger,
+            # ledger.run_with_ledger's violations write)
+            (viols.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("batch_id")
+             .parquet(violations_sink))
+        if on_batch is not None:
+            on_batch(res, batch_id)
 
     writer = stream_df.writeStream.foreachBatch(process)
     if checkpoint:

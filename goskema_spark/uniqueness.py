@@ -19,11 +19,8 @@ Scale design (north rule: salted hash-aggregate with skew mitigation):
            the hot key on every core first.
 
 The join strategy: broadcast=True (default) hint-forces broadcast —
-right at any realistic duplicate rate. broadcast=False/"auto" drops
-the hint and lets AQE pick from the aggregate's RUNTIME size (r6: this
-replaced the r5 up-front HLL probe job, which cost a full column scan
-+ sketch collect serialized on the critical path before the main job
-could even be submitted).
+right at any realistic duplicate rate. broadcast=False drops the hint
+and lets AQE pick from the aggregate's RUNTIME size.
 
 The expensive global sort-shuffle over 10^12 rows is avoided entirely:
 only `rows-with-duplicated-keys` are touched in stage 3. At a 0.1%
@@ -38,33 +35,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from goskema_spark.issues import Codes, MSG_DUPLICATE_VALUE, pointer
 from goskema_spark.rowpass import violation
-
-
-# HLL register count scales 1/rsd^2 — rsd=0.01 measured 4x slower than
-# this setting for no decision-quality gain at the 4M-key threshold
-PROBE_RSD = 0.03
-
-# default dup-key count above which the dup-key relation is NOT
-# broadcast (driver-memory guard; ~16B/key -> 64MB at the threshold,
-# with 2-4x headroom against typical driver heaps)
-BROADCAST_THRESHOLD_KEYS = 4_000_000
-
-
-def dup_extras_upper_bound(df: DataFrame, key: str,
-                           rsd: float = PROBE_RSD) -> int:
-    """HLL upper bound on the number of duplicated keys: dup_keys <=
-    count - distinct (each duplicated key contributes at least one extra
-    occurrence). r6: no longer called by uniqueness_violations — the
-    broadcast decision moved to AQE runtime stats, which removed this
-    probe job (one column scan + sketch collect serialized before the
-    main job) from every validate() run. Kept as a public sizing
-    utility for callers that want an a-priori duplicate-rate bound."""
-    kc = F.col(key)
-    stats = (df.filter(kc.isNotNull())
-             .agg(F.count(F.lit(1)).alias("_n"),
-                  F.approx_count_distinct(kc, rsd=rsd).alias("_d"))
-             .collect()[0])
-    return stats["_n"] - int(stats["_d"] * (1 - 2 * rsd))
 
 
 def duplicate_keys(df: DataFrame, key: str, salt_buckets: int = 0) -> DataFrame:
@@ -97,9 +67,7 @@ def duplicate_keys(df: DataFrame, key: str, salt_buckets: int = 0) -> DataFrame:
 
 def uniqueness_violations(df: DataFrame, key: str, ordinal: str,
                           row_id: Column, carry=(),
-                          broadcast=True,
-                          broadcast_threshold_keys: int = BROADCAST_THRESHOLD_KEYS,
-                          persisted=None) -> DataFrame:
+                          broadcast: bool = True) -> DataFrame:
     """Violation rows for every non-first occurrence of a duplicated key.
 
     `ordinal` must be a stable, deterministic ordering column (e.g. the
@@ -109,20 +77,18 @@ def uniqueness_violations(df: DataFrame, key: str, ordinal: str,
 
     broadcast: True (default) forces the broadcast hint on the dup-key
     join — right at any realistic duplicate rate, and keeps the whole
-    check a single job. False or "auto" drops the hint and lets AQE
-    pick the join from the aggregate's RUNTIME output size (the safe
-    choice when the duplicate rate may be pathological — a
-    boilerplate-heavy corpus can have 10^8+ duplicated keys, which
-    would blow the driver if broadcast; AQE still promotes to broadcast
-    whenever the dup-key relation lands under
-    spark.sql.autoBroadcastJoinThreshold). r6: "auto" no longer runs an
-    up-front HLL probe job — the probe was a full column scan + sketch
-    collect serialized BEFORE the main job could be submitted; AQE makes
-    the same decision from exact runtime sizes for free.
-
-    broadcast_threshold_keys / persisted: accepted for back-compat;
-    nothing is probed or persisted anymore.
+    check a single job. False drops the hint and lets AQE pick the join
+    from the aggregate's RUNTIME output size (the safe choice when the
+    duplicate rate may be pathological — a boilerplate-heavy corpus can
+    have 10^8+ duplicated keys, which would blow the driver if
+    broadcast; AQE still promotes to broadcast whenever the dup-key
+    relation lands under spark.sql.autoBroadcastJoinThreshold). Only a
+    bool is accepted: the setting is a plain truth test, so a leftover
+    string such as "auto" would be truthy and force the hint.
     """
+    if not isinstance(broadcast, bool):
+        raise TypeError(
+            f"broadcast must be a bool, got {type(broadcast).__name__}: {broadcast!r}")
     # Dup detection shuffles xxhash64(key) — 8 bytes/key instead of the
     # raw (often long) key strings, roughly halving shuffle volume on a
     # mostly-unique corpus (the common case: partial aggregation cannot
@@ -137,17 +103,13 @@ def uniqueness_violations(df: DataFrame, key: str, ordinal: str,
     # only adds a unique-keyed row to the joined subset, where the
     # first-occurrence aggregate over the TRUE key yields
     # first==ordinal and the row is filtered — correctness unaffected.
-    # normalize: any truthy value except the "auto" sentinel forces the
-    # hint (an identity `is True` test would silently drop the hint for
-    # truthy non-bool values like 1 or numpy bools)
-    force_broadcast = bool(broadcast) and broadcast != "auto"
     kc = F.col(key)
     dups = (df.filter(kc.isNotNull())
             .groupBy(F.xxhash64(kc).alias("_kh"))
             .agg(F.count(F.lit(1)).alias("_cnt"))
             .filter(F.col("_cnt") > 1)
             .select("_kh"))
-    if force_broadcast:
+    if broadcast:
         dups = F.broadcast(dups)
     # semi-join the dup-hash set; resolve first-occurrence ordinals with
     # a map-side-combinable MIN aggregate + broadcast join instead of a
@@ -159,7 +121,7 @@ def uniqueness_violations(df: DataFrame, key: str, ordinal: str,
     sub = df.join(dups, F.xxhash64(kc) == F.col("_kh"), "inner").drop("_kh")
     firsts = (sub.groupBy(kc.alias("_fk"))
               .agg(F.min(ordinal).alias("_first")))
-    if force_broadcast:
+    if broadcast:
         firsts = F.broadcast(firsts)
     sub = (sub.join(firsts, kc == F.col("_fk"), "inner").drop("_fk")
            .filter(F.col(ordinal) != F.col("_first")))

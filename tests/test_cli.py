@@ -2,6 +2,7 @@
 a parquet corpus and check the ledger + JSON summary."""
 
 import json
+import os
 import shutil
 import subprocess
 import sys
@@ -10,6 +11,20 @@ import tempfile
 from goskema_spark.corpus import corpus_from_documents, dim_source_df
 
 SF = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _run_cli(tmp, run_id, *extra):
+    out = subprocess.run(
+        [sys.executable, "-m", "goskema_spark",
+         "--input", f"{tmp}/in", "--dim-source", f"{tmp}/dim",
+         "--ledger", f"{tmp}/ledger_{run_id}", "--violations", f"{tmp}/viols_{run_id}",
+         "--run-id", run_id, "--repartition", "4", *extra],
+        capture_output=True, text=True, timeout=600, cwd=REPO,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
+    return json.loads(line)
 
 
 def test_cli_end_to_end(spark):
@@ -17,24 +32,20 @@ def test_cli_end_to_end(spark):
     try:
         corpus_from_documents(spark, SF).write.mode("overwrite").parquet(f"{tmp}/in")
         dim_source_df(spark).write.mode("overwrite").parquet(f"{tmp}/dim")
-        out = subprocess.run(
-            [sys.executable, "-m", "goskema_spark",
-             "--input", f"{tmp}/in", "--dim-source", f"{tmp}/dim",
-             "--ledger", f"{tmp}/ledger", "--violations", f"{tmp}/viols",
-             "--run-id", "cli-test", "--repartition", "4"],
-            capture_output=True, text=True, timeout=600, cwd="/root/repo",
-        )
-        assert out.returncode == 0, out.stderr[-2000:]
-        line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-        summary = json.loads(line)
+        summary = _run_cli(tmp, "cli-test")
         assert summary["verdict"] == "fail"  # corrupted corpus must fail
         assert summary["rows"] == 500
         assert summary["violations"] > 0
         assert summary["partitions"] >= 20
-        led = spark.read.parquet(f"{tmp}/ledger")
+        led = spark.read.parquet(f"{tmp}/ledger_cli-test")
         assert led.filter("run_id = 'cli-test'").count() == summary["partitions"]
-        viols = spark.read.parquet(f"{tmp}/viols")
+        viols = spark.read.parquet(f"{tmp}/viols_cli-test")
         assert viols.count() == summary["violations"]
+        # --unique-broadcast force (hinted dup-key join) must report the
+        # same run as the default AQE-decided join
+        forced = _run_cli(tmp, "cli-force", "--unique-broadcast", "force")
+        for k in ("rows", "violations", "failed_partitions"):
+            assert forced[k] == summary[k], k
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

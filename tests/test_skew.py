@@ -43,10 +43,9 @@ def test_hot_key_violations(spark, skew_df):
 
 
 def test_high_duplicate_rate_fallback(spark):
-    """Pathological duplicate rate (50% of keys duplicated): the "auto"
-    strategy must fall back to a non-broadcast join above the key cap
-    and still produce exact results; broadcast=False (pure AQE) must
-    agree."""
+    """Pathological duplicate rate (50% of keys duplicated): broadcast=False
+    must leave the join unhinted and still produce exact results; the
+    forced hint must be present only for broadcast=True."""
     n = 20_000
     df = spark.range(n).select(
         # ids 0..n/2-1 appear twice (id and id+n/2 share a key)
@@ -56,25 +55,32 @@ def test_high_duplicate_rate_fallback(spark):
     rid = F.col("doc_id")
     expected = n // 2  # one non-first occurrence per duplicated key
 
-    auto = uniqueness_violations(df, "doc_id", "_ord", rid,
-                                 broadcast="auto", broadcast_threshold_keys=100)
-    # above the cap the dup-key join must NOT carry a forced broadcast
-    # hint (AQE may still pick broadcast from runtime sizes — the point
-    # is no forced 10^8-key build side)
-    assert "strategy=broadcast" not in auto._jdf.queryExecution().analyzed().toString()
-    assert auto.count() == expected
+    aqe = uniqueness_violations(df, "doc_id", "_ord", rid, broadcast=False)
+    # the dup-key join must NOT carry a forced broadcast hint (AQE may
+    # still pick broadcast from runtime sizes — the point is no forced
+    # 10^8-key build side)
+    assert "strategy=broadcast" not in aqe._jdf.queryExecution().analyzed().toString()
+    assert aqe.count() == expected
 
     forced = uniqueness_violations(df, "doc_id", "_ord", rid, broadcast=True)
     assert "strategy=broadcast" in forced._jdf.queryExecution().analyzed().toString()
-
-    aqe = uniqueness_violations(df, "doc_id", "_ord", rid, broadcast=False)
-    assert aqe.count() == expected
+    assert forced.count() == expected
 
 
-def test_auto_probe_leaves_no_cached_relations(spark, tmp_path):
-    """broadcast='auto' persists a dup-key probe relation; the run must
-    release it — directly (leak-free default), after result.unpersist()
-    (lazy validate), and automatically after the report write."""
+def test_broadcast_rejects_non_bool(spark, skew_df):
+    """The setting is a plain truth test, so a non-bool must be refused
+    rather than read: a leftover "auto" is truthy and would silently
+    force the broadcast its caller meant to avoid."""
+    for value in ("auto", "Auto", 1, None):
+        with pytest.raises(TypeError):
+            uniqueness_violations(skew_df, "doc_id", "_ord", F.col("doc_id"),
+                                  broadcast=value)
+
+
+def test_validate_leaves_no_cached_relations(spark, tmp_path):
+    """Neither the uniqueness check nor a validate() run may leave a
+    persisted relation behind: not a direct call, not a lazy validate,
+    not a report-path validate."""
     from goskema_spark.corpus import (
         corpus_from_documents, corpus_schema, dim_source_df, row_id_col,
     )
@@ -93,7 +99,7 @@ def test_auto_probe_leaves_no_cached_relations(spark, tmp_path):
     base = rdd_ids()
 
     def assert_no_new_caches():
-        # unpersist(blocking=False) is async — poll briefly
+        # a context-cleaned cache is released asynchronously — poll briefly
         for _ in range(50):
             if not (rdd_ids() - base):
                 return
@@ -104,19 +110,18 @@ def test_auto_probe_leaves_no_cached_relations(spark, tmp_path):
     dims = {"dim_source": dim_source_df(spark)}
     assert_no_new_caches()
 
-    # direct call, no lifecycle list -> released before returning
+    # direct call, AQE-decided join
     v = uniqueness_violations(corpus, "doc_id", "_ord", row_id_col(),
-                              broadcast="auto")
+                              broadcast=False)
     v.count()
     assert_no_new_caches()
 
-    # lazy validate -> held for the run, released by unpersist()
+    # lazy validate
     res = validate(corpus, corpus_schema(), row_id_col(), dims=dims)
     res.violations.count()
-    res.unpersist()
     assert_no_new_caches()
 
-    # report-path validate -> released inside validate()
+    # report-path validate
     res2 = validate(corpus, corpus_schema(), row_id_col(), dims=dims,
                     report_path=str(tmp_path / "report"))
     assert_no_new_caches()

@@ -1,0 +1,104 @@
+"""Dump .explain('formatted') physical plans, for before/after plan diffs.
+
+Usage: python tools/plans.py <outdir> <suffix> [name,...]
+Writes <outdir>/<name>_<suffix>.txt for each name.
+
+With no names, dumps the five bench.py query shapes (rowpass,
+clean_scan, stats_profile, ntok_histogram, full_validation) on the
+bench corpus (SPARK_GRAFT_SF_DIR x GSK_REPLICATE, built if missing).
+The full_validation report is captured as three plans in one file: the
+report relation (the single write job), the violations read, and the
+verdicts aggregate.
+
+Any other name resolves through __spark_entry__.queries() and runs at
+GSK_EXTRA_SF (default: bench.py's SF_DIR).
+
+Run the same command in a checkout of the older commit to produce the
+'before' plans, then diff the two directories.
+"""
+
+from __future__ import annotations
+
+import os
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+
+def fmt(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+
+
+def bench_plans(spark):
+    """Yield (name, plan text) for the five bench.py shapes."""
+    from bench import CPUS, REPLICATE, SF_DIR, ensure_corpus
+    from pyspark.sql import functions as F
+    from goskema_spark.corpus import corpus_schema, dim_source_df, row_id_col
+    from goskema_spark.drift import histogram
+    from goskema_spark.rowpass import validate_rows
+    from goskema_spark.runner import validate
+    from goskema_spark.stats import profile
+
+    path = ensure_corpus(spark, SF_DIR, REPLICATE)
+    dim = dim_source_df(spark)
+    schema = corpus_schema()
+
+    def load():
+        return spark.read.parquet(path)
+
+    _, viols, clean = validate_rows(load(), schema, row_id_col())
+    yield "rowpass", fmt(viols)
+    yield "clean_scan", fmt(clean.select(F.sum("n_tok")))
+    yield "stats_profile", fmt(profile(load(), ["doc_id", "n_tok", "source"]))
+    yield "ntok_histogram", fmt(histogram(load(), "n_tok", 0, 64, 16))
+
+    # full_validation: run once (writes the report) so we can also capture
+    # the violations/verdicts read plans against the real report file
+    res = validate(load(), schema, row_id_col(), dims={"dim_source": dim},
+                   report_path="/tmp/gsk_plans_report.parquet",
+                   report_partitions=CPUS)
+    # re-build the report relation lazily (no write) for the plan text
+    res2 = validate(load(), schema, row_id_col(), dims={"dim_source": dim})
+    yield "full_validation", "\n".join([
+        "==== report relation (the single write job) ====",
+        fmt(res2.violations),
+        "==== violations (column-pruned report read) ====",
+        fmt(res.violations),
+        "==== verdicts (one aggregate over the report) ====",
+        fmt(res.verdicts),
+    ])
+
+
+def query_plans(spark, names):
+    """Yield (name, plan text) for declared __spark_entry__ queries."""
+    import __spark_entry__ as entry
+    from bench import SF_DIR
+
+    qs = entry.queries()
+    sf = os.environ.get("GSK_EXTRA_SF", SF_DIR)
+    for name in names:
+        yield name, fmt(qs[name](spark, sf))
+
+
+def main():
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    outdir, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3].split(",") if len(sys.argv) > 3 else []
+    os.makedirs(outdir, exist_ok=True)
+
+    from bench import CPUS, get_spark
+
+    spark = get_spark(CPUS)
+    spark.sparkContext.setLogLevel("ERROR")
+    plans = query_plans(spark, names) if names else bench_plans(spark)
+    for name, text in plans:
+        with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
+            f.write(text)
+        print(f"wrote {name}_{suffix}.txt")
+
+
+if __name__ == "__main__":
+    main()
