@@ -31,6 +31,23 @@ Protocol:
     remainder, and appends their ledger rows. The final ledger is
     identical to an uninterrupted run (idempotence test in
     tests/test_ledger.py).
+  - jobs of one invocation, in order, each labelled
+    "ledger <run_id>: <phase>" or "validate: <phase>" via
+    setJobDescription (the caller's description is restored; the job
+    group is left alone):
+      1. completed partitions — the ledger's schema read, then one
+         collect of this run's `source` values (deduped on the driver;
+         the ledger holds one row per partition per run, so no
+         distinct() shuffle);
+      2. emptiness probe — take(1) of the remaining rows (with
+         fail_partition_limit: a distinct collect of their partitions);
+      3. validate's jobs (runner module docstring): the referential
+         domain probe, once per dimension frame, and the report write.
+         The report is read back with its known schema, no inference;
+      4. violations sink — one column-pruned scan of the report;
+      5. ledger write — ONE grouped aggregate over the report yields
+         rows, violations and every per-check count (one scan, one
+         shuffle, no join): two jobs.
 """
 
 from __future__ import annotations
@@ -41,7 +58,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from goskema_spark.issues import pointer
-from goskema_spark.runner import ValidationResult, validate
+from goskema_spark.runner import (
+    ValidationResult, _verdicts_from_report, job_description, validate)
 
 LEDGER_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType(), False),
@@ -90,7 +108,9 @@ def completed_partitions(spark: SparkSession, ledger_path: str, run_id: str):
             "partition_id, see goskema_spark.ledger module docstring) "
             "before appending")
     led = led.filter(F.col("run_id") == run_id)
-    vals = {r["source"] for r in led.select("source").distinct().collect()}
+    # one row per partition per run: dedupe on the driver, a distinct()
+    # would only add a shuffle stage
+    vals = {r["source"] for r in led.select("source").collect()}
     null_done = None in vals
     vals.discard(None)
     return vals, null_done
@@ -125,7 +145,8 @@ def run_with_ledger(
     full_df = df  # uniqueness scope: the global table, never the pruned subset
     if report_path is None:
         report_path = f"{ledger_path.rstrip('/')}__report/run_id={run_id}"
-    done, null_done = completed_partitions(spark, ledger_path, run_id)
+    with job_description(spark, f"ledger {run_id}: completed partitions"):
+        done, null_done = completed_partitions(spark, ledger_path, run_id)
     if done or null_done:
         cond = ~F.col(partition_col).isin(list(done)) if done else F.lit(True)
         if null_done:
@@ -134,9 +155,11 @@ def run_with_ledger(
             cond = cond | F.col(partition_col).isNull()
         df = df.filter(cond)  # partition-pruned re-scan
 
+    probe = job_description(spark, f"ledger {run_id}: emptiness probe")
     if fail_partition_limit:
         # test hook only: needs the explicit partition list
-        remaining = [r[0] for r in df.select(partition_col).distinct().collect()]
+        with probe:
+            remaining = [r[0] for r in df.select(partition_col).distinct().collect()]
         if not remaining:
             return None
         keep = sorted((s for s in remaining if s is not None))[:fail_partition_limit]
@@ -147,12 +170,14 @@ def run_with_ledger(
             # (empty batch every resume, never ledgered, never done)
             cond = cond | F.col(partition_col).isNull()
         df = df.filter(cond)
-    elif not df.select(partition_col).take(1):
+    else:
         # emptiness probe, not a distinct-collect: partition_col may be
         # higher-cardinality than the ledger protocol expects (it should
         # be a low-cardinality logical partition like `source`), and
         # take(1) stops at the first row
-        return None
+        with probe:
+            if not df.select(partition_col).take(1):
+                return None
 
     # driver-side wall clock, NOT F.current_timestamp(): the latter is
     # evaluated once per QUERY, and both timestamp columns land in the
@@ -169,14 +194,15 @@ def run_with_ledger(
         # overwrite, so a partition re-validated after a crash between
         # the violations write and the ledger write REPLACES its rows
         # instead of appending duplicates.
-        (res.violations
-         .withColumn("run_id", F.lit(run_id))
-         .withColumn("params", F.to_json("params"))
-         .withColumn("part_key", part_key_col(partition_col))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("run_id", "part_key")
-         .parquet(violations_path))
+        with job_description(spark, f"ledger {run_id}: violations sink"):
+            (res.violations
+             .withColumns({"run_id": F.lit(run_id),
+                           "params": F.to_json("params"),
+                           "part_key": part_key_col(partition_col)})
+             .write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("run_id", "part_key")
+             .parquet(violations_path))
 
     # Per-check verdicts derived from each check's OWN violation class —
     # a partition failing only rowpass must report unique_*: pass, not
@@ -195,16 +221,17 @@ def run_with_ledger(
         agg_any = cond if agg_any is None else (agg_any | cond)
     rowpass_cond = ~agg_any if agg_any is not None else F.lit(True)
     check_conds = [("rowpass", rowpass_cond)] + agg_checks
-    # one tiny grouped aggregate over the (column-pruned, materialized)
-    # violations relation; joined back on the partition VALUE null-safely
-    per_check = (res.violations
-                 .groupBy(F.col(partition_col).alias("_ck_part"))
-                 .agg(*[F.count(F.when(cond, F.lit(1))).alias(f"_ck_{i}")
-                        for i, (_, cond) in enumerate(check_conds)]))
+    # the per-check violation counts ride in the verdicts' own groupBy over
+    # the read-back report: one scan, one shuffle, no join. The 'v' test
+    # keeps the 's' (row count) records out of every check's count
+    is_v = F.col("_rec") == "v"
+    verd = _verdicts_from_report(
+        res._report, [partition_col], partition_col,
+        *[F.count(F.when(is_v & cond, F.lit(1))).alias(f"_ck_{i}")
+          for i, (_, cond) in enumerate(check_conds)])
     checks = F.map_from_arrays(
         F.array(*[F.lit(name) for name, _ in check_conds]),
-        F.array(*[F.when(F.coalesce(F.col(f"_ck_{i}"), F.lit(0)) > 0,
-                         "fail").otherwise("pass")
+        F.array(*[F.when(F.col(f"_ck_{i}") > 0, "fail").otherwise("pass")
                   for i in range(len(check_conds))]),
     )
     # partition_id: STABLE across batches and crash-resumes — derived
@@ -216,21 +243,19 @@ def run_with_ledger(
     # reason (physical-plan-dependent noise). NULL partitions hash the
     # out-of-band sentinel, collision-free with any real 'v_'-prefixed
     # key (see part_key_col).
-    verd = res.verdicts.join(
-        per_check,
-        F.col(partition_col).eqNullSafe(F.col("_ck_part")), "left")
     ledger_rows = verd.select(
         F.lit(run_id).alias("run_id"),
         F.xxhash64(part_key_col(partition_col)).alias("partition_id"),
         F.col(partition_col).alias("source"),
-        F.col("rows").cast("long").alias("rows"),
-        F.col("violations").cast("long").alias("violations"),
-        F.col("verdict"),
+        "rows",
+        "violations",
+        "verdict",
         checks.alias("checks"),
         started.alias("started_at"),
         F.current_timestamp().alias("finished_at"),
     )
-    ledger_rows.write.mode("append").parquet(ledger_path)
+    with job_description(spark, f"ledger {run_id}: ledger write"):
+        ledger_rows.write.mode("append").parquet(ledger_path)
     return res
 
 

@@ -109,7 +109,10 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             # GC (Dataset.unpersist() would be a no-op on them, see the
             # generation-lifecycle note above)
             return labels
-    labels.unpersist()  # release the last generation before failing
+    # releases the last generation when it was persist()'d; after an 8th
+    # (localCheckpoint) round this is a no-op, and the ContextCleaner
+    # reclaims those blocks once the frame is unreferenced
+    labels.unpersist()
     raise RuntimeError(
         f"connected_components: no convergence after {max_iter} rounds "
         "(component diameter exceeds the round budget)")

@@ -43,27 +43,44 @@ _VIOL_ARR_DDL = f"array<{_VIOL_DDL}>"
 
 
 def _s(v) -> Column:
-    """Cast any column/literal to string for params maps."""
+    """Any column/literal as a string for params maps. Python strs are
+    already string literals; everything else takes Spark's string form
+    (`true`, `1.0E20`), which differs from Python's str()."""
+    if isinstance(v, str):
+        return F.lit(v)
     return (v if isinstance(v, Column) else F.lit(v)).cast("string")
+
+
+def _null(ddl: str) -> Column:
+    """A typed NULL literal. F.expr is one plain function call, where
+    lit(None).cast() adds a Column method call, and every Column method
+    call pays PySpark's call-site capture (a dozen py4j round trips)."""
+    return F.expr(f"CAST(NULL AS {ddl})")
+
+
+def _no_viols() -> Column:
+    """An empty violations array (typed, see _null)."""
+    return F.expr(f"CAST(array() AS {_VIOL_ARR_DDL})")
 
 
 def violation(path, code: str, rule: Optional[str] = None, params: Optional[dict] = None,
               message: Optional[str] = None) -> Column:
-    """Build a violation struct Column (shape of reference errors.go:39-54)."""
-    path_col = path if isinstance(path, Column) else F.lit(path)
+    """Build a violation struct Column (shape of reference errors.go:39-54).
+    A Column `path` must be string-typed (the builders pass concat()s).
+    named_struct over string literals needs no alias() or cast() calls."""
     if params:
         kv = []
         for k in sorted(params):
             kv.extend([F.lit(k), _s(params[k])])
         params_col = F.create_map(*kv)
     else:
-        params_col = F.lit(None).cast("map<string,string>")
-    return F.struct(
-        path_col.cast("string").alias("path"),
-        F.lit(code).alias("code"),
-        F.lit(message if message is not None else message_for(code)).alias("message"),
-        F.lit(rule).cast("string").alias("rule"),
-        params_col.alias("params"),
+        params_col = _null("MAP<STRING, STRING>")
+    return F.named_struct(
+        F.lit("path"), path if isinstance(path, Column) else F.lit(path),
+        F.lit("code"), F.lit(code),
+        F.lit("message"), F.lit(message if message is not None else message_for(code)),
+        F.lit("rule"), _null("STRING") if rule is None else F.lit(rule),
+        F.lit("params"), params_col,
     )
 
 
@@ -111,7 +128,7 @@ class CompiledChecks:
         clean-row set is decidable from the gate alone — a
         codegen-friendly filter that never touches the interpreted HOF
         violations build (validate_rows clean path)."""
-        self.arrays.append((gate, F.coalesce(arr, F.array().cast(_VIOL_ARR_DDL)),
+        self.arrays.append((gate, F.coalesce(arr, _no_viols()),
                             exact))
 
     def any_violation(self) -> Optional[Column]:
@@ -148,7 +165,7 @@ class CompiledChecks:
             parts.append(F.array(*[_maybe(c, v) for c, v in self.scalars]))
         parts.extend(a for _, a, _ in self.arrays)
         if not parts:
-            return F.array().cast(_VIOL_ARR_DDL)
+            return _no_viols()
         combined = parts[0] if len(parts) == 1 else F.concat(*parts)
         return F.filter(combined, lambda x: x.isNotNull())
 
@@ -157,7 +174,7 @@ class CompiledChecks:
         gate = self.any_violation()
         if gate is not None:
             combined = F.when(gate, combined).otherwise(
-                F.array().cast(_VIOL_ARR_DDL))
+                _no_viols())
         return combined
 
 
@@ -267,7 +284,7 @@ def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
                     params=r.params() if r.params else None)))
             branch_arrays.append(
                 F.filter(F.array(*items), lambda x: x.isNotNull())
-                if items else F.array().cast(_VIOL_ARR_DDL))
+                if items else _no_viols())
         chosen = branch_arrays[0]
         for arr in branch_arrays[1:]:
             # strict < keeps the first minimal branch on ties
@@ -431,7 +448,7 @@ def _gate_checks(out: CompiledChecks, sub: CompiledChecks, gate: Column):
         out.scalars.append((gate & c, v))
     for g, a, exact in sub.arrays:
         out.arrays.append((None if g is None else (gate & g),
-                           F.when(gate, a).otherwise(F.array().cast(_VIOL_ARR_DDL)),
+                           F.when(gate, a).otherwise(_no_viols()),
                            exact))
 
 
@@ -770,7 +787,7 @@ def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
     elem_type = phys_type.elementType if isinstance(phys_type, T.ArrayType) else None
     nn = col.isNotNull()
     sz = F.size(col)
-    empty = F.array().cast(_VIOL_ARR_DDL)
+    empty = _no_viols()
 
     def idx_path(i):
         return F.concat(p if isinstance(p, Column) else F.lit(p),
@@ -808,7 +825,7 @@ def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
             conds.append((t.isNotNull() & (t > spec.elem_max_incl), Codes.DOMAIN_RANGE,
                           "elem_domain",
                           {"min": spec.elem_min, "max": spec.elem_max_incl, "got": t}))
-        expr = F.lit(None).cast(_VIOL_DDL)
+        expr = _null(_VIOL_DDL)
         for cond, code, rule, params in reversed(conds):
             expr = F.when(cond, violation(path, code, rule, params)).otherwise(expr)
         return expr
@@ -839,7 +856,7 @@ def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
         arr = F.when(
             F.exists(col, elem_bad),
             F.filter(F.transform(col, elem_viol), lambda x: x.isNotNull()),
-        ).otherwise(F.array().cast(_VIOL_ARR_DDL))
+        ).otherwise(_no_viols())
         fast = _fast_elem_gate(col, spec, actual_type)
         out.add_array(arr, gate=fast if fast is not None
                       else F.exists(col, elem_bad))
@@ -982,7 +999,7 @@ def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
         def emb_viols(t, i):
             cs = _embedded_conds(t, idx_path(i), elem_type)
             if not cs:
-                return F.array().cast(_VIOL_ARR_DDL)
+                return _no_viols()
             items = [F.when(c, violation(pk, code, rule="embedded_resource",
                                          message=msg))
                      for c, pk, code, msg in cs]
@@ -1108,7 +1125,7 @@ def _compile_map(out: CompiledChecks, f: Field, col: Column, p: str):
         return
 
     def entry_viol(k, v):
-        expr = F.lit(None).cast(_VIOL_DDL)
+        expr = _null(_VIOL_DDL)
         for cond, code, rule, params, message in reversed(conds):
             expr = F.when(cond(k, v),
                           violation(key_path(k), code, rule,
@@ -1192,7 +1209,7 @@ def with_violations(df: DataFrame, schema: TableSchema,
     interpreted, and dirty rows evaluated them twice (VERDICT r3 #8 —
     the rowpass driver-bench regression)."""
     gate, body, _ = _compiled_triple(schema, df)
-    empty = F.array().cast(_VIOL_ARR_DDL)
+    empty = _no_viols()
     if schema.fail_fast:
         body = F.slice(body, 1, 1)  # first issue only (api.go:147-156)
     if gate is None:
@@ -1254,20 +1271,15 @@ def explode_violations(df: DataFrame, row_id: Column,
     goskema's issue ordering (reference README.md:573-574). `carry`
     appends passthrough columns (e.g. the logical partition) after the
     violation fields."""
+    # row_id is bound BEFORE the explode: in the same select it would be
+    # evaluated above the Generate, once per violation instead of per row
     v = df.withColumn("_row_id", row_id).select(
         F.col("_row_id").alias("row_id"),
-        F.explode(F.col(violations_col)).alias("v"),
-        *[F.col(c) for c in carry],
-    )
-    return v.select(
-        "row_id",
-        F.col("v.path").alias("path"),
-        F.col("v.code").alias("code"),
-        F.col("v.message").alias("message"),
-        F.col("v.rule").alias("rule"),
-        F.col("v.params").alias("params"),
+        F.explode(violations_col).alias("v"),
         *carry,
     )
+    return v.select("row_id", "v.path", "v.code", "v.message", "v.rule", "v.params",
+                    *carry)
 
 
 def validate_rows(df: DataFrame, schema: TableSchema, row_id: Column,

@@ -16,9 +16,24 @@ verdicts are then cheap column-pruned reads of that file. This replaces a
 not by a constant — at a 10% rate on 10^12 rows the report is 10^11
 heavyweight struct rows, which no executor cache should hold (measured:
 the persist caused GC stalls that erased all scaling; parquet
-materialization restored it). Without `report_path` the result stays
-fully lazy (each output recomputes its branch when actioned) — right for
-single-output callers like `is_valid`.
+materialization restored it). The report is read back with the schema
+it was just written with, so the read runs no schema-inference job.
+Without `report_path` the result stays fully lazy (each output
+recomputes its branch when actioned) — right for single-output callers
+like `is_valid`.
+
+Jobs of one `validate(report_path=...)`, each labelled with
+setJobDescription (the caller's description is restored afterwards;
+the job group is never touched):
+  - "validate: referential domain probe" — one small collect of a
+    dimension's values, once per dimension frame (memoized);
+  - "validate: report write" — the report write, one job per adaptive
+    query stage. The per-partition row count feeds both the 's' records
+    and, on a resume, the uniqueness-scope partition filter, so the two
+    share one exchange.
+Nothing else runs until the caller reads `violations` or `verdicts`.
+`ledger.run_with_ledger` adds its own jobs around these (see its
+module docstring).
 
 Per-partition verdicts use the *logical* partition (the `source` value by
 default) rather than spark_partition_id(): physical partition ids are not
@@ -31,10 +46,11 @@ aggregate over the report — `max(_rows)` recovers the row count from the
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass, field as dc_field
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from goskema_spark.referential import referential_violations
 from goskema_spark.rowpass import validate_rows
@@ -52,6 +68,23 @@ class ValidationResult:
     verdicts: DataFrame           # partition_col, rows, violations, verdict
     report: dict = dc_field(default_factory=dict)
     report_path: Optional[str] = None  # parquet materialization of the report
+    # the read-back report relation (report_path runs only): run_with_ledger
+    # aggregates its ledger rows straight off it
+    _report: Optional[DataFrame] = dc_field(default=None, init=False, repr=False)
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Label the Spark jobs launched inside the block (event logs and the
+    UI show it per job), then restore the caller's description. The job
+    group is left alone."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def validate(
@@ -82,6 +115,12 @@ def validate(
     carry = [partition_col] if partition_col in df.columns else []
     ann, rowpass_viols, clean = validate_rows(df, schema, row_id, carry=carry)
     agg_viols = []
+    # per-partition row counts: the 's' report records below, and on a
+    # resume the partition set uniqueness violations are narrowed to
+    if carry:
+        counts = df.groupBy(partition_col).agg(F.expr("count(1) AS _rows"))
+    else:
+        counts = df.agg(F.expr("count(1) AS _rows"))
     # aggregate checks read the PLAIN input, not the annotated plan — they
     # never touch _violations, and keeping the giant check expression out
     # of their subtrees cuts driver-side analysis cost ~3x per run
@@ -91,7 +130,12 @@ def validate(
         uv = uniqueness_violations(scope, uk.column, ordinal, row_id, carry=carry,
                                    broadcast=uk.broadcast)
         if uniqueness_scope is not None and carry:
-            parts = df.select(F.col(partition_col).alias("_part")).distinct()
+            # df's partitions, taken off the same count aggregate as the
+            # 's' records, so the report job reuses its exchange instead of
+            # scanning df again. `_rows > 0` always holds; it keeps the
+            # count referenced, else column pruning would strip it and the
+            # aggregate (and its exchange) would no longer match
+            parts = counts.where("_rows > 0").withColumnRenamed(partition_col, "_part")
             uv = uv.join(F.broadcast(parts),
                          F.col(partition_col).eqNullSafe(F.col("_part")), "left_semi")
         agg_viols.append(uv)
@@ -100,10 +144,12 @@ def validate(
         if dim is None:
             # dependency failure -> dependency_unavailable (errors.go:35)
             raise RuntimeError(f"dependency_unavailable: dimension '{fk.dim_name}' not provided")
-        agg_viols.append(
-            referential_violations(df, fk.column, dim, fk.dim_column,
-                                   row_id, code=fk.code, carry=carry)
-        )
+        # building it may probe the dim's domain (one small collect)
+        with job_description(df.sparkSession, "validate: referential domain probe"):
+            agg_viols.append(
+                referential_violations(df, fk.column, dim, fk.dim_column,
+                                       row_id, code=fk.code, carry=carry)
+            )
 
     # row-pass violations (carry already attached): validate_rows feeds
     # them from the filter-first dirty path — a codegen'd gate Filter
@@ -122,22 +168,15 @@ def validate(
     # concurrently. The row-count branch is column-pruned by Catalyst to
     # the partition column only (no check expressions) — at 100 TB that
     # reads one dictionary-encoded column, not the corpus.
-    v_rec = (all_viols
-             .withColumn("_rec", F.lit("v"))
-             .withColumn("_rows", F.lit(None).cast("bigint")))
-    null_viol_cols = [F.lit(None).cast("string").alias(c)
-                      for c in ("row_id", "path", "code", "message", "rule")]
-    if carry:
-        rows_rec = (df.groupBy(partition_col)
-                    .agg(F.count(F.lit(1)).cast("bigint").alias("_rows")))
-    else:
-        rows_rec = df.agg(F.count(F.lit(1)).cast("bigint").alias("_rows"))
-    rows_rec = rows_rec.select(
-        *null_viol_cols,
-        F.lit(None).cast("map<string,string>").alias("params"),
-        *[F.col(c) for c in carry],
-        F.lit("s").alias("_rec"),
-        F.col("_rows"),
+    v_rec = all_viols.withColumns({"_rec": F.lit("v"),
+                                   "_rows": F.expr("CAST(NULL AS BIGINT)")})
+    rows_rec = counts.select(
+        *[F.expr(f"CAST(NULL AS STRING) AS {c}")
+          for c in ("row_id", "path", "code", "message", "rule")],
+        F.expr("CAST(NULL AS MAP<STRING, STRING>) AS params"),
+        *carry,
+        F.expr("'s' AS _rec"),
+        "_rows",
     )
     report = v_rec.unionByName(rows_rec)
 
@@ -168,9 +207,11 @@ def validate(
             w = report.repartition(report_partitions)
         # zstd (guide §6): ~25% smaller report files than snappy at the
         # same write time — the violations/verdicts reads scan less
-        w.write.mode("overwrite").option("compression", "zstd") \
-            .parquet(report_path)
-        report = df.sparkSession.read.parquet(report_path)
+        with job_description(df.sparkSession, "validate: report write"):
+            w.write.mode("overwrite").option("compression", "zstd") \
+                .parquet(report_path)
+        # read back with the schema just written: no inference job
+        report = df.sparkSession.read.schema(report.schema).parquet(report_path)
         violations = (report.filter(F.col("_rec") == "v")
                       .select(*VIOLATION_COLS, *carry))
     else:
@@ -178,26 +219,32 @@ def validate(
 
     verdicts = _verdicts_from_report(report, carry, partition_col)
 
-    return ValidationResult(
+    res = ValidationResult(
         annotated=ann,
         violations=violations,
         clean=clean,
         verdicts=verdicts,
         report_path=report_path,
     )
+    if report_path:
+        res._report = report
+    return res
 
 
-def _verdicts_from_report(report: DataFrame, carry, partition_col: str) -> DataFrame:
+def _verdicts_from_report(report: DataFrame, carry, partition_col: str,
+                          *extra: Column) -> DataFrame:
     """ONE aggregate, no join: every partition present in df has exactly
     one 's' record carrying its row count (max() recovers it), and its
     violation rows all carry the same partition value (NULL included —
-    groupBy keeps a NULL group, so no null-safe join gymnastics)."""
+    groupBy keeps a NULL group, so no null-safe join gymnastics).
+    `extra` aggregates ride along in the same groupBy (the ledger's
+    per-check counts)."""
     viol_cnt = F.count(F.when(F.col("_rec") == "v", F.lit(1))).alias("violations")
     rows_cnt = F.max(F.when(F.col("_rec") == "s", F.col("_rows"))).alias("rows")
     if carry:
-        verdicts = report.groupBy(partition_col).agg(rows_cnt, viol_cnt)
+        verdicts = report.groupBy(partition_col).agg(rows_cnt, viol_cnt, *extra)
     else:
-        verdicts = report.agg(rows_cnt, viol_cnt)
+        verdicts = report.agg(rows_cnt, viol_cnt, *extra)
     return verdicts.withColumn(
         "verdict", F.when(F.col("violations") > 0, "fail").otherwise("pass")
     )

@@ -6,6 +6,7 @@ import shutil
 import tempfile
 
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from goskema_spark.corpus import corpus_from_documents, corpus_schema, dim_source_df, row_id_col
 from goskema_spark.ledger import read_ledger, run_with_ledger
@@ -153,5 +154,75 @@ def test_fail_limit_reaches_null_partition_and_timestamps(spark):
         assert any(r["source"] is None for r in led)  # NULL got ledgered
         assert all(r["started_at"] <= r["finished_at"] for r in led)
         assert any(r["started_at"] < r["finished_at"] for r in led)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _group_jobs(sc, group):
+    """(job count, set of job descriptions) of one job group."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    descs = set()
+    for j in jobs:
+        d = jsc.statusStore().job(j).description()
+        descs.add(d.get() if d.isDefined() else None)
+    return len(jobs), descs
+
+
+def test_resumed_invocation_jobs_labels_and_ledger_plan(spark, monkeypatch):
+    """One resumed invocation on the golden corpus runs a fixed number of
+    Spark jobs, every one of them labelled by phase, and restores the
+    caller's job description and group. Its ledger rows come from ONE
+    aggregate over the read-back report: one report scan, no join."""
+    corpus = corpus_from_documents(spark, SF)
+    dims = {"dim_source": dim_source_df(spark)}
+    sc = spark.sparkContext
+    tmp = tempfile.mkdtemp()
+    writes = []
+    orig = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        writes.append((path, self._df))
+        return orig(self, path, *args, **kwargs)
+
+    def run(group, **kw):
+        sc.setJobGroup(group, "caller")
+        try:
+            run_with_ledger(spark, corpus, corpus_schema(), row_id_col(),
+                            run_id="j", ledger_path=f"{tmp}/led", dims=dims,
+                            violations_path=f"{tmp}/v", **kw)
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+            assert sc.getLocalProperty("spark.jobGroup.id") == group
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    try:
+        run("gsk_first", fail_partition_limit=5)
+        # the dim's domain is probed once per dim (memoized), here
+        assert "validate: referential domain probe" in _group_jobs(sc, "gsk_first")[1]
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        run("gsk_resume")
+        n_jobs, descs = _group_jobs(sc, "gsk_resume")
+        # completed partitions 2 (ledger schema, collect), emptiness probe
+        # 1, report write 7 (one per adaptive stage), violations sink 1,
+        # ledger write 2. It was 18 before: completed partitions ran a
+        # distinct(), the uniqueness partition filter scanned the rows
+        # again, the report read-back inferred its schema, and the ledger
+        # write ran a second aggregate plus a join.
+        assert n_jobs == 13, n_jobs
+        assert descs == {
+            "ledger j: completed partitions", "ledger j: emptiness probe",
+            "validate: report write", "ledger j: violations sink",
+            "ledger j: ledger write"}, descs
+
+        ledger_df = next(df for p, df in writes if p == f"{tmp}/led")
+        qe = ledger_df._jdf.queryExecution()
+        plan = qe.optimizedPlan().toString()
+        assert plan.count("Relation ") == 1, plan
+        assert "__report" in qe.executedPlan().toString()
+        assert "Join" not in plan, plan
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -4,23 +4,30 @@ Usage: python tools/plans.py <outdir> <suffix> [name,...]
 Writes <outdir>/<name>_<suffix>.txt for each name.
 
 With no names, dumps the five bench.py query shapes (rowpass,
-clean_scan, stats_profile, ntok_histogram, full_validation) on the
-bench corpus (SPARK_GRAFT_SF_DIR x GSK_REPLICATE, built if missing).
-The full_validation report is captured as three plans in one file: the
-report relation (the single write job), the violations read, and the
-verdicts aggregate.
+clean_scan, stats_profile, ntok_histogram, full_validation) and
+ledger_rows on the bench corpus (SPARK_GRAFT_SF_DIR x GSK_REPLICATE,
+built if missing). The full_validation report is captured as three
+plans in one file: the report relation (the single write job), the
+violations read, and the verdicts aggregate. ledger_rows runs
+run_with_ledger interrupted after half the sources, then resumed, and
+dumps the final (adaptive) plans of the resumed invocation's report
+write (uniqueness scoped to the full table) and ledger write.
 
 Any other name resolves through __spark_entry__.queries() and runs at
 GSK_EXTRA_SF (default: bench.py's SF_DIR).
 
 Run the same command in a checkout of the older commit to produce the
-'before' plans, then diff the two directories.
+'before' plans (copy this file there for shapes it lacks), then diff
+the two directories.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -29,6 +36,48 @@ sys.path.insert(0, REPO)
 def fmt(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")
+
+
+# the output path of a file write, from the formatted plan's node details
+_WRITE_PATH = re.compile(r"\) Execute InsertIntoHadoopFsRelationCommand\n.*?Arguments: ([^,\s]+)",
+                         re.S)
+
+
+def final_write_plan(spark, path: str) -> str:
+    """The formatted final (adaptive) plan of the last parquet write into
+    `path`, from the SQL status store: exchange reuse only shows there,
+    adaptive execution applies it at run time."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in reversed(range(execs.size())):
+        plan = execs.apply(i).physicalPlanDescription()
+        out = _WRITE_PATH.search(plan)
+        if out and out.group(1).rstrip("/").endswith(path):
+            return plan
+    raise LookupError(f"no write into {path}")
+
+
+def ledger_plans(spark, load, dims) -> str:
+    """Final plans of the resumed run_with_ledger invocation's report
+    write and ledger write."""
+    from goskema_spark.corpus import corpus_schema, row_id_col
+    from goskema_spark.ledger import run_with_ledger
+
+    tmp = tempfile.mkdtemp(prefix="gsk_plans_")
+    try:
+        sources = load().select("source").distinct().collect()
+        half = max(1, len([r for r in sources if r[0] is not None]) // 2)
+        for kw in ({"fail_partition_limit": half}, {}):
+            run_with_ledger(spark, load(), corpus_schema(), row_id_col(),
+                            run_id="plans", ledger_path=f"{tmp}/ledger",
+                            violations_path=f"{tmp}/violations", dims=dims, **kw)
+        return "\n".join([
+            "==== report write (resumed invocation, final plan) ====",
+            final_write_plan(spark, f"{tmp}/ledger__report/run_id=plans"),
+            "==== ledger write (resumed invocation, final plan) ====",
+            final_write_plan(spark, f"{tmp}/ledger"),
+        ])
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def bench_plans(spark):
@@ -69,6 +118,7 @@ def bench_plans(spark):
         "==== verdicts (one aggregate over the report) ====",
         fmt(res.verdicts),
     ])
+    yield "ledger_rows", ledger_plans(spark, load, {"dim_source": dim})
 
 
 def query_plans(spark, names):
