@@ -26,11 +26,15 @@ Protocol:
     single-writer run; Iceberg commits would make this transactional on
     a real lakehouse).
   - resume: re-running with the same run_id loads the ledger, skips
-    completed partitions via partition-pruned scan (filter on the
-    partition column — pushed down to the reader), validates only the
-    remainder, and appends their ledger rows. The final ledger is
-    identical to an uninterrupted run (idempotence test in
-    tests/test_ledger.py).
+    completed partitions through a predicate on the partition column
+    (pushed down to the reader), validates only the remainder, and
+    appends their ledger rows. The final ledger is identical to an
+    uninterrupted run (idempotence test in tests/test_ledger.py).
+  - precondition: a run_id is resumed over the same input and the same
+    schema. The ledger counts of an invocation are read from the sink
+    partitions it rewrites; dynamic overwrite replaces only partitions
+    that have violations now, so a partition whose rows changed to clean
+    between a crash and its resume would still count its stale rows.
   - jobs of one invocation, in order, each labelled
     "ledger <run_id>: <phase>" or "validate: <phase>" via
     setJobDescription (the caller's description is restored; the job
@@ -41,13 +45,20 @@ Protocol:
          distinct() shuffle);
       2. emptiness probe — take(1) of the remaining rows (with
          fail_partition_limit: a distinct collect of their partitions);
-      3. validate's jobs (runner module docstring): the referential
-         domain probe, once per dimension frame, and the report write.
-         The report is read back with its known schema, no inference;
-      4. violations sink — one column-pruned scan of the report;
-      5. ledger write — ONE grouped aggregate over the report yields
-         rows, violations and every per-check count (one scan, one
-         shuffle, no join): two jobs.
+      3. validate's referential domain probe, once per dimension frame
+         (runner module docstring). validate() itself stays lazy: no
+         report is materialized;
+      4. violations sink — the lazy violation plan written straight into
+         the partitioned sink, one job per adaptive query stage. Rows
+         are shuffled by part_key with the REBALANCE hint: about one
+         file per partition, and AQE splits a hot partition;
+      5. ledger write — ONE grouped aggregate over this invocation's
+         sink partitions (read back with their known schema, pruned to
+         run_id and part_key) and the input's partition column (the row
+         counts) yields rows, violations and every per-check count: one
+         scan of each side, one shuffle, no join — two jobs. Without
+         violations_path the same aggregate runs over the lazy
+         violation plan.
 """
 
 from __future__ import annotations
@@ -116,6 +127,11 @@ def completed_partitions(spark: SparkSession, ledger_path: str, run_id: str):
     return vals, null_done
 
 
+def _partition_of_key(key: F.Column) -> F.Column:
+    """Inverse of part_key_col: the partition value a part_key names."""
+    return F.when(key != _NULL_KEY, F.substr(key, F.lit(3)))
+
+
 def run_with_ledger(
     spark: SparkSession,
     df: DataFrame,
@@ -127,39 +143,31 @@ def run_with_ledger(
     dims: Optional[dict] = None,
     partition_col: str = "source",
     fail_partition_limit: int = 0,
-    report_path: Optional[str] = None,
 ) -> Optional[ValidationResult]:
     """Validate `df`, skipping partitions already completed under this
     run_id. `fail_partition_limit` > 0 stops after writing that many
     partition batches (test hook simulating a mid-run crash).
 
-    report_path: scratch parquet location for the one-job report
-    materialization (defaults to a dir next to the ledger) — the
-    violations write and the ledger rows are then column-pruned reads of
-    one materialized relation instead of two full recomputations of the
-    pipeline.
-
     Returns the ValidationResult for the partitions processed in THIS
     invocation (None if everything was already complete).
     """
-    full_df = df  # uniqueness scope: the global table, never the pruned subset
-    if report_path is None:
-        report_path = f"{ledger_path.rstrip('/')}__report/run_id={run_id}"
     with job_description(spark, f"ledger {run_id}: completed partitions"):
         done, null_done = completed_partitions(spark, ledger_path, run_id)
-    if done or null_done:
-        cond = ~F.col(partition_col).isin(list(done)) if done else F.lit(True)
-        if null_done:
-            cond = cond & F.col(partition_col).isNotNull()
-        else:
-            cond = cond | F.col(partition_col).isNull()
-        df = df.filter(cond)  # partition-pruned re-scan
+    # the partitions this invocation validates, as a predicate on the
+    # partition column (pushed down to the reader). With nothing done it
+    # folds to `true`, and the optimizer drops the filters built from it
+    todo = ~F.col(partition_col).isin(list(done)) if done else F.lit(True)
+    if null_done:
+        todo = todo & F.col(partition_col).isNotNull()
+    else:
+        todo = todo | F.col(partition_col).isNull()
 
     probe = job_description(spark, f"ledger {run_id}: emptiness probe")
     if fail_partition_limit:
         # test hook only: needs the explicit partition list
         with probe:
-            remaining = [r[0] for r in df.select(partition_col).distinct().collect()]
+            remaining = [r[0] for r in
+                         df.filter(todo).select(partition_col).distinct().collect()]
         if not remaining:
             return None
         keep = sorted((s for s in remaining if s is not None))[:fail_partition_limit]
@@ -169,14 +177,14 @@ def run_with_ledger(
             # alone would starve it forever once it is the only one left
             # (empty batch every resume, never ledgered, never done)
             cond = cond | F.col(partition_col).isNull()
-        df = df.filter(cond)
+        todo = todo & cond
     else:
         # emptiness probe, not a distinct-collect: partition_col may be
         # higher-cardinality than the ledger protocol expects (it should
         # be a low-cardinality logical partition like `source`), and
         # take(1) stops at the first row
         with probe:
-            if not df.select(partition_col).take(1):
+            if not df.filter(todo).select(partition_col).take(1):
                 return None
 
     # driver-side wall clock, NOT F.current_timestamp(): the latter is
@@ -185,24 +193,39 @@ def run_with_ledger(
     # finished_at, erasing the run duration the lineage row exists for
     import datetime as _dt
     started = F.lit(_dt.datetime.now(_dt.timezone.utc))
+    # uniqueness runs over all of df (a global property); every other
+    # check, and the row counts, over the `todo` partitions only
     res = validate(df, schema, row_id, dims=dims, partition_col=partition_col,
-                   uniqueness_scope=full_df, report_path=report_path)
+                   partitions=todo)
 
+    viols = res.violations
     if violations_path:
         # Idempotent under crash-resume: violations land in
         # (run_id, partition) directories with DYNAMIC partition
         # overwrite, so a partition re-validated after a crash between
         # the violations write and the ledger write REPLACES its rows
-        # instead of appending duplicates.
+        # instead of appending duplicates. The lazy violation plan is
+        # written directly — no scratch report. REBALANCE by part_key
+        # keeps the file count near one per partition while letting
+        # AQE split a hot partition across tasks (a plain
+        # repartition("part_key") would put it in one task).
+        sink = (res.violations
+                .withColumns({"run_id": F.lit(run_id),
+                              "params": F.to_json("params"),
+                              "part_key": part_key_col(partition_col)})
+                .hint("rebalance", "part_key"))
         with job_description(spark, f"ledger {run_id}: violations sink"):
-            (res.violations
-             .withColumns({"run_id": F.lit(run_id),
-                           "params": F.to_json("params"),
-                           "part_key": part_key_col(partition_col)})
-             .write.mode("overwrite")
+            (sink.write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("run_id", "part_key")
              .parquet(violations_path))
+        # read back with the schema just written (no inference job),
+        # pruned to this run and, through the partition value decoded
+        # from part_key, to this invocation's partitions
+        viols = (spark.read.schema(sink.schema).parquet(violations_path)
+                 .where(F.col("run_id") == run_id)
+                 .withColumn(partition_col, _partition_of_key(F.col("part_key")))
+                 .where(todo))
 
     # Per-check verdicts derived from each check's OWN violation class —
     # a partition failing only rowpass must report unique_*: pass, not
@@ -221,12 +244,18 @@ def run_with_ledger(
         agg_any = cond if agg_any is None else (agg_any | cond)
     rowpass_cond = ~agg_any if agg_any is not None else F.lit(True)
     check_conds = [("rowpass", rowpass_cond)] + agg_checks
-    # the per-check violation counts ride in the verdicts' own groupBy over
-    # the read-back report: one scan, one shuffle, no join. The 'v' test
-    # keeps the 's' (row count) records out of every check's count
+    # ONE groupBy over this invocation's violations ('v') and its input
+    # rows ('s', one per row, summed into the row count) yields rows,
+    # violations and every per-check count: one scan of each side, one
+    # shuffle, no join. The 'v' test keeps the 's' records out of every
+    # check's count
+    recs = (viols.select(partition_col, "path", "rule", F.lit("v").alias("_rec"))
+            .unionByName(df.filter(todo).select(partition_col, F.lit("s").alias("_rec"),
+                                                F.lit(1).alias("_rows")),
+                         allowMissingColumns=True))
     is_v = F.col("_rec") == "v"
     verd = _verdicts_from_report(
-        res._report, [partition_col], partition_col,
+        recs, [partition_col], partition_col,
         *[F.count(F.when(is_v & cond, F.lit(1))).alias(f"_ck_{i}")
           for i, (_, cond) in enumerate(check_conds)])
     checks = F.map_from_arrays(

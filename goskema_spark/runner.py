@@ -28,18 +28,23 @@ the job group is never touched):
   - "validate: referential domain probe" — one small collect of a
     dimension's values, once per dimension frame (memoized);
   - "validate: report write" — the report write, one job per adaptive
-    query stage. The per-partition row count feeds both the 's' records
-    and, on a resume, the uniqueness-scope partition filter, so the two
-    share one exchange.
+    query stage.
 Nothing else runs until the caller reads `violations` or `verdicts`.
-`ledger.run_with_ledger` adds its own jobs around these (see its
+`ledger.run_with_ledger` passes no `report_path`: it writes the lazy
+violations straight into its sink and adds its own jobs (see its
 module docstring).
+
+Resume scoping (`partitions=`): a predicate on the partition column.
+Row checks, referential checks and row counts run on the filtered rows;
+uniqueness runs over the whole input (a global property) and only its
+violation rows are filtered, by the same predicate on the carried
+partition column — no join against the partition set.
 
 Per-partition verdicts use the *logical* partition (the `source` value by
 default) rather than spark_partition_id(): physical partition ids are not
 stable across cluster sizes, and the resume/ledger protocol needs a
 partition identity that survives re-planning. Verdicts are ONE hash
-aggregate over the report — `max(_rows)` recovers the row count from the
+aggregate over the report — `sum(_rows)` recovers the row count from the
 's' record and `count_if(_rec = 'v')` the violation count, with no join
 (NULL partition values group naturally).
 """
@@ -68,9 +73,6 @@ class ValidationResult:
     verdicts: DataFrame           # partition_col, rows, violations, verdict
     report: dict = dc_field(default_factory=dict)
     report_path: Optional[str] = None  # parquet materialization of the report
-    # the read-back report relation (report_path runs only): run_with_ledger
-    # aggregates its ledger rows straight off it
-    _report: Optional[DataFrame] = dc_field(default=None, init=False, repr=False)
 
 
 @contextmanager
@@ -95,49 +97,44 @@ def validate(
     partition_col: str = "source",
     report_path: Optional[str] = None,
     report_partitions: int = 0,
-    uniqueness_scope: Optional[DataFrame] = None,
+    partitions: Optional[Column] = None,
 ) -> ValidationResult:
     """Run the full check set declared on `schema` against `df`.
 
     report_path: parquet location for the one-job report materialization
     (see module docstring). None = fully lazy result.
 
-    uniqueness_scope: uniqueness is a GLOBAL property — when validating a
-    subset (checkpoint resume), pass the full table here so duplicate
+    partitions: a predicate on `partition_col` selecting the partitions
+    to validate (checkpoint resume); None validates all of `df`. Row
+    checks and row counts run on `df.filter(partitions)`. Uniqueness is
+    a GLOBAL property, so it still runs over all of `df` — duplicate
     detection and first/dup attribution stay identical to an
     uninterrupted run; the aggregate reads only (key, ordinal, partition)
-    via column pruning, so the extra scan is cheap. Violations are then
-    filtered to df's partitions.
+    via column pruning, so the extra scan is cheap — and its violation
+    rows are then filtered by the same predicate on the carried
+    partition column.
     """
     dims = dims or {}
 
     # carry the logical partition through aggregate checks for verdicts
     carry = [partition_col] if partition_col in df.columns else []
+    full = df
+    if partitions is not None:
+        if not carry:
+            raise ValueError(f"partitions needs the partition column "
+                             f"'{partition_col}' in df")
+        df = df.filter(partitions)
     ann, rowpass_viols, clean = validate_rows(df, schema, row_id, carry=carry)
     agg_viols = []
-    # per-partition row counts: the 's' report records below, and on a
-    # resume the partition set uniqueness violations are narrowed to
-    if carry:
-        counts = df.groupBy(partition_col).agg(F.expr("count(1) AS _rows"))
-    else:
-        counts = df.agg(F.expr("count(1) AS _rows"))
     # aggregate checks read the PLAIN input, not the annotated plan — they
     # never touch _violations, and keeping the giant check expression out
     # of their subtrees cuts driver-side analysis cost ~3x per run
     for uk in schema.unique_keys:
         ordinal = uk.ordinal or uk.column
-        scope = uniqueness_scope if uniqueness_scope is not None else df
-        uv = uniqueness_violations(scope, uk.column, ordinal, row_id, carry=carry,
+        uv = uniqueness_violations(full, uk.column, ordinal, row_id, carry=carry,
                                    broadcast=uk.broadcast)
-        if uniqueness_scope is not None and carry:
-            # df's partitions, taken off the same count aggregate as the
-            # 's' records, so the report job reuses its exchange instead of
-            # scanning df again. `_rows > 0` always holds; it keeps the
-            # count referenced, else column pruning would strip it and the
-            # aggregate (and its exchange) would no longer match
-            parts = counts.where("_rows > 0").withColumnRenamed(partition_col, "_part")
-            uv = uv.join(F.broadcast(parts),
-                         F.col(partition_col).eqNullSafe(F.col("_part")), "left_semi")
+        if partitions is not None:
+            uv = uv.filter(partitions)
         agg_viols.append(uv)
     for fk in schema.foreign_keys:
         dim = dims.get(fk.dim_name)
@@ -168,6 +165,10 @@ def validate(
     # concurrently. The row-count branch is column-pruned by Catalyst to
     # the partition column only (no check expressions) — at 100 TB that
     # reads one dictionary-encoded column, not the corpus.
+    if carry:
+        counts = df.groupBy(partition_col).agg(F.expr("count(1) AS _rows"))
+    else:
+        counts = df.agg(F.expr("count(1) AS _rows"))
     v_rec = all_viols.withColumns({"_rec": F.lit("v"),
                                    "_rows": F.expr("CAST(NULL AS BIGINT)")})
     rows_rec = counts.select(
@@ -219,28 +220,26 @@ def validate(
 
     verdicts = _verdicts_from_report(report, carry, partition_col)
 
-    res = ValidationResult(
+    return ValidationResult(
         annotated=ann,
         violations=violations,
         clean=clean,
         verdicts=verdicts,
         report_path=report_path,
     )
-    if report_path:
-        res._report = report
-    return res
 
 
 def _verdicts_from_report(report: DataFrame, carry, partition_col: str,
                           *extra: Column) -> DataFrame:
-    """ONE aggregate, no join: every partition present in df has exactly
-    one 's' record carrying its row count (max() recovers it), and its
-    violation rows all carry the same partition value (NULL included —
-    groupBy keeps a NULL group, so no null-safe join gymnastics).
-    `extra` aggregates ride along in the same groupBy (the ledger's
-    per-check counts)."""
+    """ONE aggregate, no join: the 's' records of a partition carry its
+    row count in `_rows` (sum() recovers it: validate's report has one
+    record per partition holding its count, the ledger one record per
+    row holding 1), and its violation rows all carry the same partition
+    value (NULL included — groupBy keeps a NULL group, so no null-safe
+    join gymnastics). `extra` aggregates ride along in the same groupBy
+    (the ledger's per-check counts)."""
     viol_cnt = F.count(F.when(F.col("_rec") == "v", F.lit(1))).alias("violations")
-    rows_cnt = F.max(F.when(F.col("_rec") == "s", F.col("_rows"))).alias("rows")
+    rows_cnt = F.sum(F.when(F.col("_rec") == "s", F.col("_rows"))).alias("rows")
     if carry:
         verdicts = report.groupBy(partition_col).agg(rows_cnt, viol_cnt, *extra)
     else:

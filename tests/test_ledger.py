@@ -2,21 +2,28 @@
 partitions, re-run with the same run_id, assert completed partitions are
 skipped and the final ledger matches an uninterrupted run."""
 
+import glob
+import os
+import re
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
 from goskema_spark.corpus import corpus_from_documents, corpus_schema, dim_source_df, row_id_col
 from goskema_spark.ledger import read_ledger, run_with_ledger
+from goskema_spark.runner import validate
 
 SF = "/root/testdata/sf0.001"
 
 
 def _ledger_key(rows):
+    """One run's ledger rows, run_id and timestamps aside, comparable."""
     return sorted(
-        ((r["source"], r["rows"], r["violations"], r["verdict"]) for r in rows),
+        ((r["source"], r["partition_id"], r["rows"], r["violations"], r["verdict"],
+          sorted(r["checks"].items())) for r in rows),
         key=repr,
     )
 
@@ -117,6 +124,7 @@ def test_resume_violations_not_duplicated(spark):
                         run_id="ref", ledger_path=f"{tmp}/led_ref", dims=dims,
                         violations_path=f"{tmp}/v_ref")
         ref_n = spark.read.parquet(f"{tmp}/v_ref").count()
+        ref_ledger = _ledger_key(read_ledger(spark, f"{tmp}/led_ref", "ref").collect())
 
         # partial run writes violations for 5 partitions, then "crash"
         # loses the ledger (worst-case ordering)
@@ -129,6 +137,12 @@ def test_resume_violations_not_duplicated(spark):
                         run_id="r", ledger_path=f"{tmp}/led", dims=dims,
                         violations_path=f"{tmp}/v")
         assert spark.read.parquet(f"{tmp}/v").count() == ref_n
+        # the resumed ledger counts come from the rewritten sink
+        # partitions: equal to the uninterrupted run's, timestamps aside
+        assert _ledger_key(read_ledger(spark, f"{tmp}/led", "r").collect()) == ref_ledger
+        # the violations are written once, straight into the sink: no
+        # scratch report is left next to the ledger
+        assert not glob.glob(f"{tmp}/*__report*"), os.listdir(tmp)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -173,8 +187,10 @@ def _group_jobs(sc, group):
 def test_resumed_invocation_jobs_labels_and_ledger_plan(spark, monkeypatch):
     """One resumed invocation on the golden corpus runs a fixed number of
     Spark jobs, every one of them labelled by phase, and restores the
-    caller's job description and group. Its ledger rows come from ONE
-    aggregate over the read-back report: one report scan, no join."""
+    caller's job description and group. Its violations go straight from
+    the lazy plan into the sink (rebalanced by part_key, no join against
+    the partition set), and its ledger rows come from ONE aggregate over
+    the sink read-back and the input rows: no join, no scratch report."""
     corpus = corpus_from_documents(spark, SF)
     dims = {"dim_source": dim_source_df(spark)}
     sc = spark.sparkContext
@@ -207,22 +223,62 @@ def test_resumed_invocation_jobs_labels_and_ledger_plan(spark, monkeypatch):
         run("gsk_resume")
         n_jobs, descs = _group_jobs(sc, "gsk_resume")
         # completed partitions 2 (ledger schema, collect), emptiness probe
-        # 1, report write 7 (one per adaptive stage), violations sink 1,
-        # ledger write 2. It was 18 before: completed partitions ran a
-        # distinct(), the uniqueness partition filter scanned the rows
-        # again, the report read-back inferred its schema, and the ledger
-        # write ran a second aggregate plus a join.
-        assert n_jobs == 13, n_jobs
+        # 1, violations sink 6 (one per adaptive stage), ledger write 2.
+        # It was 13 before: a scratch report was written, then read back
+        # for the sink, and its job also ran a row-count aggregate plus a
+        # broadcast of it to scope the uniqueness rows.
+        assert n_jobs == 11, n_jobs
         assert descs == {
             "ledger j: completed partitions", "ledger j: emptiness probe",
-            "validate: report write", "ledger j: violations sink",
-            "ledger j: ledger write"}, descs
+            "ledger j: violations sink", "ledger j: ledger write"}, descs
+
+        sink_df = next(df for p, df in writes if p == f"{tmp}/v")
+        sink_plan = sink_df._jdf.queryExecution().optimizedPlan().toString()
+        assert sink_plan.startswith("RebalancePartitions [part_key"), sink_plan
+        assert "LeftSemi" not in sink_plan, sink_plan
 
         ledger_df = next(df for p, df in writes if p == f"{tmp}/led")
         qe = ledger_df._jdf.queryExecution()
         plan = qe.optimizedPlan().toString()
-        assert plan.count("Relation ") == 1, plan
-        assert "__report" in qe.executedPlan().toString()
+        executed = qe.executedPlan().toString()
+        # two relations: the sink read-back and the input rows
+        assert plan.count("Relation ") == 2, plan
+        sink_scan = next((ln for ln in executed.splitlines() if f"{tmp}/v]" in ln), executed)
+        # pruned to this run and this invocation's partitions (part_key)
+        assert re.search(r"PartitionFilters: \[isnotnull\(run_id#\d+\), "
+                         r"\(run_id#\d+ = j\), .*part_key", sink_scan), sink_scan
+        assert "__report" not in executed, executed
         assert "Join" not in plan, plan
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_validate_partitions_scopes_rows_not_uniqueness(spark):
+    """validate(partitions=pred) equals the unscoped run filtered by pred:
+    row checks and row counts see only the selected partitions, while
+    uniqueness still attributes first/dup over the whole table (a
+    duplicate whose first occurrence lies outside the scope is kept)."""
+    corpus = corpus_from_documents(spark, SF)
+    dims = {"dim_source": dim_source_df(spark)}
+    # the DUP key occurs in src2 (first), src5, src8, src11 and src14
+    pred = F.col("source").isin("parachute", "src5", "src8") | F.col("source").isNull()
+    full = validate(corpus, corpus_schema(), row_id_col(), dims=dims)
+    scoped = validate(corpus, corpus_schema(), row_id_col(), dims=dims, partitions=pred)
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    assert rows(scoped.violations) == rows(full.violations.filter(pred))
+    assert rows(scoped.verdicts) == rows(full.verdicts.filter(pred))
+    assert scoped.clean.count() == full.clean.filter(pred).count()
+    uniq = scoped.violations.filter(F.col("rule") == "unique_by").collect()
+    assert len(uniq) == 2, uniq
+    # a uniqueness run over the scoped rows alone differs: the first
+    # occurrence lies outside the scope
+    alone = validate(corpus.filter(pred), corpus_schema(), row_id_col(), dims=dims)
+    assert rows(alone.violations.filter(F.col("rule") == "unique_by")) != \
+        sorted(map(repr, uniq))
+
+    with pytest.raises(ValueError):
+        validate(corpus.drop("source"), corpus_schema(), row_id_col(), dims=dims,
+                 partition_col="source", partitions=pred)

@@ -10,8 +10,9 @@ built if missing). The full_validation report is captured as three
 plans in one file: the report relation (the single write job), the
 violations read, and the verdicts aggregate. ledger_rows runs
 run_with_ledger interrupted after half the sources, then resumed, and
-dumps the final (adaptive) plans of the resumed invocation's report
-write (uniqueness scoped to the full table) and ledger write.
+dumps the final (adaptive) plans of the resumed invocation's violations
+sink write (uniqueness over the full table, its rows filtered to the
+resumed partitions) and ledger write.
 
 Any other name resolves through __spark_entry__.queries() and runs at
 GSK_EXTRA_SF (default: bench.py's SF_DIR).
@@ -57,8 +58,8 @@ def final_write_plan(spark, path: str) -> str:
 
 
 def ledger_plans(spark, load, dims) -> str:
-    """Final plans of the resumed run_with_ledger invocation's report
-    write and ledger write."""
+    """Final plans of the resumed run_with_ledger invocation's violations
+    sink write and ledger write."""
     from goskema_spark.corpus import corpus_schema, row_id_col
     from goskema_spark.ledger import run_with_ledger
 
@@ -71,8 +72,8 @@ def ledger_plans(spark, load, dims) -> str:
                             run_id="plans", ledger_path=f"{tmp}/ledger",
                             violations_path=f"{tmp}/violations", dims=dims, **kw)
         return "\n".join([
-            "==== report write (resumed invocation, final plan) ====",
-            final_write_plan(spark, f"{tmp}/ledger__report/run_id=plans"),
+            "==== violations sink write (resumed invocation, final plan) ====",
+            final_write_plan(spark, f"{tmp}/violations"),
             "==== ledger write (resumed invocation, final plan) ====",
             final_write_plan(spark, f"{tmp}/ledger"),
         ])
