@@ -48,17 +48,18 @@ Protocol:
       3. validate's referential domain probe, once per dimension frame
          (runner module docstring). validate() itself stays lazy: no
          report is materialized;
-      4. violations sink — the lazy violation plan written straight into
-         the partitioned sink, one job per adaptive query stage. Rows
-         are shuffled by part_key with the REBALANCE hint: about one
-         file per partition, and AQE splits a hot partition;
-      5. ledger write — ONE grouped aggregate over this invocation's
-         sink partitions (read back with their known schema, pruned to
-         run_id and part_key) and the input's partition column (the row
-         counts) yields rows, violations and every per-check count: one
-         scan of each side, one shuffle, no join — two jobs. Without
-         violations_path the same aggregate runs over the lazy
-         violation plan.
+      4. violations sink — runner.write_violations (the one violation
+         writer; validate(report_path=) writes the same columns, flat)
+         writes the lazy violation plan straight into violations_path,
+         with run_id as the leading partition and dynamic overwrite, one
+         job per adaptive query stage;
+      5. ledger write — runner.aggregate_verdicts, the one verdict
+         aggregate, over this invocation's sink partitions (the writer's
+         read-back, pruned to run_id and part_key) and the input's
+         partition column (the row counts) yields rows, violations and
+         every per-check count: one scan of each side, one shuffle, no
+         join — two jobs. Without violations_path the same aggregate
+         runs over the lazy violation plan.
 """
 
 from __future__ import annotations
@@ -70,7 +71,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from goskema_spark.issues import pointer
 from goskema_spark.runner import (
-    ValidationResult, _verdicts_from_report, job_description, validate)
+    ValidationResult, aggregate_verdicts, job_description, part_key_col, validate,
+    write_violations)
 
 LEDGER_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType(), False),
@@ -83,18 +85,6 @@ LEDGER_SCHEMA = T.StructType([
     T.StructField("started_at", T.TimestampType(), True),
     T.StructField("finished_at", T.TimestampType(), True),
 ])
-
-# Violations land in part_key=<dir> partitions. Real values get a "v_"
-# prefix and NULL gets its own token, so NO real partition value can
-# collide with the NULL slot (a literal "__NULL__" source becomes
-# "v___NULL__"). Spark URL-escapes unsafe chars in partition dir names.
-_NULL_KEY = "__NULL__"
-
-
-def part_key_col(partition_col: str) -> F.Column:
-    return F.when(F.col(partition_col).isNull(), _NULL_KEY).otherwise(
-        F.concat(F.lit("v_"), F.col(partition_col)))
-
 
 def completed_partitions(spark: SparkSession, ledger_path: str, run_id: str):
     """Partitions already ledgered under run_id -> (values, null_done).
@@ -125,11 +115,6 @@ def completed_partitions(spark: SparkSession, ledger_path: str, run_id: str):
     null_done = None in vals
     vals.discard(None)
     return vals, null_done
-
-
-def _partition_of_key(key: F.Column) -> F.Column:
-    """Inverse of part_key_col: the partition value a part_key names."""
-    return F.when(key != _NULL_KEY, F.substr(key, F.lit(3)))
 
 
 def run_with_ledger(
@@ -200,32 +185,11 @@ def run_with_ledger(
 
     viols = res.violations
     if violations_path:
-        # Idempotent under crash-resume: violations land in
-        # (run_id, partition) directories with DYNAMIC partition
-        # overwrite, so a partition re-validated after a crash between
-        # the violations write and the ledger write REPLACES its rows
-        # instead of appending duplicates. The lazy violation plan is
-        # written directly — no scratch report. REBALANCE by part_key
-        # keeps the file count near one per partition while letting
-        # AQE split a hot partition across tasks (a plain
-        # repartition("part_key") would put it in one task).
-        sink = (res.violations
-                .withColumns({"run_id": F.lit(run_id),
-                              "params": F.to_json("params"),
-                              "part_key": part_key_col(partition_col)})
-                .hint("rebalance", "part_key"))
+        # idempotent under crash-resume (write_violations): this
+        # invocation's partitions replace their rows under run_id
         with job_description(spark, f"ledger {run_id}: violations sink"):
-            (sink.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("run_id", "part_key")
-             .parquet(violations_path))
-        # read back with the schema just written (no inference job),
-        # pruned to this run and, through the partition value decoded
-        # from part_key, to this invocation's partitions
-        viols = (spark.read.schema(sink.schema).parquet(violations_path)
-                 .where(F.col("run_id") == run_id)
-                 .withColumn(partition_col, _partition_of_key(F.col("part_key")))
-                 .where(todo))
+            viols = write_violations(viols, violations_path, partition_col,
+                                     run_id=run_id).where(todo)
 
     # Per-check verdicts derived from each check's OWN violation class —
     # a partition failing only rowpass must report unique_*: pass, not
@@ -244,20 +208,9 @@ def run_with_ledger(
         agg_any = cond if agg_any is None else (agg_any | cond)
     rowpass_cond = ~agg_any if agg_any is not None else F.lit(True)
     check_conds = [("rowpass", rowpass_cond)] + agg_checks
-    # ONE groupBy over this invocation's violations ('v') and its input
-    # rows ('s', one per row, summed into the row count) yields rows,
-    # violations and every per-check count: one scan of each side, one
-    # shuffle, no join. The 'v' test keeps the 's' records out of every
-    # check's count
-    recs = (viols.select(partition_col, "path", "rule", F.lit("v").alias("_rec"))
-            .unionByName(df.filter(todo).select(partition_col, F.lit("s").alias("_rec"),
-                                                F.lit(1).alias("_rows")),
-                         allowMissingColumns=True))
-    is_v = F.col("_rec") == "v"
-    verd = _verdicts_from_report(
-        recs, [partition_col], partition_col,
-        *[F.count(F.when(is_v & cond, F.lit(1))).alias(f"_ck_{i}")
-          for i, (_, cond) in enumerate(check_conds)])
+    verd = aggregate_verdicts(
+        viols, df.filter(todo), partition_col,
+        [(f"_ck_{i}", cond) for i, (_, cond) in enumerate(check_conds)])
     checks = F.map_from_arrays(
         F.array(*[F.lit(name) for name, _ in check_conds]),
         F.array(*[F.when(F.col(f"_ck_{i}") > 0, "fail").otherwise("pass")

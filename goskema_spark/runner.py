@@ -2,25 +2,31 @@
 verdicts, stats, drift, ledger rows.
 
 Lifecycle (SURVEY §3.4): scan -> [the caller's explicit repartition by
-(source, hash(doc_id)), e.g. the CLI's --repartition] -> ONE fused
-report job whose branch stages run concurrently — vectorized row pass,
-uniqueness aggregate, referential anti-join, and a column-pruned
-per-partition row count — tagged by `_rec` and unioned into a single
-report relation. Fail-fast vs collect follows reference
+(source, hash(doc_id)), e.g. the CLI's --repartition] -> ONE violation
+plan: the vectorized row pass, the uniqueness aggregate and the
+referential anti-join, unioned. Fail-fast vs collect follows reference
 api.go:147-156.
 
 Materialization strategy (the 100 TB design): pass `report_path` to write
-the report ONCE as parquet in a single job; the violations table and the
-verdicts are then cheap column-pruned reads of that file. This replaces a
-`.persist()` of the report: violations are bounded by the violation rate,
-not by a constant — at a 10% rate on 10^12 rows the report is 10^11
-heavyweight struct rows, which no executor cache should hold (measured:
-the persist caused GC stalls that erased all scaling; parquet
-materialization restored it). The report is read back with the schema
-it was just written with, so the read runs no schema-inference job.
-Without `report_path` the result stays fully lazy (each output
-recomputes its branch when actioned) — right for single-output callers
-like `is_valid`.
+the violations ONCE as parquet in a single job; `violations` is then a
+read of those files. This replaces a `.persist()`: violations are bounded
+by the violation rate, not by a constant — at a 10% rate on 10^12 rows
+they are 10^11 heavyweight struct rows, which no executor cache should
+hold (measured: the persist caused GC stalls that erased all scaling;
+parquet materialization restored it). Without `report_path` the result
+stays fully lazy (each output recomputes its branch when actioned) —
+right for single-output callers like `is_valid`.
+
+One writer (`write_violations`), shared with `ledger.run_with_ledger`:
+the same parquet columns for both, `params` stored as JSON text,
+zstd-compressed, a REBALANCE shuffle before the write (not a coalesce,
+which would fold the upstream compute into the write tasks;
+`report_partitions` > 0 sets its count), and a read-back with the
+schema just written (no inference job) that parses `params` back into
+its map, so it has the lazy result's schema. validate() replaces all of
+`report_path` with flat files; the ledger writes run_id=/part_key=
+partitions (`part_key_col`) and overwrites only the partitions it
+writes.
 
 Jobs of one `validate(report_path=...)`, each labelled with
 setJobDescription (the caller's description is restored afterwards;
@@ -31,8 +37,8 @@ the job group is never touched):
     query stage.
 Nothing else runs until the caller reads `violations` or `verdicts`.
 `ledger.run_with_ledger` passes no `report_path`: it writes the lazy
-violations straight into its sink and adds its own jobs (see its
-module docstring).
+violations into its own sink through the same writer and adds its own
+jobs (see its module docstring).
 
 Resume scoping (`partitions=`): a predicate on the partition column.
 Row checks, referential checks and row counts run on the filtered rows;
@@ -44,15 +50,16 @@ Per-partition verdicts use the *logical* partition (the `source` value by
 default) rather than spark_partition_id(): physical partition ids are not
 stable across cluster sizes, and the resume/ledger protocol needs a
 partition identity that survives re-planning. Verdicts are ONE hash
-aggregate over the report — `sum(_rows)` recovers the row count from the
-'s' record and `count_if(_rec = 'v')` the violation count, with no join
-(NULL partition values group naturally).
+aggregate (`aggregate_verdicts`, shared with the ledger) over one record
+per violation and one per input row, the latter a column-pruned read of
+the input's partition column: no join (NULL partition values group
+naturally). With `report_path` the violation side is the report read-back.
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -62,17 +69,29 @@ from goskema_spark.rowpass import validate_rows
 from goskema_spark.schema import TableSchema
 from goskema_spark.uniqueness import uniqueness_violations
 
-VIOLATION_COLS = ["row_id", "path", "code", "message", "rule", "params"]
+# The ledger sink's violations land in part_key=<dir> partitions. Real
+# values get a "v_" prefix and NULL gets its own token, so NO real
+# partition value can collide with the NULL slot (a literal "__NULL__"
+# source becomes "v___NULL__"). Spark URL-escapes unsafe chars in
+# partition dir names.
+_NULL_KEY = "__NULL__"
+
+
+def part_key_col(partition_col: str) -> Column:
+    return F.when(F.col(partition_col).isNull(), _NULL_KEY).otherwise(
+        F.concat(F.lit("v_"), F.col(partition_col)))
+
+
+def _partition_of_key(key: Column) -> Column:
+    """Inverse of part_key_col: the partition value a part_key names."""
+    return F.when(key != _NULL_KEY, F.substr(key, F.lit(3)))
 
 
 @dataclass
 class ValidationResult:
-    annotated: DataFrame          # input + _violations array column
     violations: DataFrame         # union of row-pass + aggregate violations
     clean: DataFrame              # rows with zero violations (row-pass level)
     verdicts: DataFrame           # partition_col, rows, violations, verdict
-    report: dict = dc_field(default_factory=dict)
-    report_path: Optional[str] = None  # parquet materialization of the report
 
 
 @contextmanager
@@ -101,8 +120,9 @@ def validate(
 ) -> ValidationResult:
     """Run the full check set declared on `schema` against `df`.
 
-    report_path: parquet location for the one-job report materialization
-    (see module docstring). None = fully lazy result.
+    report_path: parquet location of the one-job violation report (see
+    module docstring). None = fully lazy result.
+    report_partitions: > 0 sets the report write's REBALANCE count.
 
     partitions: a predicate on `partition_col` selecting the partitions
     to validate (checkpoint resume); None validates all of `df`. Row
@@ -124,8 +144,13 @@ def validate(
             raise ValueError(f"partitions needs the partition column "
                              f"'{partition_col}' in df")
         df = df.filter(partitions)
-    ann, rowpass_viols, clean = validate_rows(df, schema, row_id, carry=carry)
-    agg_viols = []
+    # row-pass violations (carry already attached): validate_rows feeds
+    # them from the filter-first dirty path — a codegen'd gate Filter
+    # below the interpreted HOF body projection, NOT the guarded
+    # annotated shape, which pays interpreted per-row dispatch for every
+    # clean row (rowpass.py _dirty_with_violations has the equivalence
+    # argument)
+    _, violations, clean = validate_rows(df, schema, row_id, carry=carry)
     # aggregate checks read the PLAIN input, not the annotated plan — they
     # never touch _violations, and keeping the giant check expression out
     # of their subtrees cuts driver-side analysis cost ~3x per run
@@ -135,7 +160,7 @@ def validate(
                                    broadcast=uk.broadcast)
         if partitions is not None:
             uv = uv.filter(partitions)
-        agg_viols.append(uv)
+        violations = violations.unionByName(uv)
     for fk in schema.foreign_keys:
         dim = dims.get(fk.dim_name)
         if dim is None:
@@ -143,108 +168,79 @@ def validate(
             raise RuntimeError(f"dependency_unavailable: dimension '{fk.dim_name}' not provided")
         # building it may probe the dim's domain (one small collect)
         with job_description(df.sparkSession, "validate: referential domain probe"):
-            agg_viols.append(
+            violations = violations.unionByName(
                 referential_violations(df, fk.column, dim, fk.dim_column,
-                                       row_id, code=fk.code, carry=carry)
-            )
-
-    # row-pass violations (carry already attached): validate_rows feeds
-    # them from the filter-first dirty path — a codegen'd gate Filter
-    # below the interpreted HOF body projection, NOT the guarded `ann`
-    # shape, which pays interpreted per-row dispatch for every clean row
-    # (rowpass.py _dirty_with_violations has the equivalence argument)
-    all_viols = rowpass_viols
-    for v in agg_viols:
-        all_viols = all_viols.unionByName(v)
-
-    # ---- single-job report relation -----------------------------------
-    # The violation branches AND the per-partition row-count branch union
-    # into ONE plan, tagged by `_rec`. Materializing it is ONE Spark job:
-    # the branch stages (row pass, uniqueness aggregate, referential
-    # anti-join, row count) are independent and get scheduled
-    # concurrently. The row-count branch is column-pruned by Catalyst to
-    # the partition column only (no check expressions) — at 100 TB that
-    # reads one dictionary-encoded column, not the corpus.
-    if carry:
-        counts = df.groupBy(partition_col).agg(F.expr("count(1) AS _rows"))
-    else:
-        counts = df.agg(F.expr("count(1) AS _rows"))
-    v_rec = all_viols.withColumns({"_rec": F.lit("v"),
-                                   "_rows": F.expr("CAST(NULL AS BIGINT)")})
-    rows_rec = counts.select(
-        *[F.expr(f"CAST(NULL AS STRING) AS {c}")
-          for c in ("row_id", "path", "code", "message", "rule")],
-        F.expr("CAST(NULL AS MAP<STRING, STRING>) AS params"),
-        *carry,
-        F.expr("'s' AS _rec"),
-        "_rows",
-    )
-    report = v_rec.unionByName(rows_rec)
+                                       row_id, code=fk.code, carry=carry))
 
     if report_path:
-        # ONE job writes everything durably; downstream outputs are
-        # column-pruned parquet reads, immune to executor-cache pressure.
-        # report_partitions (typically = cluster cores): repartition —
-        # NOT coalesce — the write to that many tasks/files. The report
-        # is bounded by the violation rate, so without this the narrow
-        # row-pass branch emits one (tiny) file per INPUT partition and
-        # the single-threaded job-commit + footer overhead becomes a
-        # non-scaling tail at high parallelism. coalesce(N) was measured
-        # 40% SLOWER at 41M rows/local[8] (80-92s vs 56-62s): it folds
-        # the whole upstream compute into N tasks, losing dynamic load
-        # balancing across the input's finer partitioning. repartition
-        # keeps the upstream stage wide and only shuffles the (small,
-        # violation-rate-bounded) report rows into N write tasks.
-        # r6: the repartition is unconditional again — the r5 skip gated
-        # on df.rdd.getNumPartitions(), which (a) measured the INPUT
-        # width while the report's width is the sum of its branch
-        # widths (shuffle.partitions for the aggregate branches + input
-        # width for the map branches), so skipping lost the output-file-
-        # count control exactly when the report was wider than the
-        # input, and (b) forced an extra physical-plan-to-RDD conversion
-        # on the driver for every validate() call (ADVICE r5 #2).
-        w = report
-        if report_partitions:
-            w = report.repartition(report_partitions)
-        # zstd (guide §6): ~25% smaller report files than snappy at the
-        # same write time — the violations/verdicts reads scan less
         with job_description(df.sparkSession, "validate: report write"):
-            w.write.mode("overwrite").option("compression", "zstd") \
-                .parquet(report_path)
-        # read back with the schema just written: no inference job
-        report = df.sparkSession.read.schema(report.schema).parquet(report_path)
-        violations = (report.filter(F.col("_rec") == "v")
-                      .select(*VIOLATION_COLS, *carry))
+            violations = write_violations(violations, report_path, partition_col,
+                                          tasks=report_partitions)
+    return ValidationResult(violations=violations, clean=clean,
+                            verdicts=aggregate_verdicts(violations, df, partition_col))
+
+
+def write_violations(viols: DataFrame, path: str, partition_col: str,
+                     tasks: int = 0, run_id: Optional[str] = None) -> DataFrame:
+    """Write `viols` (the violation columns, plus `partition_col` when
+    carried) as parquet at `path` in one job, `params` as JSON text, and
+    return the read-back with `viols`'s columns and types.
+
+    With `run_id`: the ledger's sink. Rows land in run_id=/part_key=
+    partitions with dynamic overwrite — a partition re-validated after a
+    crash REPLACES its rows instead of appending duplicates — shuffled
+    by part_key with the REBALANCE hint (about one file per partition,
+    AQE splits a hot one); the read-back is pruned to the run, its
+    partition value decoded from part_key.
+
+    Without: a report replacing all of `path` — flat files with the
+    sink's columns, REBALANCEd into `tasks` partitions (0: AQE's
+    choice). Flat, because a file per partition costs ~15-20 ms to
+    create on a 4-vCPU host's local filesystem, and AQE merges a small
+    shuffle into one task that creates them in turn: with part_key
+    partitions, bench.py full_validation measured 13-33% slower."""
+    sink = viols.withColumn("params", F.to_json("params"))
+    if run_id is None:
+        sink = sink.hint("rebalance", *([tasks] if tasks > 0 else []))
+        parts = []
     else:
-        violations = all_viols
+        sink = sink.withColumns({"run_id": F.lit(run_id),
+                                 "part_key": part_key_col(partition_col)}) \
+            .hint("rebalance", "part_key")
+        parts = ["run_id", "part_key"]
+    # dynamic overwrite of an unpartitioned write replaces all of path
+    (sink.write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .option("compression", "zstd")
+     .partitionBy(*parts)
+     .parquet(path))
+    # read back with the schema just written: no inference job
+    back = viols.sparkSession.read.schema(sink.schema).parquet(path)
+    if parts:
+        back = (back.where(F.col("run_id") == run_id)
+                .withColumn(partition_col, _partition_of_key(F.col("part_key"))))
+    return back.select(*[F.from_json(c, "map<string,string>").alias(c) if c == "params"
+                         else c for c in viols.columns])
 
-    verdicts = _verdicts_from_report(report, carry, partition_col)
 
-    return ValidationResult(
-        annotated=ann,
-        violations=violations,
-        clean=clean,
-        verdicts=verdicts,
-        report_path=report_path,
-    )
-
-
-def _verdicts_from_report(report: DataFrame, carry, partition_col: str,
-                          *extra: Column) -> DataFrame:
-    """ONE aggregate, no join: the 's' records of a partition carry its
-    row count in `_rows` (sum() recovers it: validate's report has one
-    record per partition holding its count, the ledger one record per
-    row holding 1), and its violation rows all carry the same partition
-    value (NULL included — groupBy keeps a NULL group, so no null-safe
-    join gymnastics). `extra` aggregates ride along in the same groupBy
-    (the ledger's per-check counts)."""
-    viol_cnt = F.count(F.when(F.col("_rec") == "v", F.lit(1))).alias("violations")
-    rows_cnt = F.sum(F.when(F.col("_rec") == "s", F.col("_rows"))).alias("rows")
-    if carry:
-        verdicts = report.groupBy(partition_col).agg(rows_cnt, viol_cnt, *extra)
-    else:
-        verdicts = report.agg(rows_cnt, viol_cnt, *extra)
+def aggregate_verdicts(viols: DataFrame, df: DataFrame, partition_col: str,
+                       counts=()) -> DataFrame:
+    """Per-partition rows, violations and verdict: ONE aggregate, no
+    join, over one 'v' record per violation and one 's' record per row
+    of `df` (its partition column only). Every violation carries its
+    partition value (NULL included — groupBy keeps a NULL group, so no
+    null-safe join gymnastics). `counts`: (name, condition on a
+    violation row) pairs, each adding the column `name` with the number
+    of the partition's violations that match it (the ledger's per-check
+    counts). Without `partition_col` in `df`, one verdict for all of it."""
+    keys = [partition_col] if partition_col in df.columns else []
+    recs = viols.withColumn("_kind", F.lit("v")).unionByName(
+        df.select(*keys, F.lit("s").alias("_kind")), allowMissingColumns=True)
+    is_v = F.col("_kind") == "v"
+    verdicts = recs.groupBy(*keys).agg(
+        F.sum(F.when(F.col("_kind") == "s", F.lit(1))).alias("rows"),
+        F.count(F.when(is_v, F.lit(1))).alias("violations"),
+        *[F.count(F.when(is_v & cond, F.lit(1))).alias(name) for name, cond in counts])
     return verdicts.withColumn(
         "verdict", F.when(F.col("violations") > 0, "fail").otherwise("pass")
     )
-

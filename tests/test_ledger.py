@@ -8,6 +8,7 @@ import re
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
@@ -55,6 +56,11 @@ def test_resume_matches_uninterrupted(spark):
 
         final = _ledger_key(read_ledger(spark, f"{tmp}/led", "r1").collect())
         assert final == full
+        # the ledger and validate(report_path=) share one verdict aggregate
+        rp = validate(corpus, corpus_schema(), row_id_col(), dims=dims,
+                      report_path=f"{tmp}/report")
+        assert sorted(((s, n, v, verdict) for s, _, n, v, verdict, _ in full), key=repr) \
+            == sorted(map(tuple, rp.verdicts.collect()), key=repr)
 
         # third run: everything complete -> no-op
         assert run_with_ledger(spark, corpus, corpus_schema(), row_id_col(),
@@ -282,3 +288,49 @@ def test_validate_partitions_scopes_rows_not_uniqueness(spark):
     with pytest.raises(ValueError):
         validate(corpus.drop("source"), corpus_schema(), row_id_col(), dims=dims,
                  partition_col="source", partitions=pred)
+
+
+def _rows(df):
+    """A frame's rows, comparable whatever the order of map entries."""
+    return sorted(repr([sorted(v.items()) if isinstance(v, dict) else v for v in r])
+                  for r in df.collect())
+
+
+def _file_schema(path):
+    """The parquet schema of one data file under `path`."""
+    f = glob.glob(f"{path}/**/*.parquet", recursive=True)[0]
+    return pq.read_schema(f).remove_metadata()
+
+
+def test_report_path_writes_the_sink_columns(spark, tmp_path):
+    """validate(report_path=P) writes the ledger sink's parquet columns
+    (params as JSON text, no count records) and reads them back to the
+    lazy result's violations and verdicts. A second call replaces all of
+    P, and a frame without the partition column gets one verdict."""
+    corpus = corpus_from_documents(spark, SF)
+    dims = {"dim_source": dim_source_df(spark)}
+    report = str(tmp_path / "report")
+    lazy = validate(corpus, corpus_schema(), row_id_col(), dims=dims)
+    res = validate(corpus, corpus_schema(), row_id_col(), dims=dims, report_path=report)
+    assert _rows(res.violations) == _rows(lazy.violations)
+    assert any(r["params"] for r in res.violations.collect())  # the maps round-trip
+    assert _rows(res.verdicts) == _rows(lazy.verdicts)
+    run_with_ledger(spark, corpus, corpus_schema(), row_id_col(), run_id="c",
+                    ledger_path=str(tmp_path / "led"), violations_path=str(tmp_path / "sink"),
+                    dims=dims)
+    assert _file_schema(report) == _file_schema(tmp_path / "sink")
+
+    # a second call, on one source's rows, leaves only that source's rows
+    one = corpus.filter(F.col("source") == "parachute")
+    again = validate(one, corpus_schema(), row_id_col(), dims=dims, report_path=report)
+    assert {r["source"] for r in spark.read.parquet(report).collect()} == {"parachute"}
+    assert _rows(again.violations) == \
+        _rows(validate(one, corpus_schema(), row_id_col(), dims=dims).violations)
+
+    # no partition column: the same report, one verdict for the frame
+    kw = {"dims": dims, "partition_col": "no_such_column"}
+    flat = validate(corpus, corpus_schema(), row_id_col(), report_path=str(tmp_path / "flat"), **kw)
+    lazy = validate(corpus, corpus_schema(), row_id_col(), **kw)
+    assert _rows(flat.violations) == _rows(lazy.violations)
+    assert _rows(flat.verdicts) == _rows(lazy.verdicts)
+    assert len(flat.verdicts.collect()) == 1
