@@ -23,11 +23,8 @@ def is_valid(df: DataFrame, schema: TableSchema, row_id: Optional[Column] = None
     DataFrame passes every check. Short-circuits via limit(1) — fail-fast
     at the job level (reference api.go:147-156)."""
     rid = row_id if row_id is not None else F.monotonically_increasing_id().cast("string")
-    if schema.unique_keys or schema.foreign_keys:
-        res = validate(df, schema, rid, dims=dims)
-        return len(res.violations.limit(1).take(1)) == 0
-    _, viols, _ = validate_rows(df, schema, rid)
-    return len(viols.limit(1).take(1)) == 0
+    res = validate(df, schema, rid, dims=dims)
+    return len(res.violations.limit(1).take(1)) == 0
 
 
 def safe_validate(df: DataFrame, schema: TableSchema, row_id: Column,

@@ -28,7 +28,7 @@ import weakref
 from pyspark.sql import Column, DataFrame, functions as F
 
 from goskema_spark.issues import Codes, pointer
-from goskema_spark.rowpass import violation
+from goskema_spark.rowpass import violation, violation_rows
 
 # dims up to this many rows are compiled into an InSet
 # filter; the literal list lives in the plan, so keep it well under
@@ -111,9 +111,7 @@ def referential_violations(df: DataFrame, column: str, dim: DataFrame,
         )
     viol = violation(pointer(column), code, rule=f"ref_{column}",
                      params={"got": F.col(column)})
-    return misses.select(row_id.alias("row_id"), viol.alias("v"),
-                         *[F.col(c) for c in carry]) \
-        .select("row_id", "v.path", "v.code", "v.message", "v.rule", "v.params", *carry)
+    return violation_rows(misses, row_id, viol, carry)
 
 
 def referential_ok(df: DataFrame, column: str, dim: DataFrame, dim_column: str,

@@ -2,12 +2,18 @@
 
 The reference walks a token stream per document (reference
 internal/engine/engine.go:40-108) and accumulates Issues. Here the whole
-check set compiles to **one Spark `select`** of built-in Column
-expressions (whole-stage-codegen'd, no Python in the hot path): every
-check yields either a nullable violation struct or an array of violation
-structs (for per-element checks, reference dsl/array.go:79-117 issues at
-`/<field>/<idx>`), all concatenated into a `_violations` array column and
-filtered for nulls.
+check set compiles to built-in Column expressions (no Python in the hot
+path): every check yields either a nullable violation struct or an array
+of violation structs (for per-element checks, reference
+dsl/array.go:79-117 issues at `/<field>/<idx>`), all concatenated into a
+`_violations` array column and filtered for nulls.
+
+One feed shape (validate_rows): a whole-stage-codegen'd Filter on the
+gate (the OR of every check condition) BELOW the interpreted projection
+that builds `_violations`, so only rows where some check fired pay the
+interpreted build. The violations are exploded from that feed; the clean
+rows are a second Filter on the input, on the gate alone when the gate
+is exact.
 
 Fail-fast vs collect (reference api.go:147-156): collect keeps the full
 array; fail_fast slices it to 1 element per row (and callers can
@@ -84,6 +90,19 @@ def violation(path, code: str, rule: Optional[str] = None, params: Optional[dict
     )
 
 
+def violation_rows(df: DataFrame, row_id: Column, viol: Column, carry=()) -> DataFrame:
+    """Flat violation rows (VIOLATION_SCHEMA's columns, then `carry`)
+    from `df`, one per value of the violation-struct Column `viol` — an
+    explode() of a violations array, or one struct per row."""
+    # row_id is bound BEFORE the select: with an explode in the same
+    # select it would be evaluated above the Generate, once per violation
+    # instead of per row
+    v = df.withColumn("_row_id", row_id).select(
+        F.col("_row_id").alias("row_id"), viol.alias("v"), *carry)
+    return v.select("row_id", *[f"v.{f.name}" for f in VIOLATION_STRUCT.fields],
+                    *carry)
+
+
 def _maybe(cond: Column, viol: Column) -> Column:
     """Violation struct when cond is TRUE, else null (null-safe: a NULL
     condition means 'cannot evaluate' and does not fire, matching the
@@ -94,15 +113,16 @@ def _maybe(cond: Column, viol: Column) -> Column:
 class CompiledChecks:
     """scalars: list[(cond, struct)]; arrays: list[(gate|None, array<struct>)].
 
-    The separation exists for the hot-path gate in combined(): the
+    The separation exists for the gate (any_violation): the
     violation-array construction (array/concat/filter of structs) is a
     higher-order expression tree that Spark ALWAYS evaluates interpreted
     (no whole-stage codegen for HOF lambdas) — measured ~10-20x slower
-    per row than codegen'd predicates. Clean rows therefore first pass
-    through one cheap OR of all check conditions (codegen-friendly
-    comparisons); only rows with at least one firing check — bounded by
-    the violation rate, ~0 at production quality — pay the interpreted
-    struct construction."""
+    per row than codegen'd predicates. Rows therefore first pass through
+    one cheap OR of all check conditions (codegen-friendly comparisons);
+    only rows with at least one firing check — bounded by the violation
+    rate, ~0 at production quality — pay the interpreted struct
+    construction (validate_rows filters on the gate below body();
+    combined() guards it inline for per-element object checks)."""
 
     def __init__(self):
         self.scalars: list = []   # (cond, violation struct)
@@ -158,8 +178,8 @@ class CompiledChecks:
 
     def body(self) -> Column:
         """The UNGATED violations-array construction (interpreted HOF
-        territory) — callers that want the clean-row fast path pair this
-        with any_violation() in a separate projection (with_violations)."""
+        territory), correct on every row. validate_rows builds it only
+        on rows that pass a Filter on any_violation()."""
         parts = []
         if self.scalars:
             parts.append(F.array(*[_maybe(c, v) for c, v in self.scalars]))
@@ -759,7 +779,10 @@ def _fast_elem_gate(col: Column, spec, actual_type: str) -> Optional[Column]:
             uppers.append(bounds[1])
         if not uppers:
             return None  # no bound to anchor the probe: keep exists()
-        anchor = min(uppers)
+        # clamped to a literal Spark can hold: elem_max at int64's minimum
+        # fires its range condition on every non-NULL element, so the
+        # probe then only decides all-NULL arrays, where anchor is unused
+        anchor = max(min(uppers), INT_RANGES["int64"][0])
         # max+1 must stay inside the PHYSICAL element type (ANSI mode
         # would raise on overflow even in rows the gate already decided)
         phys_max = {"array<tinyint>": 2**7 - 1, "array<smallint>": 2**15 - 1,
@@ -1188,133 +1211,55 @@ def _compiled_triple(schema: TableSchema, df: DataFrame):
     return triple
 
 
-def with_violations(df: DataFrame, schema: TableSchema,
-                    violations_col: str = "_violations") -> DataFrame:
-    """Annotate every row with its violations array — ONE select, all
-    built-in expressions (north rule: no per-row Python).
-
-    The combined Column is memoized per (schema, column dtypes): building
-    it costs hundreds of py4j round-trips, and unbound Column trees are
-    immutable and reusable across DataFrames of the same shape. This is
-    pure driver-side serial time — exactly what Amdahl punishes at higher
-    parallelism.
-
-    Two-projection gate (r4): the OR of all check conditions lands in its
-    OWN projection (`_gsk_dirty`), referenced twice downstream so
-    CollapseProject keeps the boundary — the gate whole-stage-codegens
-    while the interpreted HOF violations build runs only where the gate
-    fired. The r3 single-projection shape put the gate INSIDE the same
-    Project as the HOF build, so the whole projection (gate included)
-    evaluated interpreted: clean rows re-evaluated every check condition
-    interpreted, and dirty rows evaluated them twice (VERDICT r3 #8 —
-    the rowpass driver-bench regression)."""
-    gate, body, _ = _compiled_triple(schema, df)
-    empty = _no_viols()
-    if schema.fail_fast:
-        body = F.slice(body, 1, 1)  # first issue only (api.go:147-156)
-    if gate is None:
-        # some array check has no cheap gate: every row builds anyway
-        return df.withColumn(violations_col, body)
-    # collision-proof internal name: the input may legitimately carry
-    # underscore columns (they are exempt from unknown-key checks), so
-    # never overwrite one that happens to be called _gsk_dirty
-    gname = "_gsk_dirty"
-    while gname in df.columns:
-        gname += "_"
-    d = F.col(gname)
-    # d is referenced twice and is non-trivial to re-inline, so
-    # CollapseProject preserves the projection boundary; null gate (no
-    # check could evaluate) reads as clean, matching _maybe() semantics
-    guarded = F.when(d, body).otherwise(F.when(d.isNull() | ~d, empty))
-    return (df.withColumn(gname, gate)
-            .withColumn(violations_col, guarded)
-            .drop(gname))
-
-
-def _dirty_with_violations(df: DataFrame, schema: TableSchema,
-                           violations_col: str = "_violations") -> DataFrame:
-    """Gate-fired rows only, annotated with the UNGATED violations body.
-
-    This is the explode feed: explode() drops empty arrays, so the
-    violations table is semantically `rows where the gate fired` +
-    `build the body there`. Expressing it that way — a codegen-friendly
-    Filter on the gate BELOW the interpreted HOF body projection —
-    keeps the interpreted projection off the clean majority entirely.
-    The with_violations shape (gate + guarded body in projections over
-    ALL rows) pays interpreted per-row dispatch of the `when(gate, ...)`
-    guard for every clean row, because the HOF anywhere in the
-    projection drops the whole projection out of whole-stage codegen;
-    measured on the 12.8M-row driver-bench corpus this filter-first
-    shape cut the violations job ~25% (see OPTIMIZATION_r06.md).
-
-    Equivalence with exploding with_violations' output: gate TRUE rows
-    keep their built body (identical expression); gate FALSE/NULL rows
-    had an empty array under the guarded shape, which explode drops —
-    here the Filter drops them before the body is ever built. Wide
-    (non-exact) gates may pass rows whose body is empty; explode still
-    drops those. Expects `df` to already have defaults applied (callers
-    share apply_defaults with the other outputs)."""
-    gate, body, _ = _compiled_triple(schema, df)
-    if schema.fail_fast:
-        body = F.slice(body, 1, 1)  # first issue only (api.go:147-156)
-    if gate is None:
-        # some array check has no cheap gate: every row builds anyway
-        return df.withColumn(violations_col, body)
-    return df.filter(gate).withColumn(violations_col, body)
-
-
-def explode_violations(df: DataFrame, row_id: Column,
-                       violations_col: str = "_violations",
-                       carry=()) -> DataFrame:
-    """_violations array -> violations table (FIXTURES.md F5 shape), sorted
-    deterministically by (row_id, path, code) — the distributed analog of
-    goskema's issue ordering (reference README.md:573-574). `carry`
-    appends passthrough columns (e.g. the logical partition) after the
-    violation fields."""
-    # row_id is bound BEFORE the explode: in the same select it would be
-    # evaluated above the Generate, once per violation instead of per row
-    v = df.withColumn("_row_id", row_id).select(
-        F.col("_row_id").alias("row_id"),
-        F.explode(violations_col).alias("v"),
-        *carry,
-    )
-    return v.select("row_id", "v.path", "v.code", "v.message", "v.rule", "v.params",
-                    *carry)
+def explode_violations(df: DataFrame, row_id: Column, carry=()) -> DataFrame:
+    """`_violations` array -> violations table (FIXTURES.md F5 shape),
+    one row per element; rows with an empty array yield none. Order is
+    the caller's: sort by (row_id, path, code) for goskema's issue
+    ordering (reference README.md:573-574). `carry` appends passthrough
+    columns (e.g. the logical partition) after the violation fields."""
+    return violation_rows(df, row_id, F.explode("_violations"), carry)
 
 
 def validate_rows(df: DataFrame, schema: TableSchema, row_id: Column,
                   carry=()):
-    """Full row pass: returns (annotated_df, violations_df, clean_df).
+    """Full row pass: returns (dirty_df, violations_df, clean_df), all
+    three derived from ONE feed — the rows where the gate fired, with
+    their `_violations` array:
+
+        feed = df.filter(gate).withColumn("_violations", body)
+
+    The gate Filter whole-stage-codegens BELOW the interpreted HOF body
+    projection, so the clean majority never reaches the build (measured
+    on the 12.8M-row driver-bench corpus: ~25% off the violations job
+    against building a guarded array on every row, OPTIMIZATION_r06.md).
+    A gate that is None (some array check has no cheap gate) feeds every
+    row. fail_fast keeps the first issue per row (api.go:147-156).
+
+    dirty_df: the input rows with at least one violation, plus
+    `_violations`. violations_df: the feed exploded (explode drops the
+    empty arrays a wide gate lets through), with `carry` columns appended
+    (the runner attaches the logical partition this way). clean_df: the
+    input rows with no violation — with an exact gate, a Filter on the
+    gate alone (NULL = no check could evaluate = clean) that never
+    touches the interpreted build; otherwise rows whose gate did not fire
+    or whose built body is empty. Every input row is in exactly one of
+    dirty_df and clean_df.
 
     clean_df preserves input token arrays byte-identically (per-row
     invariant, BASELINE.json input_hint) — it is a pure filter, never a
     rewrite of the data columns.
-
-    `carry` passes through to the violations table (runner attaches the
-    logical partition column this way, so the one dirty-path plan built
-    here serves the report job too).
     """
     df = apply_defaults(df, schema)
-    ann = with_violations(df, schema)
-    # violations come off the filter-first dirty path, not off `ann`:
-    # explode drops empty arrays anyway, so filtering on the codegen'd
-    # gate BEFORE the interpreted HOF body projection is equivalent and
-    # keeps the interpreted projection off the clean majority
-    viols = explode_violations(_dirty_with_violations(df, schema), row_id,
-                               carry=carry)
-    gate, _, exact = _compiled_triple(schema, df)
+    gate, body, exact = _compiled_triple(schema, df)
+    if schema.fail_fast:
+        body = F.slice(body, 1, 1)  # first issue only (api.go:147-156)
+    feed = (df if gate is None else df.filter(gate)).withColumn("_violations", body)
+    violations = explode_violations(feed, row_id, carry=carry)
     if gate is not None and exact:
-        # clean selection straight off the codegen-friendly gate: a row
-        # is clean iff no check condition fired (NULL gate = no check
-        # could evaluate = clean, matching with_violations' guarded
-        # path). Filtering ann on size(_violations)==0 instead would
-        # inline the whole gated HOF violations build into the Filter
-        # (predicate pushdown substitutes the projected column), making
-        # every clean row pay the interpreted expression tree — the r4
-        # clean_scan driver-bench regression (VERDICT r4 #4).
-        clean = df.filter(gate.isNull() | ~gate)
-    else:
-        # some check has no gate or a wide one — fall back to the exact
-        # (interpreted) emptiness test on the built violations
-        clean = ann.filter(F.size(F.col("_violations")) == 0).drop("_violations")
-    return ann, viols, clean
+        # gate-only clean filter: testing the built array here instead
+        # would inline the interpreted HOF build into the Filter and make
+        # every clean row pay it (the r4 clean_scan regression)
+        return feed, violations, df.filter(gate.isNull() | ~gate)
+    empty = F.size(body) == 0
+    clean = df.filter(empty if gate is None else gate.isNull() | ~gate | empty)
+    return feed.filter(F.size("_violations") > 0), violations, clean

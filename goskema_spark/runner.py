@@ -144,14 +144,11 @@ def validate(
             raise ValueError(f"partitions needs the partition column "
                              f"'{partition_col}' in df")
         df = df.filter(partitions)
-    # row-pass violations (carry already attached): validate_rows feeds
-    # them from the filter-first dirty path — a codegen'd gate Filter
-    # below the interpreted HOF body projection, NOT the guarded
-    # annotated shape, which pays interpreted per-row dispatch for every
-    # clean row (rowpass.py _dirty_with_violations has the equivalence
-    # argument)
+    # row-pass violations (carry already attached), exploded from
+    # validate_rows' one feed: a codegen'd gate Filter below the
+    # interpreted HOF body projection, so clean rows never reach the build
     _, violations, clean = validate_rows(df, schema, row_id, carry=carry)
-    # aggregate checks read the PLAIN input, not the annotated plan — they
+    # aggregate checks read the PLAIN input, not the row-pass feed — they
     # never touch _violations, and keeping the giant check expression out
     # of their subtrees cuts driver-side analysis cost ~3x per run
     for uk in schema.unique_keys:

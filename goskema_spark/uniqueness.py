@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from goskema_spark.issues import Codes, MSG_DUPLICATE_VALUE, pointer
-from goskema_spark.rowpass import violation
+from goskema_spark.rowpass import violation, violation_rows
 
 
 def duplicate_keys(df: DataFrame, key: str, salt_buckets: int = 0) -> DataFrame:
@@ -132,44 +132,4 @@ def uniqueness_violations(df: DataFrame, key: str, ordinal: str,
         params={"first": F.col("_first"), "dup": F.col(ordinal), "key": F.col(key)},
         message=MSG_DUPLICATE_VALUE,
     )
-    return sub.select(
-        row_id.alias("row_id"),
-        viol.alias("v"),
-        *[F.col(c) for c in carry],
-    ).select("row_id", "v.path", "v.code", "v.message", "v.rule", "v.params", *carry)
-
-
-def within_row_unique_violations(df: DataFrame, array_col: str, row_id: Column) -> DataFrame:
-    """Within-row variant: elements of an array column must be unique
-    (k8s x-kubernetes-list-type: set, reference kubeopenapi/list.go:17-39).
-    Reports `uniqueness` at /<col>/<dup_idx> with first/dup/key params."""
-    col = F.col(array_col)
-    p = pointer(array_col)
-    # first index of each value via array_position (1-based -> 0-based).
-    # The per-element array_position scan is O(n²), so it is gated behind
-    # an O(n) existence probe — clean rows never pay the quadratic path
-    # (same design as the rowpass list_set check).
-    # no otherwise: a clean row yields NULL, which explode() drops —
-    # no need to synthesize a typed empty array for arbitrary elem types
-    dup_structs = F.when(
-        F.size(F.array_distinct(col)) < F.size(col),
-        F.filter(
-            F.transform(col, lambda t, i: F.struct(
-                t.alias("val"), i.alias("idx"),
-                (F.array_position(col, t) - 1).alias("first"))),
-            lambda s: s["idx"] != s["first"],
-        ),
-    )
-    exploded = (
-        df.withColumn("_rid", row_id)
-        .select("_rid", F.explode(dup_structs).alias("d"))
-    )
-    viol = violation(
-        F.concat(F.lit(p + "/"), F.col("d.idx").cast("string")),
-        Codes.UNIQUENESS,
-        rule="list_set_unique",
-        params={"first": F.col("d.first"), "dup": F.col("d.idx"), "key": F.col("d.val")},
-        message=MSG_DUPLICATE_VALUE,
-    )
-    return exploded.select(F.col("_rid").alias("row_id"), viol.alias("v")) \
-        .select("row_id", "v.path", "v.code", "v.message", "v.rule", "v.params")
+    return violation_rows(sub, row_id, viol, carry)

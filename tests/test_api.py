@@ -29,6 +29,13 @@ def test_is_valid(spark):
         & F.col("source").isin([f"src{i}" for i in range(20)]))
     assert is_valid(clean_only, corpus_schema(), row_id_col(), dims=dims)
 
+    # a schema without unique or foreign keys: the row pass alone decides
+    keyless = golden_schema()
+    keyless.unique_keys, keyless.foreign_keys = [], []
+    golden = golden_corpus(spark)
+    assert not is_valid(golden, keyless, row_id_col())
+    assert is_valid(golden.filter(F.col("_ord") < 50), keyless, row_id_col())
+
 
 def test_safe_validate(spark):
     corpus = golden_corpus(spark)

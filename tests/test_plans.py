@@ -111,26 +111,29 @@ def test_rowpass_no_python_and_codegen(spark):
         assert "*(" in plan, "row pass should have codegen'd stages"
 
 
-def test_violations_filter_first_matches_guarded(spark):
+def test_violations_filter_first_matches_ungated_body(spark):
     """r6: the violations feed filters on the codegen'd gate BELOW the
-    interpreted HOF body projection (explode drops empty arrays, so the
-    two shapes are equivalent). Checks (a) the plan really has the gate
-    as a Filter under the Generate, and (b) row-for-row equivalence with
-    exploding the guarded with_violations output — including a WIDE
-    (non-exact) gate, where gate-fired rows can still build an empty
-    array that explode must drop."""
+    interpreted HOF body projection (explode drops empty arrays, so
+    rows the gate skips lose nothing). Checks (a) the plan really has
+    the gate as a Filter under the Generate, and (b) row-for-row
+    equality with exploding the UNGATED body built on every row —
+    including a WIDE (non-exact) gate, where gate-fired rows can still
+    build an empty array that explode must drop."""
     from pyspark.sql import types as T
 
     from goskema_spark import schema as S
-    from goskema_spark.rowpass import (_dirty_with_violations, apply_defaults,
-                                       explode_violations, with_violations)
+    from goskema_spark.rowpass import apply_defaults, compile_checks, explode_violations
+
+    def ungated(df, sch, rid):
+        dfd = apply_defaults(df, sch)
+        body = compile_checks(sch, dfd).body()
+        return explode_violations(dfd.withColumn("_violations", body), rid)
 
     with tempfile.TemporaryDirectory() as tmp:
         df = _corpus_parquet(spark, tmp)
         sch = corpus_schema()
-        dfd = apply_defaults(df, sch)
-        new = explode_violations(_dirty_with_violations(dfd, sch), row_id_col())
-        old = explode_violations(with_violations(dfd, sch), row_id_col())
+        new = validate_rows(df, sch, row_id_col())[1]
+        old = ungated(df, sch, row_id_col())
         plan = _plan(new)
         gen = plan.find("Generate")
         filt = plan.find("Filter", gen)
@@ -159,31 +162,26 @@ def test_violations_filter_first_matches_guarded(spark):
         [S.Refinement(name="b_set", path="/b", code="required",
                       violates=lambda: F.col("b").isNull())],
     ])
-    dfd2 = apply_defaults(df2, sch2)
-    new2 = explode_violations(_dirty_with_violations(dfd2, sch2), F.col("id"))
-    old2 = explode_violations(with_violations(dfd2, sch2), F.col("id"))
+    new2 = validate_rows(df2, sch2, F.col("id"))[1]
+    old2 = ungated(df2, sch2, F.col("id"))
     got_new = sorted((r["row_id"], r["path"], r["code"]) for r in new2.collect())
     got_old = sorted((r["row_id"], r["path"], r["code"]) for r in old2.collect())
     assert got_new == got_old
     assert any(r[0] == "r3" for r in got_new)  # the violating row
 
 
-def test_gate_projection_boundary(spark):
-    """The violation gate (OR of all check conditions) must survive in
-    its OWN projection after optimization: if CollapseProject ever
-    re-inlines it into the HOF build projection, the whole projection —
-    gate included — falls back to interpreted eval and clean rows pay
-    the full check-condition re-evaluation again (the r3 rowpass
-    regression)."""
+def test_clean_rows_filter_on_the_gate_alone(spark):
+    """With an exact gate the clean rows are one Filter on the gate: no
+    higher-order function anywhere in the plan, and the Filter is
+    whole-stage-codegen'd. Testing the built violations array instead
+    inlines the interpreted build into the Filter, and every clean row
+    pays it (the r4 clean_scan regression)."""
     with tempfile.TemporaryDirectory() as tmp:
         df = _corpus_parquet(spark, tmp)
-        ann, _, _ = validate_rows(df, corpus_schema(), row_id_col())
-        opt = ann._jdf.queryExecution().optimizedPlan().toString()
-        assert "AS _gsk_dirty" in opt, "gate column collapsed away"
-        # defined once, referenced by the guarded violations expression
-        assert opt.count("_gsk_dirty") >= 3, opt[:500]
-        # and the output schema must not leak the internal column
-        assert "_gsk_dirty" not in ann.columns
+        plan = _plan(validate_rows(df, corpus_schema(), row_id_col())[2])
+        assert "lambdafunction" not in plan, plan
+        filters = [ln for ln in plan.splitlines() if " Filter " in ln]
+        assert filters and all("*(" in ln for ln in filters), plan
 
 
 def test_uniqueness_is_two_stage_agg(spark):

@@ -23,7 +23,7 @@ def _viol_set(df):
 
 def test_golden_rowpass_codes_and_paths(spark):
     corpus = golden_corpus(spark)
-    ann, viols, clean = validate_rows(corpus, golden_schema(), row_id_col())
+    _, viols, clean = validate_rows(corpus, golden_schema(), row_id_col())
     got = _viol_set(viols)
     expected = {
         ("d0051", "/tokens", "required"),
@@ -98,7 +98,7 @@ def test_fail_fast_single_issue_per_row(spark):
     sch = golden_schema()
     sch.fail_fast = True
     corpus = golden_corpus(spark)
-    ann, viols, _ = validate_rows(corpus, sch, row_id_col())
+    _, viols, _ = validate_rows(corpus, sch, row_id_col())
     per_row = viols.groupBy("row_id").count().collect()
     assert all(r["count"] == 1 for r in per_row)
     # multi-issue row d0056 keeps exactly its first issue

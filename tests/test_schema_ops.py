@@ -6,7 +6,6 @@ from pyspark.sql import functions as F, types as T
 from goskema_spark import schema as S
 from goskema_spark.rowpass import validate_rows
 from goskema_spark.schema import Refinement
-from goskema_spark.uniqueness import within_row_unique_violations
 
 
 def _df(spark, rows, schema):
@@ -135,7 +134,7 @@ def test_default_applied_presence(spark):
         T.StructField("v", T.IntegerType())]))
     sch = S.table(S.field("id", "string", required=True),
                   S.field("v", "int32", default=42))
-    ann, viols, clean = validate_rows(df, sch, F.col("id"))
+    _, viols, clean = validate_rows(df, sch, F.col("id"))
     rows = {r["id"]: r for r in clean.collect()}
     assert rows["a"]["v"] == 42 and rows["a"]["_default_applied"]["v"] is True
     assert rows["b"]["v"] == 7 and rows["b"]["_default_applied"]["v"] is False
@@ -156,18 +155,6 @@ def test_rfc3339_codec(spark):
         F.date_format(F.to_timestamp("ts"), "yyyy-MM-dd'T'HH:mm:ssX").alias("out")
     ).collect()[0]["out"]
     assert enc == "2024-01-02T03:04:05Z"
-
-
-def test_within_row_uniqueness(spark):
-    """k8s list-type=set semantics (reference kubeopenapi/list.go:17-39)."""
-    df = _df(spark, [("a", ["x", "y", "x", "z", "y"]), ("b", ["p", "q"])],
-             T.StructType([T.StructField("id", T.StringType()),
-                           T.StructField("xs", T.ArrayType(T.StringType()))]))
-    v = within_row_unique_violations(df, "xs", F.col("id"))
-    rows = {(r["row_id"], r["path"]): r for r in v.collect()}
-    assert set(rows) == {("a", "/xs/2"), ("a", "/xs/4")}
-    assert rows[("a", "/xs/2")]["params"] == {"first": "0", "dup": "2", "key": "x"}
-    assert rows[("a", "/xs/2")]["message"] == "duplicate value"
 
 
 def test_conditional_rule_combinators(spark):
@@ -356,11 +343,6 @@ def test_list_set_10k_element_arrays_subquadratic(spark):
     assert got == {("7", f"/xs/{width-1}", "duplicate_item", "5"),
                    ("13", f"/xs/{width-1}", "duplicate_item", "5")}
 
-    # same guarantee for the standalone within-row helper
-    v2 = within_row_unique_violations(df, "xs", F.col("rid"))
-    got2 = {(r["row_id"], r["path"]) for r in v2.collect()}
-    assert got2 == {("7", f"/xs/{width-1}"), ("13", f"/xs/{width-1}")}
-
 
 def test_decimal_number_mode(spark):
     """NumberDecimal mode (reference types.go:18-19 declares the mode;
@@ -416,6 +398,24 @@ def test_decimal_high_precision_boundary(spark):
     assert got == {("over", "decimal_range"), ("scale", "decimal_scale")}
 
 
+def test_elem_max_at_int64_min(spark):
+    """An exclusive element maximum at int64's minimum admits no value:
+    every non-NULL element is out of the domain. The codegen'd element
+    gate anchors its NULL probe at elem_max - 1, which must not leave
+    int64 (Spark cannot hold the literal and compilation used to raise)."""
+    lo = -(2**63)
+    sch = S.table(S.field("rid", "string", required=True),
+                  S.field("xs", S.array("int64", elem_max=lo)))
+    df = spark.createDataFrame(
+        [("vals", [lo, 0]), ("nulls", [None]), ("empty", [])],
+        "rid string, xs array<bigint>")
+    _, viols, clean = validate_rows(df, sch, F.col("rid"))
+    assert _codes(viols) == {("vals", "/xs/0", "domain_range"),
+                             ("vals", "/xs/1", "domain_range"),
+                             ("nulls", "/xs/0", "invalid_type")}
+    assert [r["rid"] for r in clean.collect()] == ["empty"]
+
+
 def test_list_set_null_elements_stay_clean(spark):
     """Duplicate NULL elements must not trip the list_set gate: the
     attribution skips nulls (array_position has no stable answer for
@@ -431,13 +431,16 @@ def test_list_set_null_elements_stay_clean(spark):
          ("clean", ["a", "b"]),
          ("dup", ["a", None, "a"])],
         "rid string, xs array<string>")
-    ann, viols, clean = validate_rows(df, sch, F.col("rid"))
+    dirty, viols, clean = validate_rows(df, sch, F.col("rid"))
     assert {r["row_id"] for r in viols.collect()} == {"dup"}
     # the null-only-duplicate row is CLEAN, not lost
-    assert {r["rid"] for r in clean.collect()} == {"nulls", "clean"}
-    # conservation: every input row is exactly clean or violating
-    flagged = {r["rid"]: len(r["_violations"]) for r in ann.collect()}
-    assert flagged == {"nulls": 0, "clean": 0, "dup": 1}
+    clean_ids = [r["rid"] for r in clean.collect()]
+    assert sorted(clean_ids) == ["clean", "nulls"]
+    # conservation: every input row is exactly clean or dirty
+    flagged = {r["rid"]: len(r["_violations"]) for r in dirty.collect()}
+    assert flagged == {"dup": 1}
+    assert not set(clean_ids) & set(flagged)
+    assert set(clean_ids) | set(flagged) == {"nulls", "clean", "dup"}
 
 
 def test_list_map_null_elements_stay_clean(spark):

@@ -8,7 +8,7 @@ from pyspark.sql import Column, functions as F, types as T
 from conftest import SF_DIR as SF
 from goskema_spark.corpus import corpus_from_documents, corpus_schema, dim_source_df, row_id_col
 from goskema_spark.issues import VIOLATION_SCHEMA, VIOLATION_STRUCT
-from goskema_spark.rowpass import _VIOL_DDL, _s, violation, with_violations
+from goskema_spark.rowpass import _VIOL_DDL, _s, validate_rows, violation
 from goskema_spark.runner import validate
 
 
@@ -62,9 +62,9 @@ def test_violation_struct_types(spark):
 
 def test_violations_column_and_tables_keep_their_schemas(spark, tmp_path):
     corpus = corpus_from_documents(spark, SF)
-    ann = with_violations(corpus, corpus_schema())
+    dirty = validate_rows(corpus, corpus_schema(), row_id_col())[0]
     # the per-row array is exactly array<_VIOL_DDL>, nullability included
-    assert ann.schema["_violations"].dataType == T.ArrayType(_ddl_struct(spark), True)
+    assert dirty.schema["_violations"].dataType == T.ArrayType(_ddl_struct(spark), True)
 
     # res.violations: VIOLATION_SCHEMA's fields plus the partition column,
     # all nullable (parquet read-back of the report)
