@@ -141,7 +141,7 @@ def run_with_ledger(
     # the partitions this invocation validates, as a predicate on the
     # partition column (pushed down to the reader). With nothing done it
     # folds to `true`, and the optimizer drops the filters built from it
-    todo = ~F.col(partition_col).isin(list(done)) if done else F.lit(True)
+    todo = ~F.col(partition_col).isin(sorted(done)) if done else F.lit(True)
     if null_done:
         todo = todo & F.col(partition_col).isNotNull()
     else:

@@ -716,6 +716,23 @@ _INT_ELEM_TYPES = {"int8", "int16", "int32", "int64", "byte", "short",
                    "int", "integer", "long", "bigint"}
 
 
+_ARRAY_ELEM_BITS = {"array<tinyint>": "int8", "array<smallint>": "int16",
+                    "array<int>": "int32", "array<bigint>": "int64"}
+
+
+def _elem_width_bounds(spec, actual_type: str) -> Optional[tuple]:
+    """(lo, hi) of the declared element width when the physical integral
+    element type can hold values outside it, else None: the array analog
+    of _compile_scalar's int_range guard. The element body, its exists()
+    gate and the lambda-free gate all take the `elem_range_<bits>` check
+    from here, so the gate stays exact."""
+    bounds = _int_bounds(spec.elem)
+    phys = _int_bounds(_ARRAY_ELEM_BITS.get(actual_type, ""))
+    if bounds is None or phys is None:
+        return None
+    return bounds if phys[0] < bounds[0] or phys[1] > bounds[1] else None
+
+
 def _fast_elem_gate(col: Column, spec, actual_type: str) -> Optional[Column]:
     """Whole-stage-codegen replacement for the per-element exists() gate.
 
@@ -755,8 +772,7 @@ def _fast_elem_gate(col: Column, spec, actual_type: str) -> Optional[Column]:
     if spec.elem not in _INT_ELEM_TYPES:
         return None
     conds = []
-    bounds = _int_bounds(spec.elem) if (
-        spec.elem in INT_RANGES and actual_type == "array<bigint>") else None
+    bounds = _elem_width_bounds(spec, actual_type)
     if bounds:
         conds.append(F.array_min(col) < bounds[0])
         conds.append(F.array_max(col) > bounds[1])
@@ -827,15 +843,15 @@ def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
 
     # per-element checks with /<field>/<idx> paths
     # (reference dsl/array.go:79-117; paths rebased like /items/0/foo)
-    elem_conds = []
+    width = _elem_width_bounds(spec, actual_type)
+
     def elem_viol(t, i):
         path = idx_path(i)
         conds = []
         if not spec.elem_nullable:
             conds.append((t.isNull(), Codes.INVALID_TYPE, "elem_type", None))
-        bounds = _int_bounds(spec.elem) if spec.elem in INT_RANGES else None
-        if bounds and actual_type == "array<bigint>":
-            lo, hi = bounds
+        if width:
+            lo, hi = width
             conds.append(((t < lo) | (t > hi), Codes.OVERFLOW, f"elem_range_{spec.elem}",
                           {"min": lo, "max": hi, "got": t}))
         if spec.elem_min is not None:
@@ -856,7 +872,7 @@ def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
     has_elem_checks = spec.elem_schema is None and (
         (not spec.elem_nullable) or spec.elem_min is not None
         or spec.elem_max is not None or spec.elem_max_incl is not None
-        or (spec.elem in INT_RANGES and actual_type == "array<bigint>"))
+        or width is not None)
     if has_elem_checks:
         # fast path: a cheap short-circuiting exists() gates the expensive
         # per-element struct construction — clean rows (the overwhelming
@@ -865,9 +881,8 @@ def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
             cond = F.lit(False)
             if not spec.elem_nullable:
                 cond = cond | t.isNull()
-            bounds = _int_bounds(spec.elem) if spec.elem in INT_RANGES else None
-            if bounds and actual_type == "array<bigint>":
-                cond = cond | (t < bounds[0]) | (t > bounds[1])
+            if width:
+                cond = cond | (t < width[0]) | (t > width[1])
             if spec.elem_min is not None:
                 cond = cond | (t < spec.elem_min)
             if spec.elem_max is not None:

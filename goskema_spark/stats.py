@@ -9,12 +9,25 @@ combine, output is one row per profiled column.
 
 At 100 TB this is the right shape: every statistic here is an algebraic
 or sketchable aggregate — no sort, no global shuffle beyond the final
-single-reducer combine of per-partition sketch states.
+single-reducer combine of per-partition sketch states. Quantiles take
+one sketch per column (group), whatever the number of probs.
+
+The aggregates are written as SQL text (goskema_spark.sqltext quotes
+the names): a PySpark Column method call costs a dozen py4j round trips
+and about a millisecond of driver CPU, so a per-column chain of them
+cost as much driver time as the aggregate itself on small inputs. The
+text form is a fixed few round trips per plan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from goskema_spark.sqltext import double, ident, string
+
+
+def _grouped(df: DataFrame, by: str = None):
+    return df.groupBy(F.expr(ident(by))) if by else df
 
 
 def profile(df: DataFrame, columns=None, exact_distinct: bool = False,
@@ -34,32 +47,31 @@ def profile(df: DataFrame, columns=None, exact_distinct: bool = False,
     sketch, so the grouped variant costs one shuffle on the group key
     (partial combine map-side), not one job per group. The north rule's
     per-partition lineage view at 100 TB is exactly this shape.
+
+    The aggregate is one `array(named_struct(...), ...)` expression in SQL
+    text, unpacked by `inline`: a fixed handful of py4j round trips
+    however many columns are profiled.
     """
     columns = columns or [c for c in df.columns if c != by]
+    types = dict(df.dtypes)
     per_col = []
     for c in sorted(columns):
-        col = F.col(c)
-        distinct = (F.count_distinct(col) if exact_distinct
-                    else F.approx_count_distinct(col, rsd))
-        is_complex = dict(df.dtypes)[c].startswith(("array", "map", "struct"))
-        minv = F.lit(None).cast("string") if is_complex else F.min(col).cast("string")
-        maxv = F.lit(None).cast("string") if is_complex else F.max(col).cast("string")
-        if is_complex:
-            distinct = F.lit(None).cast("bigint")
-        per_col.append(F.struct(
-            F.lit(c).alias("col"),
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(col.isNull().cast("long")).alias("nulls"),
-            distinct.cast("bigint").alias("n_distinct"),
-            minv.alias("min_v"),
-            maxv.alias("max_v"),
-        ))
-    stats = F.array(*per_col).alias("stats")
-    one = df.groupBy(by).agg(stats) if by else df.agg(stats)
-    keys = [by] if by else []
-    return one.select(*keys, F.explode("stats").alias("s")).select(
-        *keys, "s.col", "s.cnt", "s.nulls", "s.n_distinct", "s.min_v", "s.max_v"
-    )
+        q = ident(c)
+        if types[c].startswith(("array", "map", "struct")):
+            distinct = "CAST(NULL AS BIGINT)"
+            minv = maxv = "CAST(NULL AS STRING)"
+        else:
+            distinct = (f"count(DISTINCT {q})" if exact_distinct
+                        else f"approx_count_distinct({q}, {double(rsd)})")
+            minv, maxv = f"CAST(min({q}) AS STRING)", f"CAST(max({q}) AS STRING)"
+        per_col.append(
+            f"named_struct('col', {string(c)}, 'cnt', count(1), "
+            f"'nulls', sum(CAST({q} IS NULL AS BIGINT)), "
+            f"'n_distinct', CAST({distinct} AS BIGINT), "
+            f"'min_v', {minv}, 'max_v', {maxv})")
+    stats = F.expr(f"array({', '.join(per_col)}) AS stats")
+    keys = [ident(by)] if by else []
+    return _grouped(df, by).agg(stats).selectExpr(*keys, "inline(stats)")
 
 
 def numeric_quantiles(df: DataFrame, column: str,
@@ -68,12 +80,14 @@ def numeric_quantiles(df: DataFrame, column: str,
     """Quantiles of a numeric column: exact `percentile` for goldens,
     `percentile_approx` (sketch, mergeable) for scale.
 
+    Every prob is read from ONE sketch per column (group): the array
+    form of `percentile_approx` / `percentile` builds the summary once
+    and answers each prob from it, with the same values as one sketch
+    per prob.
+
     by='source' groups: one row per group, same single-aggregate plan
     (percentile_approx states merge; exact percentile still groups in
     one pass)."""
-    col = F.col(column)
-    fn = F.percentile if exact else (lambda c, p: F.percentile_approx(c, p, 10000))
-
     def label(p: float) -> str:
         # int(p*100) aliased 0.99 AND 0.999 both to 'p99' (duplicate
         # column names) and 0.005 to 'p0' — keep pNN for whole
@@ -85,15 +99,20 @@ def numeric_quantiles(df: DataFrame, column: str,
     labels = [label(p) for p in probs]
     if len(set(labels)) != len(labels):
         raise ValueError(f"quantile probs {probs} produce duplicate labels")
-    aggs = [fn(col, p).cast("double").alias(lab)
-            for p, lab in zip(probs, labels)]
-    return (df.groupBy(by) if by else df).agg(
-        F.count(col).alias("cnt"),
-        F.min(col).cast("double").alias("min_v"),
-        F.max(col).cast("double").alias("max_v"),
-        F.avg(col).cast("double").alias("avg_v"),
-        *aggs,
-    )
+    q = ident(column)
+    ps = f"array({', '.join(double(p) for p in probs)})"
+    sketch = f"percentile({q}, {ps})" if exact else f"percentile_approx({q}, {ps}, 10000)"
+    out = [ident(by)] if by else []
+    out += ["cnt", "min_v", "max_v", "avg_v"]
+    out += [f"CAST(`__gsk_q`[{i}] AS DOUBLE) AS {ident(lab)}"
+            for i, lab in enumerate(labels)]
+    return _grouped(df, by).agg(
+        F.expr(f"count({q}) AS cnt"),
+        F.expr(f"CAST(min({q}) AS DOUBLE) AS min_v"),
+        F.expr(f"CAST(max({q}) AS DOUBLE) AS max_v"),
+        F.expr(f"CAST(avg({q}) AS DOUBLE) AS avg_v"),
+        F.expr(f"{sketch} AS `__gsk_q`"),
+    ).selectExpr(*out)
 
 
 def distinct_sketches(df: DataFrame, columns, by: str = None,
@@ -110,14 +129,14 @@ def distinct_sketches(df: DataFrame, columns, by: str = None,
     if by is not None and by in columns:
         raise ValueError(f"group column {by!r} cannot also be sketched; "
                          "its distinct values are the group rows themselves")
-    aggs = [F.hll_sketch_agg(F.col(c), F.lit(lg_k)).alias(c)
+    aggs = [F.expr(f"hll_sketch_agg({ident(c)}, {int(lg_k)}) AS {ident(c)}")
             for c in sorted(columns)]
-    return df.groupBy(by).agg(*aggs) if by else df.agg(*aggs)
+    return _grouped(df, by).agg(*aggs)
 
 
 def merged_distinct(sketches: DataFrame, columns) -> DataFrame:
     """Union previously-saved sketch rows (any grouping) into one global
     estimate per column: one row, n_distinct estimates as bigint."""
     return sketches.agg(*[
-        F.hll_sketch_estimate(F.hll_union_agg(F.col(c), True)).cast("bigint")
-        .alias(c) for c in sorted(columns)])
+        F.expr(f"CAST(hll_sketch_estimate(hll_union_agg({ident(c)}, true)) AS BIGINT)"
+               f" AS {ident(c)}") for c in sorted(columns)])

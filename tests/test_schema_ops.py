@@ -34,6 +34,32 @@ def test_sized_int_overflow_and_fraction(spark):
     assert rows[0]["message"] == "fractional part not allowed"
 
 
+def test_array_element_width_narrower_than_physical(spark):
+    """A declared element width narrower than the physical array element
+    type is range-checked per element, as a scalar field's is; a width
+    equal to the physical one adds no check."""
+    for phys in (T.IntegerType(), T.ShortType()):
+        df = _df(spark, [("a", [1, 1000, None]), ("b", [-128, 127]), ("c", None)],
+                 T.StructType([T.StructField("id", T.StringType()),
+                               T.StructField("xs", T.ArrayType(phys))]))
+        sch = S.table(S.field("id", "string", required=True),
+                      S.field("xs", S.array("int8", elem_nullable=True)))
+        dirty, viols, clean = validate_rows(df, sch, F.col("id"))
+        rows = viols.collect()
+        assert _codes(viols) == {("a", "/xs/1", "overflow")}, phys
+        assert rows[0]["rule"] == "elem_range_int8"
+        assert sorted(r["id"] for r in clean.collect()) == ["b", "c"]
+
+    df = _df(spark, [("a", [1, 1000, 2**31 - 1])], T.StructType([
+        T.StructField("id", T.StringType()),
+        T.StructField("xs", T.ArrayType(T.IntegerType()))]))
+    sch = S.table(S.field("id", "string", required=True),
+                  S.field("xs", S.array("int32", elem_nullable=True)))
+    dirty, viols, clean = validate_rows(df, sch, F.col("id"))
+    assert viols.count() == 0 and clean.count() == 1
+    assert "elem_range" not in viols._jdf.queryExecution().analyzed().toString()
+
+
 def test_enum_pattern_string_lengths(spark):
     df = _df(spark, [("a", "red", "u_1"), ("b", "blue", "u_22"),
                      ("c", "mauve", "xx"), ("d", "red", "u_" + "9" * 30)],

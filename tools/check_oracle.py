@@ -14,7 +14,7 @@ import sys
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry  # noqa: E402
 
 SF_DIR = os.environ.get("GSK_ORACLE_SF", "/root/testdata/sf0.01")
