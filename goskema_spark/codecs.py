@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from goskema_spark.issues import Codes, pointer
 from goskema_spark.rowpass import violation
 from goskema_spark.schema import Field
+from goskema_spark.sqltext import string
 
 
 @dataclass
@@ -121,8 +122,8 @@ def decode_col(df: DataFrame, field_name: str, codec_name: str,
     out_col = out_col or f"{field_name}_decoded"
     bad = codec.invalid_col(c)
     viol = F.when(bad, violation(
-        pointer(field_name), Codes.INVALID_FORMAT, rule=f"codec_{codec.name}",
-        params={"got": c}))
+        string(pointer(field_name)), Codes.INVALID_FORMAT, rule=f"codec_{codec.name}",
+        params={"got": c.cast("string")}))
     arr = F.filter(F.array(viol), lambda x: x.isNotNull())
     if violations_col in df.columns:
         arr = F.concat(F.col(violations_col), arr)

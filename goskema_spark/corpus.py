@@ -56,14 +56,14 @@ def corpus_schema(max_len: int = MAX_LEN, max_ntok: int = MAX_NTOK,
         unknown="strict",
     )
     # n_tok == size(tokens): cross-field refine
-    # (reference dsl/object_typed_builder.go:44-54)
+    # (reference dsl/object_typed_builder.go:44-54), as SQL text
     sch.refine(
         "n_tok_matches_tokens",
-        violates=lambda: F.col("n_tok") != F.size("tokens"),
+        violates="n_tok != size(tokens)",
         path="/n_tok",
         code="business_rule",
-        params=lambda: {"expected": F.size("tokens"), "got": F.col("n_tok")},
-        when=lambda: F.col("n_tok").isNotNull() & F.col("tokens").isNotNull(),
+        params={"expected": "size(tokens)", "got": "n_tok"},
+        when="n_tok IS NOT NULL AND tokens IS NOT NULL",
     )
     # broadcast=True: hint-forced broadcast of the dup-key relation.
     # doc_id is the corpus' document identity — by data contract it is
@@ -82,8 +82,9 @@ def corpus_schema(max_len: int = MAX_LEN, max_ntok: int = MAX_NTOK,
 
 
 def row_id_col() -> F.Column:
-    """F5 contract: doc_id when present, else synthetic offset id."""
-    return F.coalesce(F.col("doc_id"), F.concat(F.lit("row-"), F.col("_ord").cast("string")))
+    """F5 contract: doc_id when present, else synthetic offset id (SQL
+    text: one parse, where the Column calls cost ~60 py4j round trips)."""
+    return F.expr("coalesce(doc_id, concat('row-', CAST(_ord AS STRING)))")
 
 
 ROW_ID_SQL = "coalesce(doc_id, 'row-' || CAST(_ord AS VARCHAR))"

@@ -38,7 +38,15 @@ def _bucketing(column: str, lo: float, hi: float, buckets: int) -> tuple:
     expression every histogram builder shares. The value is try_cast to
     double: a non-numeric string must drop here, not crash the job
     (ANSI) or survive as a NULL-bucket row that inflates the totals
-    (non-ANSI, where isnan(NULL) is false)."""
+    (non-ANSI, where isnan(NULL) is false).
+
+    Raises ValueError unless lo and hi are finite with lo < hi and
+    buckets >= 1: width_bucket answers NULL for every value under such
+    bounds, and two samples of one range would score as total drift."""
+    if not (math.isfinite(lo) and math.isfinite(hi) and lo < hi):
+        raise ValueError(f"drift bounds need finite lo < hi, got lo={lo!r} hi={hi!r}")
+    if int(buckets) != buckets or buckets < 1:
+        raise ValueError(f"drift needs buckets >= 1, got {buckets!r}")
     cd = f"try_cast({ident(column)} AS DOUBLE)"
     return (f"{cd} IS NOT NULL AND NOT isnan({cd})",
             f"width_bucket({cd}, {double(lo)}, {double(hi)}, {int(buckets)})")

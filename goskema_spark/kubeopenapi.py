@@ -242,31 +242,24 @@ def _scalar_field(name: str, ps: dict, required: bool, warns: list) -> Field:
     return f
 
 
-def _contains_predicate(contains: dict, warns: list, name: str):
-    """Columnar containsMatch (reference kubeopenapi/contains.go:141-169):
-    type branches via the castability proxy, object branches honor
-    `required` keys; no recognized constraint -> accept."""
-    from pyspark.sql import functions as F
-
+def _contains_predicate(contains: dict, warns: list, name: str) -> str:
+    """Columnar containsMatch (reference kubeopenapi/contains.go:141-169)
+    as a SQL lambda: type branches via the castability proxy, object
+    branches honor `required` keys; no recognized constraint -> accept."""
     from goskema_spark.rowpass import _json_type_match
+    from goskema_spark.sqltext import chain, ident
 
     t = contains.get("type")
     req = [str(k) for k in (contains.get("required") or [])] if t == "object" else []
-
-    def pred(el):
-        if t == "object":
-            cond = el.isNotNull()
-            for k in req:
-                cond = cond & el.getField(k).isNotNull()
-            return cond
-        if t:
-            m = _json_type_match(el, t)
-            if m is None:
-                return el.isNotNull()
-            return m
-        return F.lit(True)
-
-    return pred
+    el = "__gsk_c"
+    if t == "object":
+        body = chain("AND", [f"{el} IS NOT NULL"]
+                     + [f"{el}.{ident(k)} IS NOT NULL" for k in req])
+    elif t:
+        body = _json_type_match(el, t) or f"{el} IS NOT NULL"
+    else:
+        body = "true"
+    return f"{el} -> {body}"
 
 
 def _array_field(name: str, ps: dict, required: bool, warns: list,

@@ -15,7 +15,7 @@ ledger directory (int32 per-invocation dense ranks) must be migrated
 ONCE before appending — mixed int32/int64 parquet files in one
 directory do not read back:
   spark.read.parquet(v1).withColumn("partition_id",
-      F.xxhash64(part_key_col("source"))).write.parquet(v2)
+      F.expr(f"xxhash64({part_key_sql('source')})")).write.parquet(v2)
 
 Protocol:
   - logical partitions = distinct values of the partition column
@@ -60,6 +60,9 @@ Protocol:
          every per-check count: one scan of each side, one shuffle, no
          join — two jobs. Without violations_path the same aggregate
          runs over the lazy violation plan.
+    The resume predicate, the per-check conditions, the `checks` map and
+    the ledger rows are written as Spark SQL text (goskema_spark.sqltext),
+    and the returned ValidationResult's verdicts are never built here.
 """
 
 from __future__ import annotations
@@ -67,12 +70,13 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 from goskema_spark.issues import pointer
 from goskema_spark.runner import (
-    ValidationResult, aggregate_verdicts, job_description, part_key_col, validate,
+    ValidationResult, aggregate_verdicts, job_description, part_key_sql, validate,
     write_violations)
+from goskema_spark.sqltext import chain, ident, in_list, string
 
 LEDGER_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType(), False),
@@ -108,7 +112,7 @@ def completed_partitions(spark: SparkSession, ledger_path: str, run_id: str):
             f"{pid.dataType.simpleString()}); migrate it to v2 (bigint "
             "partition_id, see goskema_spark.ledger module docstring) "
             "before appending")
-    led = led.filter(F.col("run_id") == run_id)
+    led = led.filter(f"run_id = {string(run_id)}")
     # one row per partition per run: dedupe on the driver, a distinct()
     # would only add a shuffle stage
     vals = {r["source"] for r in led.select("source").collect()}
@@ -141,11 +145,10 @@ def run_with_ledger(
     # the partitions this invocation validates, as a predicate on the
     # partition column (pushed down to the reader). With nothing done it
     # folds to `true`, and the optimizer drops the filters built from it
-    todo = ~F.col(partition_col).isin(sorted(done)) if done else F.lit(True)
-    if null_done:
-        todo = todo & F.col(partition_col).isNotNull()
-    else:
-        todo = todo | F.col(partition_col).isNull()
+    pc = ident(partition_col)
+    todo = f"NOT {in_list(pc, sorted(done))}" if done else "true"
+    todo = (f"({todo}) AND ({pc} IS NOT NULL)" if null_done
+            else f"({todo}) OR ({pc} IS NULL)")
 
     probe = job_description(spark, f"ledger {run_id}: emptiness probe")
     if fail_partition_limit:
@@ -156,13 +159,14 @@ def run_with_ledger(
         if not remaining:
             return None
         keep = sorted((s for s in remaining if s is not None))[:fail_partition_limit]
-        cond = F.col(partition_col).isin(keep)
+        cond = in_list(pc, keep)
         if None in remaining and len(keep) < fail_partition_limit:
-            # the NULL partition fills the remaining quota — isin([])
-            # alone would starve it forever once it is the only one left
-            # (empty batch every resume, never ledgered, never done)
-            cond = cond | F.col(partition_col).isNull()
-        todo = todo & cond
+            # the NULL partition fills the remaining quota — an empty
+            # IN list alone would starve it forever once it is the only
+            # one left (empty batch every resume, never ledgered, never
+            # done)
+            cond = f"({cond}) OR ({pc} IS NULL)"
+        todo = f"({todo}) AND ({cond})"
     else:
         # emptiness probe, not a distinct-collect: partition_col may be
         # higher-cardinality than the ledger protocol expects (it should
@@ -177,7 +181,9 @@ def run_with_ledger(
     # same ledger-write query — started_at would always equal
     # finished_at, erasing the run duration the lineage row exists for
     import datetime as _dt
-    started = F.lit(_dt.datetime.now(_dt.timezone.utc))
+    now = _dt.datetime.now(_dt.timezone.utc)
+    epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+    started = f"timestamp_micros({(now - epoch) // _dt.timedelta(microseconds=1)}L)"
     # uniqueness runs over all of df (a global property); every other
     # check, and the row counts, over the `todo` partitions only
     res = validate(df, schema, row_id, dims=dims, partition_col=partition_col,
@@ -198,24 +204,19 @@ def run_with_ledger(
     # rows carry rule='ref_<col>'; everything else is the row pass.
     agg_checks = (
         [(f"unique_{u.column}",
-          (F.col("rule") == "unique_by")
-          & (F.col("path") == pointer(u.column)))
+          f"rule = 'unique_by' AND path = {string(pointer(u.column))}")
          for u in schema.unique_keys]
-        + [(f"ref_{k.column}", F.col("rule") == f"ref_{k.column}")
+        + [(f"ref_{k.column}", f"rule = {string(f'ref_{k.column}')}")
            for k in schema.foreign_keys])
-    agg_any = None
-    for _, cond in agg_checks:
-        agg_any = cond if agg_any is None else (agg_any | cond)
-    rowpass_cond = ~agg_any if agg_any is not None else F.lit(True)
+    rowpass_cond = (f"NOT ({chain('OR', [c for _, c in agg_checks])})"
+                    if agg_checks else "true")
     check_conds = [("rowpass", rowpass_cond)] + agg_checks
     verd = aggregate_verdicts(
         viols, df.filter(todo), partition_col,
         [(f"_ck_{i}", cond) for i, (_, cond) in enumerate(check_conds)])
-    checks = F.map_from_arrays(
-        F.array(*[F.lit(name) for name, _ in check_conds]),
-        F.array(*[F.when(F.col(f"_ck_{i}") > 0, "fail").otherwise("pass")
-                  for i in range(len(check_conds))]),
-    )
+    checks = (f"map_from_arrays(array({', '.join(string(n) for n, _ in check_conds)}), "
+              "array(" + ", ".join(f"CASE WHEN _ck_{i} > 0 THEN 'fail' ELSE 'pass' END"
+                                   for i in range(len(check_conds))) + "))")
     # partition_id: STABLE across batches and crash-resumes — derived
     # deterministically from the partition VALUE (xxhash64), not from a
     # dense_rank over this invocation's verdicts: a rank restarts at 0 on
@@ -224,17 +225,17 @@ def run_with_ledger(
     # (ADVICE r3). spark_partition_id() stays rejected for the same
     # reason (physical-plan-dependent noise). NULL partitions hash the
     # out-of-band sentinel, collision-free with any real 'v_'-prefixed
-    # key (see part_key_col).
-    ledger_rows = verd.select(
-        F.lit(run_id).alias("run_id"),
-        F.xxhash64(part_key_col(partition_col)).alias("partition_id"),
-        F.col(partition_col).alias("source"),
+    # key (see part_key_sql).
+    ledger_rows = verd.selectExpr(
+        f"{string(run_id)} AS run_id",
+        f"xxhash64({part_key_sql(partition_col)}) AS partition_id",
+        f"{pc} AS source",
         "rows",
         "violations",
         "verdict",
-        checks.alias("checks"),
-        started.alias("started_at"),
-        F.current_timestamp().alias("finished_at"),
+        f"{checks} AS checks",
+        f"{started} AS started_at",
+        "current_timestamp() AS finished_at",
     )
     with job_description(spark, f"ledger {run_id}: ledger write"):
         ledger_rows.write.mode("append").parquet(ledger_path)
@@ -243,4 +244,4 @@ def run_with_ledger(
 
 def read_ledger(spark: SparkSession, ledger_path: str, run_id: str) -> DataFrame:
     return (spark.read.parquet(ledger_path)
-            .filter(F.col("run_id") == run_id))
+            .filter(f"run_id = {string(run_id)}"))

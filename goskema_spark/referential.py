@@ -28,7 +28,8 @@ import weakref
 from pyspark.sql import Column, DataFrame, functions as F
 
 from goskema_spark.issues import Codes, pointer
-from goskema_spark.rowpass import violation, violation_rows
+from goskema_spark.rowpass import violation_cols, violation_rows
+from goskema_spark.sqltext import ident, in_list, string
 
 # dims up to this many rows are compiled into an InSet
 # filter; the literal list lives in the plan, so keep it well under
@@ -100,17 +101,17 @@ def referential_violations(df: DataFrame, column: str, dim: DataFrame,
     run only on present values (presence gating, domain_types.go:25-34).
     """
     domain = _inline_domain(dim, dim_column, max_inline_values)
+    c = ident(column)
     if domain is not None:
-        misses = df.filter(F.col(column).isNotNull()
-                           & ~F.col(column).isin(domain))
+        misses = df.filter(f"({c} IS NOT NULL) AND NOT {in_list(c, domain)}")
     else:
-        dimset = dim.select(F.col(dim_column).alias(column)).distinct()
+        dimset = dim.selectExpr(f"{ident(dim_column)} AS {c}").distinct()
         misses = (
-            df.filter(F.col(column).isNotNull())
+            df.filter(f"{c} IS NOT NULL")
             .join(F.broadcast(dimset), column, "left_anti")
         )
-    viol = violation(pointer(column), code, rule=f"ref_{column}",
-                     params={"got": F.col(column)})
+    viol = violation_cols(string(pointer(column)), code, rule=f"ref_{column}",
+                          params={"got": f"CAST({c} AS STRING)"})
     return violation_rows(misses, row_id, viol, carry)
 
 

@@ -2,40 +2,42 @@
 
 The reference walks a token stream per document (reference
 internal/engine/engine.go:40-108) and accumulates Issues. Here the whole
-check set compiles to built-in Column expressions (no Python in the hot
-path): every check yields either a nullable violation struct or an array
-of violation structs (for per-element checks, reference
-dsl/array.go:79-117 issues at `/<field>/<idx>`), all concatenated into a
-`_violations` array column and filtered for nulls.
+check set compiles to Spark SQL text (no Python in the hot path, and
+one `F.expr` per plan piece on the driver): every check yields either a
+nullable violation struct or an array of violation structs (for
+per-element checks, reference dsl/array.go:79-117 issues at
+`/<field>/<idx>`), all concatenated into a `_violations` array column
+and filtered for nulls. Names and literals are spliced in through
+goskema_spark.sqltext; lambda variables take reserved `__gsk_` names,
+so no table column is ever shadowed.
+
+A refinement may still be given as Column callables: such a check is
+composed with the SQL text at the top level (`F.expr` pieces joined by
+Column calls) and pays only its own Column calls.
 
 One feed shape (validate_rows): a whole-stage-codegen'd Filter on the
 gate (the OR of every check condition) BELOW the interpreted projection
 that builds `_violations`, so only rows where some check fired pay the
-interpreted build. The violations are exploded from that feed; the clean
-rows are a second Filter on the input, on the gate alone when the gate
-is exact.
+interpreted build. The violations are `inline`d from that feed; the
+clean rows are a second Filter on the input, on the gate alone when the
+gate is exact.
 
 Fail-fast vs collect (reference api.go:147-156): collect keeps the full
 array; fail_fast slices it to 1 element per row (and callers can
 `violations.limit(1)` for a global first-issue stop).
 
 Deterministic ordering (reference README.md:573-574): checks are compiled
-in sorted field order, then by check kind; the exploded violations table
-sorts by (row_id, path, code).
+in sorted field order, then by check kind; the violations table sorts by
+(row_id, path, code).
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Optional, Union
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from goskema_spark.issues import (
-    Codes,
-    VIOLATION_STRUCT,
-    message_for,
-    pointer,
-)
+from goskema_spark.issues import Codes, message_for, pointer
 from goskema_spark.schema import (
     INT_RANGES,
     ArraySpec,
@@ -43,77 +45,181 @@ from goskema_spark.schema import (
     MapSpec,
     TableSchema,
 )
+from goskema_spark.sqltext import chain, ident, in_list, literal, string
 
 _VIOL_DDL = "struct<path:string,code:string,message:string,rule:string,params:map<string,string>>"
 _VIOL_ARR_DDL = f"array<{_VIOL_DDL}>"
+# an empty violations array and a NULL violation, typed
+_NO_VIOLS = f"CAST(array() AS {_VIOL_ARR_DDL})"
+_NULL_VIOL = f"CAST(NULL AS {_VIOL_DDL})"
+
+# A plan piece: SQL text, or a Column where a refinement was given as
+# Column callables (composed at the top level, see the module docstring)
+Sql = Union[str, Column]
 
 
-def _s(v) -> Column:
-    """Any column/literal as a string for params maps. Python strs are
-    already string literals; everything else takes Spark's string form
+def _col(x: Sql) -> Column:
+    return F.expr(x) if isinstance(x, str) else x
+
+
+def _and(a: Sql, b: Sql) -> Sql:
+    if isinstance(a, str) and isinstance(b, str):
+        return f"({a}) AND ({b})"
+    return _col(a) & _col(b)
+
+
+def _all(*conds: str) -> str:
+    return chain("AND", conds)
+
+
+def _any(conds) -> Sql:
+    """OR of the conditions: the text ones in one string, Column ones
+    (if any) OR'ed onto it."""
+    text = [c for c in conds if isinstance(c, str)]
+    cols = [c for c in conds if not isinstance(c, str)]
+    out = None
+    if text:
+        out = chain("OR", text)
+        if not cols:
+            return out
+        out = F.expr(out)
+    for c in cols:
+        out = c if out is None else out | c
+    return out
+
+
+def _case(cond: Sql, then: Sql, other: Optional[Sql] = None) -> Sql:
+    if isinstance(cond, str) and isinstance(then, str) and \
+            (other is None or isinstance(other, str)):
+        tail = "" if other is None else f" ELSE {other}"
+        return f"CASE WHEN {cond} THEN {then}{tail} END"
+    out = F.when(_col(cond), _col(then))
+    return out if other is None else out.otherwise(_col(other))
+
+
+def _array(items) -> Sql:
+    """array(items); a Column item splits the text into runs, each one
+    array, concatenated."""
+    if all(isinstance(i, str) for i in items):
+        return f"array({', '.join(items)})"
+    runs = []
+    for i in items:
+        if isinstance(i, str) and runs and isinstance(runs[-1], list):
+            runs[-1].append(i)
+        else:
+            runs.append([i] if isinstance(i, str) else F.array(i))
+    parts = [F.expr(f"array({', '.join(r)})") if isinstance(r, list) else r for r in runs]
+    return parts[0] if len(parts) == 1 else F.concat(*parts)
+
+
+def _concat(parts) -> Sql:
+    if all(isinstance(p, str) for p in parts):
+        return f"concat({', '.join(parts)})"
+    return F.concat(*[_col(p) for p in parts])
+
+
+def _filter_nn(arr: Sql) -> Sql:
+    """The array without its NULL elements (the checks that did not fire)."""
+    if isinstance(arr, str):
+        return f"filter({arr}, __gsk_v -> __gsk_v IS NOT NULL)"
+    return F.filter(arr, lambda x: x.isNotNull())
+
+
+def _s(x: Sql) -> Sql:
+    """An expression as a string for params maps, in Spark's string form
     (`true`, `1.0E20`), which differs from Python's str()."""
-    if isinstance(v, str):
-        return F.lit(v)
-    return (v if isinstance(v, Column) else F.lit(v)).cast("string")
+    return f"CAST({x} AS STRING)" if isinstance(x, str) else x.cast("string")
 
 
-def _null(ddl: str) -> Column:
-    """A typed NULL literal. F.expr is one plain function call, where
-    lit(None).cast() adds a Column method call, and every Column method
-    call pays PySpark's call-site capture (a dozen py4j round trips)."""
-    return F.expr(f"CAST(NULL AS {ddl})")
+def _lit_s(v) -> str:
+    """A Python value as a params-map string: strs as they are, anything
+    else in Spark's string form of its literal."""
+    return string(v) if isinstance(v, str) else f"CAST({literal(v)} AS STRING)"
 
 
-def _no_viols() -> Column:
-    """An empty violations array (typed, see _null)."""
-    return F.expr(f"CAST(array() AS {_VIOL_ARR_DDL})")
+class _Dyn:
+    """SQL text of a per-element (dynamic) JSON pointer; a static
+    pointer is a plain Python str."""
+
+    __slots__ = ("sql",)
+
+    def __init__(self, sql: str):
+        self.sql = sql
 
 
-def violation(path, code: str, rule: Optional[str] = None, params: Optional[dict] = None,
-              message: Optional[str] = None) -> Column:
-    """Build a violation struct Column (shape of reference errors.go:39-54).
-    A Column `path` must be string-typed (the builders pass concat()s).
-    named_struct over string literals needs no alias() or cast() calls."""
+def _psql(p) -> str:
+    """A pointer (static str or _Dyn) as SQL text."""
+    return p.sql if isinstance(p, _Dyn) else string(p)
+
+
+def _pjoin(p, suffix: str):
+    """A pointer joined with a static suffix; stays a Python str when
+    `p` is static."""
+    if isinstance(p, _Dyn):
+        return _Dyn(f"concat({p.sql}, {string(suffix)})")
+    return p + suffix
+
+
+def _violation_fields(path: Sql, code: str, rule, params, message) -> list:
+    msg = message if message is not None else message_for(code)
     if params:
-        kv = []
-        for k in sorted(params):
-            kv.extend([F.lit(k), _s(params[k])])
-        params_col = F.create_map(*kv)
+        kv = [(k, params[k]) for k in sorted(params)]
+        if all(isinstance(v, str) for _, v in kv):
+            pm = "map(" + ", ".join(f"{string(k)}, {v}" for k, v in kv) + ")"
+        else:
+            pm = F.create_map(*[c for k, v in kv for c in (F.lit(k), _col(v))])
     else:
-        params_col = _null("MAP<STRING, STRING>")
-    return F.named_struct(
-        F.lit("path"), path if isinstance(path, Column) else F.lit(path),
-        F.lit("code"), F.lit(code),
-        F.lit("message"), F.lit(message if message is not None else message_for(code)),
-        F.lit("rule"), _null("STRING") if rule is None else F.lit(rule),
-        F.lit("params"), params_col,
-    )
+        pm = "CAST(NULL AS MAP<STRING, STRING>)"
+    return [("path", path), ("code", string(code)), ("message", string(msg)),
+            ("rule", "CAST(NULL AS STRING)" if rule is None else string(rule)),
+            ("params", pm)]
 
 
-def violation_rows(df: DataFrame, row_id: Column, viol: Column, carry=()) -> DataFrame:
+def violation(path: Sql, code: str, rule: Optional[str] = None,
+              params: Optional[dict] = None, message: Optional[str] = None) -> Sql:
+    """A violation struct (shape of reference errors.go:39-54) as SQL
+    text: a named_struct over literals. `path` is a string-typed SQL
+    expression (quote a static pointer with sqltext.string); `params`
+    maps names to string-typed SQL expressions. A Column path or param
+    value makes the struct a Column."""
+    fields = _violation_fields(path, code, rule, params, message)
+    if all(isinstance(v, str) for _, v in fields):
+        return "named_struct(" + ", ".join(f"'{n}', {v}" for n, v in fields) + ")"
+    return F.named_struct(*[c for n, v in fields for c in (F.lit(n), _col(v))])
+
+
+def violation_cols(path: str, code: str, rule: Optional[str] = None,
+                   params: Optional[dict] = None, message: Optional[str] = None) -> list:
+    """The fields of violation() as `expr AS name` select items: the
+    flat form of a row with exactly one violation (SQL text only)."""
+    return [f"{v} AS {n}" for n, v in _violation_fields(path, code, rule, params, message)]
+
+
+def violation_rows(df: DataFrame, row_id, viol: list, carry=()) -> DataFrame:
     """Flat violation rows (VIOLATION_SCHEMA's columns, then `carry`)
-    from `df`, one per value of the violation-struct Column `viol` — an
-    explode() of a violations array, or one struct per row."""
-    # row_id is bound BEFORE the select: with an explode in the same
-    # select it would be evaluated above the Generate, once per violation
-    # instead of per row
-    v = df.withColumn("_row_id", row_id).select(
-        F.col("_row_id").alias("row_id"), viol.alias("v"), *carry)
-    return v.select("row_id", *[f"v.{f.name}" for f in VIOLATION_STRUCT.fields],
-                    *carry)
+    from `df`, in ONE projection: `viol` is the select items of the
+    violation columns — `inline(<array>)` for a violations array, or
+    violation_cols() for one violation per row."""
+    # row_id is bound BEFORE the select: with a generator in the same
+    # select it would be evaluated above the Generate, once per
+    # violation instead of per row
+    return df.withColumn("_row_id", _col(row_id)).selectExpr(
+        "_row_id AS row_id", *viol, *[ident(c) for c in carry])
 
 
-def _maybe(cond: Column, viol: Column) -> Column:
-    """Violation struct when cond is TRUE, else null (null-safe: a NULL
-    condition means 'cannot evaluate' and does not fire, matching the
-    reference where rules only run on successfully-parsed values)."""
-    return F.when(cond, viol)
+def _lam(depth: int) -> tuple:
+    """(element, index) lambda variable names of an array nested `depth`
+    lambdas deep; reserved `__gsk_` names never shadow a table column."""
+    sfx = str(depth) if depth else ""
+    return f"__gsk_e{sfx}", f"__gsk_i{sfx}"
 
 
 class CompiledChecks:
-    """scalars: list[(cond, struct)]; arrays: list[(gate|None, array<struct>)].
+    """scalars: list[(cond, struct)]; arrays: list[(gate|None, array<struct>, exact)],
+    every piece SQL text (a Column only where a refinement was given as
+    Column callables).
 
-    The separation exists for the gate (any_violation): the
+    The separation exists for the gate (gate_sql): the
     violation-array construction (array/concat/filter of structs) is a
     higher-order expression tree that Spark ALWAYS evaluates interpreted
     (no whole-stage codegen for HOF lambdas) — measured ~10-20x slower
@@ -124,19 +230,22 @@ class CompiledChecks:
     construction (validate_rows filters on the gate below body();
     combined() guards it inline for per-element object checks)."""
 
-    def __init__(self):
+    def __init__(self, presence: Optional[str] = None, depth: int = 0):
         self.scalars: list = []   # (cond, violation struct)
         self.arrays: list = []    # (cheap gate | None, array expr, exact)
         # the raw-JSON ingest presence map (_presence), when the frame
         # carries one — lets anyOf branch scoring use the recorded WIRE
         # type (reference union_ambiguity.go:76-107) instead of the
         # castability approximation (see _anyof_indicator)
-        self.presence: Optional[Column] = None
+        self.presence = presence
+        # lambdas enclosing these checks (array elements nest one deeper)
+        self.depth = depth
 
-    def add(self, cond: Column, path, code, rule=None, params=None, message=None):
-        self.scalars.append((cond, violation(path, code, rule, params, message)))
+    def add(self, cond: Sql, path, code, rule=None, params=None, message=None):
+        """path: a static pointer (str) or a _Dyn."""
+        self.scalars.append((cond, violation(_psql(path), code, rule, params, message)))
 
-    def add_array(self, arr: Column, gate: Optional[Column] = None,
+    def add_array(self, arr: Sql, gate: Optional[Sql] = None,
                   exact: bool = True):
         """gate: a cheap condition that is FALSE whenever `arr` is empty
         (used only to skip work — a too-wide gate costs nothing but
@@ -148,61 +257,77 @@ class CompiledChecks:
         clean-row set is decidable from the gate alone — a
         codegen-friendly filter that never touches the interpreted HOF
         violations build (validate_rows clean path)."""
-        self.arrays.append((gate, F.coalesce(arr, _no_viols()),
-                            exact))
+        arr = (f"coalesce({arr}, {_NO_VIOLS})" if isinstance(arr, str)
+               else F.coalesce(arr, F.expr(_NO_VIOLS)))
+        self.arrays.append((gate, arr, exact))
 
-    def any_violation(self) -> Optional[Column]:
+    def gate_sql(self) -> Optional[Sql]:
         """Cheap OR over every check condition; None if some array check
         has no gate (then every row must build). NULL conditions read as
-        'did not fire' (null OR false = null -> when() does not fire),
-        matching _maybe()'s null semantics."""
+        'did not fire' (null OR false = null -> CASE WHEN does not fire),
+        matching the violation structs' null semantics."""
         conds = [c for c, _ in self.scalars]
         for g, _, _ in self.arrays:
             if g is None:
                 return None
             conds.append(g)
-        if not conds:
-            return F.lit(False)
-        out = conds[0]
-        for c in conds[1:]:
-            out = out | c
-        return out
+        return _any(conds) if conds else "false"
 
     def gate_is_exact(self) -> bool:
-        """True when any_violation() is EXACT: gate fired <=> the row has
-        >= 1 violation. Scalar checks are exact by construction (_maybe
-        fires a struct exactly when the condition is true); array checks
-        declare their own exactness (the Or-combinator's minimal-branch
-        gate is the one wide gate today)."""
+        """True when the gate is EXACT: gate fired <=> the row has >= 1
+        violation. Scalar checks are exact by construction (a struct
+        fires exactly when its condition is true); array checks declare
+        their own exactness (the Or-combinator's minimal-branch gate is
+        the one wide gate today)."""
         return all(exact for _, _, exact in self.arrays)
 
-    def body(self) -> Column:
+    def body_sql(self) -> Sql:
         """The UNGATED violations-array construction (interpreted HOF
         territory), correct on every row. validate_rows builds it only
-        on rows that pass a Filter on any_violation()."""
+        on rows that pass a Filter on the gate."""
         parts = []
         if self.scalars:
-            parts.append(F.array(*[_maybe(c, v) for c, v in self.scalars]))
+            parts.append(_array([_case(c, v) for c, v in self.scalars]))
         parts.extend(a for _, a, _ in self.arrays)
         if not parts:
-            return _no_viols()
-        combined = parts[0] if len(parts) == 1 else F.concat(*parts)
-        return F.filter(combined, lambda x: x.isNotNull())
+            return _NO_VIOLS
+        return _filter_nn(parts[0] if len(parts) == 1 else _concat(parts))
+
+    def body(self) -> Column:
+        return _col(self.body_sql())
+
+    def combined_sql(self) -> Sql:
+        gate = self.gate_sql()
+        body = self.body_sql()
+        return body if gate is None else _case(gate, body, _NO_VIOLS)
 
     def combined(self) -> Column:
-        combined = self.body()
-        gate = self.any_violation()
-        if gate is not None:
-            combined = F.when(gate, combined).otherwise(
-                _no_viols())
-        return combined
+        return _col(self.combined_sql())
+
+
+def _rule_cond(r) -> Sql:
+    """A refinement's firing condition: `when AND violates`, each SQL
+    text or a Column callable."""
+    cond = r.violates if isinstance(r.violates, str) else r.violates()
+    if r.when is not None:
+        cond = _and(r.when if isinstance(r.when, str) else r.when(), cond)
+    return cond
+
+
+def _rule_params(r) -> Optional[dict]:
+    """A refinement's params as string-typed pieces: a dict of SQL text,
+    or a callable returning Columns and Python values."""
+    if not r.params:
+        return None
+    if isinstance(r.params, dict):
+        return {k: _s(v) for k, v in r.params.items()}
+    return {k: v.cast("string") if isinstance(v, Column) else _lit_s(v)
+            for k, v in r.params().items()}
 
 
 def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
-    out = CompiledChecks()
+    out = CompiledChecks("_presence" if "_presence" in df.columns else None)
     phys = {sf.name: sf.dataType for sf in df.schema.fields}
-    if "_presence" in df.columns:
-        out.presence = F.col("_presence")
 
     # unknown-column policy (reference types.go:4-10, dsl/object_core.go:136-169)
     declared = set(schema.field_names()) | {"_ord", "_row_id"}
@@ -210,17 +335,17 @@ def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
         declared.add(schema.passthrough_target)
     unknown = sorted(c for c in df.columns if c not in declared and not c.startswith("_"))
     unknown = _compile_pattern_keys(out, schema, unknown,
-                                    lambda c: (F.col(c), pointer(c), phys.get(c)))
+                                    lambda c: (ident(c), pointer(c), phys.get(c)))
     if schema.unknown == "strict":
         for c in unknown:
-            out.add(F.lit(True), pointer(c), Codes.UNKNOWN_KEY, rule="unknown_strict")
+            out.add("true", pointer(c), Codes.UNKNOWN_KEY, rule="unknown_strict")
     elif schema.unknown == "schema" and schema.ap_field is not None:
         # additionalProperties-with-schema: overflow columns validate
         # against the declared value spec instead of being stripped
         # (beyond the reference MVP warn+prune, kubeopenapi.go:157-160)
         from dataclasses import replace
         for c in unknown:
-            _compile_field(out, replace(schema.ap_field, name=c), F.col(c),
+            _compile_field(out, replace(schema.ap_field, name=c), ident(c),
                            pointer(c), phys.get(c))
 
     for f in sorted(schema.fields, key=lambda x: x.name):
@@ -228,9 +353,9 @@ def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
         if not present:
             if f.required and f.default is None:
                 # column absent from table schema = missing (SURVEY §7.3)
-                out.add(F.lit(True), pointer(f.name), Codes.REQUIRED, rule="required")
+                out.add("true", pointer(f.name), Codes.REQUIRED, rule="required")
             continue
-        _compile_field(out, f, F.col(f.name), pointer(f.name), phys.get(f.name))
+        _compile_field(out, f, ident(f.name), pointer(f.name), phys.get(f.name))
 
     # discriminated union (reference dsl/union.go:17-52): a variant is
     # either a full TableSchema (the whole variant check set — required-
@@ -239,14 +364,15 @@ def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
     # list of Refinements.
     if schema.discriminator is not None:
         d = schema.discriminator
-        dcol = F.col(d.column)
+        dcol = ident(d.column)
         dpath = pointer(d.column)
-        out.add(dcol.isNull(), dpath, Codes.DISCRIMINATOR_MISSING, rule="discriminator")
+        out.add(f"{dcol} IS NULL", dpath, Codes.DISCRIMINATOR_MISSING, rule="discriminator")
         tags = list(d.variants.keys())
-        out.add(dcol.isNotNull() & ~dcol.isin(tags), dpath, Codes.DISCRIMINATOR_UNKNOWN,
-                rule="discriminator", params={"got": dcol})
+        out.add(_all(f"{dcol} IS NOT NULL", f"NOT {in_list(dcol, tags)}"), dpath,
+                Codes.DISCRIMINATOR_UNKNOWN, rule="discriminator",
+                params={"got": _s(dcol)})
         for tag, var in d.variants.items():
-            gate = dcol == F.lit(tag)
+            gate = f"{dcol} = {literal(tag)}"
             if isinstance(var, TableSchema):
                 if var.or_refinements:
                     # plain refinements compile below; Or-combinators do
@@ -254,37 +380,31 @@ def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
                     raise TypeError(
                         f"variant '{tag}' declares or_refinements, which "
                         "only compile at table level")
-                sub = CompiledChecks()
-                sub.presence = out.presence
+                sub = CompiledChecks(out.presence)
                 for vf in sorted(var.fields, key=lambda x: x.name):
                     if vf.name not in df.columns:
                         if vf.required and vf.default is None:
-                            sub.add(F.lit(True), pointer(vf.name), Codes.REQUIRED,
+                            sub.add("true", pointer(vf.name), Codes.REQUIRED,
                                     rule="required")
                         continue
-                    _compile_field(sub, vf, F.col(vf.name), pointer(vf.name),
+                    _compile_field(sub, vf, ident(vf.name), pointer(vf.name),
                                    phys.get(vf.name))
                 for r in var.refinements:
-                    cond = r.violates()
-                    if r.when is not None:
-                        cond = r.when() & cond
-                    sub.add(cond, r.path, r.code, rule=r.name,
-                            params=r.params() if r.params else None)
+                    sub.add(_rule_cond(r), r.path, r.code, rule=r.name,
+                            params=_rule_params(r))
                 _gate_checks(out, sub, gate)
             else:
                 for r in var:
-                    cond = gate & r.violates()
+                    cond = _and(gate, r.violates if isinstance(r.violates, str)
+                                else r.violates())
                     out.add(cond, r.path or dpath, r.code, rule=r.name,
-                            params=r.params() if r.params else None)
+                            params=_rule_params(r))
 
     # cross-field refinements (reference dsl/object_builder.go:129-135,
-    # dsl/typed_rules.go:56-91 — rule name stamped into the row)
+    # dsl/typed_rules.go:56-91 — rule name stamped into the row;
+    # `when` is presence gating, domain_types.go:25-34)
     for r in schema.refinements:
-        cond = r.violates()
-        if r.when is not None:  # presence gating (domain_types.go:25-34)
-            cond = r.when() & cond
-        out.add(cond, r.path, r.code, rule=r.name,
-                params=r.params() if r.params else None)
+        out.add(_rule_cond(r), r.path, r.code, rule=r.name, params=_rule_params(r))
 
     # Or-combinator (reference rules/rules.go:376-398): evaluate every
     # branch's violation array; keep the FIRST branch with the fewest
@@ -295,53 +415,47 @@ def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
         for branch in orr.branches:
             items = []
             for r in branch:
-                cond = r.violates()
-                if r.when is not None:
-                    cond = r.when() & cond
+                cond = _rule_cond(r)
                 all_conds.append(cond)
-                items.append(_maybe(cond, violation(
-                    r.path, r.code, rule=f"{orr.name}:{r.name}",
-                    params=r.params() if r.params else None)))
-            branch_arrays.append(
-                F.filter(F.array(*items), lambda x: x.isNotNull())
-                if items else _no_viols())
+                items.append(_case(cond, violation(
+                    string(r.path), r.code, rule=f"{orr.name}:{r.name}",
+                    params=_rule_params(r))))
+            branch_arrays.append(_filter_nn(_array(items)) if items else _NO_VIOLS)
         chosen = branch_arrays[0]
         for arr in branch_arrays[1:]:
             # strict < keeps the first minimal branch on ties
-            chosen = F.when(F.size(arr) < F.size(chosen), arr).otherwise(chosen)
+            fewer = (f"size({arr}) < size({chosen})"
+                     if isinstance(arr, str) and isinstance(chosen, str)
+                     else F.size(_col(arr)) < F.size(_col(chosen)))
+            chosen = _case(fewer, arr, chosen)
         # cheap gate: the Or result is non-empty only if SOME branch rule
         # fires (a zero-issue branch would have been chosen otherwise).
         # WIDE (exact=False): one branch firing while another stays clean
         # trips the gate yet yields an empty chosen array.
-        gate = F.lit(False)
-        for c in all_conds:
-            gate = gate | c
-        out.add_array(chosen, gate=gate if all_conds else None, exact=False)
+        out.add_array(chosen, gate=_any(all_conds) if all_conds else None, exact=False)
 
     return out
 
 
-def _pjoin(p, suffix):
-    """Join a JSON pointer (str or Column) with a suffix (str or Column).
-    Stays a python str when both sides are static — dynamic (per-index)
-    paths become Column concats."""
-    if isinstance(p, str) and isinstance(suffix, str):
-        return p + suffix
-    pc = p if isinstance(p, Column) else F.lit(p)
-    sc = suffix if isinstance(suffix, Column) else F.lit(suffix)
-    return F.concat(pc, sc)
+def _first_fired(cases) -> str:
+    """The violation of the first (cond, violation) pair whose condition
+    holds, else a NULL violation: nested CASEs, one per check."""
+    out = _NULL_VIOL
+    for cond, viol in reversed(cases):
+        out = f"CASE WHEN {cond} THEN {viol} ELSE {out} END"
+    return out
 
 
 def _type_str(phys_type) -> str:
     return phys_type.simpleString() if phys_type is not None else ""
 
 
-def _compile_field(out: CompiledChecks, f: Field, col: Column, p, phys_type):
-    """Compile one field's checks at pointer `p` (str, or Column for
-    dynamic per-element paths); phys_type is the physical Spark DataType
-    of the bound column (None if unknown)."""
+def _compile_field(out: CompiledChecks, f: Field, col: str, p, phys_type):
+    """Compile one field's checks on the SQL expression `col` at pointer
+    `p` (str, or _Dyn for dynamic per-element paths); phys_type is the
+    physical Spark DataType of the bound column (None if unknown)."""
     if f.required and f.default is None:
-        out.add(col.isNull(), p, Codes.REQUIRED, rule="required")
+        out.add(f"{col} IS NULL", p, Codes.REQUIRED, rule="required")
 
     if isinstance(f.dtype, ArraySpec):
         _compile_array(out, f, col, p, phys_type)
@@ -370,7 +484,7 @@ def _compile_pattern_keys(out: CompiledChecks, schema: TableSchema,
     pattern-matched key is NOT 'additional'): pull pattern-matching
     names out of the unknown set and validate them against the
     pattern's value Field. Returns the remaining unknown names. `bind`
-    maps a name -> (column, pointer, phys_type)."""
+    maps a name -> (SQL expression, pointer, phys_type)."""
     pats = schema.unknown_key_patterns or []
     if not pats:
         return unknown
@@ -389,19 +503,20 @@ def _compile_pattern_keys(out: CompiledChecks, schema: TableSchema,
     return rest
 
 
-def _compile_object(sub: CompiledChecks, sub_schema: TableSchema, col: Column,
+def _compile_object(sub: CompiledChecks, sub_schema: TableSchema, col: str,
                     p, phys_struct) -> None:
-    """Compile an object schema's checks against a struct-valued Column
-    (a nested column OR an array element), child paths rebased under `p`.
-    Caller gates the result on the struct being present."""
+    """Compile an object schema's checks against a struct-valued SQL
+    expression (a nested column OR an array element), child paths
+    rebased under `p`. Caller gates the result on the struct being
+    present."""
     if sub_schema.refinements or sub_schema.or_refinements:
-        # refinements live at TABLE level: their `violates` closures
-        # build Columns by top-level name and cannot be rebound to this
-        # struct — silently skipping the rule would be a correctness
-        # hole, so refuse loudly (declare the rule on the table schema
-        # with full nested paths instead)
+        # refinements live at TABLE level: their conditions name
+        # top-level columns and cannot be rebound to this struct —
+        # silently skipping the rule would be a correctness hole, so
+        # refuse loudly (declare the rule on the table schema with full
+        # nested paths instead)
         raise TypeError(
-            f"nested schema at '{p}' declares refinements, which only "
+            f"nested schema at '{_psql(p)}' declares refinements, which only "
             "compile at table level — move the rule to the root schema")
     child_types = {sf.name: sf.dataType for sf in phys_struct.fields}
     declared = set(sub_schema.field_names())
@@ -409,27 +524,27 @@ def _compile_object(sub: CompiledChecks, sub_schema: TableSchema, col: Column,
                      if not n.startswith("_"))
     unknown = _compile_pattern_keys(
         sub, sub_schema, unknown,
-        lambda n: (col.getField(n), _pjoin(p, pointer(n)), child_types[n]))
+        lambda n: (f"{col}.{ident(n)}", _pjoin(p, pointer(n)), child_types[n]))
     if sub_schema.unknown == "strict":
         for name in unknown:
-            sub.add(F.lit(True), _pjoin(p, pointer(name)), Codes.UNKNOWN_KEY,
+            sub.add("true", _pjoin(p, pointer(name)), Codes.UNKNOWN_KEY,
                     rule="unknown_strict")
     elif sub_schema.unknown == "schema" and sub_schema.ap_field is not None:
         from dataclasses import replace
         for name in unknown:
             _compile_field(sub, replace(sub_schema.ap_field, name=name),
-                           col.getField(name), _pjoin(p, pointer(name)),
+                           f"{col}.{ident(name)}", _pjoin(p, pointer(name)),
                            child_types[name])
     for cf in sorted(sub_schema.fields, key=lambda x: x.name):
         cp = _pjoin(p, pointer(cf.name))
         if cf.name not in child_types:
             if cf.required and cf.default is None:
-                sub.add(F.lit(True), cp, Codes.REQUIRED, rule="required")
+                sub.add("true", cp, Codes.REQUIRED, rule="required")
             continue
-        _compile_field(sub, cf, col.getField(cf.name), cp, child_types[cf.name])
+        _compile_field(sub, cf, f"{col}.{ident(cf.name)}", cp, child_types[cf.name])
 
 
-def _compile_nested(out: CompiledChecks, f: Field, col: Column, p, phys_type):
+def _compile_nested(out: CompiledChecks, f: Field, col: str, p, phys_type):
     """Nested-object validation: a Field whose dtype is a TableSchema
     binds to a struct column; the child schema's full check set compiles
     recursively with child paths rebased under the parent pointer —
@@ -448,49 +563,43 @@ def _compile_nested(out: CompiledChecks, f: Field, col: Column, p, phys_type):
         # a nested schema bound to a non-struct column is a declaration
         # error — fail loudly instead of silently compiling zero checks
         raise TypeError(
-            f"field '{p}' declares a nested object schema but the physical "
+            f"field '{_psql(p)}' declares a nested object schema but the physical "
             f"column type is {_type_str(phys_type) or 'unknown'}"
         )
-    sub = CompiledChecks()
-    # propagate the ingest presence map so anyOf fields INSIDE nested
-    # objects resolve against recorded wire-type bits exactly like
-    # top-level and union-variant fields do (the nested pointer is a
-    # static str, so the map lookup works unchanged)
-    sub.presence = out.presence
+    # the ingest presence map reaches anyOf fields INSIDE nested objects
+    # exactly like top-level and union-variant fields (the nested
+    # pointer is a static str, so the map lookup works unchanged)
+    sub = CompiledChecks(out.presence, out.depth)
     _compile_object(sub, sub_schema, col, p, phys_type)
-    _gate_checks(out, sub, col.isNotNull())
+    _gate_checks(out, sub, f"{col} IS NOT NULL")
 
 
-def _gate_checks(out: CompiledChecks, sub: CompiledChecks, gate: Column):
+def _gate_checks(out: CompiledChecks, sub: CompiledChecks, gate: str):
     """Merge `sub`'s compiled checks into `out`, each gated on `gate`
     (variant tag match / parent struct presence)."""
     for c, v in sub.scalars:
-        out.scalars.append((gate & c, v))
+        out.scalars.append((_and(gate, c), v))
     for g, a, exact in sub.arrays:
-        out.arrays.append((None if g is None else (gate & g),
-                           F.when(gate, a).otherwise(_no_viols()),
-                           exact))
+        out.arrays.append((None if g is None else _and(gate, g),
+                           _case(gate, a, _NO_VIOLS), exact))
 
 
-def _int_bounds(dtype: str):
-    return INT_RANGES.get(dtype)
-
-
-def _json_type_match(col: Column, t: str) -> Optional[Column]:
+def _json_type_match(col: str, t: str) -> Optional[str]:
     """Columnar 'value is of JSON type t' (reference
-    union_ambiguity.go:76-107 valueMatchesType). Columnar divergence,
-    documented: the physical column has ONE type, so type-match means
-    'losslessly castable' — a numeric string matches both integer and
-    string. None = not scorable columnarly (caller warns/skips)."""
-    s = col.cast("string")
+    union_ambiguity.go:76-107 valueMatchesType), as SQL text. Columnar
+    divergence, documented: the physical column has ONE type, so
+    type-match means 'losslessly castable' — a numeric string matches
+    both integer and string. None = not scorable columnarly (caller
+    warns/skips)."""
+    s = f"CAST({col} AS STRING)"
     if t == "integer":
-        return s.try_cast("bigint").isNotNull()
+        return f"try_cast({s} AS BIGINT) IS NOT NULL"
     if t == "number":
-        return s.try_cast("double").isNotNull()
+        return f"try_cast({s} AS DOUBLE) IS NOT NULL"
     if t == "boolean":
-        return F.lower(s).isin("true", "false")
+        return f"lower({s}) IN ('true', 'false')"
     if t == "string":
-        return col.isNotNull()
+        return f"{col} IS NOT NULL"
     return None
 
 
@@ -504,8 +613,8 @@ _WIRE_BIT_FOR_TYPE = {
 }
 
 
-def _anyof_indicator(col: Column, branch: dict, field_is_object: bool,
-                     wire: Optional[Column] = None) -> Column:
+def _anyof_indicator(col: str, branch: dict, field_is_object: bool,
+                     wire: Optional[str] = None) -> str:
     """'value fully matches this branch' predicate (reference
     union_ambiguity.go:13-46: type branches via wire type, object
     branches via required keys, else accept).
@@ -527,22 +636,17 @@ def _anyof_indicator(col: Column, branch: dict, field_is_object: bool,
         m = _json_type_match(col, t)
         bit = _WIRE_BIT_FOR_TYPE.get(t)
         if wire is not None and bit is not None:
-            has_wire = wire.isNotNull() & \
-                (wire.bitwiseAND(F.lit(_WIRE_BITS_ALL)) != 0)
-            fallback = m if m is not None else F.lit(True)
-            return F.when(has_wire,
-                          wire.bitwiseAND(F.lit(bit)) != 0).otherwise(fallback)
-        return m if m is not None else F.lit(True)
+            has_wire = _all(f"{wire} IS NOT NULL", f"({wire} & {_WIRE_BITS_ALL}) != 0")
+            fallback = m if m is not None else "true"
+            return f"CASE WHEN {has_wire} THEN ({wire} & {bit}) != 0 ELSE {fallback} END"
+        return m if m is not None else "true"
     req = branch.get("required")
     if field_is_object and isinstance(req, list) and req:
-        cond = F.lit(True)
-        for k in req:
-            cond = cond & col.getField(str(k)).isNotNull()
-        return cond
-    return F.lit(True)  # fallback checker accepts (union_ambiguity.go:44-46)
+        return _all(*[f"{col}.{ident(str(k))} IS NOT NULL" for k in req])
+    return "true"  # fallback checker accepts (union_ambiguity.go:44-46)
 
 
-def _compile_anyof(out: CompiledChecks, f: Field, col: Column, p) -> None:
+def _compile_anyof(out: CompiledChecks, f: Field, col: str, p) -> None:
     """anyOf/oneOf ambiguity rule at any nesting depth (reference
     kubeopenapi/plan.go:178-211 builds the refiner per property;
     union_ambiguity.go:47-72): 'error' -> matched != 1 is
@@ -556,19 +660,18 @@ def _compile_anyof(out: CompiledChecks, f: Field, col: Column, p) -> None:
         return
     wire = None
     if out.presence is not None and isinstance(p, str):
-        wire = out.presence[F.lit(p)]
-    m = F.lit(0)
-    for b in branches:
-        m = m + _anyof_indicator(col, b, field_is_object, wire).cast("int")
+        wire = f"{out.presence}[{string(p)}]"
+    m = "0" + "".join(f" + CAST(({_anyof_indicator(col, b, field_is_object, wire)}) AS INT)"
+                      for b in branches)
     if f.anyof_ambiguity == "first_match":
-        out.add(col.isNotNull() & (m == 0), p, Codes.NO_MATCH,
-                rule=f"anyof_{f.name}", params={"matched": m})
+        out.add(_all(f"{col} IS NOT NULL", f"({m}) = 0"), p, Codes.NO_MATCH,
+                rule=f"anyof_{f.name}", params={"matched": _s(m)})
     else:  # 'error' (reference default AmbiguityError)
-        out.add(col.isNotNull() & (m != 1), p, Codes.AMBIGUOUS_MATCH,
-                rule=f"anyof_{f.name}", params={"matched": m})
+        out.add(_all(f"{col} IS NOT NULL", f"({m}) != 1"), p, Codes.AMBIGUOUS_MATCH,
+                rule=f"anyof_{f.name}", params={"matched": _s(m)})
 
 
-def _embedded_conds(el: Column, ep, phys_type) -> list:
+def _embedded_conds(el: str, ep, phys_type) -> list:
     """x-kubernetes-embedded-resource presence checks for ONE embedded
     object (reference kubeopenapi/embedded.go:19-75): apiVersion/kind
     required strings, metadata required object. Returns
@@ -579,7 +682,7 @@ def _embedded_conds(el: Column, ep, phys_type) -> list:
     from pyspark.sql import types as T
 
     conds = []
-    nn = el.isNotNull()
+    nn = f"{el} IS NOT NULL"
     if isinstance(phys_type, T.StructType):
         names = {sf.name: sf.dataType for sf in phys_type.fields}
         for k, want in (("apiVersion", "string"), ("kind", "string"),
@@ -589,26 +692,26 @@ def _embedded_conds(el: Column, ep, phys_type) -> list:
                 conds.append((nn, pk, Codes.REQUIRED,
                               "required for embedded resource"))
                 continue
-            sub = el.getField(k)
-            conds.append((nn & sub.isNull(), pk, Codes.REQUIRED,
+            sub = f"{el}.{ident(k)}"
+            conds.append((_all(nn, f"{sub} IS NULL"), pk, Codes.REQUIRED,
                           "required for embedded resource"))
             ok_type = (isinstance(names[k], T.StringType) if want == "string"
                        else isinstance(names[k], (T.StructType, T.MapType)))
             if not ok_type:
-                conds.append((nn & sub.isNotNull(), pk, Codes.INVALID_TYPE,
+                conds.append((_all(nn, f"{sub} IS NOT NULL"), pk, Codes.INVALID_TYPE,
                               f"{k} must be {want}"))
     elif isinstance(phys_type, T.MapType):
         # presence-only on homogeneous maps; scalar map values cannot
         # carry metadata's object-ness (documented columnar limit)
         for k in ("apiVersion", "kind", "metadata"):
-            conds.append((nn & ~F.map_contains_key(el, k),
+            conds.append((_all(nn, f"NOT map_contains_key({el}, {string(k)})"),
                           _pjoin(ep, "/" + k), Codes.REQUIRED,
                           "required for embedded resource"))
     return conds
 
 
-def _compile_scalar(out: CompiledChecks, f: Field, col: Column, p: str, actual_type: str):
-    nn = col.isNotNull()
+def _compile_scalar(out: CompiledChecks, f: Field, col: str, p, actual_type: str):
+    nn = f"{col} IS NOT NULL"
 
     # declared exact-numeric decimal(p,s) (NumberDecimal mode; reference
     # types.go:18-19 defers this — here: wire-type probe + exact
@@ -617,12 +720,13 @@ def _compile_scalar(out: CompiledChecks, f: Field, col: Column, p: str, actual_t
     dec = parse_decimal(f.dtype) if isinstance(f.dtype, str) else None
     if dec is not None:
         prec, scale = dec
-        num = col.try_cast("double")
-        casted = col.try_cast(f.dtype)
+        num = f"try_cast({col} AS DOUBLE)"
+        casted = f"try_cast({col} AS {f.dtype})"
         if actual_type != f.dtype:
             # 1. not a number at all -> invalid_type
-            out.add(nn & num.isNull(), p, Codes.INVALID_TYPE, rule="type_decimal",
-                    params={"precision": prec, "scale": scale, "got": col})
+            out.add(_all(nn, f"{num} IS NULL"), p, Codes.INVALID_TYPE, rule="type_decimal",
+                    params={"precision": _lit_s(prec), "scale": _lit_s(scale),
+                            "got": _s(col)})
             # 2. numeric but more fractional digits than the declared
             #    scale: Spark's decimal cast would silently ROUND — flag
             #    instead of accepting a lossy value. Compared on the
@@ -631,27 +735,29 @@ def _compile_scalar(out: CompiledChecks, f: Field, col: Column, p: str, actual_t
             #    p-s > 15; exactness bound: <= 20 integral + <= 18
             #    fractional digits (beyond that both sides round the same
             #    way only if the corruption is past digit 18).
-            wide = col.try_cast("decimal(38,18)")
-            out.add(nn & num.isNotNull() & casted.isNotNull() & wide.isNotNull()
-                    & (casted.cast("decimal(38,18)") != wide), p,
+            wide = f"try_cast({col} AS decimal(38,18))"
+            out.add(_all(nn, f"{num} IS NOT NULL", f"{casted} IS NOT NULL",
+                         f"{wide} IS NOT NULL",
+                         f"CAST({casted} AS decimal(38,18)) != {wide}"), p,
                     Codes.OVERFLOW, rule="decimal_scale",
                     message="fractional digits exceed declared scale",
-                    params={"scale": scale, "got": col})
+                    params={"scale": _lit_s(scale), "got": _s(col)})
         # 3. integral width overflow: |v| >= 10^(p-s). try_cast to
         #    decimal(p,s) is NULL exactly when the integral width
         #    overflows (scale excess rounds, never nulls), so the check
         #    runs on the decimal type itself — exact at ANY precision,
-        #    where the former double bound compare lost exactness for
-        #    p-s > 15 (decimal(20,2) boundary mis-classification).
-        out.add(nn & num.isNotNull() & casted.isNull(), p,
+        #    where a double bound compare loses exactness for p-s > 15
+        #    (decimal(20,2) boundary mis-classification).
+        out.add(_all(nn, f"{num} IS NOT NULL", f"{casted} IS NULL"), p,
                 Codes.OVERFLOW, rule="decimal_range",
-                params={"precision": prec, "scale": scale, "got": col})
+                params={"precision": _lit_s(prec), "scale": _lit_s(scale),
+                        "got": _s(col)})
         if f.min is not None:
-            out.add(nn & (num < F.lit(f.min)), p, Codes.TOO_SMALL, rule="min",
-                    params={"min": f.min, "got": col})
+            out.add(_all(nn, f"{num} < {literal(f.min)}"), p, Codes.TOO_SMALL, rule="min",
+                    params={"min": _lit_s(f.min), "got": _s(col)})
         if f.max is not None:
-            out.add(nn & (num > F.lit(f.max)), p, Codes.TOO_BIG, rule="max",
-                    params={"max": f.max, "got": col})
+            out.add(_all(nn, f"{num} > {literal(f.max)}"), p, Codes.TOO_BIG, rule="max",
+                    params={"max": _lit_s(f.max), "got": _s(col)})
         return
 
     # wire-type check via cast-null-out (reference dsl/primitives.go:163-235):
@@ -660,18 +766,19 @@ def _compile_scalar(out: CompiledChecks, f: Field, col: Column, p: str, actual_t
             actual_type in ("double", "float", "string") or actual_type.startswith("decimal")):
         # try_cast, not cast: ANSI mode (Spark 4 default) makes a failed
         # cast THROW; the null-out probe needs NULL-on-failure semantics
-        casted = col.try_cast("double")
-        out.add(nn & casted.isNull(), p, Codes.INVALID_TYPE, rule="type")
+        casted = f"try_cast({col} AS DOUBLE)"
+        out.add(_all(nn, f"{casted} IS NULL"), p, Codes.INVALID_TYPE, rule="type")
         if actual_type in ("double", "float") or actual_type.startswith("decimal"):
             # fractional part not allowed (reference dsl/primitives.go:628-631)
-            out.add(nn & casted.isNotNull() & (casted != F.floor(casted)), p,
+            out.add(_all(nn, f"{casted} IS NOT NULL", f"{casted} != floor({casted})"), p,
                     Codes.OVERFLOW, rule="int_fraction",
-                    message="fractional part not allowed", params={"got": col})
+                    message="fractional part not allowed", params={"got": _s(col)})
     if f.dtype in ("double", "float") and actual_type == "string":
-        out.add(nn & col.try_cast("double").isNull(), p, Codes.INVALID_TYPE, rule="type")
+        out.add(_all(nn, f"try_cast({col} AS DOUBLE) IS NULL"), p, Codes.INVALID_TYPE,
+                rule="type")
     if f.dtype == "timestamp" and actual_type == "string":
-        out.add(nn & F.try_to_timestamp(col).isNull(), p, Codes.INVALID_FORMAT,
-                rule="format_rfc3339", params={"got": col})
+        out.add(_all(nn, f"try_to_timestamp({col}) IS NULL"), p, Codes.INVALID_FORMAT,
+                rule="format_rfc3339", params={"got": _s(col)})
 
     # sized-int overflow guard (reference dsl/primitives.go:598-637): applies
     # when the physical column is wider than the declared logical width.
@@ -681,35 +788,40 @@ def _compile_scalar(out: CompiledChecks, f: Field, col: Column, p: str, actual_t
     if bits and (actual_type in ("bigint", "int", "smallint", "double", "float")
                  or actual_type.startswith("decimal")):
         lo, hi = INT_RANGES[bits]
-        phys = _int_bounds({"bigint": "int64", "int": "int32", "smallint": "int16"}.get(actual_type, "int64"))
+        phys = INT_RANGES.get({"bigint": "int64", "int": "int32",
+                               "smallint": "int16"}.get(actual_type, "int64"))
         if phys is None or phys[0] < lo or phys[1] > hi:
-            num = (col.cast("double")
+            num = (f"CAST({col} AS DOUBLE)"
                    if actual_type in ("double", "float") or actual_type.startswith("decimal")
                    else col)
-            out.add(nn & ((num < F.lit(lo)) | (num > F.lit(hi))), p, Codes.OVERFLOW,
-                    rule=f"int_range_{bits}", params={"min": lo, "max": hi, "got": col})
+            out.add(_all(nn, f"({num} < {literal(lo)}) OR ({num} > {literal(hi)})"), p,
+                    Codes.OVERFLOW, rule=f"int_range_{bits}",
+                    params={"min": _lit_s(lo), "max": _lit_s(hi), "got": _s(col)})
 
     if f.min is not None:
-        out.add(nn & (col < F.lit(f.min)), p, Codes.TOO_SMALL, rule="min",
-                params={"min": f.min, "got": col})
+        out.add(_all(nn, f"{col} < {literal(f.min)}"), p, Codes.TOO_SMALL, rule="min",
+                params={"min": _lit_s(f.min), "got": _s(col)})
     if f.max is not None:
-        out.add(nn & (col > F.lit(f.max)), p, Codes.TOO_BIG, rule="max",
-                params={"max": f.max, "got": col})
+        out.add(_all(nn, f"{col} > {literal(f.max)}"), p, Codes.TOO_BIG, rule="max",
+                params={"max": _lit_s(f.max), "got": _s(col)})
     if f.enum is not None:
-        out.add(nn & ~col.isin(list(f.enum)), p, Codes.INVALID_ENUM, rule="enum",
-                params={"got": col})
+        out.add(_all(nn, f"NOT {in_list(col, list(f.enum))}"), p, Codes.INVALID_ENUM,
+                rule="enum", params={"got": _s(col)})
     if f.pattern is not None:
-        out.add(nn & ~col.rlike(f.pattern), p, Codes.PATTERN, rule="pattern",
-                params={"pattern": f.pattern, "got": col})
+        out.add(_all(nn, f"NOT {col} RLIKE {string(f.pattern)}"), p, Codes.PATTERN,
+                rule="pattern", params={"pattern": _lit_s(f.pattern), "got": _s(col)})
     if f.min_str_len is not None:
-        out.add(nn & (F.length(col) < f.min_str_len), p, Codes.TOO_SHORT, rule="min_length",
-                params={"min": f.min_str_len, "got": F.length(col)})
+        out.add(_all(nn, f"length({col}) < {literal(f.min_str_len)}"), p, Codes.TOO_SHORT,
+                rule="min_length",
+                params={"min": _lit_s(f.min_str_len), "got": _s(f"length({col})")})
     if f.max_str_len is not None:
-        out.add(nn & (F.length(col) > f.max_str_len), p, Codes.TOO_LONG, rule="max_length",
-                params={"max": f.max_str_len, "got": F.length(col)})
+        out.add(_all(nn, f"length({col}) > {literal(f.max_str_len)}"), p, Codes.TOO_LONG,
+                rule="max_length",
+                params={"max": _lit_s(f.max_str_len), "got": _s(f"length({col})")})
     if f.format == "rfc3339" and actual_type == "string":
-        out.add(nn & F.try_to_timestamp(col, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")).isNull(), p,
-                Codes.INVALID_FORMAT, rule="format_rfc3339", params={"got": col})
+        fmt = string("yyyy-MM-dd'T'HH:mm:ssXXX")
+        out.add(_all(nn, f"try_to_timestamp({col}, {fmt}) IS NULL"), p,
+                Codes.INVALID_FORMAT, rule="format_rfc3339", params={"got": _s(col)})
 
 
 _INT_ELEM_TYPES = {"int8", "int16", "int32", "int64", "byte", "short",
@@ -726,14 +838,14 @@ def _elem_width_bounds(spec, actual_type: str) -> Optional[tuple]:
     of _compile_scalar's int_range guard. The element body, its exists()
     gate and the lambda-free gate all take the `elem_range_<bits>` check
     from here, so the gate stays exact."""
-    bounds = _int_bounds(spec.elem)
-    phys = _int_bounds(_ARRAY_ELEM_BITS.get(actual_type, ""))
+    bounds = INT_RANGES.get(spec.elem)
+    phys = INT_RANGES.get(_ARRAY_ELEM_BITS.get(actual_type, ""))
     if bounds is None or phys is None:
         return None
     return bounds if phys[0] < bounds[0] or phys[1] > bounds[1] else None
 
 
-def _fast_elem_gate(col: Column, spec, actual_type: str) -> Optional[Column]:
+def _fast_elem_gate(col: str, spec, actual_type: str) -> Optional[str]:
     """Whole-stage-codegen replacement for the per-element exists() gate.
 
     exists(col, elem_bad) contains a lambda, and any higher-order
@@ -774,14 +886,14 @@ def _fast_elem_gate(col: Column, spec, actual_type: str) -> Optional[Column]:
     conds = []
     bounds = _elem_width_bounds(spec, actual_type)
     if bounds:
-        conds.append(F.array_min(col) < bounds[0])
-        conds.append(F.array_max(col) > bounds[1])
+        conds.append(f"array_min({col}) < {literal(bounds[0])}")
+        conds.append(f"array_max({col}) > {literal(bounds[1])}")
     if spec.elem_min is not None:
-        conds.append(F.array_min(col) < spec.elem_min)
+        conds.append(f"array_min({col}) < {literal(spec.elem_min)}")
     if spec.elem_max is not None:
-        conds.append(F.array_max(col) >= spec.elem_max)
+        conds.append(f"array_max({col}) >= {literal(spec.elem_max)}")
     if spec.elem_max_incl is not None:
-        conds.append(F.array_max(col) > spec.elem_max_incl)
+        conds.append(f"array_max({col}) > {literal(spec.elem_max_incl)}")
     if not spec.elem_nullable:
         # probe anchor: any upper bound U such that 'array_max >= U'
         # already fires a range condition, so the probe only decides
@@ -806,108 +918,95 @@ def _fast_elem_gate(col: Column, spec, actual_type: str) -> Optional[Column]:
                     }.get(actual_type)
         if phys_max is None or anchor >= phys_max:
             return None
-        probe = F.when(F.array_max(col) <= F.lit(anchor),
-                       F.array_max(col) + F.lit(1)).otherwise(F.lit(0))
-        conds.append((F.size(col) > 0)
-                     & F.array_contains(col, probe).isNull())
+        probe = (f"CASE WHEN array_max({col}) <= {literal(anchor)} "
+                 f"THEN array_max({col}) + 1 ELSE 0 END")
+        conds.append(_all(f"size({col}) > 0", f"array_contains({col}, {probe}) IS NULL"))
     if not conds:
         return None
-    gate = conds[0]
-    for c in conds[1:]:
-        gate = gate | c
-    return gate
+    return chain("OR", conds)
 
 
-def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
+def _compile_array(out: CompiledChecks, f: Field, col: str, p, phys_type):
     from pyspark.sql import types as T
 
     spec: ArraySpec = f.dtype
     actual_type = _type_str(phys_type)
     elem_type = phys_type.elementType if isinstance(phys_type, T.ArrayType) else None
-    nn = col.isNotNull()
-    sz = F.size(col)
-    empty = _no_viols()
+    nn = f"{col} IS NOT NULL"
+    sz = f"size({col})"
+    e, i = _lam(out.depth)
 
-    def idx_path(i):
-        return F.concat(p if isinstance(p, Column) else F.lit(p),
-                        F.lit("/"), i.cast("string"))
+    def idx_path(iv):
+        return _Dyn(f"concat({_psql(p)}, '/', CAST({iv} AS STRING))")
 
     # length bounds (reference dsl/array.go:45-48, checks :137-158)
     if spec.min_len is not None:
-        out.add(nn & (sz < spec.min_len), p, Codes.TOO_SHORT, rule="array_min",
-                params={"min": spec.min_len, "got": sz})
+        out.add(_all(nn, f"{sz} < {literal(spec.min_len)}"), p, Codes.TOO_SHORT,
+                rule="array_min", params={"min": _lit_s(spec.min_len), "got": _s(sz)})
     if spec.max_len is not None:
         # doubles as the MaxBytes-style DoS guard (reference enforce.go:147-155)
-        out.add(nn & (sz > spec.max_len), p, Codes.TOO_LONG, rule="array_max",
-                params={"max": spec.max_len, "got": sz})
+        out.add(_all(nn, f"{sz} > {literal(spec.max_len)}"), p, Codes.TOO_LONG,
+                rule="array_max", params={"max": _lit_s(spec.max_len), "got": _s(sz)})
 
     # per-element checks with /<field>/<idx> paths
     # (reference dsl/array.go:79-117; paths rebased like /items/0/foo)
     width = _elem_width_bounds(spec, actual_type)
-
-    def elem_viol(t, i):
-        path = idx_path(i)
-        conds = []
+    elem_conds = []   # (cond on the element `e`, code, rule, params)
+    bad = []          # the same conditions, unguarded, for the exists() gate
+    if spec.elem_schema is None:
         if not spec.elem_nullable:
-            conds.append((t.isNull(), Codes.INVALID_TYPE, "elem_type", None))
+            elem_conds.append((f"{e} IS NULL", Codes.INVALID_TYPE, "elem_type", None))
+            bad.append(f"{e} IS NULL")
         if width:
-            lo, hi = width
-            conds.append(((t < lo) | (t > hi), Codes.OVERFLOW, f"elem_range_{spec.elem}",
-                          {"min": lo, "max": hi, "got": t}))
-        if spec.elem_min is not None:
-            conds.append((t.isNotNull() & (t < spec.elem_min), Codes.DOMAIN_RANGE, "elem_domain",
-                          {"min": spec.elem_min, "max": spec.elem_max, "got": t}))
-        if spec.elem_max is not None:
-            conds.append((t.isNotNull() & (t >= spec.elem_max), Codes.DOMAIN_RANGE, "elem_domain",
-                          {"min": spec.elem_min, "max": spec.elem_max, "got": t}))
-        if spec.elem_max_incl is not None:
-            conds.append((t.isNotNull() & (t > spec.elem_max_incl), Codes.DOMAIN_RANGE,
-                          "elem_domain",
-                          {"min": spec.elem_min, "max": spec.elem_max_incl, "got": t}))
-        expr = _null(_VIOL_DDL)
-        for cond, code, rule, params in reversed(conds):
-            expr = F.when(cond, violation(path, code, rule, params)).otherwise(expr)
-        return expr
-
-    has_elem_checks = spec.elem_schema is None and (
-        (not spec.elem_nullable) or spec.elem_min is not None
-        or spec.elem_max is not None or spec.elem_max_incl is not None
-        or width is not None)
-    if has_elem_checks:
+            lo, hi = (f"{e} < {literal(width[0])}", f"{e} > {literal(width[1])}")
+            elem_conds.append((f"({lo}) OR ({hi})", Codes.OVERFLOW, f"elem_range_{spec.elem}",
+                               {"min": _lit_s(width[0]), "max": _lit_s(width[1]),
+                                "got": _s(e)}))
+            bad += [lo, hi]
+        domain = {"min": _lit_s(spec.elem_min), "max": _lit_s(spec.elem_max), "got": _s(e)}
+        for bound, op, params in ((spec.elem_min, "<", domain), (spec.elem_max, ">=", domain),
+                                  (spec.elem_max_incl, ">",
+                                   {**domain, "max": _lit_s(spec.elem_max_incl)})):
+            if bound is not None:
+                cond = f"{e} {op} {literal(bound)}"
+                elem_conds.append((_all(f"{e} IS NOT NULL", cond), Codes.DOMAIN_RANGE,
+                                   "elem_domain", params))
+                bad.append(cond)
+    if elem_conds:
         # fast path: a cheap short-circuiting exists() gates the expensive
         # per-element struct construction — clean rows (the overwhelming
         # majority at scale) never build violation structs
-        def elem_bad(t):
-            cond = F.lit(False)
-            if not spec.elem_nullable:
-                cond = cond | t.isNull()
-            if width:
-                cond = cond | (t < width[0]) | (t > width[1])
-            if spec.elem_min is not None:
-                cond = cond | (t < spec.elem_min)
-            if spec.elem_max is not None:
-                cond = cond | (t >= spec.elem_max)
-            if spec.elem_max_incl is not None:
-                cond = cond | (t > spec.elem_max_incl)
-            return cond
-
-        arr = F.when(
-            F.exists(col, elem_bad),
-            F.filter(F.transform(col, elem_viol), lambda x: x.isNotNull()),
-        ).otherwise(_no_viols())
+        path = idx_path(i).sql
+        first = _first_fired([(c, violation(path, code, rule, params))
+                              for c, code, rule, params in elem_conds])
+        bad = f"exists({col}, {e} -> {chain('OR', bad)})"
+        arr = (f"CASE WHEN {bad} THEN "
+               f"{_filter_nn(f'transform({col}, ({e}, {i}) -> {first})')}"
+               f" ELSE {_NO_VIOLS} END")
         fast = _fast_elem_gate(col, spec, actual_type)
-        out.add_array(arr, gate=fast if fast is not None
-                      else F.exists(col, elem_bad))
+        out.add_array(arr, gate=fast if fast is not None else bad)
 
-    # contains counter (reference dsl/array.go:51-56, WithStreamContains)
+    # contains counter (reference dsl/array.go:51-56, WithStreamContains):
+    # the predicate is a SQL lambda (`x -> ...`) or a Column callable
     if spec.contains_pred is not None:
-        cnt = F.size(F.filter(col, spec.contains_pred))
+        if isinstance(spec.contains_pred, str):
+            cnt = f"size(filter({col}, {spec.contains_pred}))"
+            lt = lambda n: _all(nn, f"{cnt} < {literal(n)}")  # noqa: E731
+            gt = lambda n: _all(nn, f"{cnt} > {literal(n)}")  # noqa: E731
+        else:
+            if out.depth:
+                raise TypeError(
+                    f"array '{_psql(p)}' inside array elements needs its contains_pred "
+                    "as SQL lambda text: a Column callable cannot bind a SQL lambda variable")
+            cnt = F.size(F.filter(F.expr(col), spec.contains_pred))
+            lt = lambda n: F.expr(nn) & (cnt < n)  # noqa: E731
+            gt = lambda n: F.expr(nn) & (cnt > n)  # noqa: E731
         if spec.contains_min is not None:
-            out.add(nn & (cnt < spec.contains_min), p, Codes.TOO_SHORT, rule="contains_min",
-                    params={"min": spec.contains_min, "got": cnt})
+            out.add(lt(spec.contains_min), p, Codes.TOO_SHORT, rule="contains_min",
+                    params={"min": _lit_s(spec.contains_min), "got": _s(cnt)})
         if spec.contains_max is not None:
-            out.add(nn & (cnt > spec.contains_max), p, Codes.TOO_LONG, rule="contains_max",
-                    params={"max": spec.contains_max, "got": cnt})
+            out.add(gt(spec.contains_max), p, Codes.TOO_LONG, rule="contains_max",
+                    params={"max": _lit_s(spec.contains_max), "got": _s(cnt)})
 
     # array<struct> with a full per-element object schema — issues at
     # /<field>/<i>/<child>, recursing through nested objects/arrays
@@ -915,38 +1014,30 @@ def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
     if spec.elem_schema is not None:
         if not isinstance(elem_type, T.StructType):
             raise TypeError(
-                f"field '{p}' declares an array element object schema but the "
+                f"field '{_psql(p)}' declares an array element object schema but the "
                 f"physical type is {actual_type or 'unknown'}")
-
-        def elem_checks(t, i):
-            ep = idx_path(i)
-            sub = CompiledChecks()
-            if not spec.elem_nullable:
-                sub.add(t.isNull(), ep, Codes.INVALID_TYPE, rule="elem_type")
-            inner = CompiledChecks()
-            _compile_object(inner, spec.elem_schema, t, ep, elem_type)
-            _gate_checks(sub, inner, t.isNotNull())
-            return sub
-
-        def elem_obj_viols(t, i):
-            return elem_checks(t, i).combined()
-
-        # cheap per-element gate = the element check-set's own OR
-        # condition (None when the nested set itself has an ungated
-        # array check — then every row builds)
-        probe = elem_checks(F.lit(None).cast(elem_type), F.lit(0))
-        if probe.any_violation() is not None:
-            gate = nn & F.exists(
-                col, lambda t: elem_checks(t, F.lit(0)).any_violation())
-        else:
-            gate = None
+        # the element check set, over the lambda variables `e` and `i`;
+        # its conditions never name `i` (only the paths do), so the same
+        # set also serves the one-variable exists() gate
+        sub = CompiledChecks(depth=out.depth + 1)
+        ep = idx_path(i)
+        if not spec.elem_nullable:
+            sub.add(f"{e} IS NULL", ep, Codes.INVALID_TYPE, rule="elem_type")
+        inner = CompiledChecks(depth=out.depth + 1)
+        _compile_object(inner, spec.elem_schema, e, ep, elem_type)
+        _gate_checks(sub, inner, f"{e} IS NOT NULL")
+        # cheap gate = the element check-set's own OR condition (None
+        # when the nested set itself has an ungated array check — then
+        # every row builds)
+        g = sub.gate_sql()
+        gate = None if g is None else _all(nn, f"exists({col}, {e} -> {g})")
         # exactness propagates from the element check-set: a wide nested
         # gate (e.g. an Or-combinator inside the element schema) makes
         # this array gate wide too — claiming exact would let the clean
         # path drop rows whose gate fired without any violation
-        out.add_array(F.when(nn, F.flatten(F.transform(col, elem_obj_viols)))
-                      .otherwise(empty), gate=gate,
-                      exact=probe.gate_is_exact())
+        out.add_array(f"CASE WHEN {nn} THEN flatten(transform({col}, ({e}, {i}) -> "
+                      f"{sub.combined_sql()})) ELSE {_NO_VIOLS} END",
+                      gate=gate, exact=sub.gate_is_exact())
 
     # x-kubernetes-list-type: set — within-row element uniqueness
     # (reference kubeopenapi/list.go:20-40 setChecker, code duplicate_item)
@@ -959,104 +1050,81 @@ def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
     # comparisons. Rows that DO contain duplicates pay O(n²) once;
     # bounded by max_len when declared.
     if spec.list_set:
-        def set_dup(t, i):
-            first = F.array_position(col, t) - 1
-            return F.when(
-                t.isNotNull() & (first != i),
-                violation(idx_path(i), Codes.DUPLICATE_ITEM, rule="list_set_unique",
-                          params={"first": first, "dup": i, "key": t},
-                          message="duplicate element in set"))
+        first = f"array_position({col}, {e}) - 1"
+        dup = _case(_all(f"{e} IS NOT NULL", f"{first} != {i}"),
+                    violation(idx_path(i).sql, Codes.DUPLICATE_ITEM, rule="list_set_unique",
+                              params={"first": _s(first), "dup": _s(i), "key": _s(e)},
+                              message="duplicate element in set"))
         # gate over NON-NULL elements only: attribution skips nulls (no
         # stable array_position for null), so a null-only duplicate must
         # not trip the gate — a wide-but-empty gate would silently drop
         # the row from the exact-gate clean path (neither clean nor
         # violating). Null elements are the element schema's concern.
-        nn_elems = F.filter(col, lambda t: t.isNotNull())
-        has_dup = F.size(F.array_distinct(nn_elems)) < F.size(nn_elems)
-        out.add_array(F.when(nn & has_dup,
-                             F.filter(F.transform(col, set_dup),
-                                      lambda x: x.isNotNull())).otherwise(empty),
-                      gate=nn & has_dup)
+        nn_elems = _filter_nn(col)
+        has_dup = _all(nn, f"size(array_distinct({nn_elems})) < size({nn_elems})")
+        out.add_array(_case(has_dup, _filter_nn(f"transform({col}, ({e}, {i}) -> {dup})"),
+                            _NO_VIOLS),
+                      gate=has_dup)
 
     # x-kubernetes-list-type: map — uniqueness by composite element key +
     # required key fields (reference kubeopenapi/list.go:43-100 mapChecker)
     if spec.list_map_keys:
         keys = list(spec.list_map_keys)
-        keys_arr = F.transform(col, lambda e: F.struct(
-            *[e.getField(k).alias(k) for k in keys]))
+        k = f"__gsk_k{out.depth or ''}"
 
-        def map_dup(t, i):
-            ks = F.struct(*[t.getField(k).alias(k) for k in keys])
-            first = F.array_position(keys_arr, ks) - 1
-            return F.when(
-                t.isNotNull() & (first != i),
-                violation(idx_path(i), Codes.DUPLICATE_ITEM, rule="list_map_unique",
-                          params={"first": first, "dup": i},
-                          message="duplicate element in list-map by keys"))
+        def key_struct(t):
+            return "named_struct(" + ", ".join(
+                f"{string(kk)}, {t}.{ident(kk)}" for kk in keys) + ")"
+
+        first = f"array_position(transform({col}, {k} -> {key_struct(k)}), {key_struct(e)}) - 1"
+        dup = _case(_all(f"{e} IS NOT NULL", f"{first} != {i}"),
+                    violation(idx_path(i).sql, Codes.DUPLICATE_ITEM, rule="list_map_unique",
+                              params={"first": _s(first), "dup": _s(i)},
+                              message="duplicate element in list-map by keys"))
         # same O(n) existence gate as list_set: quadratic attribution
         # only runs on rows that actually contain a duplicate key.
         # Keys of NULL elements are excluded (attribution skips null
         # elements) so the gate stays exact — see list_set above.
-        nn_keys = F.transform(
-            F.filter(col, lambda t: t.isNotNull()),
-            lambda e: F.struct(*[e.getField(k).alias(k) for k in keys]))
-        has_key_dup = F.size(F.array_distinct(nn_keys)) < F.size(nn_keys)
-        out.add_array(F.when(nn & has_key_dup,
-                             F.filter(F.transform(col, map_dup),
-                                      lambda x: x.isNotNull())).otherwise(empty),
-                      gate=nn & has_key_dup)
+        nn_keys = f"transform({_filter_nn(col)}, {k} -> {key_struct(k)})"
+        has_key_dup = _all(nn, f"size(array_distinct({nn_keys})) < size({nn_keys})")
+        out.add_array(_case(has_key_dup,
+                            _filter_nn(f"transform({col}, ({e}, {i}) -> {dup})"), _NO_VIOLS),
+                      gate=has_key_dup)
 
         # keys already declared required by the elem schema are covered
         # by its own required check — don't double-report
         covered = {cf.name for cf in (spec.elem_schema.fields if spec.elem_schema else [])
                    if cf.required and cf.default is None}
-        probe_keys = [k for k in keys if k not in covered]
+        probe_keys = [kk for kk in keys if kk not in covered]
         if probe_keys:
-            def missing_keys(t, i):
-                per_key = [
-                    F.when(t.isNotNull() & t.getField(k).isNull(),
-                           violation(F.concat(idx_path(i), F.lit(pointer(k))),
-                                     Codes.REQUIRED, rule="list_map_key_required",
-                                     message="required for list-map-keys"))
-                    for k in probe_keys]
-                return F.array(*per_key)
-
-            def any_key_null(t):
-                cond = F.lit(False)
-                for k in probe_keys:
-                    cond = cond | (t.isNotNull() & t.getField(k).isNull())
-                return cond
-            out.add_array(F.when(nn, F.filter(F.flatten(F.transform(col, missing_keys)),
-                                              lambda x: x.isNotNull())).otherwise(empty),
-                          gate=nn & F.exists(col, any_key_null))
+            key_null = [_all(f"{e} IS NOT NULL", f"{e}.{ident(kk)} IS NULL")
+                        for kk in probe_keys]
+            missing = _array([
+                _case(c, violation(_pjoin(idx_path(i), pointer(kk)).sql, Codes.REQUIRED,
+                                   rule="list_map_key_required",
+                                   message="required for list-map-keys"))
+                for c, kk in zip(key_null, probe_keys)])
+            out.add_array(
+                _case(nn, _filter_nn(f"flatten(transform({col}, ({e}, {i}) -> {missing}))"),
+                      _NO_VIOLS),
+                gate=_all(nn, f"exists({col}, {e} -> {_any(key_null)})"))
 
     # x-kubernetes-embedded-resource on array items: each element must
     # carry apiVersion/kind/metadata, issues at /<field>/<i>/<key>
     # (reference kubeopenapi/embedded.go:30-40 array branch)
     if spec.embedded_resource:
-        def emb_viols(t, i):
-            cs = _embedded_conds(t, idx_path(i), elem_type)
-            if not cs:
-                return _no_viols()
-            items = [F.when(c, violation(pk, code, rule="embedded_resource",
-                                         message=msg))
-                     for c, pk, code, msg in cs]
-            return F.filter(F.array(*items), lambda x: x.isNotNull())
-
-        def any_emb_bad(t):
-            cond = F.lit(False)
-            for c, *_ in _embedded_conds(t, "", elem_type):
-                cond = cond | c
-            return cond
-
-        if _embedded_conds(F.lit(None).cast(elem_type) if elem_type else col,
-                           "", elem_type):
-            out.add_array(F.when(nn, F.flatten(F.transform(col, emb_viols)))
-                          .otherwise(empty),
-                          gate=nn & F.exists(col, any_emb_bad))
+        cs = _embedded_conds(e, idx_path(i), elem_type)
+        if cs:
+            items = _array([_case(c, violation(_psql(pk), code, rule="embedded_resource",
+                                               message=msg))
+                            for c, pk, code, msg in cs])
+            out.add_array(
+                _case(nn, f"flatten(transform({col}, ({e}, {i}) -> {_filter_nn(items)}))",
+                      _NO_VIOLS),
+                gate=_all(nn, f"exists({col}, {e} -> {_any([c for c, *_ in cs])})"))
 
 
-def _compile_map(out: CompiledChecks, f: Field, col: Column, p: str):
+def _compile_map(out: CompiledChecks, f: Field, col: str, p):
     """Homogeneous map value validation (reference dsl/map_core.go:48-119)
     plus key-dispatch checks — propertyNames.pattern and
     patternProperties (reference kubeopenapi/patterns.go:14-210,
@@ -1066,119 +1134,83 @@ def _compile_map(out: CompiledChecks, f: Field, col: Column, p: str):
     -> homogeneous value spec -> per-pattern value types ->
     additionalProperties value type."""
     spec: MapSpec = f.dtype
+    m = f"__gsk_m{out.depth or ''}"
+    k, v = f"{m}.key", f"{m}.value"
+    esc = f"regexp_replace(regexp_replace({k}, '~', '~0'), '/', '~1')"
+    key_path = f"concat({_psql(p)}, '/', {esc})"
 
-    def key_path(k):
-        esc = F.regexp_replace(F.regexp_replace(k, "~", "~0"), "/", "~1")
-        # p may be a Column (map nested in an array element's path)
-        base = p if isinstance(p, Column) else F.lit(p)
-        return F.concat(base, F.lit("/"), esc)
-
-    # each check: (cond(k, v) -> Column, code, rule,
-    #              params(k, v) -> dict | None, message | None)
+    # each check: (cond on the entry, code, rule, params | None, message | None)
     conds = []
 
-    def vcheck(fn, code, rule, params=None, message=None):
-        conds.append((lambda k, v: fn(v), code, rule,
-                      (lambda k, v: params(v)) if params else None, message))
+    def vcheck(cond, code, rule, params=None, message=None):
+        conds.append((cond, code, rule, params, message))
 
     # ---- key checks first (reference chains key refiners before value
     # refiners, plan.go:117-147) ----
     if spec.key_name_pattern is not None:
         pat = spec.key_name_pattern
-        conds.append((lambda k, v: ~k.rlike(pat), Codes.PATTERN,
-                      "property_names", lambda k, v: {"pattern": pat, "key": k},
-                      "key does not match pattern"))
+        vcheck(f"NOT {k} RLIKE {string(pat)}", Codes.PATTERN, "property_names",
+               {"pattern": _lit_s(pat), "key": _s(k)}, "key does not match pattern")
     pats = [(pt, t) for pt, t in (spec.key_patterns or [])]
-    if pats:
-        def any_pat_match(k):
-            m = F.lit(False)
-            for pt, _ in pats:
-                m = m | k.rlike(pt)
-            return m
-        if spec.key_enforce:
-            conds.append((lambda k, v: ~any_pat_match(k), Codes.PATTERN,
-                          "key_pattern", lambda k, v: {"key": k},
-                          "key does not match any allowed pattern"))
+    any_pat_match = _any([f"{k} RLIKE {string(pt)}" for pt, _ in pats]) if pats else None
+    if pats and spec.key_enforce:
+        vcheck(f"NOT ({any_pat_match})", Codes.PATTERN, "key_pattern", {"key": _s(k)},
+               "key does not match any allowed pattern")
 
     # ---- homogeneous value spec ----
+    nn = f"{v} IS NOT NULL"
     if spec.value_min is not None:
-        vcheck(lambda v: v.isNotNull() & (v < spec.value_min),
-               Codes.TOO_SMALL, "map_value_min",
-               lambda v: {"min": spec.value_min, "got": v})
+        vcheck(_all(nn, f"{v} < {literal(spec.value_min)}"), Codes.TOO_SMALL,
+               "map_value_min", {"min": _lit_s(spec.value_min), "got": _s(v)})
     if spec.value_max is not None:
-        vcheck(lambda v: v.isNotNull() & (v > spec.value_max),
-               Codes.TOO_BIG, "map_value_max",
-               lambda v: {"max": spec.value_max, "got": v})
+        vcheck(_all(nn, f"{v} > {literal(spec.value_max)}"), Codes.TOO_BIG,
+               "map_value_max", {"max": _lit_s(spec.value_max), "got": _s(v)})
     ef = spec.elem_field
     if ef is not None:
         if ef.required or not ef.nullable:
-            vcheck(lambda v: v.isNull(), Codes.REQUIRED, "map_value_required")
+            vcheck(f"{v} IS NULL", Codes.REQUIRED, "map_value_required")
         if ef.min is not None:
-            vcheck(lambda v: v.isNotNull() & (v < ef.min),
-                   Codes.TOO_SMALL, "min", lambda v: {"min": ef.min, "got": v})
+            vcheck(_all(nn, f"{v} < {literal(ef.min)}"), Codes.TOO_SMALL, "min",
+                   {"min": _lit_s(ef.min), "got": _s(v)})
         if ef.max is not None:
-            vcheck(lambda v: v.isNotNull() & (v > ef.max),
-                   Codes.TOO_BIG, "max", lambda v: {"max": ef.max, "got": v})
+            vcheck(_all(nn, f"{v} > {literal(ef.max)}"), Codes.TOO_BIG, "max",
+                   {"max": _lit_s(ef.max), "got": _s(v)})
         if ef.enum is not None:
-            vcheck(lambda v: v.isNotNull() & ~v.isin(list(ef.enum)),
-                   Codes.INVALID_ENUM, "enum", lambda v: {"got": v})
+            vcheck(_all(nn, f"NOT {in_list(v, list(ef.enum))}"), Codes.INVALID_ENUM, "enum",
+                   {"got": _s(v)})
         if ef.pattern is not None:
-            vcheck(lambda v: v.isNotNull() & ~v.rlike(ef.pattern),
-                   Codes.PATTERN, "pattern",
-                   lambda v: {"pattern": ef.pattern, "got": v})
+            vcheck(_all(nn, f"NOT {v} RLIKE {string(ef.pattern)}"), Codes.PATTERN, "pattern",
+                   {"pattern": _lit_s(ef.pattern), "got": _s(v)})
         if ef.min_str_len is not None:
-            vcheck(lambda v: v.isNotNull() & (F.length(v) < ef.min_str_len),
-                   Codes.TOO_SHORT, "min_length",
-                   lambda v: {"min": ef.min_str_len, "got": F.length(v)})
+            vcheck(_all(nn, f"length({v}) < {literal(ef.min_str_len)}"), Codes.TOO_SHORT,
+                   "min_length", {"min": _lit_s(ef.min_str_len), "got": _s(f"length({v})")})
         if ef.max_str_len is not None:
-            vcheck(lambda v: v.isNotNull() & (F.length(v) > ef.max_str_len),
-                   Codes.TOO_LONG, "max_length",
-                   lambda v: {"max": ef.max_str_len, "got": F.length(v)})
+            vcheck(_all(nn, f"length({v}) > {literal(ef.max_str_len)}"), Codes.TOO_LONG,
+                   "max_length", {"max": _lit_s(ef.max_str_len), "got": _s(f"length({v})")})
 
     # ---- per-pattern value types (patterns.go:155-210: ALL matching
     # patterns' type constraints apply; unmatched keys fall back to the
     # additionalProperties schema type when declared) ----
     for pt, t in pats:
-        if t is None:
-            continue
-        match = _json_type_match(F.lit(""), t)
+        match = _json_type_match(v, t) if t is not None else None
         if match is None:
             continue  # importer warned: type not scorable columnarly
-
-        def pat_mismatch(k, v, pt=pt, t=t):
-            return k.rlike(pt) & v.isNotNull() & ~_json_type_match(v, t)
-        conds.append((pat_mismatch, Codes.INVALID_TYPE, "pattern_value_type",
-                      (lambda k, v, pt=pt, t=t: {"pattern": pt, "type": t}),
-                      "value type mismatch for patternProperties"))
-    if pats and spec.ap_type is not None and \
-            _json_type_match(F.lit(""), spec.ap_type) is not None:
-        def ap_mismatch(k, v):
-            return (~any_pat_match(k) & v.isNotNull()
-                    & ~_json_type_match(v, spec.ap_type))
-        conds.append((ap_mismatch, Codes.INVALID_TYPE, "additional_value_type",
-                      lambda k, v: {"type": spec.ap_type},
-                      "value type mismatch for additionalProperties"))
+        vcheck(_all(f"{k} RLIKE {string(pt)}", nn, f"NOT ({match})"), Codes.INVALID_TYPE,
+               "pattern_value_type", {"pattern": _lit_s(pt), "type": _lit_s(t)},
+               "value type mismatch for patternProperties")
+    ap_match = _json_type_match(v, spec.ap_type) if spec.ap_type is not None else None
+    if pats and ap_match is not None:
+        vcheck(_all(f"NOT ({any_pat_match})", nn, f"NOT ({ap_match})"), Codes.INVALID_TYPE,
+               "additional_value_type", {"type": _lit_s(spec.ap_type)},
+               "value type mismatch for additionalProperties")
 
     if not conds:
         return
-
-    def entry_viol(k, v):
-        expr = _null(_VIOL_DDL)
-        for cond, code, rule, params, message in reversed(conds):
-            expr = F.when(cond(k, v),
-                          violation(key_path(k), code, rule,
-                                    params(k, v) if params else None,
-                                    message=message)).otherwise(expr)
-        return expr
-
-    def any_entry_bad(e):
-        bad = F.lit(False)
-        for cond, _, _, _, _ in conds:
-            bad = bad | cond(e["key"], e["value"])
-        return bad
-    entries = F.transform(F.map_entries(col), lambda e: entry_viol(e["key"], e["value"]))
-    out.add_array(F.filter(entries, lambda x: x.isNotNull()),
-                  gate=F.exists(F.map_entries(col), any_entry_bad))
+    first = _first_fired([(c, violation(key_path, code, rule, params, message))
+                          for c, code, rule, params, message in conds])
+    entries = f"transform(map_entries({col}), {m} -> {first})"
+    out.add_array(_filter_nn(entries),
+                  gate=f"exists(map_entries({col}), {m} -> {_any([c for c, *_ in conds])})")
 
 
 # --------------------------------------------------------------------------
@@ -1207,11 +1239,11 @@ def apply_defaults(df: DataFrame, schema: TableSchema) -> DataFrame:
 
 
 def _compiled_triple(schema: TableSchema, df: DataFrame):
-    """Memoized (gate, body, gate_is_exact) per (schema, column dtypes):
-    building the Column trees costs hundreds of py4j round-trips, and
-    unbound Column trees are immutable and reusable across DataFrames of
-    the same shape — pure driver-side serial time that Amdahl punishes
-    at higher parallelism."""
+    """Memoized (gate, body, gate_is_exact) per (schema, column dtypes),
+    gate and body as SQL text (Columns only for Column-callable
+    refinements): the compile walks the whole schema in Python, and its
+    text is reusable across DataFrames of the same shape — pure
+    driver-side serial time that Amdahl punishes at higher parallelism."""
     key = (tuple(sorted(df.dtypes)), df.columns.count("_violations"),
            getattr(schema, "_version", 0))
     cache = getattr(schema, "_compiled_cache", None)
@@ -1221,21 +1253,28 @@ def _compiled_triple(schema: TableSchema, df: DataFrame):
     triple = cache.get(key)
     if triple is None:
         checks = compile_checks(schema, df)
-        triple = (checks.any_violation(), checks.body(), checks.gate_is_exact())
+        triple = (checks.gate_sql(), checks.body_sql(), checks.gate_is_exact())
         cache[key] = triple
     return triple
 
 
-def explode_violations(df: DataFrame, row_id: Column, carry=()) -> DataFrame:
+def explode_violations(df: DataFrame, row_id, carry=()) -> DataFrame:
     """`_violations` array -> violations table (FIXTURES.md F5 shape),
     one row per element; rows with an empty array yield none. Order is
     the caller's: sort by (row_id, path, code) for goskema's issue
     ordering (reference README.md:573-574). `carry` appends passthrough
     columns (e.g. the logical partition) after the violation fields."""
-    return violation_rows(df, row_id, F.explode("_violations"), carry)
+    return violation_rows(df, row_id, ["inline(_violations)"], carry)
 
 
-def validate_rows(df: DataFrame, schema: TableSchema, row_id: Column,
+def _not_fired(gate: Sql) -> Sql:
+    """The gate did not fire: NULL (no check could evaluate) or false."""
+    if isinstance(gate, str):
+        return f"({gate}) IS NULL OR NOT ({gate})"
+    return gate.isNull() | ~gate
+
+
+def validate_rows(df: DataFrame, schema: TableSchema, row_id,
                   carry=()):
     """Full row pass: returns (dirty_df, violations_df, clean_df), all
     three derived from ONE feed — the rows where the gate fired, with
@@ -1251,14 +1290,14 @@ def validate_rows(df: DataFrame, schema: TableSchema, row_id: Column,
     row. fail_fast keeps the first issue per row (api.go:147-156).
 
     dirty_df: the input rows with at least one violation, plus
-    `_violations`. violations_df: the feed exploded (explode drops the
-    empty arrays a wide gate lets through), with `carry` columns appended
-    (the runner attaches the logical partition this way). clean_df: the
-    input rows with no violation — with an exact gate, a Filter on the
-    gate alone (NULL = no check could evaluate = clean) that never
-    touches the interpreted build; otherwise rows whose gate did not fire
-    or whose built body is empty. Every input row is in exactly one of
-    dirty_df and clean_df.
+    `_violations`. violations_df: the feed's arrays inlined (inline
+    drops the empty arrays a wide gate lets through), with `carry`
+    columns appended (the runner attaches the logical partition this
+    way). clean_df: the input rows with no violation — with an exact
+    gate, a Filter on the gate alone (NULL = no check could evaluate =
+    clean) that never touches the interpreted build; otherwise rows
+    whose gate did not fire or whose built body is empty. Every input
+    row is in exactly one of dirty_df and clean_df.
 
     clean_df preserves input token arrays byte-identically (per-row
     invariant, BASELINE.json input_hint) — it is a pure filter, never a
@@ -1267,14 +1306,15 @@ def validate_rows(df: DataFrame, schema: TableSchema, row_id: Column,
     df = apply_defaults(df, schema)
     gate, body, exact = _compiled_triple(schema, df)
     if schema.fail_fast:
-        body = F.slice(body, 1, 1)  # first issue only (api.go:147-156)
-    feed = (df if gate is None else df.filter(gate)).withColumn("_violations", body)
+        # first issue only (api.go:147-156)
+        body = f"slice({body}, 1, 1)" if isinstance(body, str) else F.slice(body, 1, 1)
+    feed = (df if gate is None else df.filter(gate)).withColumn("_violations", _col(body))
     violations = explode_violations(feed, row_id, carry=carry)
     if gate is not None and exact:
         # gate-only clean filter: testing the built array here instead
         # would inline the interpreted HOF build into the Filter and make
         # every clean row pay it (the r4 clean_scan regression)
-        return feed, violations, df.filter(gate.isNull() | ~gate)
-    empty = F.size(body) == 0
-    clean = df.filter(empty if gate is None else gate.isNull() | ~gate | empty)
-    return feed.filter(F.size("_violations") > 0), violations, clean
+        return feed, violations, df.filter(_not_fired(gate))
+    empty = f"size({body}) = 0" if isinstance(body, str) else F.size(body) == 0
+    clean = df.filter(empty if gate is None else _any([_not_fired(gate), empty]))
+    return feed.filter("size(_violations) > 0"), violations, clean

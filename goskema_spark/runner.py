@@ -25,7 +25,7 @@ which would fold the upstream compute into the write tasks;
 schema just written (no inference job) that parses `params` back into
 its map, so it has the lazy result's schema. validate() replaces all of
 `report_path` with flat files; the ledger writes run_id=/part_key=
-partitions (`part_key_col`) and overwrites only the partitions it
+partitions (`part_key_sql`) and overwrites only the partitions it
 writes.
 
 Jobs of one `validate(report_path=...)`, each labelled with
@@ -35,7 +35,12 @@ the job group is never touched):
     dimension's values, once per dimension frame (memoized);
   - "validate: report write" — the report write, one job per adaptive
     query stage.
-Nothing else runs until the caller reads `violations` or `verdicts`.
+Nothing else runs until the caller reads `violations` or `verdicts`;
+the verdicts plan itself is built on first access.
+
+Every plan here is built from Spark SQL text (goskema_spark.sqltext
+quotes names and literals): a string crosses to the JVM in a few py4j
+round trips, where each Column method call costs a dozen.
 `ledger.run_with_ledger` passes no `report_path`: it writes the lazy
 violations into its own sink through the same writer and adds its own
 jobs (see its module docstring).
@@ -59,14 +64,14 @@ naturally). With `report_path` the violation side is the report read-back.
 from __future__ import annotations
 
 from contextlib import contextmanager
-from dataclasses import dataclass
-from typing import Optional
+from typing import Optional, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from goskema_spark.referential import referential_violations
 from goskema_spark.rowpass import validate_rows
 from goskema_spark.schema import TableSchema
+from goskema_spark.sqltext import ident, string
 from goskema_spark.uniqueness import uniqueness_violations
 
 # The ledger sink's violations land in part_key=<dir> partitions. Real
@@ -77,21 +82,32 @@ from goskema_spark.uniqueness import uniqueness_violations
 _NULL_KEY = "__NULL__"
 
 
-def part_key_col(partition_col: str) -> Column:
-    return F.when(F.col(partition_col).isNull(), _NULL_KEY).otherwise(
-        F.concat(F.lit("v_"), F.col(partition_col)))
+def part_key_sql(partition_col: str) -> str:
+    c = ident(partition_col)
+    return f"CASE WHEN {c} IS NULL THEN {string(_NULL_KEY)} ELSE concat('v_', {c}) END"
 
 
-def _partition_of_key(key: Column) -> Column:
-    """Inverse of part_key_col: the partition value a part_key names."""
-    return F.when(key != _NULL_KEY, F.substr(key, F.lit(3)))
+def _partition_of_key(key: str) -> str:
+    """Inverse of part_key_sql: the partition value a part_key names."""
+    return f"CASE WHEN {key} != {string(_NULL_KEY)} THEN substr({key}, 3) END"
 
 
-@dataclass
 class ValidationResult:
-    violations: DataFrame         # union of row-pass + aggregate violations
-    clean: DataFrame              # rows with zero violations (row-pass level)
-    verdicts: DataFrame           # partition_col, rows, violations, verdict
+    """violations: union of row-pass + aggregate violations; clean: rows
+    with zero violations (row-pass level); verdicts: partition_col,
+    rows, violations, verdict — built on first access (the ledger never
+    reads it)."""
+
+    def __init__(self, violations: DataFrame, clean: DataFrame, verdicts):
+        self.violations = violations
+        self.clean = clean
+        self._verdicts = verdicts   # a DataFrame, or a builder of one
+
+    @property
+    def verdicts(self) -> DataFrame:
+        if callable(self._verdicts):
+            self._verdicts = self._verdicts()
+        return self._verdicts
 
 
 @contextmanager
@@ -116,7 +132,7 @@ def validate(
     partition_col: str = "source",
     report_path: Optional[str] = None,
     report_partitions: int = 0,
-    partitions: Optional[Column] = None,
+    partitions: Union[str, Column, None] = None,
 ) -> ValidationResult:
     """Run the full check set declared on `schema` against `df`.
 
@@ -124,9 +140,10 @@ def validate(
     module docstring). None = fully lazy result.
     report_partitions: > 0 sets the report write's REBALANCE count.
 
-    partitions: a predicate on `partition_col` selecting the partitions
-    to validate (checkpoint resume); None validates all of `df`. Row
-    checks and row counts run on `df.filter(partitions)`. Uniqueness is
+    partitions: a predicate on `partition_col` (SQL text or a Column)
+    selecting the partitions to validate (checkpoint resume); None
+    validates all of `df`. Row checks and row counts run on
+    `df.filter(partitions)`. Uniqueness is
     a GLOBAL property, so it still runs over all of `df` — duplicate
     detection and first/dup attribution stay identical to an
     uninterrupted run; the aggregate reads only (key, ordinal, partition)
@@ -173,8 +190,8 @@ def validate(
         with job_description(df.sparkSession, "validate: report write"):
             violations = write_violations(violations, report_path, partition_col,
                                           tasks=report_partitions)
-    return ValidationResult(violations=violations, clean=clean,
-                            verdicts=aggregate_verdicts(violations, df, partition_col))
+    return ValidationResult(
+        violations, clean, lambda: aggregate_verdicts(violations, df, partition_col))
 
 
 def write_violations(viols: DataFrame, path: str, partition_col: str,
@@ -196,13 +213,15 @@ def write_violations(viols: DataFrame, path: str, partition_col: str,
     create on a 4-vCPU host's local filesystem, and AQE merges a small
     shuffle into one task that creates them in turn: with part_key
     partitions, bench.py full_validation measured 13-33% slower."""
-    sink = viols.withColumn("params", F.to_json("params"))
+    cols = viols.columns
+    sink = viols.selectExpr(*["to_json(params) AS params" if c == "params" else ident(c)
+                              for c in cols])
     if run_id is None:
         sink = sink.hint("rebalance", *([tasks] if tasks > 0 else []))
         parts = []
     else:
-        sink = sink.withColumns({"run_id": F.lit(run_id),
-                                 "part_key": part_key_col(partition_col)}) \
+        sink = sink.selectExpr("*", f"{string(run_id)} AS run_id",
+                               f"{part_key_sql(partition_col)} AS part_key") \
             .hint("rebalance", "part_key")
         parts = ["run_id", "part_key"]
     # dynamic overwrite of an unpartitioned write replaces all of path
@@ -213,11 +232,11 @@ def write_violations(viols: DataFrame, path: str, partition_col: str,
      .parquet(path))
     # read back with the schema just written: no inference job
     back = viols.sparkSession.read.schema(sink.schema).parquet(path)
+    out = {"params": "from_json(params, 'map<string,string>') AS params"}
     if parts:
-        back = (back.where(F.col("run_id") == run_id)
-                .withColumn(partition_col, _partition_of_key(F.col("part_key"))))
-    return back.select(*[F.from_json(c, "map<string,string>").alias(c) if c == "params"
-                         else c for c in viols.columns])
+        back = back.where(f"run_id = {string(run_id)}")
+        out[partition_col] = f"{_partition_of_key('part_key')} AS {ident(partition_col)}"
+    return back.selectExpr(*[out.get(c, ident(c)) for c in cols])
 
 
 def aggregate_verdicts(viols: DataFrame, df: DataFrame, partition_col: str,
@@ -226,18 +245,17 @@ def aggregate_verdicts(viols: DataFrame, df: DataFrame, partition_col: str,
     join, over one 'v' record per violation and one 's' record per row
     of `df` (its partition column only). Every violation carries its
     partition value (NULL included — groupBy keeps a NULL group, so no
-    null-safe join gymnastics). `counts`: (name, condition on a
+    null-safe join gymnastics). `counts`: (name, SQL condition on a
     violation row) pairs, each adding the column `name` with the number
     of the partition's violations that match it (the ledger's per-check
     counts). Without `partition_col` in `df`, one verdict for all of it."""
     keys = [partition_col] if partition_col in df.columns else []
-    recs = viols.withColumn("_kind", F.lit("v")).unionByName(
-        df.select(*keys, F.lit("s").alias("_kind")), allowMissingColumns=True)
-    is_v = F.col("_kind") == "v"
+    recs = viols.selectExpr("*", "'v' AS _kind").unionByName(
+        df.selectExpr(*[ident(k) for k in keys], "'s' AS _kind"), allowMissingColumns=True)
     verdicts = recs.groupBy(*keys).agg(
-        F.sum(F.when(F.col("_kind") == "s", F.lit(1))).alias("rows"),
-        F.count(F.when(is_v, F.lit(1))).alias("violations"),
-        *[F.count(F.when(is_v & cond, F.lit(1))).alias(name) for name, cond in counts])
-    return verdicts.withColumn(
-        "verdict", F.when(F.col("violations") > 0, "fail").otherwise("pass")
-    )
+        F.expr("sum(CASE WHEN _kind = 's' THEN 1 END) AS rows"),
+        F.expr("count(CASE WHEN _kind = 'v' THEN 1 END) AS violations"),
+        *[F.expr(f"count(CASE WHEN _kind = 'v' AND ({cond}) THEN 1 END) AS {ident(name)}")
+          for name, cond in counts])
+    return verdicts.selectExpr(
+        "*", "CASE WHEN violations > 0 THEN 'fail' ELSE 'pass' END AS verdict")

@@ -17,7 +17,7 @@ lives in rowpass.py so the schema stays a pure declaration.
 from __future__ import annotations
 
 from dataclasses import dataclass, field as dc_field
-from typing import Any, Callable, Optional, Sequence
+from typing import Any, Callable, Optional, Sequence, Union
 
 from pyspark.sql import Column
 from pyspark.sql import types as T
@@ -86,7 +86,9 @@ class ArraySpec:
     # number items: 10.5 must violate maximum=10)
     elem_max_incl: Optional[Any] = None
     elem_nullable: bool = False
-    contains_pred: Optional[Callable[[Column], Column]] = None
+    # the contains predicate: a SQL lambda (`"x -> x < 0"`), or a
+    # Column callable (not inside array elements)
+    contains_pred: Optional[Union[str, Callable[[Column], Column]]] = None
     contains_min: Optional[int] = None
     contains_max: Optional[int] = None
     # array<struct>: full per-element object schema, issues at
@@ -181,16 +183,20 @@ class Field:
 @dataclass
 class Refinement:
     """Named cross-field rule (reference dsl/object_builder.go:129-135,
-    typed rules dsl/typed_rules.go:56-91). `violates` is a Column-builder
-    returning TRUE where the rule is violated. `when` optionally gates the
-    rule (presence gating, reference domain_types.go:25-34)."""
+    typed rules dsl/typed_rules.go:56-91). `violates` is TRUE where the
+    rule is violated; `when` optionally gates the rule (presence gating,
+    reference domain_types.go:25-34). Each is Spark SQL text or a
+    zero-argument Column builder. `params` is a dict of name -> SQL text,
+    or a builder returning name -> Column or Python value. SQL text
+    costs one parse on the driver; a Column builder pays a dozen py4j
+    round trips per Column method call."""
 
     name: str
     path: str
-    violates: Callable[[], Column]
+    violates: Union[str, Callable[[], Column]]
     code: str = "business_rule"
-    params: Optional[Callable[[], dict]] = None  # name -> Column
-    when: Optional[Callable[[], Column]] = None
+    params: Union[None, dict, Callable[[], dict]] = None
+    when: Union[None, str, Callable[[], Column]] = None
 
 
 @dataclass

@@ -34,7 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from goskema_spark.issues import Codes, MSG_DUPLICATE_VALUE, pointer
-from goskema_spark.rowpass import violation, violation_rows
+from goskema_spark.rowpass import violation_cols, violation_rows
+from goskema_spark.sqltext import ident, string
 
 
 def duplicate_keys(df: DataFrame, key: str, salt_buckets: int = 0) -> DataFrame:
@@ -103,11 +104,11 @@ def uniqueness_violations(df: DataFrame, key: str, ordinal: str,
     # only adds a unique-keyed row to the joined subset, where the
     # first-occurrence aggregate over the TRUE key yields
     # first==ordinal and the row is filtered — correctness unaffected.
-    kc = F.col(key)
-    dups = (df.filter(kc.isNotNull())
-            .groupBy(F.xxhash64(kc).alias("_kh"))
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-            .filter(F.col("_cnt") > 1)
+    kc, ordc = ident(key), ident(ordinal)
+    dups = (df.filter(f"{kc} IS NOT NULL")
+            .groupBy(F.expr(f"xxhash64({kc}) AS _kh"))
+            .agg(F.expr("count(1) AS _cnt"))
+            .filter("_cnt > 1")
             .select("_kh"))
     if broadcast:
         dups = F.broadcast(dups)
@@ -118,18 +119,19 @@ def uniqueness_violations(df: DataFrame, key: str, ordinal: str,
     # executors exist — a serial tail that caps scaling. The aggregate
     # partial-combines the hot key on every core before the (tiny,
     # dup-keys-sized) shuffle.
-    sub = df.join(dups, F.xxhash64(kc) == F.col("_kh"), "inner").drop("_kh")
-    firsts = (sub.groupBy(kc.alias("_fk"))
-              .agg(F.min(ordinal).alias("_first")))
+    sub = df.join(dups, F.expr(f"xxhash64({kc}) = _kh"), "inner").drop("_kh")
+    firsts = (sub.groupBy(F.expr(f"{kc} AS _fk"))
+              .agg(F.expr(f"min({ordc}) AS _first")))
     if broadcast:
         firsts = F.broadcast(firsts)
-    sub = (sub.join(firsts, kc == F.col("_fk"), "inner").drop("_fk")
-           .filter(F.col(ordinal) != F.col("_first")))
-    viol = violation(
-        pointer(key),
+    sub = (sub.join(firsts, F.expr(f"{kc} = _fk"), "inner").drop("_fk")
+           .filter(f"{ordc} != _first"))
+    viol = violation_cols(
+        string(pointer(key)),
         Codes.UNIQUENESS,
         rule="unique_by",
-        params={"first": F.col("_first"), "dup": F.col(ordinal), "key": F.col(key)},
+        params={"first": "CAST(_first AS STRING)", "dup": f"CAST({ordc} AS STRING)",
+                "key": f"CAST({kc} AS STRING)"},
         message=MSG_DUPLICATE_VALUE,
     )
     return violation_rows(sub, row_id, viol, carry)

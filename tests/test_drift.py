@@ -56,3 +56,42 @@ def test_by_group_ignores_nulls_in_column(spark):
     assert out.count() == 2  # still one row per group, no NaN poisoning
     for r in out.collect():
         assert r["psi"] is not None and r["ks"] is not None
+
+
+def test_degenerate_bounds_raise_before_any_job(spark):
+    """lo == hi (or lo > hi, a non-finite bound, buckets < 1) puts every
+    value in width_bucket's NULL bucket, and two samples of one range
+    would score as total drift: every drift entry point refuses such
+    bounds before it starts a Spark job."""
+    import pytest
+
+    from goskema_spark.drift import (drift_check, grouped_histogram, histogram,
+                                     windowed_drift)
+
+    df = spark.createDataFrame([("a", i, "2024-01-01 00:00:00") for i in range(10)],
+                               "g string, v int, ts string")
+    ref = histogram(df, "v", 0, 10, 2)
+    entries = {
+        "histogram": lambda lo, hi, b: histogram(df, "v", lo, hi, b),
+        "grouped_histogram": lambda lo, hi, b: grouped_histogram(df, "v", "g", lo, hi, b),
+        "psi_ks_by_group": lambda lo, hi, b: psi_ks_by_group(df, df, "v", "g", lo, hi, b),
+        "psi_ks_between": lambda lo, hi, b: psi_ks_between(df, df, "v", lo, hi, b),
+        "windowed_drift": lambda lo, hi, b: windowed_drift(df, "v", df, lo, hi, b),
+        "drift_check": lambda lo, hi, b: drift_check(df, "v", ref, lo, hi, b),
+    }
+    bad = [(5, 5, 4), (6, 5, 4), (float("nan"), 5, 4), (0, float("inf"), 4),
+           (float("-inf"), 5, 4), (0, 5, 0), (0, 5, -1)]
+    sc = spark.sparkContext
+    sc.setJobGroup("gsk_bad_bounds", "degenerate drift bounds")
+    try:
+        for name, entry in entries.items():
+            for lo, hi, b in bad:
+                with pytest.raises(ValueError):
+                    entry(lo, hi, b)
+                    pytest.fail(f"{name} accepted lo={lo} hi={hi} buckets={b}")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("gsk_bad_bounds")) == []
+    # sane bounds still score: the same sample against itself is no drift
+    assert drift_check(df, "v", ref, 0, 10, 2)["psi"] == 0.0

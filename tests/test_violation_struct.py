@@ -1,14 +1,13 @@
 """The violation struct and the tables built from it keep their declared
-types: violation() builds a named_struct over literals, without alias()
-or cast() calls, and must type exactly like the struct(alias, cast) form
-it replaced."""
+types: violation() writes a named_struct over literals as SQL text, and
+must type exactly like the struct(alias, cast) Column form it replaced."""
 
 from pyspark.sql import Column, functions as F, types as T
 
 from conftest import SF_DIR as SF
 from goskema_spark.corpus import corpus_from_documents, corpus_schema, dim_source_df, row_id_col
 from goskema_spark.issues import VIOLATION_SCHEMA, VIOLATION_STRUCT
-from goskema_spark.rowpass import _VIOL_DDL, _s, validate_rows, violation
+from goskema_spark.rowpass import _VIOL_DDL, _lit_s, _s, validate_rows, violation
 from goskema_spark.runner import validate
 
 
@@ -38,19 +37,29 @@ def _ddl_struct(spark):
 
 def test_violation_struct_types(spark):
     df = spark.createDataFrame([("a", 3)], "s string not null, n int not null")
+    # (SQL-text arguments, the same violation as Column arguments)
     shapes = [
-        ("/doc_id", "required", None, None, "msg"),
-        ("/doc_id", "too_big", "max", {"max": 5, "got": F.col("n")}, "msg"),
-        (F.concat(F.lit("/tokens/"), F.col("n").cast("string")), "domain_range",
-         "elem_domain", {"got": F.col("s"), "flag": True}, "msg"),
-        ("/source", "invalid_enum", "enum", {"enum": "a,b"}, "msg"),
+        (("'/doc_id'", "required", None, None, "msg"),
+         ("/doc_id", "required", None, None, "msg")),
+        (("'/doc_id'", "too_big", "max", {"max": _lit_s(5), "got": _s("n")}, "msg"),
+         ("/doc_id", "too_big", "max", {"max": 5, "got": F.col("n")}, "msg")),
+        (("concat('/tokens/', CAST(n AS STRING))", "domain_range", "elem_domain",
+          {"got": _s("s"), "flag": _lit_s(True)}, "msg"),
+         (F.concat(F.lit("/tokens/"), F.col("n").cast("string")), "domain_range",
+          "elem_domain", {"got": F.col("s"), "flag": True}, "msg")),
+        (("'/source'", "invalid_enum", "enum", {"enum": _lit_s("a,b")}, "msg"),
+         ("/source", "invalid_enum", "enum", {"enum": "a,b"}, "msg")),
+        # a Column param (a Column-callable refinement) composes a Column
+        (("'/doc_id'", "too_big", "max", {"max": _lit_s(5), "got": _s(F.col("n"))}, "msg"),
+         ("/doc_id", "too_big", "max", {"max": 5, "got": F.col("n")}, "msg")),
     ]
     declared = [(f.name, f.dataType.simpleString()) for f in VIOLATION_STRUCT.fields]
     ddl = _ddl_struct(spark)
-    for path, code, rule, params, message in shapes:
-        got = df.select(violation(path, code, rule, params, message).alias("v")) \
+    for (path, code, rule, params, message), old_args in shapes:
+        v = violation(path, code, rule, params, message)
+        got = df.select((F.expr(v) if isinstance(v, str) else v).alias("v")) \
             .schema["v"].dataType
-        old = df.select(_struct_alias_cast(path, code, rule, params, message).alias("v")) \
+        old = df.select(_struct_alias_cast(*old_args).alias("v")) \
             .schema["v"].dataType
         # names and types as declared, nullability as the old form's
         assert [(f.name, f.dataType.simpleString()) for f in got.fields] == declared
@@ -101,9 +110,13 @@ def test_ledger_parquet_schema(spark, tmp_path):
 
 def test_s_keeps_spark_string_forms(spark):
     df = spark.createDataFrame([(7, True, 2.5)], "i int, b boolean, d double")
-    vals = [_s(3), _s(True), _s(1.5), _s(1e20), _s("x"), _s(False),
-            _s(F.col("i")), _s(F.col("b")), _s(F.col("d"))]
-    out = df.select(*[v.alias(f"c{i}") for i, v in enumerate(vals)])
+    vals = [_lit_s(3), _lit_s(True), _lit_s(1.5), _lit_s(1e20), _lit_s("x"), _lit_s(False),
+            _s("i"), _s("b"), _s("d"), _lit_s(-0.0), _lit_s(0.1), _lit_s(2**40),
+            _lit_s("it's \\ ~/")]
+    out = df.selectExpr(*[f"{v} AS c{i}" for i, v in enumerate(vals)])
     assert all(f.dataType == T.StringType() for f in out.schema.fields)
     assert list(out.first()) == ["3", "true", "1.5", "1.0E20", "x", "false",
-                                 "7", "true", "2.5"]
+                                 "7", "true", "2.5", "-0.0", "0.1", "1099511627776",
+                                 "it's \\ ~/"]
+    # a Column keeps the Column cast
+    assert df.select(_s(F.col("d"))).first()[0] == "2.5"

@@ -18,6 +18,10 @@ resumed partitions) and ledger write.
 Any other name resolves through __spark_entry__.queries() and runs at
 GSK_EXTRA_SF (default: bench.py's SF_DIR).
 
+Expression ids (`#123`), exchange plan ids (`plan_id=45`) and
+lambda-variable suffixes (`x_12`) are renumbered in first-seen order in
+every file written, so a diff of two runs of the same plan is empty.
+
 Run the same command in a checkout of the older commit to produce the
 'before' plans (copy this file there for shapes it lacks), then diff
 the two directories.
@@ -33,6 +37,27 @@ import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+
+# an expression id (`#123`, `#123L`), an exchange's `plan_id=45`, and a
+# lambda variable with its numeric suffix (`lambda x_12`)
+_COUNTERS = [(re.compile(r"#(\d+)"), "#{}"),
+             (re.compile(r"plan_id=(\d+)"), "plan_id={}"),
+             (re.compile(r"\b(lambda [A-Za-z_][A-Za-z0-9_]*?)_(\d+)\b"), "{}_{}")]
+
+
+def renumber(text: str) -> str:
+    """Expression ids, plan ids and lambda-variable suffixes renumbered
+    in first-seen order: all come from JVM-wide counters, so they differ
+    between runs of the same plan."""
+    for pat, form in _COUNTERS:
+        seen = {}
+
+        def sub(m, seen=seen, form=form):
+            n = seen.setdefault(m.group(m.lastindex), len(seen))
+            return form.format(*m.groups()[:-1], n)
+        text = pat.sub(sub, text)
+    return text
 
 
 def fmt(df) -> str:
@@ -145,7 +170,7 @@ def main():
     plans = query_plans(spark, names) if names else bench_plans(spark)
     for name, text in plans:
         with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
-            f.write(text)
+            f.write(renumber(text))
         print(f"wrote {name}_{suffix}.txt")
 
 
