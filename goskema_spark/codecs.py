@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from goskema_spark.issues import Codes, pointer
 from goskema_spark.rowpass import violation
 from goskema_spark.schema import Field
-from goskema_spark.sqltext import string
+from goskema_spark.sqltext import ident, string
 
 
 @dataclass
@@ -121,9 +121,9 @@ def decode_col(df: DataFrame, field_name: str, codec_name: str,
     c = F.col(field_name)
     out_col = out_col or f"{field_name}_decoded"
     bad = codec.invalid_col(c)
-    viol = F.when(bad, violation(
+    viol = F.when(bad, F.expr(violation(
         string(pointer(field_name)), Codes.INVALID_FORMAT, rule=f"codec_{codec.name}",
-        params={"got": c.cast("string")}))
+        params={"got": f"CAST({ident(field_name)} AS STRING)"})))
     arr = F.filter(F.array(viol), lambda x: x.isNotNull())
     if violations_col in df.columns:
         arr = F.concat(F.col(violations_col), arr)
@@ -150,7 +150,7 @@ def encode_col(df: DataFrame, field: Field, codec_name: str,
     # revalidate: compile the single-field check set against the source
     sub_schema = TableSchema(fields=[Field(**{**field.__dict__, "name": src})])
     sub = compile_checks(sub_schema, df.select(src))
-    viols = sub.combined()
+    viols = F.expr(sub.combined_sql())
     ok = F.size(viols) == 0
     arr = viols
     if violations_col in df.columns:

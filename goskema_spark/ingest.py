@@ -22,9 +22,10 @@ import json
 from dataclasses import dataclass
 from typing import Iterator, Optional
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from goskema_spark.issues import Codes, escape_pointer_token, message_for
+from goskema_spark.rowpass import violation_rows
 from goskema_spark.schema import (
     INT_RANGES,
     ArraySpec,
@@ -559,9 +560,7 @@ def ingest_json(df: DataFrame, schema: TableSchema,
 
 
 def ingest_violations_df(parsed: DataFrame, row_id) -> DataFrame:
-    """Explode _ingest_violations into the standard violations shape."""
-    v = parsed.withColumn("_rid", row_id).select(
-        F.col("_rid").alias("row_id"),
-        F.explode("_ingest_violations").alias("v"))
-    return v.select("row_id", "v.path", "v.code", "v.message", "v.rule",
-                    F.lit(None).cast("map<string,string>").alias("params"))
+    """Flatten _ingest_violations into the standard violations shape
+    (its structs carry no params: NULL)."""
+    return violation_rows(parsed, row_id, ["inline(_ingest_violations)",
+                                           "CAST(NULL AS MAP<STRING, STRING>) AS params"])

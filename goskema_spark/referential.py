@@ -113,14 +113,3 @@ def referential_violations(df: DataFrame, column: str, dim: DataFrame,
     viol = violation_cols(string(pointer(column)), code, rule=f"ref_{column}",
                           params={"got": f"CAST({c} AS STRING)"})
     return violation_rows(misses, row_id, viol, carry)
-
-
-def referential_ok(df: DataFrame, column: str, dim: DataFrame, dim_column: str,
-                   max_inline_values: int = MAX_INLINE_VALUES) -> DataFrame:
-    """Complement: rows passing the referential check (left semi /
-    inlined isin — same dispatch as referential_violations)."""
-    domain = _inline_domain(dim, dim_column, max_inline_values)
-    if domain is not None:
-        return df.filter(F.col(column).isin(domain))
-    dimset = dim.select(F.col(dim_column).alias(column)).distinct()
-    return df.join(F.broadcast(dimset), column, "left_semi")

@@ -9,11 +9,9 @@ per-element checks, reference dsl/array.go:79-117 issues at
 `/<field>/<idx>`), all concatenated into a `_violations` array column
 and filtered for nulls. Names and literals are spliced in through
 goskema_spark.sqltext; lambda variables take reserved `__gsk_` names,
-so no table column is ever shadowed.
-
-A refinement may still be given as Column callables: such a check is
-composed with the SQL text at the top level (`F.expr` pieces joined by
-Column calls) and pays only its own Column calls.
+so no table column is ever shadowed. Refinements and contains
+predicates are SQL text too, spliced in as given; anything else is a
+TypeError naming the rule or field, raised while compiling.
 
 One feed shape (validate_rows): a whole-stage-codegen'd Filter on the
 gate (the OR of every check condition) BELOW the interpreted projection
@@ -33,9 +31,9 @@ in sorted field order, then by check kind; the violations table sorts by
 
 from __future__ import annotations
 
-from typing import Optional, Union
+from typing import Optional
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from goskema_spark.issues import Codes, message_for, pointer
 from goskema_spark.schema import (
@@ -53,82 +51,32 @@ _VIOL_ARR_DDL = f"array<{_VIOL_DDL}>"
 _NO_VIOLS = f"CAST(array() AS {_VIOL_ARR_DDL})"
 _NULL_VIOL = f"CAST(NULL AS {_VIOL_DDL})"
 
-# A plan piece: SQL text, or a Column where a refinement was given as
-# Column callables (composed at the top level, see the module docstring)
-Sql = Union[str, Column]
-
-
-def _col(x: Sql) -> Column:
-    return F.expr(x) if isinstance(x, str) else x
-
-
-def _and(a: Sql, b: Sql) -> Sql:
-    if isinstance(a, str) and isinstance(b, str):
-        return f"({a}) AND ({b})"
-    return _col(a) & _col(b)
-
-
 def _all(*conds: str) -> str:
     return chain("AND", conds)
 
 
-def _any(conds) -> Sql:
-    """OR of the conditions: the text ones in one string, Column ones
-    (if any) OR'ed onto it."""
-    text = [c for c in conds if isinstance(c, str)]
-    cols = [c for c in conds if not isinstance(c, str)]
-    out = None
-    if text:
-        out = chain("OR", text)
-        if not cols:
-            return out
-        out = F.expr(out)
-    for c in cols:
-        out = c if out is None else out | c
-    return out
+def _case(cond: str, then: str, other: Optional[str] = None) -> str:
+    tail = "" if other is None else f" ELSE {other}"
+    return f"CASE WHEN {cond} THEN {then}{tail} END"
 
 
-def _case(cond: Sql, then: Sql, other: Optional[Sql] = None) -> Sql:
-    if isinstance(cond, str) and isinstance(then, str) and \
-            (other is None or isinstance(other, str)):
-        tail = "" if other is None else f" ELSE {other}"
-        return f"CASE WHEN {cond} THEN {then}{tail} END"
-    out = F.when(_col(cond), _col(then))
-    return out if other is None else out.otherwise(_col(other))
-
-
-def _array(items) -> Sql:
-    """array(items); a Column item splits the text into runs, each one
-    array, concatenated."""
-    if all(isinstance(i, str) for i in items):
-        return f"array({', '.join(items)})"
-    runs = []
-    for i in items:
-        if isinstance(i, str) and runs and isinstance(runs[-1], list):
-            runs[-1].append(i)
-        else:
-            runs.append([i] if isinstance(i, str) else F.array(i))
-    parts = [F.expr(f"array({', '.join(r)})") if isinstance(r, list) else r for r in runs]
-    return parts[0] if len(parts) == 1 else F.concat(*parts)
-
-
-def _concat(parts) -> Sql:
-    if all(isinstance(p, str) for p in parts):
-        return f"concat({', '.join(parts)})"
-    return F.concat(*[_col(p) for p in parts])
-
-
-def _filter_nn(arr: Sql) -> Sql:
+def _filter_nn(arr: str) -> str:
     """The array without its NULL elements (the checks that did not fire)."""
-    if isinstance(arr, str):
-        return f"filter({arr}, __gsk_v -> __gsk_v IS NOT NULL)"
-    return F.filter(arr, lambda x: x.isNotNull())
+    return f"filter({arr}, __gsk_v -> __gsk_v IS NOT NULL)"
 
 
-def _s(x: Sql) -> Sql:
+def _s(x: str) -> str:
     """An expression as a string for params maps, in Spark's string form
     (`true`, `1.0E20`), which differs from Python's str()."""
-    return f"CAST({x} AS STRING)" if isinstance(x, str) else x.cast("string")
+    return f"CAST({x} AS STRING)"
+
+
+def _sql(value, what: str) -> str:
+    """`value`, which must be SQL text: a leftover Python callable would
+    otherwise reach Spark's parser as `<function ...>`."""
+    if not isinstance(value, str):
+        raise TypeError(f"{what} must be Spark SQL text, got {value!r}")
+    return value
 
 
 def _lit_s(v) -> str:
@@ -160,14 +108,10 @@ def _pjoin(p, suffix: str):
     return p + suffix
 
 
-def _violation_fields(path: Sql, code: str, rule, params, message) -> list:
+def _violation_fields(path: str, code: str, rule, params, message) -> list:
     msg = message if message is not None else message_for(code)
     if params:
-        kv = [(k, params[k]) for k in sorted(params)]
-        if all(isinstance(v, str) for _, v in kv):
-            pm = "map(" + ", ".join(f"{string(k)}, {v}" for k, v in kv) + ")"
-        else:
-            pm = F.create_map(*[c for k, v in kv for c in (F.lit(k), _col(v))])
+        pm = "map(" + ", ".join(f"{string(k)}, {params[k]}" for k in sorted(params)) + ")"
     else:
         pm = "CAST(NULL AS MAP<STRING, STRING>)"
     return [("path", path), ("code", string(code)), ("message", string(msg)),
@@ -175,23 +119,20 @@ def _violation_fields(path: Sql, code: str, rule, params, message) -> list:
             ("params", pm)]
 
 
-def violation(path: Sql, code: str, rule: Optional[str] = None,
-              params: Optional[dict] = None, message: Optional[str] = None) -> Sql:
+def violation(path: str, code: str, rule: Optional[str] = None,
+              params: Optional[dict] = None, message: Optional[str] = None) -> str:
     """A violation struct (shape of reference errors.go:39-54) as SQL
     text: a named_struct over literals. `path` is a string-typed SQL
     expression (quote a static pointer with sqltext.string); `params`
-    maps names to string-typed SQL expressions. A Column path or param
-    value makes the struct a Column."""
+    maps names to string-typed SQL expressions."""
     fields = _violation_fields(path, code, rule, params, message)
-    if all(isinstance(v, str) for _, v in fields):
-        return "named_struct(" + ", ".join(f"'{n}', {v}" for n, v in fields) + ")"
-    return F.named_struct(*[c for n, v in fields for c in (F.lit(n), _col(v))])
+    return "named_struct(" + ", ".join(f"'{n}', {v}" for n, v in fields) + ")"
 
 
 def violation_cols(path: str, code: str, rule: Optional[str] = None,
                    params: Optional[dict] = None, message: Optional[str] = None) -> list:
     """The fields of violation() as `expr AS name` select items: the
-    flat form of a row with exactly one violation (SQL text only)."""
+    flat form of a row with exactly one violation."""
     return [f"{v} AS {n}" for n, v in _violation_fields(path, code, rule, params, message)]
 
 
@@ -199,11 +140,11 @@ def violation_rows(df: DataFrame, row_id, viol: list, carry=()) -> DataFrame:
     """Flat violation rows (VIOLATION_SCHEMA's columns, then `carry`)
     from `df`, in ONE projection: `viol` is the select items of the
     violation columns — `inline(<array>)` for a violations array, or
-    violation_cols() for one violation per row."""
+    violation_cols() for one violation per row. `row_id` is a Column."""
     # row_id is bound BEFORE the select: with a generator in the same
     # select it would be evaluated above the Generate, once per
     # violation instead of per row
-    return df.withColumn("_row_id", _col(row_id)).selectExpr(
+    return df.withColumn("_row_id", row_id).selectExpr(
         "_row_id AS row_id", *viol, *[ident(c) for c in carry])
 
 
@@ -216,8 +157,7 @@ def _lam(depth: int) -> tuple:
 
 class CompiledChecks:
     """scalars: list[(cond, struct)]; arrays: list[(gate|None, array<struct>, exact)],
-    every piece SQL text (a Column only where a refinement was given as
-    Column callables).
+    every piece SQL text.
 
     The separation exists for the gate (gate_sql): the
     violation-array construction (array/concat/filter of structs) is a
@@ -227,8 +167,8 @@ class CompiledChecks:
     one cheap OR of all check conditions (codegen-friendly comparisons);
     only rows with at least one firing check — bounded by the violation
     rate, ~0 at production quality — pay the interpreted struct
-    construction (validate_rows filters on the gate below body();
-    combined() guards it inline for per-element object checks)."""
+    construction (validate_rows filters on the gate below body_sql();
+    combined_sql() guards it inline for per-element object checks)."""
 
     def __init__(self, presence: Optional[str] = None, depth: int = 0):
         self.scalars: list = []   # (cond, violation struct)
@@ -241,11 +181,11 @@ class CompiledChecks:
         # lambdas enclosing these checks (array elements nest one deeper)
         self.depth = depth
 
-    def add(self, cond: Sql, path, code, rule=None, params=None, message=None):
+    def add(self, cond: str, path, code, rule=None, params=None, message=None):
         """path: a static pointer (str) or a _Dyn."""
         self.scalars.append((cond, violation(_psql(path), code, rule, params, message)))
 
-    def add_array(self, arr: Sql, gate: Optional[Sql] = None,
+    def add_array(self, arr: str, gate: Optional[str] = None,
                   exact: bool = True):
         """gate: a cheap condition that is FALSE whenever `arr` is empty
         (used only to skip work — a too-wide gate costs nothing but
@@ -257,11 +197,9 @@ class CompiledChecks:
         clean-row set is decidable from the gate alone — a
         codegen-friendly filter that never touches the interpreted HOF
         violations build (validate_rows clean path)."""
-        arr = (f"coalesce({arr}, {_NO_VIOLS})" if isinstance(arr, str)
-               else F.coalesce(arr, F.expr(_NO_VIOLS)))
-        self.arrays.append((gate, arr, exact))
+        self.arrays.append((gate, f"coalesce({arr}, {_NO_VIOLS})", exact))
 
-    def gate_sql(self) -> Optional[Sql]:
+    def gate_sql(self) -> Optional[str]:
         """Cheap OR over every check condition; None if some array check
         has no gate (then every row must build). NULL conditions read as
         'did not fire' (null OR false = null -> CASE WHEN does not fire),
@@ -271,7 +209,7 @@ class CompiledChecks:
             if g is None:
                 return None
             conds.append(g)
-        return _any(conds) if conds else "false"
+        return chain("OR", conds) if conds else "false"
 
     def gate_is_exact(self) -> bool:
         """True when the gate is EXACT: gate fired <=> the row has >= 1
@@ -281,48 +219,43 @@ class CompiledChecks:
         the one wide gate today)."""
         return all(exact for _, _, exact in self.arrays)
 
-    def body_sql(self) -> Sql:
+    def body_sql(self) -> str:
         """The UNGATED violations-array construction (interpreted HOF
         territory), correct on every row. validate_rows builds it only
         on rows that pass a Filter on the gate."""
         parts = []
         if self.scalars:
-            parts.append(_array([_case(c, v) for c, v in self.scalars]))
+            parts.append(f"array({', '.join(_case(c, v) for c, v in self.scalars)})")
         parts.extend(a for _, a, _ in self.arrays)
         if not parts:
             return _NO_VIOLS
-        return _filter_nn(parts[0] if len(parts) == 1 else _concat(parts))
+        return _filter_nn(parts[0] if len(parts) == 1 else f"concat({', '.join(parts)})")
 
-    def body(self) -> Column:
-        return _col(self.body_sql())
-
-    def combined_sql(self) -> Sql:
+    def combined_sql(self) -> str:
+        """The body guarded inline by the gate: empty where the gate did
+        not fire."""
         gate = self.gate_sql()
         body = self.body_sql()
         return body if gate is None else _case(gate, body, _NO_VIOLS)
 
-    def combined(self) -> Column:
-        return _col(self.combined_sql())
 
-
-def _rule_cond(r) -> Sql:
-    """A refinement's firing condition: `when AND violates`, each SQL
-    text or a Column callable."""
-    cond = r.violates if isinstance(r.violates, str) else r.violates()
+def _rule_cond(r) -> str:
+    """A refinement's firing condition: `when AND violates`."""
+    cond = _sql(r.violates, f"refinement '{r.name}' violates")
     if r.when is not None:
-        cond = _and(r.when if isinstance(r.when, str) else r.when(), cond)
+        cond = _all(_sql(r.when, f"refinement '{r.name}' when"), cond)
     return cond
 
 
 def _rule_params(r) -> Optional[dict]:
-    """A refinement's params as string-typed pieces: a dict of SQL text,
-    or a callable returning Columns and Python values."""
+    """A refinement's params (name -> SQL text) as string-typed pieces."""
     if not r.params:
         return None
-    if isinstance(r.params, dict):
-        return {k: _s(v) for k, v in r.params.items()}
-    return {k: v.cast("string") if isinstance(v, Column) else _lit_s(v)
-            for k, v in r.params().items()}
+    if not isinstance(r.params, dict):
+        raise TypeError(f"refinement '{r.name}' params must be a dict of Spark SQL "
+                        f"text, got {r.params!r}")
+    return {k: _s(_sql(v, f"refinement '{r.name}' param '{k}'"))
+            for k, v in r.params.items()}
 
 
 def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
@@ -395,10 +328,8 @@ def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
                 _gate_checks(out, sub, gate)
             else:
                 for r in var:
-                    cond = _and(gate, r.violates if isinstance(r.violates, str)
-                                else r.violates())
-                    out.add(cond, r.path or dpath, r.code, rule=r.name,
-                            params=_rule_params(r))
+                    out.add(_all(gate, _rule_cond(r)), r.path or dpath, r.code,
+                            rule=r.name, params=_rule_params(r))
 
     # cross-field refinements (reference dsl/object_builder.go:129-135,
     # dsl/typed_rules.go:56-91 — rule name stamped into the row;
@@ -420,19 +351,18 @@ def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
                 items.append(_case(cond, violation(
                     string(r.path), r.code, rule=f"{orr.name}:{r.name}",
                     params=_rule_params(r))))
-            branch_arrays.append(_filter_nn(_array(items)) if items else _NO_VIOLS)
+            branch_arrays.append(_filter_nn(f"array({', '.join(items)})")
+                                 if items else _NO_VIOLS)
         chosen = branch_arrays[0]
         for arr in branch_arrays[1:]:
             # strict < keeps the first minimal branch on ties
-            fewer = (f"size({arr}) < size({chosen})"
-                     if isinstance(arr, str) and isinstance(chosen, str)
-                     else F.size(_col(arr)) < F.size(_col(chosen)))
-            chosen = _case(fewer, arr, chosen)
+            chosen = _case(f"size({arr}) < size({chosen})", arr, chosen)
         # cheap gate: the Or result is non-empty only if SOME branch rule
         # fires (a zero-issue branch would have been chosen otherwise).
         # WIDE (exact=False): one branch firing while another stays clean
         # trips the gate yet yields an empty chosen array.
-        out.add_array(chosen, gate=_any(all_conds) if all_conds else None, exact=False)
+        out.add_array(chosen, gate=chain("OR", all_conds) if all_conds else None,
+                      exact=False)
 
     return out
 
@@ -578,9 +508,9 @@ def _gate_checks(out: CompiledChecks, sub: CompiledChecks, gate: str):
     """Merge `sub`'s compiled checks into `out`, each gated on `gate`
     (variant tag match / parent struct presence)."""
     for c, v in sub.scalars:
-        out.scalars.append((_and(gate, c), v))
+        out.scalars.append((_all(gate, c), v))
     for g, a, exact in sub.arrays:
-        out.arrays.append((None if g is None else _and(gate, g),
+        out.arrays.append((None if g is None else _all(gate, g),
                            _case(gate, a, _NO_VIOLS), exact))
 
 
@@ -659,7 +589,7 @@ def _compile_anyof(out: CompiledChecks, f: Field, col: str, p) -> None:
     if not known:
         return
     wire = None
-    if out.presence is not None and isinstance(p, str):
+    if out.presence is not None and not isinstance(p, _Dyn):
         wire = f"{out.presence}[{string(p)}]"
     m = "0" + "".join(f" + CAST(({_anyof_indicator(col, b, field_is_object, wire)}) AS INT)"
                       for b in branches)
@@ -987,25 +917,17 @@ def _compile_array(out: CompiledChecks, f: Field, col: str, p, phys_type):
         out.add_array(arr, gate=fast if fast is not None else bad)
 
     # contains counter (reference dsl/array.go:51-56, WithStreamContains):
-    # the predicate is a SQL lambda (`x -> ...`) or a Column callable
+    # the predicate is a SQL lambda (`x -> ...`)
     if spec.contains_pred is not None:
-        if isinstance(spec.contains_pred, str):
-            cnt = f"size(filter({col}, {spec.contains_pred}))"
-            lt = lambda n: _all(nn, f"{cnt} < {literal(n)}")  # noqa: E731
-            gt = lambda n: _all(nn, f"{cnt} > {literal(n)}")  # noqa: E731
-        else:
-            if out.depth:
-                raise TypeError(
-                    f"array '{_psql(p)}' inside array elements needs its contains_pred "
-                    "as SQL lambda text: a Column callable cannot bind a SQL lambda variable")
-            cnt = F.size(F.filter(F.expr(col), spec.contains_pred))
-            lt = lambda n: F.expr(nn) & (cnt < n)  # noqa: E731
-            gt = lambda n: F.expr(nn) & (cnt > n)  # noqa: E731
+        pred = _sql(spec.contains_pred, f"array '{_psql(p)}' contains_pred")
+        cnt = f"size(filter({col}, {pred}))"
         if spec.contains_min is not None:
-            out.add(lt(spec.contains_min), p, Codes.TOO_SHORT, rule="contains_min",
+            out.add(_all(nn, f"{cnt} < {literal(spec.contains_min)}"), p, Codes.TOO_SHORT,
+                    rule="contains_min",
                     params={"min": _lit_s(spec.contains_min), "got": _s(cnt)})
         if spec.contains_max is not None:
-            out.add(gt(spec.contains_max), p, Codes.TOO_LONG, rule="contains_max",
+            out.add(_all(nn, f"{cnt} > {literal(spec.contains_max)}"), p, Codes.TOO_LONG,
+                    rule="contains_max",
                     params={"max": _lit_s(spec.contains_max), "got": _s(cnt)})
 
     # array<struct> with a full per-element object schema — issues at
@@ -1099,15 +1021,15 @@ def _compile_array(out: CompiledChecks, f: Field, col: str, p, phys_type):
         if probe_keys:
             key_null = [_all(f"{e} IS NOT NULL", f"{e}.{ident(kk)} IS NULL")
                         for kk in probe_keys]
-            missing = _array([
+            missing = "array(" + ", ".join(
                 _case(c, violation(_pjoin(idx_path(i), pointer(kk)).sql, Codes.REQUIRED,
                                    rule="list_map_key_required",
                                    message="required for list-map-keys"))
-                for c, kk in zip(key_null, probe_keys)])
+                for c, kk in zip(key_null, probe_keys)) + ")"
             out.add_array(
                 _case(nn, _filter_nn(f"flatten(transform({col}, ({e}, {i}) -> {missing}))"),
                       _NO_VIOLS),
-                gate=_all(nn, f"exists({col}, {e} -> {_any(key_null)})"))
+                gate=_all(nn, f"exists({col}, {e} -> {chain('OR', key_null)})"))
 
     # x-kubernetes-embedded-resource on array items: each element must
     # carry apiVersion/kind/metadata, issues at /<field>/<i>/<key>
@@ -1115,13 +1037,13 @@ def _compile_array(out: CompiledChecks, f: Field, col: str, p, phys_type):
     if spec.embedded_resource:
         cs = _embedded_conds(e, idx_path(i), elem_type)
         if cs:
-            items = _array([_case(c, violation(_psql(pk), code, rule="embedded_resource",
-                                               message=msg))
-                            for c, pk, code, msg in cs])
+            items = "array(" + ", ".join(
+                _case(c, violation(_psql(pk), code, rule="embedded_resource", message=msg))
+                for c, pk, code, msg in cs) + ")"
             out.add_array(
                 _case(nn, f"flatten(transform({col}, ({e}, {i}) -> {_filter_nn(items)}))",
                       _NO_VIOLS),
-                gate=_all(nn, f"exists({col}, {e} -> {_any([c for c, *_ in cs])})"))
+                gate=_all(nn, f"exists({col}, {e} -> {chain('OR', [c for c, *_ in cs])})"))
 
 
 def _compile_map(out: CompiledChecks, f: Field, col: str, p):
@@ -1152,7 +1074,7 @@ def _compile_map(out: CompiledChecks, f: Field, col: str, p):
         vcheck(f"NOT {k} RLIKE {string(pat)}", Codes.PATTERN, "property_names",
                {"pattern": _lit_s(pat), "key": _s(k)}, "key does not match pattern")
     pats = [(pt, t) for pt, t in (spec.key_patterns or [])]
-    any_pat_match = _any([f"{k} RLIKE {string(pt)}" for pt, _ in pats]) if pats else None
+    any_pat_match = chain("OR", [f"{k} RLIKE {string(pt)}" for pt, _ in pats]) if pats else None
     if pats and spec.key_enforce:
         vcheck(f"NOT ({any_pat_match})", Codes.PATTERN, "key_pattern", {"key": _s(k)},
                "key does not match any allowed pattern")
@@ -1210,7 +1132,7 @@ def _compile_map(out: CompiledChecks, f: Field, col: str, p):
                           for c, code, rule, params, message in conds])
     entries = f"transform(map_entries({col}), {m} -> {first})"
     out.add_array(_filter_nn(entries),
-                  gate=f"exists(map_entries({col}), {m} -> {_any([c for c, *_ in conds])})")
+                  gate=f"exists(map_entries({col}), {m} -> {chain('OR', [c for c, *_ in conds])})")
 
 
 # --------------------------------------------------------------------------
@@ -1240,10 +1162,11 @@ def apply_defaults(df: DataFrame, schema: TableSchema) -> DataFrame:
 
 def _compiled_triple(schema: TableSchema, df: DataFrame):
     """Memoized (gate, body, gate_is_exact) per (schema, column dtypes),
-    gate and body as SQL text (Columns only for Column-callable
-    refinements): the compile walks the whole schema in Python, and its
-    text is reusable across DataFrames of the same shape — pure
-    driver-side serial time that Amdahl punishes at higher parallelism."""
+    gate and body as SQL text: the compile walks the whole schema in
+    Python, and its text is reusable across DataFrames of the same
+    shape — pure driver-side serial time that Amdahl punishes at higher
+    parallelism. The memo holds only strings and bools, so a schema
+    that validated once still pickles as it is."""
     key = (tuple(sorted(df.dtypes)), df.columns.count("_violations"),
            getattr(schema, "_version", 0))
     cache = getattr(schema, "_compiled_cache", None)
@@ -1267,11 +1190,9 @@ def explode_violations(df: DataFrame, row_id, carry=()) -> DataFrame:
     return violation_rows(df, row_id, ["inline(_violations)"], carry)
 
 
-def _not_fired(gate: Sql) -> Sql:
+def _not_fired(gate: str) -> str:
     """The gate did not fire: NULL (no check could evaluate) or false."""
-    if isinstance(gate, str):
-        return f"({gate}) IS NULL OR NOT ({gate})"
-    return gate.isNull() | ~gate
+    return f"({gate}) IS NULL OR NOT ({gate})"
 
 
 def validate_rows(df: DataFrame, schema: TableSchema, row_id,
@@ -1307,14 +1228,14 @@ def validate_rows(df: DataFrame, schema: TableSchema, row_id,
     gate, body, exact = _compiled_triple(schema, df)
     if schema.fail_fast:
         # first issue only (api.go:147-156)
-        body = f"slice({body}, 1, 1)" if isinstance(body, str) else F.slice(body, 1, 1)
-    feed = (df if gate is None else df.filter(gate)).withColumn("_violations", _col(body))
+        body = f"slice({body}, 1, 1)"
+    feed = (df if gate is None else df.filter(gate)).withColumn("_violations", F.expr(body))
     violations = explode_violations(feed, row_id, carry=carry)
     if gate is not None and exact:
         # gate-only clean filter: testing the built array here instead
         # would inline the interpreted HOF build into the Filter and make
         # every clean row pay it (the r4 clean_scan regression)
         return feed, violations, df.filter(_not_fired(gate))
-    empty = f"size({body}) = 0" if isinstance(body, str) else F.size(body) == 0
-    clean = df.filter(empty if gate is None else _any([_not_fired(gate), empty]))
+    empty = f"size({body}) = 0"
+    clean = df.filter(empty if gate is None else chain("OR", [_not_fired(gate), empty]))
     return feed.filter("size(_violations) > 0"), violations, clean

@@ -10,16 +10,17 @@ column policy (reference types.go:4-10), uniqueness keys (reference
 rules/rules.go:104-137) and referential (context-rule) checks (reference
 dsl/object_typed_builder.go:57-68).
 
-Nothing here touches Spark execution; compilation to Column expressions
-lives in rowpass.py so the schema stays a pure declaration.
+Nothing here touches Spark execution; compilation to Spark SQL text
+lives in rowpass.py so the schema stays a pure declaration. Rules that
+need an expression (refinements, the contains predicate) take it as
+Spark SQL text.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field as dc_field
-from typing import Any, Callable, Optional, Sequence, Union
+from typing import Any, Optional, Sequence
 
-from pyspark.sql import Column
 from pyspark.sql import types as T
 
 # Sized-integer ranges for overflow guards
@@ -86,9 +87,9 @@ class ArraySpec:
     # number items: 10.5 must violate maximum=10)
     elem_max_incl: Optional[Any] = None
     elem_nullable: bool = False
-    # the contains predicate: a SQL lambda (`"x -> x < 0"`), or a
-    # Column callable (not inside array elements)
-    contains_pred: Optional[Union[str, Callable[[Column], Column]]] = None
+    # the contains predicate: a SQL lambda (`"x -> x < 0"`), at any
+    # nesting depth
+    contains_pred: Optional[str] = None
     contains_min: Optional[int] = None
     contains_max: Optional[int] = None
     # array<struct>: full per-element object schema, issues at
@@ -185,18 +186,17 @@ class Refinement:
     """Named cross-field rule (reference dsl/object_builder.go:129-135,
     typed rules dsl/typed_rules.go:56-91). `violates` is TRUE where the
     rule is violated; `when` optionally gates the rule (presence gating,
-    reference domain_types.go:25-34). Each is Spark SQL text or a
-    zero-argument Column builder. `params` is a dict of name -> SQL text,
-    or a builder returning name -> Column or Python value. SQL text
-    costs one parse on the driver; a Column builder pays a dozen py4j
-    round trips per Column method call."""
+    reference domain_types.go:25-34). Each is a Spark SQL boolean
+    expression over the table's columns. `params` maps names to Spark
+    SQL expressions, reported as strings. Anything other than SQL text
+    is a TypeError naming the rule, raised when the schema compiles."""
 
     name: str
     path: str
-    violates: Union[str, Callable[[], Column]]
+    violates: str
     code: str = "business_rule"
-    params: Union[None, dict, Callable[[], dict]] = None
-    when: Union[None, str, Callable[[], Column]] = None
+    params: Optional[dict] = None
+    when: Optional[str] = None
 
 
 @dataclass
@@ -271,16 +271,8 @@ class TableSchema:
     fail_fast: bool = False  # ParseOpt{FailFast} (reference api.go:147-156)
     # mutation counter: part of the compiled-checks memo key in rowpass.py,
     # so chaining refine()/unique()/discriminate() after a validation run
-    # never reuses stale compiled Columns
+    # never reuses stale compiled checks
     _version: int = 0
-
-    def __getstate__(self):
-        # the compiled-checks memo holds JVM-bound Column objects; a
-        # schema that validated once must still cloudpickle to executors
-        # (ingest_json closures) — drop the cache, it rebuilds lazily
-        state = dict(self.__dict__)
-        state.pop("_compiled_cache", None)
-        return state
 
     # -- builder chaining -------------------------------------------------
     def refine(self, name, violates, path="", code="business_rule", params=None, when=None):

@@ -1,6 +1,7 @@
 """Operator-inventory coverage tests (SURVEY §2.1): each goskema DSL
 operator exercised through the columnar row pass."""
 
+import pytest
 from pyspark.sql import functions as F, types as T
 
 from goskema_spark import schema as S
@@ -97,7 +98,7 @@ def test_contains_counter(spark):
                            T.StructField("xs", T.ArrayType(T.IntegerType()))]))
     sch = S.table(
         S.field("id", "string", required=True),
-        S.field("xs", S.array("int32", contains_pred=lambda x: x < 0,
+        S.field("xs", S.array("int32", contains_pred="x -> x < 0",
                               contains_min=1, contains_max=2)),
     )
     _, viols, _ = validate_rows(df, sch, F.col("id"))
@@ -121,12 +122,14 @@ def test_map_value_validation(spark):
 
 
 def test_discriminated_union(spark):
-    """Discriminator dispatch (reference dsl/union.go:17-52)."""
+    """Discriminator dispatch (reference dsl/union.go:17-52). A
+    list-variant rule's `when` gates it like a table-level rule's."""
     df = _df(spark, [("a", "card", "4111", None),
                      ("b", "bank", None, "DE123"),
                      ("c", "crypto", None, None),
                      ("d", None, None, None),
-                     ("e", "card", None, None)],
+                     ("e", "card", None, None),
+                     ("f", "bank", None, "GB99")],
              T.StructType([T.StructField("id", T.StringType()),
                            T.StructField("kind", T.StringType()),
                            T.StructField("card_no", T.StringType()),
@@ -138,18 +141,23 @@ def test_discriminated_union(spark):
         S.field("iban", "string"),
     ).discriminate("kind", {
         "card": [Refinement("card_requires_number", path="/card_no",
-                            violates=lambda: F.col("card_no").isNull(),
+                            violates="card_no IS NULL",
                             code="required")],
         "bank": [Refinement("bank_requires_iban", path="/iban",
-                            violates=lambda: F.col("iban").isNull(),
-                            code="required")],
+                            violates="iban IS NULL",
+                            code="required"),
+                 # fires on a non-DE iban, but only where `when` holds:
+                 # row f's GB iban is excluded by it
+                 Refinement("bank_iban_de", path="/iban",
+                            violates="NOT startswith(iban, 'DE')",
+                            when="id != 'f'", params={"got": "iban"})],
     })
     _, viols, _ = validate_rows(df, sch, F.col("id"))
     got = _codes(viols)
     assert ("c", "/kind", "discriminator_unknown") in got
     assert ("d", "/kind", "discriminator_missing") in got
     assert ("e", "/card_no", "required") in got
-    assert not any(r[0] in ("a", "b") for r in got)
+    assert not any(r[0] in ("a", "b", "f") for r in got)
 
 
 def test_default_applied_presence(spark):
@@ -194,8 +202,8 @@ def test_conditional_rule_combinators(spark):
         S.field("country", "string"),
         S.field("zip", "string"),
     ).refine("us_requires_zip",
-             violates=lambda: F.col("zip").isNull(),
-             when=lambda: F.col("country") == "US",
+             violates="zip IS NULL",
+             when="country = 'US'",
              path="/zip", code="business_rule")
     _, viols, _ = validate_rows(df, sch, F.col("id"))
     assert _codes(viols) == {("b", "/zip", "business_rule")}
@@ -329,11 +337,11 @@ def test_or_combinator_min_issue_branch(spark):
                      T.StructField("v", T.IntegerType()),
                      T.StructField("tag", T.StringType())]))
     branch_a = [Refinement(name="v_set", path="/v", code="required",
-                           violates=lambda: F.col("v").isNull())]
+                           violates="v IS NULL")]
     branch_b = [Refinement(name="tag_set", path="/tag", code="required",
-                           violates=lambda: F.col("tag").isNull()),
+                           violates="tag IS NULL"),
                 Refinement(name="tag_long", path="/tag", code="too_short",
-                           violates=lambda: F.coalesce(F.length("tag"), F.lit(0)) < 3)]
+                           violates="coalesce(length(tag), 0) < 3")]
     sch = S.table(S.field("id", "string", required=True),
                   S.field("v", "int32"), S.field("tag", "string"))
     sch.or_refine("v_or_tag", [branch_a, branch_b])
@@ -490,14 +498,14 @@ def test_list_map_null_elements_stay_clean(spark):
 
 def test_nested_refinements_fail_loudly(spark):
     """Refinements/Or-combinators live at TABLE level (their `violates`
-    closures build Columns by top-level name and cannot be rebound to a
-    struct or array element): a nested schema carrying one must raise,
-    not silently skip the rule."""
+    text names top-level columns and cannot be rebound to a struct or
+    array element): a nested schema carrying one must raise, not
+    silently skip the rule."""
     import pytest
     from goskema_spark.rowpass import compile_checks
 
     elem = S.table(S.field("a", "int64"))
-    elem.refine("a_pos", violates=lambda: F.col("a") < 0, path="/a")
+    elem.refine("a_pos", violates="a < 0", path="/a")
     sch = S.table(
         S.field("rid", "string", required=True),
         S.field("xs", S.array(elem_schema=elem)))
@@ -509,7 +517,7 @@ def test_nested_refinements_fail_loudly(spark):
     nested = S.table(S.field("a", "int64"))
     nested.or_refine("x", [[S.Refinement(
         name="a_set", path="/a", code="business_rule",
-        violates=lambda: F.col("a").isNull())]])
+        violates="a IS NULL")]])
     sch2 = S.table(S.field("rid", "string", required=True),
                    S.field("obj", nested))
     df2 = spark.createDataFrame([("r1", {"a": 1})],
@@ -523,14 +531,61 @@ def test_wide_array_gate_breaks_exactness():
     (gate may fire with an empty violations array) must flip it, or
     validate_rows' gate-only clean filter would drop violation-free
     rows."""
-    from pyspark.sql import functions as F2
-    from goskema_spark.rowpass import _VIOL_ARR_DDL, CompiledChecks
+    from goskema_spark.rowpass import _NO_VIOLS, CompiledChecks
 
     c = CompiledChecks()
-    c.add_array(F2.array().cast(_VIOL_ARR_DDL), gate=F2.lit(True), exact=True)
+    c.add_array(_NO_VIOLS, gate="true", exact=True)
     assert c.gate_is_exact()
-    c.add_array(F2.array().cast(_VIOL_ARR_DDL), gate=F2.lit(True), exact=False)
+    c.add_array(_NO_VIOLS, gate="true", exact=False)
     assert not c.gate_is_exact()
+
+
+def _non_sql_schema(kind):
+    """A schema with one rule input that is a Python callable, not SQL
+    text; returns (schema, the name the TypeError must carry)."""
+    sch = S.table(S.field("id", "string", required=True), S.field("a", "int32"),
+                  S.field("xs", S.array("int32", contains_min=1,
+                                        contains_pred=(lambda x: x < 0)
+                                        if kind == "contains_pred" else None)))
+    if kind == "violates":
+        sch.refine("a_neg", violates=lambda: F.col("a") < 0, path="/a")
+    elif kind == "when":
+        sch.refine("a_neg", violates="a < 0", when=lambda: F.col("a").isNotNull(),
+                   path="/a")
+    elif kind == "params":
+        sch.refine("a_neg", violates="a < 0", params={"got": F.col("a")}, path="/a")
+    return sch, ("'/xs'" if kind == "contains_pred" else "'a_neg'")
+
+
+@pytest.mark.parametrize("kind", ["violates", "when", "params", "contains_pred"])
+def test_non_sql_rule_input_raises_type_error(spark, kind):
+    """A refinement's violates, when or a params value, or an array's
+    contains_pred, given as anything but SQL text is a TypeError that
+    names the rule or field, raised while the checks compile: not a
+    Spark parse error on `<function ...>`."""
+    df = spark.createDataFrame([("r1", 1, [1])], "id string, a int, xs array<int>")
+    sch, name = _non_sql_schema(kind)
+    with pytest.raises(TypeError, match=name) as err:
+        validate_rows(df, sch, F.col("id"))
+    assert "SQL text" in str(err.value)
+
+
+def test_schema_pickles_after_validation(spark):
+    """The compiled-checks memo holds SQL text and bools only: a schema
+    that validated once cloudpickles (as ingest's closures ship it to
+    executors) and still validates after the round trip."""
+    from pyspark import cloudpickle
+
+    df = _df(spark, [("a", 5), ("b", -1)], "id string, v int")
+    sch = S.table(S.field("id", "string", required=True),
+                  S.field("v", "int32", min=0))
+    sch.refine("v_small", violates="v > 3", path="/v", params={"got": "v"})
+    want = _codes(validate_rows(df, sch, F.col("id"))[1])
+    assert sch._compiled_cache
+    back = cloudpickle.loads(cloudpickle.dumps(sch))
+    assert back._compiled_cache == sch._compiled_cache
+    assert _codes(validate_rows(df, back, F.col("id"))[1]) == want \
+        == {("a", "/v", "business_rule"), ("b", "/v", "too_small")}
 
 
 def test_incremental_distinct_sketches_merge_exactly(spark):
