@@ -30,11 +30,30 @@ Protocol:
     (pushed down to the reader), validates only the remainder, and
     appends their ledger rows. The final ledger is identical to an
     uninterrupted run (idempotence test in tests/test_ledger.py).
+  - uniqueness store: uniqueness is a property of the whole input, so
+    the run's uniqueness violation rows (every unique key, the partition
+    column carried) are computed ONCE over all of it and stored at
+    <ledger_path>/_uniqueness/<urllib.parse.quote(run_id, safe='')>/
+    (overwrite). Every invocation filters them to its own partitions;
+    only the one that writes the store runs the uniqueness aggregate.
+    Spark's file index and pyarrow's dataset readers skip `_`-prefixed
+    names without `=`, so read_ledger, completed_partitions and a plain
+    parquet read of ledger_path never see it.
+  - invariant: a run's ledger rows are written only after its store has
+    committed. So the store is read back exactly when the run already
+    has ledger rows, with the schema uniqueness_rows writes (no
+    inference job, and no uniqueness plan is built); otherwise — a first invocation, a crash between the
+    store write and the first ledger row, a stale store of a run without
+    ledger rows — it is computed and overwritten. A ledger written
+    before the store existed has ledger rows but no store: the read
+    fails and the store is computed then.
   - precondition: a run_id is resumed over the same input and the same
     schema. The ledger counts of an invocation are read from the sink
     partitions it rewrites; dynamic overwrite replaces only partitions
     that have violations now, so a partition whose rows changed to clean
     between a crash and its resume would still count its stale rows.
+    The uniqueness store is never recomputed once the run has ledger
+    rows, so its rows are those of the input the run started on.
   - jobs of one invocation, in order, each labelled
     "ledger <run_id>: <phase>" or "validate: <phase>" via
     setJobDescription (the caller's description is restored; the job
@@ -45,15 +64,24 @@ Protocol:
          distinct() shuffle);
       2. emptiness probe — take(1) of the remaining rows (with
          fail_partition_limit: a distinct collect of their partitions);
-      3. validate's referential domain probe, once per dimension frame
+         when nothing remains the invocation stops here, writing nothing;
+      3. uniqueness store — only when the run has no ledger rows yet
+         (or its store is missing): runner.uniqueness_rows over all of
+         the input written to the store, one job per adaptive query
+         stage (the dup-key aggregate, its broadcast, the first-ordinal
+         aggregate, its broadcast, the write). Skipped without unique
+         keys;
+      4. validate's referential domain probe, once per dimension frame
          (runner module docstring). validate() itself stays lazy: no
-         report is materialized;
-      4. violations sink — runner.write_violations (the one violation
+         report is materialized, and it takes the store's read-back
+         as its uniqueness rows;
+      5. violations sink — runner.write_violations (the one violation
          writer; validate(report_path=) writes the same columns, flat)
          writes the lazy violation plan straight into violations_path,
          with run_id as the leading partition and dynamic overwrite, one
-         job per adaptive query stage;
-      5. ledger write — runner.aggregate_verdicts, the one verdict
+         job per adaptive query stage; the uniqueness branch is a scan
+         of the store, so the sink runs no uniqueness aggregate;
+      6. ledger write — runner.aggregate_verdicts, the one verdict
          aggregate, over this invocation's sink partitions (the writer's
          read-back, pruned to run_id and part_key) and the input's
          partition column (the row counts) yields rows, violations and
@@ -68,14 +96,15 @@ Protocol:
 from __future__ import annotations
 
 from typing import Optional
+from urllib.parse import quote
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, types as T
 
-from goskema_spark.issues import pointer
+from goskema_spark.issues import VIOLATION_SCHEMA, pointer
 from goskema_spark.runner import (
-    ValidationResult, aggregate_verdicts, job_description, part_key_sql, validate,
-    write_violations)
+    ValidationResult, aggregate_verdicts, job_description, part_key_sql,
+    uniqueness_rows, validate, write_violations)
 from goskema_spark.sqltext import chain, ident, in_list, string
 
 LEDGER_SCHEMA = T.StructType([
@@ -121,6 +150,32 @@ def completed_partitions(spark: SparkSession, ledger_path: str, run_id: str):
     return vals, null_done
 
 
+def _uniqueness_store(spark: SparkSession, df: DataFrame, schema, row_id, run_id: str,
+                      ledger_path: str, partition_col: str,
+                      stored: bool) -> Optional[DataFrame]:
+    """The run's uniqueness violation rows over all of `df`, read from
+    its store (module docstring). `stored`: the run has ledger rows, so
+    its store has committed; otherwise the store is (re)written first.
+    None without unique keys: no store."""
+    if not schema.unique_keys:
+        return None
+    path = f"{ledger_path}/_uniqueness/{quote(run_id, safe='')}"
+    # the schema uniqueness_rows writes (violation_rows: the violation
+    # columns, then the carried partition column), known without
+    # building its plan (~0.1 s of driver analysis) and read without an
+    # inference job
+    cols = T.StructType(VIOLATION_SCHEMA.fields + [df.schema[partition_col]])
+    if stored:
+        try:
+            return spark.read.schema(cols).parquet(path)
+        except AnalysisException:
+            pass  # a ledger written before the store existed: compute it
+    with job_description(spark, f"ledger {run_id}: uniqueness store"):
+        uniqueness_rows(df, schema, row_id, carry=[partition_col]) \
+            .write.mode("overwrite").parquet(path)
+    return spark.read.schema(cols).parquet(path)
+
+
 def run_with_ledger(
     spark: SparkSession,
     df: DataFrame,
@@ -140,6 +195,9 @@ def run_with_ledger(
     Returns the ValidationResult for the partitions processed in THIS
     invocation (None if everything was already complete).
     """
+    if not run_id:
+        # the store of run "" would be the directory of every run's store
+        raise ValueError("run_id must be a non-empty string")
     with job_description(spark, f"ledger {run_id}: completed partitions"):
         done, null_done = completed_partitions(spark, ledger_path, run_id)
     # the partitions this invocation validates, as a predicate on the
@@ -184,10 +242,13 @@ def run_with_ledger(
     now = _dt.datetime.now(_dt.timezone.utc)
     epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
     started = f"timestamp_micros({(now - epoch) // _dt.timedelta(microseconds=1)}L)"
-    # uniqueness runs over all of df (a global property); every other
-    # check, and the row counts, over the `todo` partitions only
+    # uniqueness comes from all of df (a global property), computed once
+    # per run; every other check, and the row counts, run over the
+    # `todo` partitions only
+    uniq = _uniqueness_store(spark, df, schema, row_id, run_id, ledger_path,
+                             partition_col, stored=bool(done) or null_done)
     res = validate(df, schema, row_id, dims=dims, partition_col=partition_col,
-                   partitions=todo)
+                   partitions=todo, uniqueness=uniq)
 
     viols = res.violations
     if violations_path:

@@ -47,9 +47,13 @@ jobs (see its module docstring).
 
 Resume scoping (`partitions=`): a predicate on the partition column.
 Row checks, referential checks and row counts run on the filtered rows;
-uniqueness runs over the whole input (a global property) and only its
-violation rows are filtered, by the same predicate on the carried
-partition column — no join against the partition set.
+uniqueness is a property of the whole input, so its violation rows come
+from all of it and only they are filtered, by the same predicate on the
+carried partition column — no join against the partition set. By
+default validate() builds them (`uniqueness_rows`, the aggregate over
+the whole input); `uniqueness=` hands it rows already computed over the
+whole input instead — the ledger passes the run's stored rows, so a
+resumed invocation runs no uniqueness aggregate.
 
 Per-partition verdicts use the *logical* partition (the `source` value by
 default) rather than spark_partition_id(): physical partition ids are not
@@ -133,6 +137,7 @@ def validate(
     report_path: Optional[str] = None,
     report_partitions: int = 0,
     partitions: Union[str, Column, None] = None,
+    uniqueness: Optional[DataFrame] = None,
 ) -> ValidationResult:
     """Run the full check set declared on `schema` against `df`.
 
@@ -147,9 +152,15 @@ def validate(
     a GLOBAL property, so it still runs over all of `df` — duplicate
     detection and first/dup attribution stay identical to an
     uninterrupted run; the aggregate reads only (key, ordinal, partition)
-    via column pruning, so the extra scan is cheap — and its violation
-    rows are then filtered by the same predicate on the carried
-    partition column.
+    via column pruning — and its violation rows are then filtered by the
+    same predicate on the carried partition column.
+
+    uniqueness: the uniqueness violation rows of ALL of `df`, as
+    `uniqueness_rows` builds them (the partition column carried), to use
+    in place of building them here; they are filtered by `partitions`
+    like the built ones. None builds them. The caller vouches that they
+    belong to this `df` and `schema` (the ledger reads back the rows it
+    stored for the run).
     """
     dims = dims or {}
 
@@ -168,13 +179,12 @@ def validate(
     # aggregate checks read the PLAIN input, not the row-pass feed — they
     # never touch _violations, and keeping the giant check expression out
     # of their subtrees cuts driver-side analysis cost ~3x per run
-    for uk in schema.unique_keys:
-        ordinal = uk.ordinal or uk.column
-        uv = uniqueness_violations(full, uk.column, ordinal, row_id, carry=carry,
-                                   broadcast=uk.broadcast)
+    if uniqueness is None:
+        uniqueness = uniqueness_rows(full, schema, row_id, carry)
+    if uniqueness is not None:
         if partitions is not None:
-            uv = uv.filter(partitions)
-        violations = violations.unionByName(uv)
+            uniqueness = uniqueness.filter(partitions)
+        violations = violations.unionByName(uniqueness)
     for fk in schema.foreign_keys:
         dim = dims.get(fk.dim_name)
         if dim is None:
@@ -192,6 +202,19 @@ def validate(
                                           tasks=report_partitions)
     return ValidationResult(
         violations, clean, lambda: aggregate_verdicts(violations, df, partition_col))
+
+
+def uniqueness_rows(df: DataFrame, schema: TableSchema, row_id: Column,
+                    carry=()) -> Optional[DataFrame]:
+    """The violation rows of every unique key declared on `schema`, over
+    all of `df` (`carry` columns attached), unioned; None without unique
+    keys."""
+    rows = None
+    for uk in schema.unique_keys:
+        uv = uniqueness_violations(df, uk.column, uk.ordinal or uk.column, row_id,
+                                   carry=carry, broadcast=uk.broadcast)
+        rows = uv if rows is None else rows.unionByName(uv)
+    return rows
 
 
 def write_violations(viols: DataFrame, path: str, partition_col: str,

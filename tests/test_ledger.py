@@ -7,6 +7,7 @@ import os
 import re
 import shutil
 import tempfile
+from urllib.parse import quote
 
 import pyarrow.parquet as pq
 import pytest
@@ -14,8 +15,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
 from goskema_spark.corpus import corpus_from_documents, corpus_schema, dim_source_df, row_id_col
-from goskema_spark.ledger import read_ledger, run_with_ledger
-from goskema_spark.runner import validate
+from goskema_spark.ledger import (
+    LEDGER_SCHEMA, completed_partitions, read_ledger, run_with_ledger)
+from goskema_spark.runner import uniqueness_rows, validate
 
 SF = "/root/testdata/sf0.001"
 
@@ -29,33 +31,56 @@ def _ledger_key(rows):
     )
 
 
+def _sink_key(spark, path, run_id):
+    """One run's sink violation rows (rule, path, params, row_id, source),
+    comparable."""
+    return sorted(repr((r["rule"], r["path"], r["params"], r["row_id"], r["source"]))
+                  for r in spark.read.parquet(path).where(F.col("run_id") == run_id)
+                  .select("rule", "path", "params", "row_id", "source").collect())
+
+
+def _resume_vs_uninterrupted(spark, corpus, dims, tmp, limit):
+    """An uninterrupted run ("full") and a run interrupted after `limit`
+    partitions then resumed ("r1"), each with a sink, checked equal ->
+    (the uninterrupted ledger's key, the interrupted run's ledger rows,
+    the resumed invocation's result)."""
+    run_with_ledger(spark, corpus, corpus_schema(), row_id_col(), run_id="full",
+                    ledger_path=f"{tmp}/led_full", violations_path=f"{tmp}/v_full",
+                    dims=dims)
+    full = _ledger_key(read_ledger(spark, f"{tmp}/led_full", "full").collect())
+    assert len(full) > 0
+    # interrupted run: only `limit` partitions complete, then "crash"
+    run_with_ledger(spark, corpus, corpus_schema(), row_id_col(), run_id="r1",
+                    ledger_path=f"{tmp}/led", violations_path=f"{tmp}/v", dims=dims,
+                    fail_partition_limit=limit)
+    partial = read_ledger(spark, f"{tmp}/led", "r1").collect()
+    assert len(partial) == limit
+    # resume: same run_id — completed partitions must be skipped
+    res = run_with_ledger(spark, corpus, corpus_schema(), row_id_col(), run_id="r1",
+                          ledger_path=f"{tmp}/led", violations_path=f"{tmp}/v", dims=dims)
+    assert _ledger_key(read_ledger(spark, f"{tmp}/led", "r1").collect()) == full
+    # the sink rows too: the resumed invocation's uniqueness rows come
+    # from the run's store, not from the input
+    assert _sink_key(spark, f"{tmp}/v", "r1") == _sink_key(spark, f"{tmp}/v_full", "full")
+    return full, partial, res
+
+
 def test_resume_matches_uninterrupted(spark):
     corpus = corpus_from_documents(spark, SF)
     dims = {"dim_source": dim_source_df(spark)}
     tmp = tempfile.mkdtemp()
     try:
-        # uninterrupted reference run
-        run_with_ledger(spark, corpus, corpus_schema(), row_id_col(),
-                        run_id="full", ledger_path=f"{tmp}/led_full", dims=dims)
-        full = _ledger_key(read_ledger(spark, f"{tmp}/led_full", "full").collect())
-        assert len(full) > 0
-
-        # interrupted run: only 5 partitions complete, then "crash"
-        run_with_ledger(spark, corpus, corpus_schema(), row_id_col(),
-                        run_id="r1", ledger_path=f"{tmp}/led", dims=dims,
-                        fail_partition_limit=5)
-        partial = read_ledger(spark, f"{tmp}/led", "r1").collect()
-        assert len(partial) == 5
-
-        # resume: same run_id — completed partitions must be skipped
-        res = run_with_ledger(spark, corpus, corpus_schema(), row_id_col(),
-                              run_id="r1", ledger_path=f"{tmp}/led", dims=dims)
+        # 14 partitions complete before the crash: in sorted order src2,
+        # which holds the DUP key's first occurrence, is the 14th, and
+        # src5 and src8, which hold two of its duplicates, are not done
+        full, partial, res = _resume_vs_uninterrupted(spark, corpus, dims, tmp, 14)
         done_sources = {r["source"] for r in partial}
+        assert "src2" in done_sources and not {"src5", "src8"} & done_sources
         resumed_sources = {r["source"] for r in res.verdicts.collect()}
         assert not (done_sources & resumed_sources)
-
-        final = _ledger_key(read_ledger(spark, f"{tmp}/led", "r1").collect())
-        assert final == full
+        firsts = {r["params"]["first"] for r in res.violations.collect()
+                  if r["rule"] == "unique_by" and r["params"]["key"] == "DUP"}
+        assert firsts == {"2"}, firsts
         # the ledger and validate(report_path=) share one verdict aggregate
         rp = validate(corpus, corpus_schema(), row_id_col(), dims=dims,
                       report_path=f"{tmp}/report")
@@ -66,6 +91,20 @@ def test_resume_matches_uninterrupted(spark):
         assert run_with_ledger(spark, corpus, corpus_schema(), row_id_col(),
                                run_id="r1", ledger_path=f"{tmp}/led", dims=dims) is None
         assert _ledger_key(read_ledger(spark, f"{tmp}/led", "r1").collect()) == full
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_resume_matches_uninterrupted_all_duplicates(spark):
+    """Every doc_id is one key: the run's uniqueness store holds every
+    row but the first, and a resume still matches an uninterrupted run."""
+    corpus = corpus_from_documents(spark, SF).withColumn("doc_id", F.lit("same"))
+    dims = {"dim_source": dim_source_df(spark)}
+    tmp = tempfile.mkdtemp()
+    try:
+        _resume_vs_uninterrupted(spark, corpus, dims, tmp, 5)
+        store = spark.read.parquet(f"{tmp}/led/_uniqueness/r1")
+        assert store.count() == corpus.count() - 1
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -222,18 +261,21 @@ def test_resumed_invocation_jobs_labels_and_ledger_plan(spark, monkeypatch):
 
     try:
         run("gsk_first", fail_partition_limit=5)
+        first_descs = _group_jobs(sc, "gsk_first")[1]
         # the dim's domain is probed once per dim (memoized), here
-        assert "validate: referential domain probe" in _group_jobs(sc, "gsk_first")[1]
+        assert "validate: referential domain probe" in first_descs
+        # the first invocation computes the run's uniqueness rows and
+        # stores them next to the ledger
+        assert "ledger j: uniqueness store" in first_descs, first_descs
 
         monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
         run("gsk_resume")
         n_jobs, descs = _group_jobs(sc, "gsk_resume")
         # completed partitions 2 (ledger schema, collect), emptiness probe
-        # 1, violations sink 6 (one per adaptive stage), ledger write 2.
-        # It was 13 before: a scratch report was written, then read back
-        # for the sink, and its job also ran a row-count aggregate plus a
-        # broadcast of it to scope the uniqueness rows.
-        assert n_jobs == 11, n_jobs
+        # 1, violations sink 2 (one per adaptive stage), ledger write 2.
+        # The sink reads the run's uniqueness store, written once by the
+        # first invocation, instead of aggregating the whole input.
+        assert n_jobs == 7, n_jobs
         assert descs == {
             "ledger j: completed partitions", "ledger j: emptiness probe",
             "ledger j: violations sink", "ledger j: ledger write"}, descs
@@ -242,6 +284,7 @@ def test_resumed_invocation_jobs_labels_and_ledger_plan(spark, monkeypatch):
         sink_plan = sink_df._jdf.queryExecution().optimizedPlan().toString()
         assert sink_plan.startswith("RebalancePartitions [part_key"), sink_plan
         assert "LeftSemi" not in sink_plan, sink_plan
+        assert "Aggregate" not in sink_plan, sink_plan
 
         ledger_df = next(df for p, df in writes if p == f"{tmp}/led")
         qe = ledger_df._jdf.queryExecution()
@@ -265,6 +308,64 @@ def test_resumed_invocation_jobs_labels_and_ledger_plan(spark, monkeypatch):
         assert listed.group(1).split(",") == done[:5], (listed.group(1), done)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+@pytest.mark.parametrize("case", ["legacy_ledger", "stale_store", "awkward_run_id",
+                                  "no_unique_keys", "readers_skip_store"])
+def test_uniqueness_store_protocol(spark, tmp_path, case):
+    """The run's uniqueness rows are stored under
+    <ledger>/_uniqueness/<quoted run_id> by the invocation that finds no
+    ledger rows for the run, and read back by every later one. In every
+    case an interrupted and resumed run ends with the uninterrupted
+    run's ledger."""
+    corpus = corpus_from_documents(spark, SF)
+    dims = {"dim_source": dim_source_df(spark)}
+    schema = corpus_schema()
+    if case == "no_unique_keys":
+        schema.unique_keys = []
+    run_id = "a/b=c%d e" if case == "awkward_run_id" else "s"
+    led = str(tmp_path / "led")
+    stores = tmp_path / "led" / "_uniqueness"
+    store = stores / quote(run_id, safe="")
+
+    def run(rid, path, **kw):
+        return run_with_ledger(spark, corpus, schema, row_id_col(), run_id=rid,
+                               ledger_path=path, dims=dims, **kw)
+
+    run("full", str(tmp_path / "led_full"))
+    full = _ledger_key(read_ledger(spark, str(tmp_path / "led_full"), "full").collect())
+
+    if case == "stale_store":
+        # a store left by a run that never wrote a ledger row: its bogus
+        # row would fail src3's uniqueness check if it were read
+        bogus = ("bogus", "/doc_id", "uniqueness", "duplicate value", "unique_by",
+                 {"first": "0", "dup": "1", "key": "bogus"}, "src3")
+        uniq = uniqueness_rows(corpus, schema, row_id_col(), carry=["source"])
+        spark.createDataFrame([bogus], uniq.schema).write.parquet(str(store))
+    run(run_id, led, fail_partition_limit=5)
+    if case == "no_unique_keys":
+        assert not stores.exists()
+    else:
+        assert store.is_dir(), sorted(os.listdir(led))
+        assert spark.read.parquet(str(store)).where("row_id = 'bogus'").count() == 0
+    if case == "legacy_ledger":
+        # a ledger written before the store existed: the resume computes it
+        shutil.rmtree(stores)
+    if case == "readers_skip_store":
+        assert len(read_ledger(spark, led, run_id).collect()) == 5
+        assert len(completed_partitions(spark, led, run_id)[0]) == 5
+        table = pq.read_table(led)
+        assert table.num_rows == 5 and table.column_names == LEDGER_SCHEMA.names
+
+    run(run_id, led)
+    assert _ledger_key(read_ledger(spark, led, run_id).collect()) == full
+    assert {r["run_id"] for r in spark.read.parquet(led).collect()} == {run_id}
+    if case == "legacy_ledger":
+        assert store.is_dir()
+    if case == "awkward_run_id":
+        # the store of run "" would be the directory of every run's store
+        with pytest.raises(ValueError):
+            run("", led)
 
 
 def test_validate_partitions_scopes_rows_not_uniqueness(spark):

@@ -11,16 +11,19 @@ file: the final (adaptive) plan of the report write (the single write
 job), the violations read-back, and the verdicts aggregate over the
 read-back and the input's partition column. ledger_rows runs
 run_with_ledger interrupted after half the sources, then resumed, and
-dumps the final (adaptive) plans of the resumed invocation's violations
-sink write (uniqueness over the full table, its rows filtered to the
-resumed partitions) and ledger write.
+dumps the final (adaptive) plans of the first invocation's uniqueness
+store write (uniqueness over the full table), and of the resumed
+invocation's violations sink write (the store read back, its rows
+filtered to the resumed partitions) and ledger write.
 
 Any other name resolves through __spark_entry__.queries() and runs at
 GSK_EXTRA_SF (default: bench.py's SF_DIR).
 
 Expression ids (`#123`), exchange plan ids (`plan_id=45`) and
 lambda-variable suffixes (`x_12`) are renumbered in first-seen order in
-every file written, so a diff of two runs of the same plan is empty.
+every file written, and ledger_rows' temporary directory and ledger
+timestamps read `<tmp>` and `<time>`, so a diff of two runs of the same
+plan is empty.
 
 Run the same command in a checkout of the older commit to produce the
 'before' plans (copy this file there for shapes it lacks), then diff
@@ -84,8 +87,10 @@ def final_write_plan(spark, path: str) -> str:
 
 
 def ledger_plans(spark, load, dims) -> str:
-    """Final plans of the resumed run_with_ledger invocation's violations
-    sink write and ledger write."""
+    """Final plans of the first run_with_ledger invocation's uniqueness
+    store write, and of the resumed invocation's violations sink write
+    and ledger write; the temporary directory reads `<tmp>`, the ledger
+    rows' timestamps `<time>`."""
     from goskema_spark.corpus import corpus_schema, row_id_col
     from goskema_spark.ledger import run_with_ledger
 
@@ -97,12 +102,16 @@ def ledger_plans(spark, load, dims) -> str:
             run_with_ledger(spark, load(), corpus_schema(), row_id_col(),
                             run_id="plans", ledger_path=f"{tmp}/ledger",
                             violations_path=f"{tmp}/violations", dims=dims, **kw)
-        return "\n".join([
+        text = "\n".join([
+            "==== uniqueness store write (first invocation, final plan) ====",
+            final_write_plan(spark, f"{tmp}/ledger/_uniqueness/plans"),
             "==== violations sink write (resumed invocation, final plan) ====",
             final_write_plan(spark, f"{tmp}/violations"),
             "==== ledger write (resumed invocation, final plan) ====",
             final_write_plan(spark, f"{tmp}/ledger"),
-        ])
+        ]).replace(tmp, "<tmp>")
+        # the ledger rows' driver-side start and end times
+        return re.sub(r"[\d-]+ [\d:.]+ AS (started_at|finished_at)", r"<time> AS \1", text)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
