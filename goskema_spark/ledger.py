@@ -33,27 +33,32 @@ Protocol:
   - uniqueness store: uniqueness is a property of the whole input, so
     the run's uniqueness violation rows (every unique key, the partition
     column carried) are computed ONCE over all of it and stored at
-    <ledger_path>/_uniqueness/<urllib.parse.quote(run_id, safe='')>/
-    (overwrite). Every invocation filters them to its own partitions;
-    only the one that writes the store runs the uniqueness aggregate.
-    Spark's file index and pyarrow's dataset readers skip `_`-prefixed
-    names without `=`, so read_ledger, completed_partitions and a plain
-    parquet read of ledger_path never see it.
+    <ledger_path>/_uniqueness/run_<urllib.parse.quote(run_id, safe='')>/
+    (overwrite). The `run_` prefix keeps "", "." and ".." children of
+    `_uniqueness`: a bare ".." would name the ledger directory itself,
+    and the overwrite would delete every run's ledger rows. Every
+    invocation filters the rows to its own partitions; only the one that
+    writes the store runs the uniqueness aggregate. Spark's file index
+    and pyarrow's dataset readers skip `_`-prefixed names without `=`,
+    so read_ledger, completed_partitions and a plain parquet read of
+    ledger_path never see it.
   - invariant: a run's ledger rows are written only after its store has
-    committed. So the store is read back exactly when the run already
-    has ledger rows, with the schema uniqueness_rows writes (no
-    inference job, and no uniqueness plan is built); otherwise — a first invocation, a crash between the
-    store write and the first ledger row, a stale store of a run without
-    ledger rows — it is computed and overwritten. A ledger written
-    before the store existed has ledger rows but no store: the read
-    fails and the store is computed then.
+    committed. So the store is read back when the run already has
+    ledger rows and the store holds its `_SUCCESS` marker, with the
+    schema uniqueness_rows writes (runner.uniqueness_schema: no
+    inference job, and no uniqueness plan is built); otherwise it is
+    computed and overwritten. That covers a first invocation, a crash
+    between the store write and the first ledger row, a stale store of
+    a run without ledger rows, and a ledger written before the store
+    existed — ledger rows without a store, or, after a crash inside that
+    first store write, with an uncommitted one (`_temporary/` only).
   - precondition: a run_id is resumed over the same input and the same
     schema. The ledger counts of an invocation are read from the sink
     partitions it rewrites; dynamic overwrite replaces only partitions
     that have violations now, so a partition whose rows changed to clean
     between a crash and its resume would still count its stale rows.
-    The uniqueness store is never recomputed once the run has ledger
-    rows, so its rows are those of the input the run started on.
+    A committed uniqueness store is never recomputed once the run has
+    ledger rows, so its rows are those of the input the run started on.
   - jobs of one invocation, in order, each labelled
     "ledger <run_id>: <phase>" or "validate: <phase>" via
     setJobDescription (the caller's description is restored; the job
@@ -66,7 +71,7 @@ Protocol:
          fail_partition_limit: a distinct collect of their partitions);
          when nothing remains the invocation stops here, writing nothing;
       3. uniqueness store — only when the run has no ledger rows yet
-         (or its store is missing): runner.uniqueness_rows over all of
+         (or no committed store): runner.uniqueness_rows over all of
          the input written to the store, one job per adaptive query
          stage (the dup-key aggregate, its broadcast, the first-ordinal
          aggregate, its broadcast, the write). Skipped without unique
@@ -101,10 +106,10 @@ from urllib.parse import quote
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, types as T
 
-from goskema_spark.issues import VIOLATION_SCHEMA, pointer
+from goskema_spark.issues import pointer
 from goskema_spark.runner import (
     ValidationResult, aggregate_verdicts, job_description, part_key_sql,
-    uniqueness_rows, validate, write_violations)
+    uniqueness_rows, uniqueness_schema, validate, write_violations)
 from goskema_spark.sqltext import chain, ident, in_list, string
 
 LEDGER_SCHEMA = T.StructType([
@@ -155,21 +160,23 @@ def _uniqueness_store(spark: SparkSession, df: DataFrame, schema, row_id, run_id
                       stored: bool) -> Optional[DataFrame]:
     """The run's uniqueness violation rows over all of `df`, read from
     its store (module docstring). `stored`: the run has ledger rows, so
-    its store has committed; otherwise the store is (re)written first.
-    None without unique keys: no store."""
+    its store has committed — unless `_SUCCESS` is missing (a ledger
+    written before the store existed, or a crash inside its first store
+    write); otherwise the store is (re)written first. None without
+    unique keys: no store."""
     if not schema.unique_keys:
         return None
-    path = f"{ledger_path}/_uniqueness/{quote(run_id, safe='')}"
-    # the schema uniqueness_rows writes (violation_rows: the violation
-    # columns, then the carried partition column), known without
-    # building its plan (~0.1 s of driver analysis) and read without an
-    # inference job
-    cols = T.StructType(VIOLATION_SCHEMA.fields + [df.schema[partition_col]])
+    # the fixed prefix keeps every run_id ("", ".", "..") a child of
+    # _uniqueness, never _uniqueness itself or the ledger directory
+    path = f"{ledger_path}/_uniqueness/run_{quote(run_id, safe='')}"
+    # read back with the schema it is written with: no inference job
+    cols = uniqueness_schema(df, row_id, carry=[partition_col])
     if stored:
         try:
+            spark.read.text(f"{path}/_SUCCESS")  # existence probe, no job
             return spark.read.schema(cols).parquet(path)
         except AnalysisException:
-            pass  # a ledger written before the store existed: compute it
+            pass  # no committed store: compute it
     with job_description(spark, f"ledger {run_id}: uniqueness store"):
         uniqueness_rows(df, schema, row_id, carry=[partition_col]) \
             .write.mode("overwrite").parquet(path)
@@ -196,7 +203,8 @@ def run_with_ledger(
     invocation (None if everything was already complete).
     """
     if not run_id:
-        # the store of run "" would be the directory of every run's store
+        # a sink partition value "" reads back as NULL (Hive's default
+        # partition), so the run's sink read-back would be empty
         raise ValueError("run_id must be a non-empty string")
     with job_description(spark, f"ledger {run_id}: completed partitions"):
         done, null_done = completed_partitions(spark, ledger_path, run_id)

@@ -70,8 +70,9 @@ from __future__ import annotations
 from contextlib import contextmanager
 from typing import Optional, Union
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
+from goskema_spark.issues import VIOLATION_SCHEMA
 from goskema_spark.referential import referential_violations
 from goskema_spark.rowpass import validate_rows
 from goskema_spark.schema import TableSchema
@@ -215,6 +216,16 @@ def uniqueness_rows(df: DataFrame, schema: TableSchema, row_id: Column,
                                    carry=carry, broadcast=uk.broadcast)
         rows = uv if rows is None else rows.unionByName(uv)
     return rows
+
+
+def uniqueness_schema(df: DataFrame, row_id: Column, carry=()) -> T.StructType:
+    """The columns of `uniqueness_rows(df, ..., row_id, carry)` — the
+    layout of rowpass.violation_rows: row_id with its own type, the
+    other violation columns, then `carry` — from a one-column projection
+    of `df`, without building the uniqueness plan (~0.1 s of driver
+    analysis)."""
+    return T.StructType([df.select(row_id.alias("row_id")).schema["row_id"],
+                         *VIOLATION_SCHEMA.fields[1:], *(df.schema[c] for c in carry)])
 
 
 def write_violations(viols: DataFrame, path: str, partition_col: str,

@@ -11,13 +11,13 @@ from urllib.parse import quote
 
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 from pyspark.sql.readwriter import DataFrameWriter
 
 from goskema_spark.corpus import corpus_from_documents, corpus_schema, dim_source_df, row_id_col
 from goskema_spark.ledger import (
     LEDGER_SCHEMA, completed_partitions, read_ledger, run_with_ledger)
-from goskema_spark.runner import uniqueness_rows, validate
+from goskema_spark.runner import uniqueness_rows, uniqueness_schema, validate
 
 SF = "/root/testdata/sf0.001"
 
@@ -39,24 +39,25 @@ def _sink_key(spark, path, run_id):
                   .select("rule", "path", "params", "row_id", "source").collect())
 
 
-def _resume_vs_uninterrupted(spark, corpus, dims, tmp, limit):
+def _resume_vs_uninterrupted(spark, corpus, dims, tmp, limit, row_id=None):
     """An uninterrupted run ("full") and a run interrupted after `limit`
     partitions then resumed ("r1"), each with a sink, checked equal ->
     (the uninterrupted ledger's key, the interrupted run's ledger rows,
-    the resumed invocation's result)."""
-    run_with_ledger(spark, corpus, corpus_schema(), row_id_col(), run_id="full",
+    the resumed invocation's result). `row_id` defaults to row_id_col()."""
+    row_id = row_id_col() if row_id is None else row_id
+    run_with_ledger(spark, corpus, corpus_schema(), row_id, run_id="full",
                     ledger_path=f"{tmp}/led_full", violations_path=f"{tmp}/v_full",
                     dims=dims)
     full = _ledger_key(read_ledger(spark, f"{tmp}/led_full", "full").collect())
     assert len(full) > 0
     # interrupted run: only `limit` partitions complete, then "crash"
-    run_with_ledger(spark, corpus, corpus_schema(), row_id_col(), run_id="r1",
+    run_with_ledger(spark, corpus, corpus_schema(), row_id, run_id="r1",
                     ledger_path=f"{tmp}/led", violations_path=f"{tmp}/v", dims=dims,
                     fail_partition_limit=limit)
     partial = read_ledger(spark, f"{tmp}/led", "r1").collect()
     assert len(partial) == limit
     # resume: same run_id — completed partitions must be skipped
-    res = run_with_ledger(spark, corpus, corpus_schema(), row_id_col(), run_id="r1",
+    res = run_with_ledger(spark, corpus, corpus_schema(), row_id, run_id="r1",
                           ledger_path=f"{tmp}/led", violations_path=f"{tmp}/v", dims=dims)
     assert _ledger_key(read_ledger(spark, f"{tmp}/led", "r1").collect()) == full
     # the sink rows too: the resumed invocation's uniqueness rows come
@@ -103,8 +104,27 @@ def test_resume_matches_uninterrupted_all_duplicates(spark):
     tmp = tempfile.mkdtemp()
     try:
         _resume_vs_uninterrupted(spark, corpus, dims, tmp, 5)
-        store = spark.read.parquet(f"{tmp}/led/_uniqueness/r1")
+        store = spark.read.parquet(f"{tmp}/led/_uniqueness/run_r1")
         assert store.count() == corpus.count() - 1
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_resume_matches_uninterrupted_bigint_row_id(spark):
+    """A non-string row_id keeps its type through the uniqueness store:
+    the store is read back with the schema uniqueness_rows writes."""
+    corpus = corpus_from_documents(spark, SF)
+    dims = {"dim_source": dim_source_df(spark)}
+    row_id = F.expr("_ord")
+    written = uniqueness_rows(corpus, corpus_schema(), row_id, carry=["source"]).schema
+    assert [(f.name, f.dataType) for f in uniqueness_schema(corpus, row_id, ["source"])] \
+        == [(f.name, f.dataType) for f in written]
+    assert written["row_id"].dataType == T.LongType()
+    tmp = tempfile.mkdtemp()
+    try:
+        _resume_vs_uninterrupted(spark, corpus, dims, tmp, 5, row_id=row_id)
+        store = spark.read.parquet(f"{tmp}/led/_uniqueness/run_r1")
+        assert store.schema["row_id"].dataType == T.LongType()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -310,30 +330,32 @@ def test_resumed_invocation_jobs_labels_and_ledger_plan(spark, monkeypatch):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-@pytest.mark.parametrize("case", ["legacy_ledger", "stale_store", "awkward_run_id",
-                                  "no_unique_keys", "readers_skip_store"])
-def test_uniqueness_store_protocol(spark, tmp_path, case):
+@pytest.mark.parametrize("case,run_id", [
+    ("legacy_ledger", "s"), ("uncommitted_store", "s"), ("stale_store", "s"),
+    ("awkward_run_id", "a/b=c%d e"), ("awkward_run_id", "."), ("awkward_run_id", ".."),
+    ("no_unique_keys", "s"), ("readers_skip_store", "s")])
+def test_uniqueness_store_protocol(spark, tmp_path, case, run_id):
     """The run's uniqueness rows are stored under
-    <ledger>/_uniqueness/<quoted run_id> by the invocation that finds no
-    ledger rows for the run, and read back by every later one. In every
-    case an interrupted and resumed run ends with the uninterrupted
-    run's ledger."""
+    <ledger>/_uniqueness/run_<quoted run_id> by the invocation that
+    finds no ledger rows (or no committed store) for the run, and read
+    back by every later one. In every case an interrupted and resumed
+    run ends with the uninterrupted run's ledger, and the uninterrupted
+    run's own rows and store, in the same ledger, survive."""
     corpus = corpus_from_documents(spark, SF)
     dims = {"dim_source": dim_source_df(spark)}
     schema = corpus_schema()
     if case == "no_unique_keys":
         schema.unique_keys = []
-    run_id = "a/b=c%d e" if case == "awkward_run_id" else "s"
     led = str(tmp_path / "led")
     stores = tmp_path / "led" / "_uniqueness"
-    store = stores / quote(run_id, safe="")
+    store = stores / f"run_{quote(run_id, safe='')}"
 
-    def run(rid, path, **kw):
+    def run(rid, **kw):
         return run_with_ledger(spark, corpus, schema, row_id_col(), run_id=rid,
-                               ledger_path=path, dims=dims, **kw)
+                               ledger_path=led, dims=dims, **kw)
 
-    run("full", str(tmp_path / "led_full"))
-    full = _ledger_key(read_ledger(spark, str(tmp_path / "led_full"), "full").collect())
+    run("full")
+    full = _ledger_key(read_ledger(spark, led, "full").collect())
 
     if case == "stale_store":
         # a store left by a run that never wrote a ledger row: its bogus
@@ -342,30 +364,37 @@ def test_uniqueness_store_protocol(spark, tmp_path, case):
                  {"first": "0", "dup": "1", "key": "bogus"}, "src3")
         uniq = uniqueness_rows(corpus, schema, row_id_col(), carry=["source"])
         spark.createDataFrame([bogus], uniq.schema).write.parquet(str(store))
-    run(run_id, led, fail_partition_limit=5)
+    run(run_id, fail_partition_limit=5)
     if case == "no_unique_keys":
         assert not stores.exists()
     else:
-        assert store.is_dir(), sorted(os.listdir(led))
+        assert (store / "_SUCCESS").is_file(), sorted(os.listdir(led))
         assert spark.read.parquet(str(store)).where("row_id = 'bogus'").count() == 0
     if case == "legacy_ledger":
         # a ledger written before the store existed: the resume computes it
-        shutil.rmtree(stores)
+        shutil.rmtree(stores / f"run_{quote(run_id, safe='')}")
+    if case == "uncommitted_store":
+        # that computation crashed before its commit: no _SUCCESS, only
+        # the writer's _temporary, read as no rows if it were trusted
+        shutil.rmtree(store)
+        (store / "_temporary" / "0").mkdir(parents=True)
     if case == "readers_skip_store":
         assert len(read_ledger(spark, led, run_id).collect()) == 5
         assert len(completed_partitions(spark, led, run_id)[0]) == 5
         table = pq.read_table(led)
-        assert table.num_rows == 5 and table.column_names == LEDGER_SCHEMA.names
+        assert table.num_rows == len(full) + 5 and table.column_names == LEDGER_SCHEMA.names
 
-    run(run_id, led)
+    run(run_id)
     assert _ledger_key(read_ledger(spark, led, run_id).collect()) == full
-    assert {r["run_id"] for r in spark.read.parquet(led).collect()} == {run_id}
-    if case == "legacy_ledger":
-        assert store.is_dir()
-    if case == "awkward_run_id":
-        # the store of run "" would be the directory of every run's store
+    assert _ledger_key(read_ledger(spark, led, "full").collect()) == full
+    assert {r["run_id"] for r in spark.read.parquet(led).collect()} == {"full", run_id}
+    if case != "no_unique_keys":
+        assert (store / "_SUCCESS").is_file()
+        assert sorted(os.listdir(stores)) == sorted({"run_full", store.name})
+    if case == "awkward_run_id" and run_id == "..":
+        # a sink partition value "" reads back as NULL: no such run
         with pytest.raises(ValueError):
-            run("", led)
+            run("")
 
 
 def test_validate_partitions_scopes_rows_not_uniqueness(spark):

@@ -104,7 +104,7 @@ def ledger_plans(spark, load, dims) -> str:
                             violations_path=f"{tmp}/violations", dims=dims, **kw)
         text = "\n".join([
             "==== uniqueness store write (first invocation, final plan) ====",
-            final_write_plan(spark, f"{tmp}/ledger/_uniqueness/plans"),
+            final_write_plan(spark, f"{tmp}/ledger/_uniqueness/run_plans"),
             "==== violations sink write (resumed invocation, final plan) ====",
             final_write_plan(spark, f"{tmp}/violations"),
             "==== ledger write (resumed invocation, final plan) ====",
