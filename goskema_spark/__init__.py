@@ -12,7 +12,7 @@ Layout:
   issues        — issue codes, violation row schema, message catalog
   schema        — declarative table schema + constraint builder DSL
   rowpass       — compile schema -> vectorized per-row check pass
-  uniqueness    — cross-row key uniqueness (salted two-stage aggregate)
+  uniqueness    — cross-row key uniqueness (two-stage hash aggregate)
   referential   — broadcast anti-join referential checks
   stats         — per-column profiling (count/null/min/max/sketches)
   drift         — histogram drift detection (PSI / KS)

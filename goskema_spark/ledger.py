@@ -10,13 +10,6 @@ follows FIXTURES.md F4:
   source VALUE, so it is identical across batches, resumes, and cluster
   sizes; ledger identity remains the source column itself)
 
-Format note: this is ledger format v2 (partition_id bigint). A v1
-ledger directory (int32 per-invocation dense ranks) must be migrated
-ONCE before appending — mixed int32/int64 parquet files in one
-directory do not read back:
-  spark.read.parquet(v1).withColumn("partition_id",
-      F.expr(f"xxhash64({part_key_sql('source')})")).write.parquet(v2)
-
 Protocol:
   - logical partitions = distinct values of the partition column
     (`source`): stable across cluster sizes and re-planning, unlike
@@ -63,10 +56,11 @@ Protocol:
     "ledger <run_id>: <phase>" or "validate: <phase>" via
     setJobDescription (the caller's description is restored; the job
     group is left alone):
-      1. completed partitions — the ledger's schema read, then one
-         collect of this run's `source` values (deduped on the driver;
-         the ledger holds one row per partition per run, so no
-         distinct() shuffle);
+      1. completed partitions — one collect of this run's `source`
+         values, read with LEDGER_SCHEMA (no inference job; an older
+         file holding an int32 partition_id reads back widened) and
+         deduped on the driver (the ledger holds one row per partition
+         per run, so no distinct() shuffle);
       2. emptiness probe — take(1) of the remaining rows (with
          fail_partition_limit: a distinct collect of their partitions);
          when nothing remains the invocation stops here, writing nothing;
@@ -85,7 +79,9 @@ Protocol:
          writes the lazy violation plan straight into violations_path,
          with run_id as the leading partition and dynamic overwrite, one
          job per adaptive query stage; the uniqueness branch is a scan
-         of the store, so the sink runs no uniqueness aggregate;
+         of the store, so the sink runs no uniqueness aggregate, and a
+         large dim's referential branch is a broadcast of its rows, with
+         no distinct shuffle (referential module docstring);
       6. ledger write — runner.aggregate_verdicts, the one verdict
          aggregate, over this invocation's sink partitions (the writer's
          read-back, pruned to run_id and part_key) and the input's
@@ -130,23 +126,13 @@ def completed_partitions(spark: SparkSession, ledger_path: str, run_id: str):
     sentinel string that a real partition value could collide with.
     The existence probe goes through the Spark reader (AnalysisException
     on a missing path), not the driver's local filesystem, so s3://... /
-    hdfs://... ledger paths resume correctly on a real cluster."""
+    hdfs://... ledger paths resume correctly on a real cluster. A
+    directory that holds no ledger file yet (only a run's uniqueness
+    store) reads as no rows."""
     try:
-        led = spark.read.parquet(ledger_path)
+        led = read_ledger(spark, ledger_path, run_id)
     except AnalysisException:
         return set(), False
-    # v1 guard: appending int64 partition_id files into an int32 (v1)
-    # directory would write mixed-type parquet that fails on read-back —
-    # refuse up front with the migration recipe (module docstring)
-    pid = next((f for f in led.schema.fields
-                if f.name == "partition_id"), None)
-    if pid is not None and not isinstance(pid.dataType, T.LongType):
-        raise ValueError(
-            f"ledger at {ledger_path} is format v1 (partition_id "
-            f"{pid.dataType.simpleString()}); migrate it to v2 (bigint "
-            "partition_id, see goskema_spark.ledger module docstring) "
-            "before appending")
-    led = led.filter(f"run_id = {string(run_id)}")
     # one row per partition per run: dedupe on the driver, a distinct()
     # would only add a shuffle stage
     vals = {r["source"] for r in led.select("source").collect()}
@@ -312,5 +298,5 @@ def run_with_ledger(
 
 
 def read_ledger(spark: SparkSession, ledger_path: str, run_id: str) -> DataFrame:
-    return (spark.read.parquet(ledger_path)
+    return (spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path)
             .filter(f"run_id = {string(run_id)}"))

@@ -3,12 +3,14 @@
 "duplicate value" (rules.go:126), params {"first": <ordinal of first
 occurrence>, "dup": <ordinal of this occurrence>, "key": <value>}.
 
-Scale design (north rule: salted hash-aggregate with skew mitigation):
+Scale design (north rule: a hash aggregate with skew mitigation):
 
   stage 1  groupBy(xxhash64(key)) partial counts     -- map-side combine
            means hot keys are pre-reduced per-partition before
-           shuffling, and the shuffled record is 8 bytes of hash, not
-           the raw key.
+           shuffling (a key hot in every partition still sends at most
+           one partial row per map task to its reducer, so no explicit
+           salting is needed), and the shuffled record is 8 bytes of
+           hash, not the raw key.
   stage 2  filter count > 1                          -- duplicate keys only,
            a tiny relation at any realistic duplicate rate.
   stage 3  join the dup-hash set back to the corpus; recover first/dup
@@ -36,34 +38,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 from goskema_spark.issues import Codes, MSG_DUPLICATE_VALUE, pointer
 from goskema_spark.rowpass import violation_cols, violation_rows
 from goskema_spark.sqltext import ident, string
-
-
-def duplicate_keys(df: DataFrame, key: str, salt_buckets: int = 0) -> DataFrame:
-    """Keys occurring more than once -> (key, cnt).
-
-    Default (salt_buckets=0): Spark's own two-stage hash aggregate —
-    partial_count per map task IS the salted first stage (a key hot in
-    every partition still contributes at most #partitions partial rows
-    to its reducer), so counts never skew. Measured 2.1x faster than the
-    explicit-salt variant on 5.1M rows.
-
-    salt_buckets>0 adds an explicit salt pre-aggregation — useful only
-    for aggregates WITHOUT map-side combine (e.g. collect_list payloads);
-    kept for those and for the F7 skew demonstration.
-    """
-    kc = F.col(key)
-    if salt_buckets:
-        stage1 = (
-            df.filter(kc.isNotNull())
-            .groupBy((F.xxhash64(kc) % salt_buckets).alias("_salt"), kc.alias("_key"))
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-        )
-        agg = stage1.groupBy("_key").agg(F.sum("_cnt").alias("cnt"))
-    else:
-        agg = (df.filter(kc.isNotNull())
-               .groupBy(kc.alias("_key"))
-               .agg(F.count(F.lit(1)).alias("cnt")))
-    return agg.filter(F.col("cnt") > 1).select(F.col("_key").alias(key), "cnt")
 
 
 def uniqueness_violations(df: DataFrame, key: str, ordinal: str,

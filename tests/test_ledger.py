@@ -291,11 +291,11 @@ def test_resumed_invocation_jobs_labels_and_ledger_plan(spark, monkeypatch):
         monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
         run("gsk_resume")
         n_jobs, descs = _group_jobs(sc, "gsk_resume")
-        # completed partitions 2 (ledger schema, collect), emptiness probe
-        # 1, violations sink 2 (one per adaptive stage), ledger write 2.
-        # The sink reads the run's uniqueness store, written once by the
-        # first invocation, instead of aggregating the whole input.
-        assert n_jobs == 7, n_jobs
+        # completed partitions 1 (collect), emptiness probe 1, violations
+        # sink 2 (one per adaptive stage), ledger write 2. The sink reads
+        # the run's uniqueness store, written once by the first
+        # invocation, instead of aggregating the whole input.
+        assert n_jobs == 6, n_jobs
         assert descs == {
             "ledger j: completed partitions", "ledger j: emptiness probe",
             "ledger j: violations sink", "ledger j: ledger write"}, descs
@@ -333,14 +333,15 @@ def test_resumed_invocation_jobs_labels_and_ledger_plan(spark, monkeypatch):
 @pytest.mark.parametrize("case,run_id", [
     ("legacy_ledger", "s"), ("uncommitted_store", "s"), ("stale_store", "s"),
     ("awkward_run_id", "a/b=c%d e"), ("awkward_run_id", "."), ("awkward_run_id", ".."),
-    ("no_unique_keys", "s"), ("readers_skip_store", "s")])
+    ("no_unique_keys", "s"), ("readers_skip_store", "s"), ("store_only", "s")])
 def test_uniqueness_store_protocol(spark, tmp_path, case, run_id):
     """The run's uniqueness rows are stored under
     <ledger>/_uniqueness/run_<quoted run_id> by the invocation that
     finds no ledger rows (or no committed store) for the run, and read
     back by every later one. In every case an interrupted and resumed
     run ends with the uninterrupted run's ledger, and the uninterrupted
-    run's own rows and store, in the same ledger, survive."""
+    run's own rows and store, in the same ledger, survive. Only in
+    store_only does the uninterrupted run use a ledger of its own."""
     corpus = corpus_from_documents(spark, SF)
     dims = {"dim_source": dim_source_df(spark)}
     schema = corpus_schema()
@@ -350,20 +351,27 @@ def test_uniqueness_store_protocol(spark, tmp_path, case, run_id):
     stores = tmp_path / "led" / "_uniqueness"
     store = stores / f"run_{quote(run_id, safe='')}"
 
-    def run(rid, **kw):
+    def run(rid, path=led, **kw):
         return run_with_ledger(spark, corpus, schema, row_id_col(), run_id=rid,
-                               ledger_path=led, dims=dims, **kw)
+                               ledger_path=path, dims=dims, **kw)
 
-    run("full")
-    full = _ledger_key(read_ledger(spark, led, "full").collect())
+    full_led = str(tmp_path / "led_full") if case == "store_only" else led
+    runs = {run_id} if case == "store_only" else {"full", run_id}
+    run("full", path=full_led)
+    full = _ledger_key(read_ledger(spark, full_led, "full").collect())
 
-    if case == "stale_store":
-        # a store left by a run that never wrote a ledger row: its bogus
-        # row would fail src3's uniqueness check if it were read
+    if case in ("stale_store", "store_only"):
+        # a committed store of a run that never wrote a ledger row (in
+        # store_only, the ledger directory's only content, as after a
+        # crash between the first store write and the first ledger row):
+        # its bogus row would fail src3's uniqueness check if it were read
         bogus = ("bogus", "/doc_id", "uniqueness", "duplicate value", "unique_by",
                  {"first": "0", "dup": "1", "key": "bogus"}, "src3")
         uniq = uniqueness_rows(corpus, schema, row_id_col(), carry=["source"])
         spark.createDataFrame([bogus], uniq.schema).write.parquet(str(store))
+    if case == "store_only":
+        # the ledger read finds no ledger file: no rows, not an error
+        assert completed_partitions(spark, led, run_id) == (set(), False)
     run(run_id, fail_partition_limit=5)
     if case == "no_unique_keys":
         assert not stores.exists()
@@ -386,15 +394,57 @@ def test_uniqueness_store_protocol(spark, tmp_path, case, run_id):
 
     run(run_id)
     assert _ledger_key(read_ledger(spark, led, run_id).collect()) == full
-    assert _ledger_key(read_ledger(spark, led, "full").collect()) == full
-    assert {r["run_id"] for r in spark.read.parquet(led).collect()} == {"full", run_id}
+    assert _ledger_key(read_ledger(spark, full_led, "full").collect()) == full
+    assert {r["run_id"] for r in spark.read.parquet(led).collect()} == runs
     if case != "no_unique_keys":
         assert (store / "_SUCCESS").is_file()
-        assert sorted(os.listdir(stores)) == sorted({"run_full", store.name})
+        assert sorted(os.listdir(stores)) == sorted(f"run_{quote(r, safe='')}" for r in runs)
     if case == "awkward_run_id" and run_id == "..":
         # a sink partition value "" reads back as NULL: no such run
         with pytest.raises(ValueError):
             run("")
+
+
+def test_v1_ledger_file_reads_back_and_resumes(spark, tmp_path):
+    """A ledger directory that holds a file of ledger format v1
+    (partition_id int32, a dense rank per invocation) next to the run's
+    v2 rows is read with LEDGER_SCHEMA: read_ledger and
+    completed_partitions return every row, the v1 ids widened and still
+    their dense ranks, and a resume appends to the directory."""
+    corpus = corpus_from_documents(spark, SF)
+    dims = {"dim_source": dim_source_df(spark)}
+    led = str(tmp_path / "led")
+
+    def run(rid, path=led, **kw):
+        return run_with_ledger(spark, corpus, corpus_schema(), row_id_col(), run_id=rid,
+                               ledger_path=path, dims=dims, **kw)
+
+    run("full", path=str(tmp_path / "led_full"))
+    full = read_ledger(spark, str(tmp_path / "led_full"), "full").collect()
+    run("r", fail_partition_limit=5)
+    done = {r["source"] for r in read_ledger(spark, led, "r").collect()}
+    # two more of the run's partitions, ledgered by a v1 invocation
+    v1 = sorted(r["source"] for r in full if r["source"] not in done | {None})[:2]
+    v1_schema = T.StructType([
+        T.StructField(f.name, T.IntegerType() if f.name == "partition_id" else f.dataType)
+        for f in LEDGER_SCHEMA.fields])
+    v1_rows = [tuple({"run_id": "r", "partition_id": v1.index(r["source"])}.get(n, r[n])
+                     for n in LEDGER_SCHEMA.names)
+               for r in full if r["source"] in v1]
+    spark.createDataFrame(v1_rows, v1_schema).write.mode("append").parquet(led)
+    assert {str(pq.read_schema(f).field("partition_id").type)
+            for f in glob.glob(f"{led}/*.parquet")} == {"int32", "int64"}
+
+    got = read_ledger(spark, led, "r").collect()
+    assert len(got) == 7 and {r["source"] for r in got} == done | set(v1)
+    assert completed_partitions(spark, led, "r") == (done | set(v1), False)
+
+    run("r")
+    got = read_ledger(spark, led, "r").collect()
+    assert {r["source"]: r["partition_id"] for r in got if r["source"] in v1} \
+        == {s: i for i, s in enumerate(v1)}
+    drop_id = lambda rows: sorted((k[:1] + k[2:] for k in _ledger_key(rows)), key=repr)
+    assert drop_id(got) == drop_id(full)
 
 
 def test_validate_partitions_scopes_rows_not_uniqueness(spark):

@@ -61,7 +61,9 @@ def test_referential_small_dim_compiles_to_filter(spark):
 
 def test_referential_large_dim_is_broadcast(spark):
     """Above the inline threshold the check falls back to a broadcast
-    anti-join — still never a shuffle of the fact side."""
+    anti-join — never a shuffle of the fact side, and the dim side is
+    broadcast as it is: no distinct aggregate, no hash exchange, only
+    the BroadcastExchange."""
     from pyspark.sql import functions as F
     with tempfile.TemporaryDirectory() as tmp:
         df = _corpus_parquet(spark, tmp)
@@ -71,31 +73,37 @@ def test_referential_large_dim_is_broadcast(spark):
         plan = _plan(v)
         assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
         assert "SortMergeJoin" not in plan, "referential check must not sort-merge"
+        assert "BroadcastExchange" in plan, plan
+        assert "HashAggregate" not in plan, plan
+        assert "Exchange hashpartitioning" not in plan, plan
 
 
 def test_referential_inline_matches_join(spark):
-    """Both physical shapes must produce identical violations,
-    null-domain values and empty dims included."""
+    """Both physical shapes must produce identical violations for one
+    domain, a NULL domain value included. The join path gets the same
+    domain repeated past the inline threshold, so its build side holds
+    every key many times over (and the NULL key too)."""
     from pyspark.sql import functions as F, types as T
+
+    from goskema_spark.referential import MAX_INLINE_VALUES
+    dim_schema = T.StructType([T.StructField("source", T.StringType(), True)])
     with tempfile.TemporaryDirectory() as tmp:
         df = _corpus_parquet(spark, tmp)
         dim_rows = [("src1",), ("src2",), (None,)]
-        dim = spark.createDataFrame(
-            dim_rows, T.StructType([T.StructField("source", T.StringType(), True)]))
+        dim = spark.createDataFrame(dim_rows, dim_schema)
+        repeated = spark.createDataFrame(
+            dim_rows * (MAX_INLINE_VALUES // len(dim_rows) + 1), dim_schema)
         a = referential_violations(df, "source", dim, "source", row_id_col())
-        b = referential_violations(df, "source", dim, "source", row_id_col(),
-                                   max_inline_values=0)  # force the join path
+        b = referential_violations(df, "source", repeated, "source", row_id_col())
+        assert "Join" not in _plan(a) and "BroadcastHashJoin" in _plan(b)
         assert a.count() == b.count() > 0
         norm = lambda d: d.withColumn("params", F.map_entries("params"))
         assert norm(a).exceptAll(norm(b)).count() == 0
-        # empty dim: every non-null value is a miss, on both paths
-        empty = spark.createDataFrame(
-            [], T.StructType([T.StructField("source", T.StringType(), True)]))
+        # empty dim: every non-null value is a miss
+        empty = spark.createDataFrame([], dim_schema)
         n_nonnull = df.filter(F.col("source").isNotNull()).count()
         ea = referential_violations(df, "source", empty, "source", row_id_col())
-        eb = referential_violations(df, "source", empty, "source", row_id_col(),
-                                    max_inline_values=0)
-        assert ea.count() == eb.count() == n_nonnull
+        assert ea.count() == n_nonnull
 
 
 def test_rowpass_no_python_and_codegen(spark):
@@ -185,17 +193,21 @@ def test_clean_rows_filter_on_the_gate_alone(spark):
 
 
 def test_uniqueness_is_two_stage_agg(spark):
-    """The duplicate-key aggregate must show partial aggregation
-    (map-side combine) before the exchange."""
-    from goskema_spark.uniqueness import duplicate_keys
+    """The duplicate-key aggregate of the uniqueness check must show
+    partial aggregation (map-side combine) below the hash exchange on
+    the key hash `_kh`."""
+    from goskema_spark.uniqueness import uniqueness_violations
     with tempfile.TemporaryDirectory() as tmp:
         df = _corpus_parquet(spark, tmp)
-        plan = _plan(duplicate_keys(df, "doc_id"))
-        # HashAggregate (partial) ... Exchange ... HashAggregate (final/merge)
-        first_exchange = plan.find("Exchange")
-        first_agg = plan.rfind("HashAggregate")
-        assert "HashAggregate" in plan and first_exchange != -1
-        assert first_agg > first_exchange, "expected partial agg below the shuffle"
+        plan = _plan(uniqueness_violations(df, "doc_id", "_ord", row_id_col()))
+        lines = plan.splitlines()
+        # HashAggregate (final, -> _kh) / Exchange / HashAggregate (partial)
+        final = next((i for i, ln in enumerate(lines)
+                      if "HashAggregate" in ln and "output=[_kh#" in ln), None)
+        assert final is not None, plan
+        assert "Exchange hashpartitioning" in lines[final + 1], plan
+        assert "HashAggregate" in lines[final + 2] \
+            and "partial_count(1)" in lines[final + 2], "expected partial agg below the shuffle"
 
 
 def test_json_schema_export(spark):

@@ -1,13 +1,12 @@
 """F7 skew fixture (FIXTURES.md): uniqueness aggregate under hot keys.
 100k rows, 30% share source='web', 1% of doc_ids are the single value
 'HOT' (~1000 duplicates). Asserts the aggregate returns exactly
-dup_count(HOT) - 1 violations and completes with AQE enabled, for both
-the plain two-stage and the explicit-salt variants."""
+dup_count(HOT) - 1 violations and completes with AQE enabled."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from goskema_spark.uniqueness import duplicate_keys, uniqueness_violations
+from goskema_spark.uniqueness import uniqueness_violations
 
 N = 100_000
 
@@ -24,15 +23,8 @@ def skew_df(spark):
     return df.repartition(8, "source")  # skewed physical layout
 
 
-def test_hot_key_counts(spark, skew_df):
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    for salt in (0, 64):
-        dups = duplicate_keys(skew_df, "doc_id", salt_buckets=salt).collect()
-        assert len(dups) == 1
-        assert dups[0]["doc_id"] == "HOT" and dups[0]["cnt"] == N // 100
-
-
 def test_hot_key_violations(spark, skew_df):
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     rid = F.col("doc_id")
     v = uniqueness_violations(skew_df, "doc_id", "_ord", rid)
     rows = v.collect()
