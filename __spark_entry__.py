@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from goskema_spark.corpus import (
     MAX_LEN,
     MAX_NTOK,
+    ROW_ID_SQL,
     VOCAB,
     corpus_cte_sql,
     corpus_from_documents,
@@ -35,7 +36,6 @@ from goskema_spark.runner import validate
 from goskema_spark.stats import numeric_quantiles, profile
 from goskema_spark.uniqueness import uniqueness_violations
 
-ROW_ID_SQL = "coalesce(doc_id, 'row-' || CAST(_ord AS VARCHAR))"
 DIM_IN = "(" + ",".join(f"'src{i}'" for i in range(20)) + ")"
 
 

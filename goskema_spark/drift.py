@@ -113,6 +113,12 @@ def psi_ks_between(df_a: DataFrame, df_b: DataFrame, column: str,
 
     Buckets absent from both sides contribute 0 to both statistics, so
     only the union of observed buckets is materialized.
+
+    Empty sides, unlike psi_ks_by_group (which drops a group with an
+    empty side): with ONE side empty the row reports total drift (that
+    side's shares read eps, its CDF 0, so ks is 1.0); with BOTH sides
+    empty there is no bucket and the row is all NULL. That contract is
+    why this keeps its own plan instead of wrapping _score.
     """
     ha = histogram(df_a, column, lo, hi, buckets).select("bucket", F.col("cnt").alias("cnt_a"))
     hb = histogram(df_b, column, lo, hi, buckets).select("bucket", F.col("cnt").alias("cnt_b"))
@@ -123,7 +129,7 @@ def psi_ks_between(df_a: DataFrame, df_b: DataFrame, column: str,
     )
     tot = joined.agg(F.sum("cnt_a").alias("ta"), F.sum("cnt_b").alias("tb"))
     j = joined.crossJoin(F.broadcast(tot))
-    # zero-total guard (mirrors _score's ta>0 & tb>0 gate): an empty
+    # zero-total guard (where _score drops the group instead): an empty
     # side's shares degrade to 0 -> eps, reporting total drift, instead
     # of DIVIDE_BY_ZERO under ANSI or an all-NULL ks that masks the
     # drift entirely under non-ANSI

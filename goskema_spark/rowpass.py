@@ -31,6 +31,8 @@ in sorted field order, then by check kind; the violations table sorts by
 
 from __future__ import annotations
 
+import re
+from dataclasses import replace
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
@@ -260,35 +262,8 @@ def _rule_params(r) -> Optional[dict]:
 
 def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
     out = CompiledChecks("_presence" if "_presence" in df.columns else None)
-    phys = {sf.name: sf.dataType for sf in df.schema.fields}
-
-    # unknown-column policy (reference types.go:4-10, dsl/object_core.go:136-169)
-    declared = set(schema.field_names()) | {"_ord", "_row_id"}
-    if schema.passthrough_target:
-        declared.add(schema.passthrough_target)
-    unknown = sorted(c for c in df.columns if c not in declared and not c.startswith("_"))
-    unknown = _compile_pattern_keys(out, schema, unknown,
-                                    lambda c: (ident(c), pointer(c), phys.get(c)))
-    if schema.unknown == "strict":
-        for c in unknown:
-            out.add("true", pointer(c), Codes.UNKNOWN_KEY, rule="unknown_strict")
-    elif schema.unknown == "schema" and schema.ap_field is not None:
-        # additionalProperties-with-schema: overflow columns validate
-        # against the declared value spec instead of being stripped
-        # (beyond the reference MVP warn+prune, kubeopenapi.go:157-160)
-        from dataclasses import replace
-        for c in unknown:
-            _compile_field(out, replace(schema.ap_field, name=c), ident(c),
-                           pointer(c), phys.get(c))
-
-    for f in sorted(schema.fields, key=lambda x: x.name):
-        present = f.name in df.columns
-        if not present:
-            if f.required and f.default is None:
-                # column absent from table schema = missing (SURVEY §7.3)
-                out.add("true", pointer(f.name), Codes.REQUIRED, rule="required")
-            continue
-        _compile_field(out, f, ident(f.name), pointer(f.name), phys.get(f.name))
+    # the table's own columns: the same object walk as a nested struct
+    _compile_object(out, schema, None, "", df.schema)
 
     # discriminated union (reference dsl/union.go:17-52): a variant is
     # either a full TableSchema (the whole variant check set — required-
@@ -314,14 +289,7 @@ def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
                         f"variant '{tag}' declares or_refinements, which "
                         "only compile at table level")
                 sub = CompiledChecks(out.presence)
-                for vf in sorted(var.fields, key=lambda x: x.name):
-                    if vf.name not in df.columns:
-                        if vf.required and vf.default is None:
-                            sub.add("true", pointer(vf.name), Codes.REQUIRED,
-                                    rule="required")
-                        continue
-                    _compile_field(sub, vf, ident(vf.name), pointer(vf.name),
-                                   phys.get(vf.name))
+                _compile_fields(sub, var, None, "", df.schema)
                 for r in var.refinements:
                     sub.add(_rule_cond(r), r.path, r.code, rule=r.name,
                             params=_rule_params(r))
@@ -408,70 +376,72 @@ def _compile_field(out: CompiledChecks, f: Field, col: str, p, phys_type):
             out.add(cond, pk, code, rule="embedded_resource", message=msg)
 
 
-def _compile_pattern_keys(out: CompiledChecks, schema: TableSchema,
-                          unknown: list, bind) -> list:
-    """patternProperties ALONGSIDE declared properties (JSON Schema: a
-    pattern-matched key is NOT 'additional'): pull pattern-matching
-    names out of the unknown set and validate them against the
-    pattern's value Field. Returns the remaining unknown names. `bind`
-    maps a name -> (SQL expression, pointer, phys_type)."""
-    pats = schema.unknown_key_patterns or []
-    if not pats:
-        return unknown
-    import re
-    from dataclasses import replace
-    rest = []
-    for c in unknown:
-        matched = [pf for pat, pf in pats if re.search(pat, c)]
+def _member(col: Optional[str], p, name: str) -> tuple:
+    """(SQL expression, pointer) of member `name` of the object at `col`
+    (None: the table's own columns), its pointer rebased under `p`."""
+    return (ident(name) if col is None else f"{col}.{ident(name)}",
+            _pjoin(p, pointer(name)))
+
+
+def _compile_object(out: CompiledChecks, schema: TableSchema, col: Optional[str],
+                    p, struct) -> None:
+    """Compile an object schema's member checks — unknown-key policy
+    (reference types.go:4-10, dsl/object_core.go:136-169), then the
+    declared fields — against the members of `struct` (a StructType):
+    the table's own columns when `col` is None, else the struct-valued
+    SQL expression `col` (a nested column OR an array element), child
+    paths rebased under `p`. A nested caller gates the result on the
+    struct being present."""
+    types = {sf.name: sf.dataType for sf in struct.fields}
+    declared = set(schema.field_names()) | {schema.passthrough_target}
+    unknown = []
+    for n in sorted(k for k in types if k not in declared and not k.startswith("_")):
+        # patternProperties ALONGSIDE declared properties (JSON Schema: a
+        # pattern-matched key is NOT 'additional'): every matching
+        # pattern's value Field applies, and the key is not unknown
+        matched = [pf for pat, pf in schema.unknown_key_patterns or []
+                   if re.search(pat, n)]
         if not matched:
-            rest.append(c)
-            continue
-        col, ptr, phys = bind(c)
-        for pf in matched:  # all matching patterns apply (JSON Schema)
+            unknown.append(n)
+        for pf in matched:
             if pf is not None:
-                _compile_field(out, replace(pf, name=c), col, ptr, phys)
-    return rest
+                _compile_field(out, replace(pf, name=n), *_member(col, p, n), types[n])
+    if schema.unknown == "strict":
+        for n in unknown:
+            out.add("true", _member(col, p, n)[1], Codes.UNKNOWN_KEY, rule="unknown_strict")
+    elif schema.unknown == "schema" and schema.ap_field is not None:
+        # additionalProperties-with-schema: overflow members validate
+        # against the declared value spec instead of being stripped
+        # (beyond the reference MVP warn+prune, kubeopenapi.go:157-160)
+        for n in unknown:
+            _compile_field(out, replace(schema.ap_field, name=n), *_member(col, p, n),
+                           types[n])
+    _compile_fields(out, schema, col, p, struct)
 
 
-def _compile_object(sub: CompiledChecks, sub_schema: TableSchema, col: str,
-                    p, phys_struct) -> None:
-    """Compile an object schema's checks against a struct-valued SQL
-    expression (a nested column OR an array element), child paths
-    rebased under `p`. Caller gates the result on the struct being
-    present."""
-    if sub_schema.refinements or sub_schema.or_refinements:
-        # refinements live at TABLE level: their conditions name
-        # top-level columns and cannot be rebound to this struct —
-        # silently skipping the rule would be a correctness hole, so
-        # refuse loudly (declare the rule on the table schema with full
-        # nested paths instead)
+def _compile_fields(out: CompiledChecks, schema: TableSchema, col: Optional[str],
+                    p, struct) -> None:
+    """The declared fields of `schema` in sorted order, bound as in
+    _compile_object; a required field without a default that `struct`
+    lacks is missing (SURVEY §7.3)."""
+    types = {sf.name: sf.dataType for sf in struct.fields}
+    for f in sorted(schema.fields, key=lambda x: x.name):
+        expr, fp = _member(col, p, f.name)
+        if f.name in types:
+            _compile_field(out, f, expr, fp, types[f.name])
+        elif f.required and f.default is None:
+            out.add("true", fp, Codes.REQUIRED, rule="required")
+
+
+def _table_level_only(schema: TableSchema, p) -> None:
+    """Refuse a nested object schema that declares refinements: their
+    conditions name top-level columns and cannot be rebound to a struct,
+    and silently skipping the rule would be a correctness hole (declare
+    the rule on the table schema with full nested paths instead)."""
+    if schema.refinements or schema.or_refinements:
         raise TypeError(
             f"nested schema at '{_psql(p)}' declares refinements, which only "
             "compile at table level — move the rule to the root schema")
-    child_types = {sf.name: sf.dataType for sf in phys_struct.fields}
-    declared = set(sub_schema.field_names())
-    unknown = sorted(n for n in set(child_types) - declared
-                     if not n.startswith("_"))
-    unknown = _compile_pattern_keys(
-        sub, sub_schema, unknown,
-        lambda n: (f"{col}.{ident(n)}", _pjoin(p, pointer(n)), child_types[n]))
-    if sub_schema.unknown == "strict":
-        for name in unknown:
-            sub.add("true", _pjoin(p, pointer(name)), Codes.UNKNOWN_KEY,
-                    rule="unknown_strict")
-    elif sub_schema.unknown == "schema" and sub_schema.ap_field is not None:
-        from dataclasses import replace
-        for name in unknown:
-            _compile_field(sub, replace(sub_schema.ap_field, name=name),
-                           f"{col}.{ident(name)}", _pjoin(p, pointer(name)),
-                           child_types[name])
-    for cf in sorted(sub_schema.fields, key=lambda x: x.name):
-        cp = _pjoin(p, pointer(cf.name))
-        if cf.name not in child_types:
-            if cf.required and cf.default is None:
-                sub.add("true", cp, Codes.REQUIRED, rule="required")
-            continue
-        _compile_field(sub, cf, f"{col}.{ident(cf.name)}", cp, child_types[cf.name])
 
 
 def _compile_nested(out: CompiledChecks, f: Field, col: str, p, phys_type):
@@ -496,6 +466,7 @@ def _compile_nested(out: CompiledChecks, f: Field, col: str, p, phys_type):
             f"field '{_psql(p)}' declares a nested object schema but the physical "
             f"column type is {_type_str(phys_type) or 'unknown'}"
         )
+    _table_level_only(sub_schema, p)
     # the ingest presence map reaches anyOf fields INSIDE nested objects
     # exactly like top-level and union-variant fields (the nested
     # pointer is a static str, so the map lookup works unchanged)
@@ -640,6 +611,31 @@ def _embedded_conds(el: str, ep, phys_type) -> list:
     return conds
 
 
+def _value_checks(f: Field, col: str):
+    """(cond, code, rule, params) of the value constraints of `f` —
+    bounds, enum, pattern, string lengths — on the SQL expression `col`,
+    for a scalar field and a map's element field alike."""
+    nn = f"{col} IS NOT NULL"
+    if f.min is not None:
+        yield (_all(nn, f"{col} < {literal(f.min)}"), Codes.TOO_SMALL, "min",
+               {"min": _lit_s(f.min), "got": _s(col)})
+    if f.max is not None:
+        yield (_all(nn, f"{col} > {literal(f.max)}"), Codes.TOO_BIG, "max",
+               {"max": _lit_s(f.max), "got": _s(col)})
+    if f.enum is not None:
+        yield (_all(nn, f"NOT {in_list(col, list(f.enum))}"), Codes.INVALID_ENUM, "enum",
+               {"got": _s(col)})
+    if f.pattern is not None:
+        yield (_all(nn, f"NOT {col} RLIKE {string(f.pattern)}"), Codes.PATTERN, "pattern",
+               {"pattern": _lit_s(f.pattern), "got": _s(col)})
+    if f.min_str_len is not None:
+        yield (_all(nn, f"length({col}) < {literal(f.min_str_len)}"), Codes.TOO_SHORT,
+               "min_length", {"min": _lit_s(f.min_str_len), "got": _s(f"length({col})")})
+    if f.max_str_len is not None:
+        yield (_all(nn, f"length({col}) > {literal(f.max_str_len)}"), Codes.TOO_LONG,
+               "max_length", {"max": _lit_s(f.max_str_len), "got": _s(f"length({col})")})
+
+
 def _compile_scalar(out: CompiledChecks, f: Field, col: str, p, actual_type: str):
     nn = f"{col} IS NOT NULL"
 
@@ -728,26 +724,8 @@ def _compile_scalar(out: CompiledChecks, f: Field, col: str, p, actual_type: str
                     Codes.OVERFLOW, rule=f"int_range_{bits}",
                     params={"min": _lit_s(lo), "max": _lit_s(hi), "got": _s(col)})
 
-    if f.min is not None:
-        out.add(_all(nn, f"{col} < {literal(f.min)}"), p, Codes.TOO_SMALL, rule="min",
-                params={"min": _lit_s(f.min), "got": _s(col)})
-    if f.max is not None:
-        out.add(_all(nn, f"{col} > {literal(f.max)}"), p, Codes.TOO_BIG, rule="max",
-                params={"max": _lit_s(f.max), "got": _s(col)})
-    if f.enum is not None:
-        out.add(_all(nn, f"NOT {in_list(col, list(f.enum))}"), p, Codes.INVALID_ENUM,
-                rule="enum", params={"got": _s(col)})
-    if f.pattern is not None:
-        out.add(_all(nn, f"NOT {col} RLIKE {string(f.pattern)}"), p, Codes.PATTERN,
-                rule="pattern", params={"pattern": _lit_s(f.pattern), "got": _s(col)})
-    if f.min_str_len is not None:
-        out.add(_all(nn, f"length({col}) < {literal(f.min_str_len)}"), p, Codes.TOO_SHORT,
-                rule="min_length",
-                params={"min": _lit_s(f.min_str_len), "got": _s(f"length({col})")})
-    if f.max_str_len is not None:
-        out.add(_all(nn, f"length({col}) > {literal(f.max_str_len)}"), p, Codes.TOO_LONG,
-                rule="max_length",
-                params={"max": _lit_s(f.max_str_len), "got": _s(f"length({col})")})
+    for cond, code, rule, params in _value_checks(f, col):
+        out.add(cond, p, code, rule=rule, params=params)
     if f.format == "rfc3339" and actual_type == "string":
         fmt = string("yyyy-MM-dd'T'HH:mm:ssXXX")
         out.add(_all(nn, f"try_to_timestamp({col}, {fmt}) IS NULL"), p,
@@ -938,6 +916,7 @@ def _compile_array(out: CompiledChecks, f: Field, col: str, p, phys_type):
             raise TypeError(
                 f"field '{_psql(p)}' declares an array element object schema but the "
                 f"physical type is {actual_type or 'unknown'}")
+        _table_level_only(spec.elem_schema, idx_path(i))
         # the element check set, over the lambda variables `e` and `i`;
         # its conditions never name `i` (only the paths do), so the same
         # set also serves the one-variable exists() gate
@@ -1091,24 +1070,8 @@ def _compile_map(out: CompiledChecks, f: Field, col: str, p):
     if ef is not None:
         if ef.required or not ef.nullable:
             vcheck(f"{v} IS NULL", Codes.REQUIRED, "map_value_required")
-        if ef.min is not None:
-            vcheck(_all(nn, f"{v} < {literal(ef.min)}"), Codes.TOO_SMALL, "min",
-                   {"min": _lit_s(ef.min), "got": _s(v)})
-        if ef.max is not None:
-            vcheck(_all(nn, f"{v} > {literal(ef.max)}"), Codes.TOO_BIG, "max",
-                   {"max": _lit_s(ef.max), "got": _s(v)})
-        if ef.enum is not None:
-            vcheck(_all(nn, f"NOT {in_list(v, list(ef.enum))}"), Codes.INVALID_ENUM, "enum",
-                   {"got": _s(v)})
-        if ef.pattern is not None:
-            vcheck(_all(nn, f"NOT {v} RLIKE {string(ef.pattern)}"), Codes.PATTERN, "pattern",
-                   {"pattern": _lit_s(ef.pattern), "got": _s(v)})
-        if ef.min_str_len is not None:
-            vcheck(_all(nn, f"length({v}) < {literal(ef.min_str_len)}"), Codes.TOO_SHORT,
-                   "min_length", {"min": _lit_s(ef.min_str_len), "got": _s(f"length({v})")})
-        if ef.max_str_len is not None:
-            vcheck(_all(nn, f"length({v}) > {literal(ef.max_str_len)}"), Codes.TOO_LONG,
-                   "max_length", {"max": _lit_s(ef.max_str_len), "got": _s(f"length({v})")})
+        for check in _value_checks(ef, v):
+            vcheck(*check)
 
     # ---- per-pattern value types (patterns.go:155-210: ALL matching
     # patterns' type constraints apply; unmatched keys fall back to the

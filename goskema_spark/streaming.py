@@ -10,11 +10,11 @@ Two pieces:
 
   validate_stream  readStream -> foreachBatch(batch validator) — the
                    whole batch check set (row pass + referential) runs
-                   per micro-batch; violations/ledger rows append to
-                   sinks. Uniqueness within a micro-batch is exact;
-                   global streaming uniqueness would need state
-                   (dropDuplicates withWatermark) and is exposed via
-                   `dedup_stream`.
+                   per micro-batch; each batch's violation report
+                   lands in its own sink directory. Uniqueness within
+                   a micro-batch is exact; global streaming uniqueness
+                   would need state (dropDuplicates withWatermark) and
+                   is exposed via `dedup_stream`.
   windowed_counts  watermarked tumbling-window aggregation (late rows
                    beyond the watermark are dropped by Spark's state
                    eviction — the streaming analog of the drift
@@ -25,6 +25,7 @@ Two pieces:
 
 from __future__ import annotations
 
+import re
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, functions as F
@@ -44,23 +45,21 @@ def validate_stream(
 ):
     """Attach the batch validator to a streaming DataFrame via
     foreachBatch. Returns the DataStreamWriter (caller starts it with
-    .trigger(...).start() or availableNow)."""
+    .trigger(...).start() or availableNow).
+
+    violations_sink: a parquet directory; each micro-batch's violation
+    report (runner.write_violations: `params` as JSON text) lands in its
+    own batch_id=<n>/ directory, so reading the sink discovers batch_id
+    as a partition column."""
 
     def process(batch_df: DataFrame, batch_id: int):
-        res = validate(batch_df, schema, row_id, dims=dims)
-        viols = res.violations.withColumn("batch_id", F.lit(batch_id)) \
-            .withColumn("params", F.to_json("params"))
-        if violations_sink:
-            # exactly-once under micro-batch REPLAY: foreachBatch is
-            # at-least-once, so a retried batch re-runs process() with
-            # the same batch_id — dynamic overwrite of the batch_id
-            # partition REPLACES that batch's rows instead of appending
-            # duplicates (same protocol as the batch ledger,
-            # ledger.run_with_ledger's violations write)
-            (viols.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id")
-             .parquet(violations_sink))
+        # exactly-once under micro-batch REPLAY: foreachBatch is
+        # at-least-once, so a retried batch re-runs process() with the
+        # same batch_id — the report write REPLACES that batch's whole
+        # batch_id=<n>/ directory instead of appending duplicates (and
+        # a replay with no violations leaves it empty)
+        path = f"{violations_sink}/batch_id={batch_id}" if violations_sink else None
+        res = validate(batch_df, schema, row_id, dims=dims, report_path=path)
         if on_batch is not None:
             on_batch(res, batch_id)
 
@@ -94,37 +93,27 @@ def windowed_counts(stream_df: DataFrame, ts_col: str = "ts",
 
 
 def _duration_ms(s: str) -> int:
-    """Parse a Spark-style duration string — a SUPERSET of what
-    withWatermark accepts (abbreviations like '90 min', weeks, compound
-    forms like '1 hour 30 minutes'; additionally single-letter units,
-    fractional counts and 'us', which Spark's own interval parser
-    rejects — validate against Spark separately before forwarding a
-    string there)."""
-    units = {"microsecond": 0.001, "us": 0.001,
-             "millisecond": 1, "ms": 1,
-             "second": 1000, "sec": 1000, "s": 1000,
-             "minute": 60_000, "min": 60_000, "m": 60_000,
-             "hour": 3_600_000, "h": 3_600_000,
-             "day": 86_400_000, "d": 86_400_000,
-             "week": 604_800_000, "w": 604_800_000}
+    """Milliseconds of a duration string in the forms withWatermark
+    accepts: whole non-negative counts of full unit names, singular or
+    plural, compound forms included ('1 hour 30 minutes'). Spark's
+    interval parser rejects abbreviations ('90 min', '10 ms'), fractional
+    and negative counts, so they raise ValueError here instead of at
+    query start."""
+    units = {"microsecond": 1, "millisecond": 1_000, "second": 1_000_000,
+             "minute": 60_000_000, "hour": 3_600_000_000,
+             "day": 86_400_000_000, "week": 604_800_000_000}
     toks = s.strip().lower().split()
     if not toks or len(toks) % 2:
         raise ValueError(f"cannot parse duration {s!r}")
-    total = 0.0
-    for i in range(0, len(toks), 2):
-        unit = toks[i + 1]
-        # exact units win ('ms' is milliseconds, not plural minutes);
-        # otherwise strip a plural 's' ('minutes' -> 'minute')
-        if unit not in units and unit.endswith("s") and len(unit) > 1:
-            unit = unit[:-1]
+    total_us = 0
+    for n, unit in zip(toks[::2], toks[1::2]):
+        if not re.fullmatch("[0-9]+", n):
+            raise ValueError(f"cannot parse duration {s!r}")
+        unit = unit.removesuffix("s")  # 'minutes' -> 'minute'
         if unit not in units:
             raise ValueError(f"unsupported duration unit in {s!r}")
-        try:
-            n = float(toks[i])
-        except ValueError:
-            raise ValueError(f"cannot parse duration {s!r}") from None
-        total += n * units[unit]
-    return int(total)
+        total_us += int(n) * units[unit]
+    return total_us // 1000
 
 
 def streaming_unique_violations(stream_df: DataFrame, key_col: str = "doc_id",

@@ -95,3 +95,19 @@ def test_degenerate_bounds_raise_before_any_job(spark):
     assert list(sc.statusTracker().getJobIdsForGroup("gsk_bad_bounds")) == []
     # sane bounds still score: the same sample against itself is no drift
     assert drift_check(df, "v", ref, 0, 10, 2)["psi"] == 0.0
+
+
+def test_psi_ks_between_empty_sides(spark):
+    """psi_ks_between keeps a row where psi_ks_by_group drops the group:
+    one empty side reports total drift, two empty sides one all-NULL
+    row."""
+    full = spark.createDataFrame([("a", i % 50) for i in range(100)], _SCHEMA)
+    empty = full.limit(0)
+    # one side empty: 20 rows in each of 5 buckets against eps shares
+    for a, b in ((full, empty), (empty, full)):
+        rows = psi_ks_between(a, b, "v", 0, 50, 5).collect()
+        assert [(r["psi"], r["ks"]) for r in rows] == [(12.206012, 1.0)]
+    rows = psi_ks_between(empty, empty, "v", 0, 50, 5).collect()
+    assert [(r["psi"], r["ks"]) for r in rows] == [(None, None)]
+    for a, b in ((full, empty), (empty, full), (empty, empty)):
+        assert psi_ks_by_group(a, b, "v", "g", 0, 50, 5).count() == 0

@@ -609,3 +609,52 @@ def test_incremental_distinct_sketches_merge_exactly(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="cannot also be sketched"):
         distinct_sketches(df, ["doc_id", "source"], by="source")
+
+
+@pytest.mark.parametrize("unknown", ["strict", "schema"])
+def test_top_level_and_nested_object_checks_agree(spark, unknown):
+    """The table's own columns and a nested struct column go through one
+    object walk: the same field set, validated as the table schema and
+    nested under /obj over the same values, yields the same (code,
+    rule, params) per row once /obj is stripped from the paths."""
+    from collections import Counter
+    from dataclasses import replace
+
+    obj = replace(
+        S.table(S.field("n", "int32", min=1, max=10),
+                S.field("color", "string", enum=["red", "blue"]),
+                S.field("code", "string", pattern="^[a-z]+$", min_str_len=2,
+                        max_str_len=5),
+                S.field("absent", "string", required=True),
+                S.field("m", S.map_of("int32", elem_field=S.field("v", "int32",
+                                                                  min=0, max=9))),
+                unknown=unknown),
+        unknown_key_patterns=[("^x_", S.field("_pp", "int32", max=5))],
+        ap_field=S.field("_ap", "int32", min=0) if unknown == "schema" else None)
+    cols = T.StructType([
+        T.StructField("n", T.IntegerType()), T.StructField("color", T.StringType()),
+        T.StructField("code", T.StringType()),
+        T.StructField("m", T.MapType(T.StringType(), T.IntegerType())),
+        T.StructField("x_a", T.IntegerType()), T.StructField("extra", T.IntegerType())])
+    flat = _df(spark, [
+        ("r1", 0, "green", "A", {"k": 10}, 6, -1),
+        ("r2", 11, "red", "toolong", {"k": -1, "j": None}, 1, 3),
+        ("r3", 5, "blue", "abc", {}, None, None),
+    ], T.StructType([T.StructField("_id", T.StringType()), *cols.fields]))
+    nested = flat.select("_id", F.struct(*cols.fieldNames()).alias("obj"))
+
+    def issues(df, sch, strip=""):
+        _, viols, _ = validate_rows(df, sch, F.col("_id"))
+        return Counter((r["row_id"], r["path"].removeprefix(strip), r["code"], r["rule"],
+                        tuple(sorted((r["params"] or {}).items())))
+                       for r in viols.collect())
+
+    top = issues(flat, obj)
+    assert top == issues(nested, S.table(S.field("obj", obj)), "/obj")
+    # every kind of check in the set fired at least once
+    assert {(p, c) for _, p, c, *_ in top} >= {
+        ("/n", "too_small"), ("/n", "too_big"), ("/color", "invalid_enum"),
+        ("/code", "pattern"), ("/code", "too_short"), ("/code", "too_long"),
+        ("/absent", "required"), ("/m/k", "too_big"), ("/m/k", "too_small"),
+        ("/x_a", "too_big"),
+        ("/extra", "unknown_key" if unknown == "strict" else "too_small")}

@@ -159,6 +159,36 @@ def test_stream_sink_idempotent_under_batch_replay(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_stream_sink_replay_without_violations_empties_batch(spark):
+    """A replayed batch replaces its whole batch_id=<n>/ directory: a
+    replay that finds no violations leaves no stale rows behind."""
+    from goskema_spark.schema import TableSchema
+    from goskema_spark.streaming import validate_stream
+
+    tmp = tempfile.mkdtemp()
+    try:
+        corpus = corpus_from_documents(spark, SF)
+        corpus.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/in")
+
+        def run(schema):
+            shutil.rmtree(f"{tmp}/ckpt", ignore_errors=True)
+            writer = validate_stream(
+                spark.readStream.schema(corpus.schema).parquet(f"{tmp}/in"),
+                schema, row_id_col(),
+                dims={"dim_source": dim_source_df(spark)},
+                violations_sink=f"{tmp}/viols",
+                checkpoint=f"{tmp}/ckpt",
+            )
+            writer.trigger(availableNow=True).start().awaitTermination(300)
+            return spark.read.parquet(f"{tmp}/viols").filter("batch_id = 0").count()
+
+        assert run(corpus_schema()) > 0
+        # the same batch 0 again, under a schema with no checks
+        assert run(TableSchema(fields=[], unknown="strip")) == 0
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_streaming_unique_violations_cross_batch(spark):
     """applyInPandasWithState stateful operator: duplicates that SPAN
     micro-batches are flagged with the first-occurrence ordinal from an
@@ -380,17 +410,26 @@ def test_session_window_counts_streaming_matches_batch(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_duration_parser_spark_surface():
-    """_duration_ms accepts what withWatermark accepts: abbreviations,
-    weeks, compound forms — and 'ms' is milliseconds, never plural
-    minutes (r5 review)."""
+def test_duration_parser_spark_surface(spark):
+    """_duration_ms accepts only what withWatermark accepts: full unit
+    names, weeks, compound forms. Abbreviations, fractional and negative
+    counts raise ValueError, as withWatermark rejects them too."""
+    from pyspark.errors import PySparkException
+
     from goskema_spark.streaming import _duration_ms
     assert _duration_ms("30 seconds") == 30_000
-    assert _duration_ms("90 min") == 5_400_000
     assert _duration_ms("1 week") == 604_800_000
     assert _duration_ms("1 hour 30 minutes") == 5_400_000
-    assert _duration_ms("10 ms") == 10
     with pytest.raises(ValueError):
         _duration_ms("3 parsecs")
     with pytest.raises(ValueError):
         _duration_ms("soon")
+    df = spark.range(1).selectExpr("CAST(id AS TIMESTAMP) AS ts")
+    for s in ("30 seconds", "1 week", "1 hour 30 minutes"):
+        df.withWatermark("ts", s)
+    for s in ("90 min", "10 ms", "10 us", "5 sec", "5 s", "5 m", "1h", "2 d",
+              "1 w", "1.5 hours", "-1 hour"):
+        with pytest.raises(ValueError):
+            _duration_ms(s)
+        with pytest.raises(PySparkException):
+            df.withWatermark("ts", s)
